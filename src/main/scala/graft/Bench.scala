@@ -6,6 +6,7 @@ import org.apache.spark.sql.SparkSession
   * SPARK_GRAFT_SF_DIR and prints one JSON line (driver contract). */
 object Bench {
   def main(args: Array[String]): Unit = {
+    val startedMs = System.currentTimeMillis()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
@@ -61,6 +62,8 @@ object Bench {
     // the $SPARK_GRAFT_CPUS core count took effect, and "controls"
     // duplicates the two regime sentinels (q01 general, q56 CPU-dense)
     // near the END of the line where a tail capture still sees them.
+    // "started_ms" (epoch ms at run start) follows "controls" so
+    // a stale bench_out.json from an earlier run is detectable.
     // All pre-existing keys, their order, and the timing methodology
     // (count() sink, min-of-N) are unchanged.
     val controls = Seq("q01_agg_pricing", "q56_neardup_clusters")
@@ -68,7 +71,7 @@ object Bench {
         case (k, Some(v)) if k == c => s"\"$k\":$v" })
       .mkString("{", ",", "}")
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failed,"sf":"$sfDir","parallelism":${spark.sparkContext.defaultParallelism},"controls":$controls}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failed,"sf":"$sfDir","parallelism":${spark.sparkContext.defaultParallelism},"controls":$controls,"started_ms":$startedMs}"""
     println(line)
     try {
       val out = java.nio.file.Paths.get("bench_out.json")

@@ -532,15 +532,14 @@ class GraftEngine(val spark: SparkSession, val config: GraftConfig) {
           graft.operators.SimilarityOps.srpPostingsProps(),
         bucketBy = Some(("pbh", 32)))
     // The pipeline ADOPTS the postings table's stamped geometry: a
-    // pre-upgrade table banded 8x8 keeps probing (and backfilling)
-    // at 8x8 instead of hard-failing every batch against the new
-    // 4x16 default — the stamp exists precisely so geometry is a
-    // property of the TABLE, not of whichever binary starts the loop.
-    val bandBits = postings.properties.get("postings.bandBits")
-      .map(_.toInt)
-      .getOrElse(graft.operators.SimilarityOps.DefaultIndexBandBits)
-    val bands = postings.properties.get("postings.bands").map(_.toInt)
-      .getOrElse(graft.operators.SimilarityOps.DefaultIndexBands)
+    // table stamped 8x8 keeps probing (and backfilling) at 8x8
+    // instead of hard-failing every batch against the 4x16 default —
+    // the stamp makes geometry a property of the TABLE, not of
+    // whichever binary starts the loop. An unstamped table fails.
+    val bandBits = graft.operators.DedupOps
+      .requirePostingsProp(postings, "postings.bandBits").toInt
+    val bands = graft.operators.DedupOps
+      .requirePostingsProp(postings, "postings.bands").toInt
     // coverage-diff backfill, keyed exactly-once — crash-safe,
     // duplicate-free for pre-marker deployments; see startCuration
     if (postings.lastBatchId(GraftEngine.PostingsBackfillWriter) < 0L) {

@@ -22,8 +22,10 @@ import org.apache.spark.sql.types._
   * Contract: the mixing expression's nullSafeEval NEVER returns null
   * for non-null input (all of these return primitives or freshly
   * allocated arrays), so null handling stays entirely with
-  * nullSafeCodeGen's child-null check. Box/unbox is explicit
-  * (valueOf / xxxValue) rather than relying on janino autoboxing.
+  * nullSafeCodeGen's child-null check. `kernelEval` checks it: a null
+  * result fails naming the expression class instead of as an NPE in
+  * the generated unbox. Box/unbox is explicit (valueOf / xxxValue)
+  * rather than relying on janino autoboxing.
   */
 private[functions] object KernelCodegen {
   /** Explicitly box a generated java value of Catalyst type `t`. */
@@ -36,6 +38,15 @@ private[functions] object KernelCodegen {
     case FloatType => s"java.lang.Float.valueOf($c)"
     case DoubleType => s"java.lang.Double.valueOf($c)"
     case _ => c // object-typed in codegen already (UTF8String, ArrayData, ...)
+  }
+
+  /** The kernel result, or a named failure when it breaks the
+    * never-null contract. */
+  def nonNull(result: Any, expr: AnyRef): Any = {
+    if (result == null) throw new IllegalStateException(
+      s"${expr.getClass.getName}.nullSafeEval returned null for non-null " +
+        "input: kernel results must never be null")
+    result
   }
 
   /** Cast + explicitly unbox a kernel result to Catalyst type `t`. */
@@ -53,7 +64,7 @@ private[functions] object KernelCodegen {
 
 private[functions] trait KernelUnaryCodegen extends UnaryExpression {
   /** Public kernel entry for generated code. */
-  def kernelEval(v: Any): Any = nullSafeEval(v)
+  def kernelEval(v: Any): Any = KernelCodegen.nonNull(nullSafeEval(v), this)
 
   override protected def doGenCode(ctx: CodegenContext,
                                    ev: ExprCode): ExprCode = {
@@ -67,7 +78,8 @@ private[functions] trait KernelUnaryCodegen extends UnaryExpression {
 
 private[functions] trait KernelBinaryCodegen extends BinaryExpression {
   /** Public kernel entry for generated code. */
-  def kernelEval(l: Any, r: Any): Any = nullSafeEval(l, r)
+  def kernelEval(l: Any, r: Any): Any =
+    KernelCodegen.nonNull(nullSafeEval(l, r), this)
 
   override protected def doGenCode(ctx: CodegenContext,
                                    ev: ExprCode): ExprCode = {

@@ -74,8 +74,8 @@ class LakeTable private (
     * forward probe (versions are dense, so the first missing v+1 is
     * the frontier). The hint is ADVISORY — written best-effort after
     * each won commit, it may lag or regress under races; the probe
-    * absorbs lag and a hint naming a missing snapshot (cleared,
-    * expired, legacy table) falls back to the full listing. At
+    * absorbs lag and a missing hint, or one naming a missing snapshot
+    * (cleared, expired), falls back to the full listing. At
     * O(100k) commits the listing is the scale hazard (every read
     * paying an O(versions) LIST); hint + probe is O(1 + lag). */
   def currentVersion: Int = {
@@ -118,23 +118,29 @@ class LakeTable private (
     latest()._2.get("fieldIds").properties().asScala
       .map(e => e.getKey -> e.getValue.asInt()).toMap
 
-  /** The live-file set of a snapshot. New-format snapshots carry a
-    * MANIFEST LIST (Iceberg's split): the snapshot names immutable
-    * manifest files, each holding a group of file entries — an append
-    * references every unchanged group and writes only its own batch,
-    * so per-commit metadata is O(batch), not O(live files). Legacy
-    * snapshots with an inline `files` array still parse. */
-  private def filesOf(node: JsonNode): Seq[FileEntry] =
-    manifestRefsOf(node) match {
-      case Some(refs) => refs.flatMap(readManifest)
-      case None => parseFileArray(node.get("files"))
-    }
+  /** A field every snapshot [[LakeTable.snapshotJson]] writes carries.
+    * The manifest-list format is the only one this engine reads: a
+    * snapshot lacking one of its fields is rejected, naming the table
+    * and the version. */
+  private def required(node: JsonNode, key: String): JsonNode =
+    Option(node.get(key)).getOrElse(throw malformed(node, s"'$key'"))
 
-  /** Manifest references of a new-format snapshot; None for legacy
-    * inline-files snapshots. */
-  private def manifestRefsOf(node: JsonNode): Option[Seq[ManifestRef]] =
-    Option(node.get("manifests")).map(_.elements().asScala.map(m =>
-      ManifestRef(m.get("path").asText(), m.get("entries").asInt())).toSeq)
+  private def malformed(node: JsonNode, what: String) =
+    new IllegalStateException(
+      s"snapshot v${node.path("version").asText("?")} at $root has no " +
+        s"$what: not the manifest-list format this engine writes")
+
+  /** The live-file set of a snapshot. Snapshots carry a MANIFEST LIST
+    * (Iceberg's split): the snapshot names immutable manifest files,
+    * each holding a group of file entries — an append references every
+    * unchanged group and writes only its own batch, so per-commit
+    * metadata is O(batch), not O(live files). */
+  private def filesOf(node: JsonNode): Seq[FileEntry] =
+    manifestRefsOf(node).flatMap(readManifest)
+
+  private def manifestRefsOf(node: JsonNode): Seq[ManifestRef] =
+    required(node, "manifests").elements().asScala.map(m =>
+      ManifestRef(m.get("path").asText(), m.get("entries").asInt())).toSeq
 
   /** Read one manifest's file entries through the process-wide cache:
     * manifests are immutable and UUID-named, so a parsed value can
@@ -150,7 +156,7 @@ class LakeTable private (
       // (CommitStore.read's contract) — never a bare local-disk read
       val raw = commitStore.read(p).getOrElse(
         throw new java.nio.file.NoSuchFileException(p.toString))
-      val fs = parseFileArray(mapper.readTree(raw).get("files"))
+      val fs = parseFileArray(mapper.readTree(raw).get("files"), key)
       if (manifestCache.size > ManifestCacheMax) manifestCache.clear()
       manifestCache.put(key, fs)
       fs
@@ -288,11 +294,9 @@ class LakeTable private (
     node.get("fieldIds").properties().asScala
       .map(e => e.getKey -> e.getValue.asInt()).toMap
 
-  /** Monotone last-assigned field ID (Iceberg's last-column-id); legacy
-    * snapshots fall back to the max live ID. */
+  /** Monotone last-assigned field ID (Iceberg's last-column-id). */
   private def lastFieldIdOf(node: JsonNode): Int =
-    Option(node.get("lastFieldId")).map(_.asInt())
-      .getOrElse(fieldIdsOf(node).values.foldLeft(0)(math.max))
+    required(node, "lastFieldId").asInt()
 
   def dataFiles: Seq[FileEntry] = filesOf(latest()._2)
 
@@ -349,27 +353,14 @@ class LakeTable private (
 
   def highWater(key: String): Option[Long] = highWaterMarks.get(key)
 
-  private def highWaterOf(node: JsonNode): Map[String, Long] = {
-    val m = Option(node.get("highWater"))
-      .map(_.properties().asScala
-        .map(e => e.getKey -> e.getValue.asLong()).toMap)
-      .getOrElse(Map.empty[String, Long])
-    // legacy snapshots (pre-highWater) recorded one table-global batch id
-    Option(node.get("lastBatchId")).map(_.asLong()).filter(_ >= 0) match {
-      case Some(b) =>
-        val k = writerKey(DefaultWriter)
-        m + (k -> math.max(b, m.getOrElse(k, -1L)))
-      case None => m
-    }
-  }
+  private def highWaterOf(node: JsonNode): Map[String, Long] =
+    required(node, "highWater").properties().asScala
+      .map(e => e.getKey -> e.getValue.asLong()).toMap
 
   def partitionBy: Seq[String] = partitionByOf(latest()._2)
 
-  private def partitionByOf(node: JsonNode): Seq[String] = {
-    val n = node.get("partitionBy")
-    if (n == null) Seq.empty
-    else n.elements().asScala.map(_.asText()).toSeq
-  }
+  private def partitionByOf(node: JsonNode): Seq[String] =
+    required(node, "partitionBy").elements().asScala.map(_.asText()).toSeq
 
   /** Declared hidden-partitioning transforms (empty for plain tables).
     * Re-parsed from the frozen creation-time property against the
@@ -395,9 +386,14 @@ class LakeTable private (
       .getOrElse(Nil)
 
   /** Hash-bucket layout, when declared at create time: (column, count).
-    * Rows land in hive partition `_bucket = pmod(hash(col), count)`
-    * (hash family stamped at create time, see [[bucketHash]]),
-    * computed by the writer — so equality/IN probes on the bucket
+    * Rows land in hive partition `_bucket = pmod(murmur3(col, 42),
+    * count)` — Spark's OWN bucket-id function, exactly
+    * `HashPartitioning.partitionIdExpression` (stamped at create time
+    * as [[LakeTable.SparkBucketHash]], the only family), which lets
+    * reads surface the layout to Catalyst as a first-class V1
+    * `BucketSpec`: co-bucketed joins and bucket-key aggregations plan
+    * with ZERO exchange on the bucketed side(s). The writer computes
+    * the column — so equality/IN probes on the bucket
     * column prune to the matching bucket directories at the MANIFEST
     * level (partition values ride in each file's stats) before any
     * file opens. This is the layout half of point lookups at 100 TB:
@@ -436,24 +432,10 @@ class LakeTable private (
   def bucketCols: Seq[String] =
     bucketSpec.map(_._1.split(",").toSeq.map(_.trim)).getOrElse(Nil)
 
-  /** The hash family the table's bucket layout was written with —
-    * stamped at create time and immutable for the table's life (every
-    * committed file's placement depends on it). Legacy tables
-    * (pre-stamp) are xxhash64; new tables default to
-    * [[LakeTable.SparkBucketHash]], Spark's OWN bucket-id function
-    * (`pmod(murmur3(cols, seed 42), n)` — exactly
-    * `HashPartitioning.partitionIdExpression`), which lets reads
-    * surface the layout to Catalyst as a first-class V1 `BucketSpec`:
-    * co-bucketed joins and bucket-key aggregations then plan with ZERO
-    * exchange on the bucketed side(s), because the on-disk layout IS
-    * the `HashPartitioning` the optimizer requires. */
-  def bucketHash: String =
-    properties.getOrElse(LakeTable.BucketHashProp, "xxhash64")
-
   /** The bucket a value of the (single-column) bucket key lands in —
     * driver-side evaluation of the exact expression the writer uses
-    * (the stamped [[bucketHash]] family, seed 42), so probe pruning
-    * and layout can never disagree. */
+    * (murmur3, seed 42), so probe pruning and layout can never
+    * disagree. */
   def bucketIdOf(value: Any): Int = bucketIdOfKey(Seq(value))
 
   /** Composite-key form: one value per [[bucketCols]] entry, hashed
@@ -468,33 +450,21 @@ class LakeTable private (
       org.apache.spark.sql.catalyst.expressions.Literal.create(
         v, schema(c).dataType)
     }
-    val h: Long = bucketHash match {
-      case LakeTable.SparkBucketHash =>
-        new org.apache.spark.sql.catalyst.expressions.Murmur3Hash(lits, 42)
-          .eval(null).asInstanceOf[Int].toLong
-      case _ =>
-        new org.apache.spark.sql.catalyst.expressions.XxHash64(lits, 42L)
-          .eval(null).asInstanceOf[Long]
-    }
+    val h = new org.apache.spark.sql.catalyst.expressions.Murmur3Hash(lits, 42)
+      .eval(null).asInstanceOf[Int].toLong
     (((h % n) + n) % n).toInt
   }
 
-  /** The writer-side bucket-assignment expression for the stamped
-    * [[bucketHash]] family. For [[LakeTable.SparkBucketHash]] this is
-    * literally `HashPartitioning(bucketCols, n).partitionIdExpression`
+  /** The writer-side bucket-assignment expression: literally
+    * `HashPartitioning(bucketCols, n).partitionIdExpression`
     * (`pmod(murmur3(cols, 42), n)`) — the guarantee that lets reads
     * expose the layout as a Spark `BucketSpec` without any custom
     * physical operator: a file named for bucket k really does hold
     * exactly the rows Spark's own hash would route to partition k. */
   private def bucketWriteExpr: org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.{col, hash, lit, pmod, xxhash64}
+    import org.apache.spark.sql.functions.{col, hash, lit, pmod}
     val (_, n) = bucketSpec.get
-    val cols = bucketCols.map(col)
-    bucketHash match {
-      case LakeTable.SparkBucketHash =>
-        pmod(hash(cols: _*), lit(n)).cast("int")
-      case _ => pmod(xxhash64(cols: _*), lit(n)).cast("int")
-    }
+    pmod(hash(bucketCols.map(col): _*), lit(n)).cast("int")
   }
 
   /** Point-lookup read: rows whose `keyCol` is one of `values`, using
@@ -608,9 +578,7 @@ class LakeTable private (
     * decide broadcast vs shuffle BEFORE any plan exists. Estimates in
     * the proper direction: MOR deletes are not subtracted and residual
     * row-level filtering is not applied, so the numbers upper-bound
-    * the scan (a table reported slightly large never mis-broadcasts).
-    * Legacy entries without recorded sizes fall back to a per-row
-    * estimate so a non-empty table never reports zero bytes. */
+    * the scan (a table reported slightly large never mis-broadcasts). */
   def scanStats(condition: Option[org.apache.spark.sql.Column] = None,
                 version: Option[Int] = None): (Long, Long) = {
     val node = mapper.readTree(
@@ -620,12 +588,7 @@ class LakeTable private (
       case Some(c) => pruneFilesAmong(all, c)
       case None    => all
     }
-    val rows = entries.map(_.rows).sum
-    lazy val rowSize = math.max(8L, DataTypeBridge.fromJson(
-      node.get("schemaJson").asText()).defaultSize.toLong)
-    val bytes = entries.map(e =>
-      if (e.sizeBytes > 0L) e.sizeBytes else e.rows * rowSize).sum
-    (rows, bytes)
+    (entries.map(_.rows).sum, entries.map(_.sizeBytes).sum)
   }
 
   /** Time travel: read the file set of any committed snapshot, under the
@@ -755,7 +718,7 @@ class LakeTable private (
     // a file reads correctly BY NAME iff every live column sits at its
     // current name and no retired column's name shadows a current one
     def nameCompatible(e: FileEntry): Boolean =
-      e.cols.isEmpty || e.cols.forall { case (physName, id) =>
+      e.cols.forall { case (physName, id) =>
         idToField.get(id) match {
           case Some(f) => f.name == physName        // live, un-renamed
           case None    => !currentNames.contains(physName) // retired, no shadow
@@ -782,17 +745,16 @@ class LakeTable private (
         spark.read.option("basePath", s"$root/data")
           .schema(s).parquet(paths: _*)
 
-    // Manifest-served planning: when every entry carries its size (all
-    // post-upgrade commits), the scan is built from manifest metadata
-    // alone — ZERO driver-side filesystem listing (spark.read stats
-    // every path before planning; on an object store that is one HEAD
-    // per file, the dominant constant of a bucket-pruned probe).
-    // Partition values are decoded from the manifest paths with the
-    // same escape rules the writer used. Falls back to listing-based
-    // planning for pre-upgrade manifests or exotic partition types.
+    // Manifest-served planning: every entry carries its size, so the
+    // scan is built from manifest metadata alone — ZERO driver-side
+    // filesystem listing (spark.read stats every path before
+    // planning; on an object store that is one HEAD per file, the
+    // dominant constant of a bucket-pruned probe). Partition values
+    // are decoded from the manifest paths with the same escape rules
+    // the writer used. Falls back to listing-based planning for
+    // partition types it does not decode.
     def manifestRead(es: Seq[FileEntry], s: StructType,
                      parts: Seq[String]): Option[DataFrame] = {
-      if (es.exists(_.sizeBytes <= 0)) return None
       if (!parts.forall(s.fieldNames.contains)) return None
       val partSchema = StructType(parts.map(p => s(p)))
       val dataSchema =
@@ -837,13 +799,12 @@ class LakeTable private (
             })
         }.toSeq
       // Surface the bucket layout to Catalyst as a first-class V1
-      // BucketSpec when it is PROVABLY Spark's own: the table is
-      // stamped with Spark's bucket hash AND every live file's
+      // BucketSpec when it is PROVABLY Spark's own: every live file's
       // name-encoded bucket id (what FileSourceScanExec trusts) agrees
-      // with its _bucket dir (what the writer computed). Co-bucketed
-      // joins and bucket-key aggregations then plan with zero exchange
-      // on this side. Legacy xxhash64 tables and mixed-name file sets
-      // read exactly as before — the claim is simply not made.
+      // with its _bucket dir (what the writer computed with Spark's
+      // bucket hash). Co-bucketed joins and bucket-key aggregations
+      // then plan with zero exchange on this side. Mixed-name file
+      // sets read unbucketed — the claim is simply not made.
       //
       // The claim is NOT free: a bucketed scan caps its parallelism at
       // numBuckets (files can't split or pack across buckets), and
@@ -856,8 +817,7 @@ class LakeTable private (
       // end-to-end on the incremental-dedup path at 8 buckets vs 32
       // cores).
       val v1Bucket = if (!claimBucket) None else bucketSpec.collect {
-        case (_, n) if bucketHash == LakeTable.SparkBucketHash &&
-            bucketCols.forall(dataSchema.fieldNames.contains) &&
+        case (_, n) if bucketCols.forall(dataSchema.fieldNames.contains) &&
             es.forall { e =>
               val segs = e.path.split("/")
               val dirId = segs.collectFirst {
@@ -3139,18 +3099,15 @@ class LakeTable private (
       // rewritten — the snapshot write is O(this batch). Only
       // manifests actually holding a replaced file are rewritten
       // (minus those files); their survivors ride with the new batch.
-      // A legacy inline-files base migrates wholesale into a manifest
-      // on its first commit under this format.
-      val (keptRefs, rewriteFiles) = manifestRefsOf(cur) match {
-        case Some(refs) if replacedFiles.isEmpty => (refs, Nil)
-        case Some(refs) =>
-          val (touched, untouched) = refs.partition(r =>
+      val curRefs = manifestRefsOf(cur)
+      val (keptRefs, rewriteFiles) =
+        if (replacedFiles.isEmpty) (curRefs, Nil)
+        else {
+          val (touched, untouched) = curRefs.partition(r =>
             readManifest(r).exists(f => replacedFiles.contains(f.path)))
           (untouched, touched.flatMap(readManifest)
             .filterNot(f => replacedFiles.contains(f.path)))
-        case None =>
-          (Nil, filesOf(cur).filterNot(f => replacedFiles.contains(f.path)))
-      }
+        }
       val newEntries = rewriteFiles ++ stamped
       val refs = mergeManifests(keptRefs ++
         (if (newEntries.nonEmpty) Seq(writeManifest(newEntries)) else Nil))
@@ -3210,9 +3167,7 @@ class LakeTable private (
       // Stamp the snapshot's OPERATION at commit time — the writer
       // knows it exactly from the commit's own structure, so
       // meta("snapshots") reads one field instead of re-reading every
-      // retained snapshot's file list and diffing predecessors (the
-      // labels match the legacy diff classifier, which remains only
-      // as the fallback for pre-stamp snapshots).
+      // retained snapshot's file list and diffing predecessors.
       val operation: String =
         meta.getOrElse("operation",
           if (meta.get("compaction").contains("true")) "replace"
@@ -3443,18 +3398,13 @@ class LakeTable private (
       } else stalls = 0
       lastSeen = v
       // rollback re-REFERENCES the target's manifests — O(1) metadata
-      // no matter how many files the restored snapshot holds (legacy
-      // inline targets migrate into one manifest)
-      val targetRefs = manifestRefsOf(target).getOrElse {
-        val fs = filesOf(target)
-        if (fs.isEmpty) Nil else Seq(writeManifest(fs))
-      }
+      // no matter how many files the restored snapshot holds
       val node = snapshotJson(
         version = v + 1, parent = v,
         schema = DataTypeBridge.fromJson(target.get("schemaJson").asText()),
         ids = fieldIdsOf(target),
         props = cur.get("properties"),
-        manifests = targetRefs,
+        manifests = manifestRefsOf(target),
         meta = Map("rollback.to" -> version.toString,
           "operation" -> "rollback"),
         partitionBy = partitionBy,
@@ -3766,8 +3716,7 @@ class LakeTable private (
           }
           .toDF("partition", "file_count", "row_count", "size_bytes")
       case "manifests" =>
-        (manifestRefsOf(node).getOrElse(Nil).map(r => (r.path, "data",
-          r.entries)) ++
+        (manifestRefsOf(node).map(r => (r.path, "data", r.entries)) ++
           deleteRefsOf(node).map(r => (r.path, "delete", r.entries)))
           .toDF("path", "kind", "entries")
       case "refs" =>
@@ -3782,37 +3731,11 @@ class LakeTable private (
           val n = mapper.readTree(Files.readString(versionPath(metaDir, v)))
           val fs = filesOf(n)
           val ds = deletesOf(n)
-          val stampedOp = Option(n.get("appMeta"))
-            .flatMap(m => Option(m.get("operation"))).map(_.asText())
-          val op: String =
+          // every commit after create stamps its operation
+          val op =
             if (v == 0) "create"
-            else if (stampedOp.isDefined) stampedOp.get
-            else if (!Files.exists(versionPath(metaDir, v - 1))) "unknown"
-            else {
-              val p = mapper.readTree(
-                Files.readString(versionPath(metaDir, v - 1)))
-              val prevFiles = filesOf(p)
-              val prevF = prevFiles.map(_.path).toSet
-              val prevD = deletesOf(p).map(_.path).toSet
-              val added = fs.exists(f => !prevF.contains(f.path))
-              val removed = prevF.exists(pp => !fs.exists(_.path == pp))
-              val newDel = ds.exists(e => !prevD.contains(e.path))
-              val shrank = fs.map(_.rows).sum < prevFiles.map(_.rows).sum
-              val isCompaction = Option(n.get("appMeta"))
-                .flatMap(m => Option(m.get("compaction")))
-                .exists(_.asText() == "true")
-              // a rewrite that both adds and removes is a DELETE when
-              // referenced rows shrank (copy-on-write delete rewrites
-              // survivors); an upsert's source covers every matched
-              // key, so overwrites never shrink the referenced total
-              if (isCompaction) "replace"
-              else if (newDel && added) "overwrite"
-              else if (newDel) "delete"
-              else if (removed && added) { if (shrank) "delete" else "overwrite" }
-              else if (removed) "delete"
-              else if (added) "append"
-              else "alter"
-            }
+            else Option(required(n, "appMeta").get("operation"))
+              .getOrElse(throw malformed(n, "operation stamp")).asText()
           (v, n.get("committedAtMs").asLong(), op, fs.size,
             ds.size, fs.map(_.rows).sum, fs.map(_.sizeBytes).sum)
         }
@@ -3880,7 +3803,7 @@ class LakeTable private (
     // manifest before winning its snapshot slot). Delete manifests
     // (dm-*.json) get the identical treatment.
     val refedManifests: Set[Path] = nodes.flatMap { n =>
-      (manifestRefsOf(n).getOrElse(Nil) ++ deleteRefsOf(n))
+      (manifestRefsOf(n) ++ deleteRefsOf(n))
         .map(r => metaDir.resolve(r.path).toAbsolutePath.normalize())
     }.toSet
     listDir(metaDir)
@@ -4042,9 +3965,8 @@ object LakeTable {
 
   /** `cols` maps each PHYSICAL parquet column name in the file to the
     * table field ID it was written under (Iceberg-style column identity:
-    * renames keep the ID, drops retire it, re-adds mint a fresh one).
-    * Empty for files committed before ID tracking — those read by name,
-    * the pre-ID behavior. */
+    * renames keep the ID, drops retire it, re-adds mint a fresh one),
+    * stamped by the commit loop. */
   /** Per-column [lo, hi] range of one data file, from its parquet
     * footer. Values are Long (all integral types, dates as days,
     * timestamps as micros), Double, String, or Boolean. Absent columns
@@ -4058,8 +3980,7 @@ object LakeTable {
     * never prune. */
   /** `sizeBytes`/`modTimeMs` let reads be planned entirely from the
     * manifest (see [[org.apache.spark.sql.graft.ManifestScan]]) — zero
-    * filesystem listing per scan. 0 = unknown (pre-upgrade manifests),
-    * which falls back to listing-based planning. */
+    * filesystem listing per scan. */
   /** `seq` is the DATA SEQUENCE NUMBER (Iceberg v2): the version at
     * which this file's rows entered the table, stamped by the commit
     * loop. Equality deletes apply exactly to rows of files with
@@ -4067,8 +3988,9 @@ object LakeTable {
     * and then legitimately re-inserted. Rewritten (compacted) files
     * carry the REWRITE commit's seq; that is safe because rewrites
     * read with all live deletes applied and abort if an unapplied
-    * delete landed since their base. Legacy entries parse as seq 0
-    * (older than every delete — conservative and correct). */
+    * delete landed since their base. `cols` and `seq` are defaulted
+    * only until the commit loop stamps them; every manifest entry
+    * carries both, and its `size`. */
   case class FileEntry(path: String, rows: Long,
                        cols: Seq[(String, Int)] = Nil,
                        stats: Map[String, ColStat] = Map.empty,
@@ -4341,13 +4263,17 @@ object LakeTable {
     * via [[CommitStore.putHint]] after every won commit. */
   private[lake] val LatestHint = "_latest"
 
-  private[lake] def parseFileArray(arr: JsonNode): Seq[FileEntry] = {
-    if (arr == null) return Seq.empty
+  /** Parse a manifest's `files` array; `manifest` names the file in
+    * the error for an entry missing a field every writer stamps. */
+  private[lake] def parseFileArray(arr: JsonNode,
+                                   manifest: String): Seq[FileEntry] =
     arr.elements().asScala.map { f =>
-      val cols = Option(f.get("cols"))
-        .map(_.properties().asScala
-          .map(e => e.getKey -> e.getValue.asInt()).toSeq)
-        .getOrElse(Nil)
+      def required(key: String): JsonNode =
+        Option(f.get(key)).getOrElse(throw new IllegalStateException(
+          s"manifest $manifest: entry ${f.path("path").asText("?")} has " +
+            s"no '$key': not the manifest format this engine writes"))
+      val cols = required("cols").properties().asScala
+        .map(e => e.getKey -> e.getValue.asInt()).toSeq
       def statOf(n: JsonNode): Any =
         if (n.isIntegralNumber) n.asLong()
         else if (n.isFloatingPointNumber) n.asDouble()
@@ -4365,14 +4291,12 @@ object LakeTable {
         .getOrElse(Map.empty[String, Long])
       FileEntry(f.get("path").asText(), f.get("rows").asLong(), cols, stats,
         nulls,
-        sizeBytes = Option(f.get("size")).map(_.asLong()).getOrElse(0L),
+        sizeBytes = required("size").asLong(),
         modTimeMs = Option(f.get("mtime")).map(_.asLong()).getOrElse(0L),
-        seq = Option(f.get("seq")).map(_.asLong()).getOrElse(0L))
+        seq = required("seq").asLong())
     }.toSeq
-  }
 
-  /** Serialize file entries as a `files` array on `n` — the one
-    * format both manifest files and legacy inline snapshots use. */
+  /** Serialize file entries as a manifest's `files` array on `n`. */
   private[lake] def putFileArray(
       n: com.fasterxml.jackson.databind.node.ObjectNode,
       files: Seq[FileEntry]): Unit = {
@@ -4380,13 +4304,11 @@ object LakeTable {
     files.foreach { f =>
       val fn = fileArr.addObject()
       fn.put("path", f.path); fn.put("rows", f.rows)
-      if (f.sizeBytes > 0) fn.put("size", f.sizeBytes)
+      fn.put("size", f.sizeBytes)
       if (f.modTimeMs > 0) fn.put("mtime", f.modTimeMs)
-      if (f.seq > 0) fn.put("seq", f.seq)
-      if (f.cols.nonEmpty) {
-        val cn = fn.putObject("cols")
-        f.cols.foreach { case (name, id) => cn.put(name, id) }
-      }
+      fn.put("seq", f.seq)
+      val cn = fn.putObject("cols")
+      f.cols.foreach { case (name, id) => cn.put(name, id) }
       if (f.stats.nonEmpty) {
         val sn = fn.putObject("stats")
         f.stats.toSeq.sortBy(_._1).foreach { case (name, st) =>
@@ -4462,13 +4384,13 @@ object LakeTable {
   /** Create an empty table (snapshot v0) with field IDs 1..n assigned in
     * declaration order. Fails if the table already exists. `bucketBy =
     * Some((col, n))` declares a hash-bucket layout: a derived `_bucket`
-    * column (`pmod(hash(col), n)`, Spark's own bucket hash by default —
-    * see [[LakeTable.SparkBucketHash]]) is added to the schema,
+    * column (`pmod(hash(col), n)`, Spark's own bucket hash — see
+    * [[LakeTable.SparkBucketHash]]) is added to the schema,
     * computed by every writer, and used as the trailing hive
     * partition — the pay-once layout that makes key probes prune to
-    * O(keys) bucket dirs regardless of table size, and (for the
-    * default hash) surfaces to Catalyst as a real `BucketSpec` so
-    * co-bucketed joins and bucket-key aggregations plan shuffle-free. */
+    * O(keys) bucket dirs regardless of table size, and surfaces to
+    * Catalyst as a real `BucketSpec` so co-bucketed joins and
+    * bucket-key aggregations plan shuffle-free. */
   def create(spark: SparkSession, root: String, schema: StructType,
              properties: Map[String, String] = Map.empty,
              partitionBy: Seq[String] = Seq.empty,
@@ -4487,6 +4409,9 @@ object LakeTable {
       s"${t.phys} is reserved for the ${t.spec} partition transform"))
     require(transforms.map(_.phys).distinct.size == transforms.size,
       s"duplicate partition transforms in $partitionBy")
+    require(properties.get(BucketHashProp).forall(_ == SparkBucketHash),
+      s"unsupported $BucketHashProp '${properties(BucketHashProp)}' at " +
+        s"$root: bucket layouts use $SparkBucketHash only")
     bucketBy.foreach { case (c, n) =>
       c.split(",").map(_.trim).foreach(bc => require(
         schema.fieldNames.contains(bc), s"bucket column $bc not in schema"))
@@ -4513,9 +4438,8 @@ object LakeTable {
       // keyed (root, version) would serve the dead incarnation's state
       // — the uuid disambiguates (see GraftV1ReadRule's plan cache)
       TableUuidProp -> java.util.UUID.randomUUID().toString) ++
-      // new bucketed tables default to Spark's own bucket hash so the
-      // layout is Catalyst-visible (BucketSpec); an explicit caller
-      // property (e.g. "xxhash64" for layout-compat tests) wins
+      // bucketed tables use Spark's own bucket hash so the layout is
+      // Catalyst-visible (BucketSpec)
       bucketBy.map(_ => Map(BucketHashProp -> SparkBucketHash))
         .getOrElse(Map.empty) ++
       properties ++

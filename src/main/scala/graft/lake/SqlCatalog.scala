@@ -231,10 +231,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       }
     }
     val props = properties.asScala.toMap -- GraftCatalog.ReservedProps
-    val withHash = if (bucket.isDefined)
-      props + (LakeTable.BucketHashProp -> LakeTable.SparkBucketHash)
-    else props
-    val t = lakeCat.createTable(ns, ident.name, schema, withHash,
+    val t = lakeCat.createTable(ns, ident.name, schema, props,
       partitionBy = partSpecs, bucketBy = bucket)
     new GraftSqlTable(ident.toString, t, None)
   }

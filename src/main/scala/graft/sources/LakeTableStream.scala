@@ -592,7 +592,7 @@ private[sources] object LakeStreamPlanning {
       partitionValuesOf(lake, e, readPartSchema),
       org.apache.spark.paths.SparkPath.fromPathString(
         s"${lake.root}/${e.path}"),
-      0L, if (e.sizeBytes > 0) e.sizeBytes else Long.MaxValue,
+      0L, e.sizeBytes,
       Array.empty, e.modTimeMs, e.sizeBytes, Map.empty)))
 
   /** Partition-dir values from the manifest's per-file constants
@@ -609,7 +609,7 @@ private[sources] object LakeStreamPlanning {
           throw new IllegalStateException(
             s"streaming ${lake.root}: file ${e.path} carries no " +
               s"recorded value for partition column '${f.name}' " +
-              "(legacy entry or unsupported partition type)"))
+              "(unsupported partition type)"))
         (f.dataType, stat.lo) match {
           case (LongType, v: Long)       => v
           case (IntegerType, v: Long)    => v.toInt

@@ -195,9 +195,8 @@ object LongHaul {
         def vpath(v: Int) = metaDir.resolve(f"v$v%08d.json")
         def refsOf(v: Int): Set[String] = {
           val n = om.readTree(java.nio.file.Files.readString(vpath(v)))
-          Option(n.get("manifests"))
-            .map(_.elements().asScala.map(_.get("path").asText()).toSet)
-            .getOrElse(Set.empty)
+          n.get("manifests").elements().asScala
+            .map(_.get("path").asText()).toSet
         }
         val vs = (0 to t.currentVersion)
           .filter(v => java.nio.file.Files.exists(vpath(v)))

@@ -144,33 +144,6 @@ class LakeBucketedScanSpec extends SparkSuite {
     }
   }
 
-  test("legacy xxhash64-stamped tables read exactly as before: no " +
-    "BucketSpec claimed, probes still prune by the stamped hash") {
-    val t = LakeTable.create(spark, tmpDir("spj-legacy"), StructType(Seq(
-      StructField("fp", StringType), StructField("doc_id", LongType))),
-      properties = Map(LakeTable.BucketHashProp -> "xxhash64"),
-      bucketBy = Some(("fp", 8)))
-    t.append((0 until 200).map(i => (s"fp-$i", i.toLong))
-      .toDF("fp", "doc_id"))
-    assert(t.bucketHash == "xxhash64")
-    // stored layout is the xxhash64 family, and bucketIdOf agrees
-    assert(t.read().filter(col("_bucket") =!=
-      pmod(xxhash64(col("fp")), lit(8)).cast("int")).count() == 0)
-    t.read().select("fp", "_bucket").as[(String, Int)].collect()
-      .foreach { case (fp, b) => assert(t.bucketIdOf(fp) == b) }
-    // the read NEVER claims a Spark BucketSpec for a foreign hash —
-    // that would let a co-partition claim mis-align a join
-    val scans = executedFlat(t.read()).collect {
-      case s: FileSourceScanExec => s
-    }
-    assert(scans.nonEmpty && scans.forall(_.relation.bucketSpec.isEmpty))
-    // pruned probes still work through the stamped family
-    assert(t.probe("fp", Seq("fp-7")).select("doc_id").as[Long]
-      .collect().toSeq == Seq(7L))
-    assert(t.probe("fp", Seq("fp-7")).inputFiles.length <
-      t.read().inputFiles.length)
-  }
-
   test("driver-side bucketIdOf equals Spark's partitioning for the " +
     "default stamp, single and composite keys, including nulls") {
     val t = LakeTable.create(spark, tmpDir("spj-ids"), StructType(Seq(
@@ -192,5 +165,11 @@ class LakeBucketedScanSpec extends SparkSuite {
       .collect().foreach { case (ty, u, b) =>
         assert(c.bucketIdOfKey(Seq(ty, u)) == b, s"key=($ty,$u)")
       }
+    // Spark's bucket hash is the only family: any other is rejected
+    val err = intercept[IllegalArgumentException](LakeTable.create(spark,
+      tmpDir("spj-xx"), StructType(Seq(StructField("fp", StringType))),
+      properties = Map(LakeTable.BucketHashProp -> "xxhash64"),
+      bucketBy = Some(("fp", 8))))
+    assert(err.getMessage.contains("xxhash64"), err.getMessage)
   }
 }

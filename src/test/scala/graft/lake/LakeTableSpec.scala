@@ -559,48 +559,33 @@ class LakeTableSpec extends SparkSuite {
       LakeTable.create(spark, dir, abSchema)
     }
     assert(LakeTable.load(spark, dir).read().count() == 1)
+    // a snapshot without a manifest list is not a format this engine
+    // reads: loading its files fails, naming the table and the version
+    val snapPath = java.nio.file.Paths.get(dir, "metadata", "v00000001.json")
+    val om = new com.fasterxml.jackson.databind.ObjectMapper()
+    val snap = om.readTree(java.nio.file.Files.readString(snapPath))
+      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    snap.remove("manifests")
+    java.nio.file.Files.writeString(snapPath, om.writeValueAsString(snap))
+    val err = intercept[IllegalStateException](
+      LakeTable.load(spark, dir).dataFiles)
+    assert(err.getMessage.contains(dir) && err.getMessage.contains("v1 "),
+      err.getMessage)
   }
 
-  test("pre-upgrade manifests (no file sizes) fall back to " +
-    "listing-based planning and read identically") {
-    val t = freshTable("legacy-manifest", abSchema)
-    t.append(Seq((1L, "x"), (2L, "y")).toDF("a", "b"))
-    t.append(Seq((3L, "z")).toDF("a", "b"))
-    // simulate a snapshot written before BOTH upgrades — the
-    // manifest-list split AND size/mtime stats: inline the manifest
-    // entries back into the snapshot as a legacy `files` array with
-    // the fields stripped (also exercises the legacy-inline parse
-    // path, which the split keeps for old tables)
-    import scala.jdk.CollectionConverters._
-    val metaPath = java.nio.file.Paths.get(t.root, "metadata",
-      f"v${t.currentVersion}%08d.json")
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val snap = om.readTree(java.nio.file.Files.readString(metaPath))
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-    val filesArr = om.createArrayNode()
-    snap.get("manifests").elements().asScala.foreach { m =>
-      val mp = java.nio.file.Paths.get(t.root, "metadata",
-        m.get("path").asText())
-      om.readTree(java.nio.file.Files.readString(mp)).get("files")
-        .elements().asScala.foreach { f =>
-          val fo = f.deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
-          fo.remove("size"); fo.remove("mtime")
-          filesArr.add(fo)
-        }
-    }
-    snap.remove("manifests")
-    snap.set[com.fasterxml.jackson.databind.JsonNode]("files", filesArr)
-    java.nio.file.Files.writeString(metaPath, om.writeValueAsString(snap))
-    val t2 = LakeTable.load(spark, t.root)
-    assert(t2.dataFiles.forall(_.sizeBytes == 0L),
-      "strip failed — fallback not exercised")
-    // reads still serve every row, through spark.read
-    assert(t2.read().select("a").as[Long].collect().toSet ==
-      Set(1L, 2L, 3L))
+  test("partition types manifest planning does not decode (date) fall " +
+    "back to listing-based planning and read identically") {
+    val df = Seq((1L, "2024-01-01"), (2L, "2024-01-02"), (3L, "2024-01-02"))
+      .toDF("a", "ds").select($"a", to_date($"ds").as("d"))
+    val t = LakeTable.create(spark, tmpDir("date-part"), df.schema,
+      partitionBy = Seq("d"))
+    t.append(df)
+    assert(t.dataFiles.nonEmpty && t.dataFiles.forall(_.sizeBytes > 0L))
     import org.apache.spark.sql.execution.FileSourceScanExec
-    val df = t2.read()
-    df.collect()
-    val locs = df.queryExecution.executedPlan.collect {
+    val read = t.read()
+    assert(read.as[(Long, java.sql.Date)].collect().toSet ==
+      df.as[(Long, java.sql.Date)].collect().toSet)
+    val locs = read.queryExecution.executedPlan.collect {
       case sc: FileSourceScanExec => sc.relation.location.getClass.getName
     }
     assert(locs.nonEmpty && !locs.exists(_.contains("ManifestScan")),

@@ -80,11 +80,10 @@ class MetaTablesSpec extends SparkSuite {
     t.append(df.withColumn("id", $"id" + 1000L)) // v2
     t.deleteWhere($"id" < 10L) // v3 CoW delete
     t.rollbackTo(2) // v4
-    // expire everything below the delete: the legacy diff classifier
-    // would have to answer "unknown" for v3 (its predecessor's file
-    // list is gone); the commit-time stamp still answers exactly —
-    // proving meta("snapshots") reads the stamp and never opens the
-    // predecessor's file list for stamped snapshots
+    // expire everything below the delete: v3's predecessor is gone,
+    // and the commit-time stamp still answers exactly — proving
+    // meta("snapshots") reads the stamp and never opens the
+    // predecessor's file list
     t.expireSnapshots(keepLast = 2)
     val ops = t.meta("snapshots")
       .select($"version", $"operation").as[(Int, String)]
