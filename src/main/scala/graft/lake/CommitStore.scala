@@ -30,14 +30,14 @@ import java.util.UUID
   * Why DATA files need no such seam: they are immutable and
   * UUID-named, so they never contend — an object store PUTs them
   * directly and a crashed writer's unreferenced files are garbage the
-  * age-guarded vacuum reclaims. Unpartitioned appends already write
-  * their final names with zero renames; the one rename-using path is
-  * the partitioned append's staging dir, which exists for write
-  * ATTRIBUTION (list only this writer's files among concurrent
-  * writers'), not atomicity — its object-store form is the
-  * Iceberg-style task-commit manifest (collect written paths from
-  * write tasks instead of listing), a mechanical swap behind
-  * writeData that changes no commit semantics. */
+  * age-guarded vacuum reclaims. Every lake write (partitioned or not,
+  * data or delete files) lands at its final name with zero renames,
+  * and the committed file list comes from the write tasks' commit
+  * messages (DirectWrite), never from a directory listing.
+  *
+  * The snapshot log and the `_latest` hint are read, listed and
+  * deleted only through this trait as well: LakeTable has one
+  * snapshot reader, built on [[read]], [[list]] and [[delete]]. */
 trait CommitStore {
   def putIfAbsent(path: Path, content: String): Boolean
 

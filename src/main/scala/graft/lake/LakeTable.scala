@@ -63,42 +63,146 @@ class LakeTable private (
 
   // ---- snapshot state ------------------------------------------------
 
-  /** Latest committed snapshot (version, parsed JSON). */
-  private def latest(): (Int, JsonNode) = {
-    val v = currentVersion
-    require(v >= 0, s"no snapshots at $root")
-    (v, mapper.readTree(Files.readString(versionPath(metaDir, v))))
+  /** One parsed snapshot of the log: every field [[LakeTable.snapshotJson]]
+    * writes, read once. Operations take ONE of these and derive all
+    * they need from it, so a commit landing mid-operation can never
+    * hand them two versions' worth of state. The manifest-list format
+    * is the only one this engine reads: a snapshot lacking a field
+    * every writer stamps is rejected, naming the table and the
+    * version. `files`/`deletes` read the (immutable, cached) manifests
+    * on first use. */
+  private[graft] final class Snapshot private[LakeTable] (
+      val version: Int, raw: String) {
+    private val node = mapper.readTree(raw)
+    private def required(key: String): JsonNode =
+      Option(node.get(key)).getOrElse(throw malformed(s"'$key'"))
+    private[LakeTable] def malformed(what: String) =
+      new IllegalStateException(
+        s"snapshot v$version at $root has no $what: not the " +
+          "manifest-list format this engine writes")
+    private def refs(arr: JsonNode): Seq[ManifestRef] =
+      arr.elements().asScala.map(m =>
+        ManifestRef(m.get("path").asText(), m.get("entries").asInt())).toSeq
+    private def strings(key: String): Map[String, String] =
+      required(key).properties().asScala
+        .map(e => e.getKey -> e.getValue.asText()).toMap
+
+    val committedAtMs: Long = required("committedAtMs").asLong()
+    val fieldIds: Map[String, Int] = required("fieldIds").properties()
+      .asScala.map(e => e.getKey -> e.getValue.asInt()).toMap
+    /** Monotone last-assigned field ID (Iceberg's last-column-id). */
+    val lastFieldId: Int = required("lastFieldId").asInt()
+    val properties: Map[String, String] = strings("properties")
+    val partitionBy: Seq[String] =
+      required("partitionBy").elements().asScala.map(_.asText()).toSeq
+    /** Monotone offset map carried through every snapshot (see
+      * [[highWaterMarks]]). */
+    val highWater: Map[String, Long] = required("highWater").properties()
+      .asScala.map(e => e.getKey -> e.getValue.asLong()).toMap
+    val appMeta: Map[String, String] = strings("appMeta")
+    /** The MANIFEST LIST (Iceberg's split): the snapshot names
+      * immutable manifest files, each holding a group of file entries
+      * — an append references every unchanged group and writes only
+      * its own batch, so per-commit metadata is O(batch), not O(live
+      * files). */
+    val manifests: Seq[ManifestRef] = refs(required("manifests"))
+    val deleteManifests: Seq[ManifestRef] =
+      Option(node.get("deleteManifests")).map(refs).getOrElse(Nil)
+    private val schemaJson = required("schemaJson").asText()
+    lazy val schema: StructType = DataTypeBridge.fromJson(schemaJson)
+    /** Hash-bucket layout, when declared at create time: (column,
+      * count) — see [[LakeTable.bucketSpec]]. */
+    val bucketSpec: Option[(String, Int)] = for {
+      c <- properties.get("bucket.column")
+      n <- properties.get("bucket.count")
+    } yield (c, n.toInt)
+    def bucketCols: Seq[String] =
+      bucketSpec.map(_._1.split(",").toSeq.map(_.trim)).getOrElse(Nil)
+    /** Declared hidden-partitioning transforms, parsed against THIS
+      * snapshot's schema, so the source column's presence/type is
+      * re-validated on every use. */
+    lazy val transforms: Seq[PTransform] = specList(TransformsProp)
+      .map(spec => parseTransformSpec(spec, schema).getOrElse(
+        throw new IllegalStateException(
+          s"unparseable partition transform '$spec' at $root")))
+    /** Every transform that ever governed a write — current spec plus
+      * history — for pruning and alter guards. History specs that no
+      * longer parse (their source column was since dropped) are
+      * skipped: their files can then only be pruned by raw-column
+      * stats. */
+    lazy val pruningTransforms: Seq[PTransform] =
+      (transforms ++ specList(TransformsHistoryProp).flatMap(spec =>
+        scala.util.Try(parseTransformSpec(spec, schema)).toOption.flatten))
+        .distinctBy(_.phys)
+    private def specList(prop: String): Seq[String] = properties.get(prop)
+      .map(_.split(";").toSeq.map(_.trim).filter(_.nonEmpty)).getOrElse(Nil)
+    def isCompaction: Boolean = appMeta.get("compaction").contains("true")
+    lazy val files: Seq[FileEntry] = manifests.flatMap(readManifest)
+    lazy val deletes: Seq[DeleteEntry] =
+      deleteManifests.flatMap(readDeleteManifest)
   }
 
-  /** Latest committed version: one read of the `_latest` hint + a
-    * forward probe (versions are dense, so the first missing v+1 is
-    * the frontier). The hint is ADVISORY — written best-effort after
-    * each won commit, it may lag or regress under races; the probe
-    * absorbs lag and a missing hint, or one naming a missing snapshot
-    * (cleared, expired), falls back to the full listing. At
-    * O(100k) commits the listing is the scale hazard (every read
-    * paying an O(versions) LIST); hint + probe is O(1 + lag). */
-  def currentVersion: Int = {
-    val hinted =
-      try {
-        val h = Files.readString(metaDir.resolve(LatestHint)).trim.toInt
-        if (h >= 0 && Files.exists(versionPath(metaDir, h))) h else -1
-      } catch { case _: Exception => -1 }
-    if (hinted >= 0) {
-      var v = hinted
-      while (Files.exists(versionPath(metaDir, v + 1))) v += 1
-      v
-    } else
-      listDir(metaDir)
-        .map(_.getFileName.toString)
-        .collect { case VersionRe(n) => n.toInt }
-        .foldLeft(-1)(math.max)
+  /** THE snapshot reader: version `v` through the commit store, None
+    * when it was never committed or has been expired. */
+  private def readSnapshot(v: Int): Option[Snapshot] =
+    commitStore.read(versionPath(metaDir, v)).map(new Snapshot(v, _))
+
+  /** Snapshot `v` of the log (time travel); fails when it is absent. */
+  private def snapshotAt(v: Int): Snapshot =
+    readSnapshot(v).getOrElse(throw new java.nio.file.NoSuchFileException(
+      versionPath(metaDir, v).toString))
+
+  /** Retained snapshots with versions in (from, to], oldest first —
+    * one read per version in the range; expired versions are
+    * skipped. */
+  private[graft] def snapshotsBetween(from: Int, to: Int): Seq[Snapshot] =
+    ((from + 1) to to).flatMap(readSnapshot)
+
+  /** Versions of every retained snapshot, oldest first (one LIST). */
+  private def retainedVersions: Seq[Int] =
+    commitStore.list(metaDir).map(_.getFileName.toString)
+      .collect { case VersionRe(n) => n.toInt }.sorted
+
+  /** The latest committed snapshot: one read of the `_latest` hint +
+    * a forward probe (versions are dense, so the first missing v+1 is
+    * the frontier), all through the commit store. The hint is
+    * ADVISORY — written best-effort after each won commit, it may lag
+    * or regress under races; the probe absorbs lag, and a missing
+    * hint, or one naming a missing snapshot (cleared, expired), falls
+    * back to the full listing. At O(100k) commits the listing is the
+    * scale hazard (every read paying an O(versions) LIST); hint +
+    * probe is O(1 + lag). The probe keeps the content it read, so the
+    * frontier snapshot is read once. */
+  private def latestRaw(): Option[(Int, String)] = {
+    def at(v: Int) = commitStore.read(versionPath(metaDir, v)).map(v -> _)
+    commitStore.read(metaDir.resolve(LatestHint))
+      .flatMap(_.trim.toIntOption).filter(_ >= 0).flatMap(at)
+      .orElse(retainedVersions.lastOption.flatMap(at))
+      .map { first =>
+        var cur = first
+        var next = at(cur._1 + 1)
+        while (next.isDefined) { cur = next.get; next = at(cur._1 + 1) }
+        cur
+      }
   }
 
-  def schema: StructType =
-    DataTypeBridge.fromJson(latest()._2.get("schemaJson").asText())
+  private def latest(): Snapshot = {
+    val found = latestRaw()
+    require(found.isDefined, s"no snapshots at $root")
+    new Snapshot(found.get._1, found.get._2)
+  }
 
-  def properties: Map[String, String] = propertiesOf(latest()._2)
+  /** Latest committed version (-1 before the table's first commit). */
+  def currentVersion: Int = latestRaw().map(_._1).getOrElse(-1)
+
+  /** The snapshot `read()` serves: the WAP pin while a branch is
+    * staging, else the latest. */
+  private def mainSnapshot(): Snapshot =
+    activeBranch.map(b => snapshotAt(b._2)).getOrElse(latest())
+
+  def schema: StructType = latest().schema
+
+  def properties: Map[String, String] = latest().properties
 
   /** This incarnation's identity ([[LakeTable.TableUuidProp]], minted
     * at create): distinguishes a table from a same-root predecessor
@@ -110,37 +214,7 @@ class LakeTable private (
   def incarnationId: String =
     properties.getOrElse(LakeTable.TableUuidProp, "pre-uuid")
 
-  private def propertiesOf(node: JsonNode): Map[String, String] =
-    node.get("properties").properties().asScala
-      .map(e => e.getKey -> e.getValue.asText()).toMap
-
-  def fieldIds: Map[String, Int] =
-    latest()._2.get("fieldIds").properties().asScala
-      .map(e => e.getKey -> e.getValue.asInt()).toMap
-
-  /** A field every snapshot [[LakeTable.snapshotJson]] writes carries.
-    * The manifest-list format is the only one this engine reads: a
-    * snapshot lacking one of its fields is rejected, naming the table
-    * and the version. */
-  private def required(node: JsonNode, key: String): JsonNode =
-    Option(node.get(key)).getOrElse(throw malformed(node, s"'$key'"))
-
-  private def malformed(node: JsonNode, what: String) =
-    new IllegalStateException(
-      s"snapshot v${node.path("version").asText("?")} at $root has no " +
-        s"$what: not the manifest-list format this engine writes")
-
-  /** The live-file set of a snapshot. Snapshots carry a MANIFEST LIST
-    * (Iceberg's split): the snapshot names immutable manifest files,
-    * each holding a group of file entries — an append references every
-    * unchanged group and writes only its own batch, so per-commit
-    * metadata is O(batch), not O(live files). */
-  private def filesOf(node: JsonNode): Seq[FileEntry] =
-    manifestRefsOf(node).flatMap(readManifest)
-
-  private def manifestRefsOf(node: JsonNode): Seq[ManifestRef] =
-    required(node, "manifests").elements().asScala.map(m =>
-      ManifestRef(m.get("path").asText(), m.get("entries").asInt())).toSeq
+  def fieldIds: Map[String, Int] = latest().fieldIds
 
   /** Read one manifest's file entries through the process-wide cache:
     * manifests are immutable and UUID-named, so a parsed value can
@@ -223,11 +297,6 @@ class LakeTable private (
   // unchanged refs untouched, so a positional delete commits O(its
   // own positions) metadata and a plain append commits none.
 
-  private def deleteRefsOf(node: JsonNode): Seq[ManifestRef] =
-    Option(node.get("deleteManifests")).map(_.elements().asScala.map(m =>
-      ManifestRef(m.get("path").asText(), m.get("entries").asInt())
-    ).toSeq).getOrElse(Nil)
-
   private def readDeleteManifest(ref: ManifestRef): Seq[DeleteEntry] = {
     val p = metaDir.resolve(ref.path).toAbsolutePath.normalize()
     val key = p.toString
@@ -282,39 +351,22 @@ class LakeTable private (
       : Seq[ManifestRef] =
     mergeLadder(refs, readDeleteManifest, writeDeleteManifest)
 
-  private def deletesOf(node: JsonNode): Seq[DeleteEntry] =
-    deleteRefsOf(node).flatMap(readDeleteManifest)
-
   /** Live position-delete files of the current snapshot (empty unless
     * [[deleteWherePositional]] has committed and compaction has not
     * yet absorbed them). */
-  def deleteEntries: Seq[DeleteEntry] = deletesOf(latest()._2)
+  def deleteEntries: Seq[DeleteEntry] = latest().deletes
 
-  private def fieldIdsOf(node: JsonNode): Map[String, Int] =
-    node.get("fieldIds").properties().asScala
-      .map(e => e.getKey -> e.getValue.asInt()).toMap
-
-  /** Monotone last-assigned field ID (Iceberg's last-column-id). */
-  private def lastFieldIdOf(node: JsonNode): Int =
-    required(node, "lastFieldId").asInt()
-
-  def dataFiles: Seq[FileEntry] = filesOf(latest()._2)
+  def dataFiles: Seq[FileEntry] = latest().files
 
   /** File entries of a historical snapshot (time-travel file listing;
     * a commit's own additions are `filesAt(v) -- filesAt(v-1)`). */
-  def filesAt(version: Int): Seq[FileEntry] =
-    filesOf(mapper.readTree(Files.readString(versionPath(metaDir, version))))
+  def filesAt(version: Int): Seq[FileEntry] = snapshotAt(version).files
 
-  def appMeta(key: String): Option[String] = {
-    val m = latest()._2.get("appMeta")
-    Option(m.get(key)).map(_.asText())
-  }
+  def appMeta(key: String): Option[String] = latest().appMeta.get(key)
 
   /** appMeta of a specific historical snapshot. */
-  def appMetaAt(version: Int, key: String): Option[String] = {
-    val n = mapper.readTree(Files.readString(versionPath(metaDir, version)))
-    Option(n.get("appMeta")).flatMap(m => Option(m.get(key))).map(_.asText())
-  }
+  def appMetaAt(version: Int, key: String): Option[String] =
+    snapshotAt(version).appMeta.get(key)
 
   /** Number of retained NON-compaction commits — the table's
     * data-batch frontier. Poll this (not [[currentVersion]]) to wait
@@ -334,10 +386,7 @@ class LakeTable private (
     // stays monotone across retention exactly as before.
     val cur = currentVersion
     ((dccSeen + 1) to cur).foreach { v =>
-      val isData =
-        try !appMetaAt(v, "compaction").contains("true")
-        catch { case _: java.nio.file.NoSuchFileException => true }
-      if (isData) dccCount += 1
+      if (readSnapshot(v).forall(!_.isCompaction)) dccCount += 1
     }
     dccSeen = cur
     dccCount
@@ -349,41 +398,18 @@ class LakeTable private (
   /** Monotone offset map carried through every snapshot: per-writer
     * streaming batch ids (`writer.<id>`), pipe offsets
     * (`pipe.<id>.sourceVersion`). */
-  def highWaterMarks: Map[String, Long] = highWaterOf(latest()._2)
+  def highWaterMarks: Map[String, Long] = latest().highWater
 
   def highWater(key: String): Option[Long] = highWaterMarks.get(key)
 
-  private def highWaterOf(node: JsonNode): Map[String, Long] =
-    required(node, "highWater").properties().asScala
-      .map(e => e.getKey -> e.getValue.asLong()).toMap
-
-  def partitionBy: Seq[String] = partitionByOf(latest()._2)
-
-  private def partitionByOf(node: JsonNode): Seq[String] =
-    required(node, "partitionBy").elements().asScala.map(_.asText()).toSeq
+  def partitionBy: Seq[String] = latest().partitionBy
 
   /** Declared hidden-partitioning transforms (empty for plain tables).
     * Re-parsed from the frozen creation-time property against the
     * current schema, so the source column's presence/type is
     * re-validated on every use (a rename/drop of a transform source
     * is blocked the same way bucket columns are). */
-  def partitionTransforms: Seq[PTransform] = {
-    val node = latest()._2
-    transformsOf(node,
-      DataTypeBridge.fromJson(node.get("schemaJson").asText()))
-  }
-
-  /** Node-scoped form: parse transforms against the SAME snapshot's
-    * schema, for callers that must derive everything from one
-    * latest() read (snapshot consistency under concurrent commits). */
-  private def transformsOf(node: JsonNode,
-                           s: StructType): Seq[PTransform] =
-    propertiesOf(node).get(TransformsProp)
-      .map(_.split(";").toSeq.map(_.trim).filter(_.nonEmpty)
-        .map(spec => parseTransformSpec(spec, s).getOrElse(
-          throw new IllegalStateException(
-            s"unparseable partition transform '$spec' at $root"))))
-      .getOrElse(Nil)
+  def partitionTransforms: Seq[PTransform] = latest().transforms
 
   /** Hash-bucket layout, when declared at create time: (column, count).
     * Rows land in hive partition `_bucket = pmod(murmur3(col, 42),
@@ -399,7 +425,7 @@ class LakeTable private (
     * file opens. This is the layout half of point lookups at 100 TB:
     * a probe for k keys touches at most k of `count` buckets no matter
     * how big history grows. */
-  def bucketSpec: Option[(String, Int)] = bucketSpecOf(latest()._2)
+  def bucketSpec: Option[(String, Int)] = latest().bucketSpec
 
   /** The LOGICAL partition spec as declared — identity column names and
     * transform specs (`days(ts)`, `truncate(4,s)`, ...), in layout
@@ -416,21 +442,12 @@ class LakeTable private (
     }
   }
 
-  private def bucketSpecOf(node: JsonNode): Option[(String, Int)] = {
-    val props = propertiesOf(node)
-    for {
-      c <- props.get("bucket.column")
-      n <- props.get("bucket.count")
-    } yield (c, n.toInt)
-  }
-
   /** The bucket key's columns: a COMPOSITE key is declared as a
     * comma-separated `bucket.column` ("event_type,uid_bucket") and
     * hashed as one multi-argument hash — the layout an
     * aggregate MV keyed on several columns needs so a delta batch's
     * rewrite touches only the buckets holding its changed keys. */
-  def bucketCols: Seq[String] =
-    bucketSpec.map(_._1.split(",").toSeq.map(_.trim)).getOrElse(Nil)
+  def bucketCols: Seq[String] = latest().bucketCols
 
   /** The bucket a value of the (single-column) bucket key lands in —
     * driver-side evaluation of the exact expression the writer uses
@@ -440,19 +457,23 @@ class LakeTable private (
 
   /** Composite-key form: one value per [[bucketCols]] entry, hashed
     * with the same multi-argument hash chain the writer codegens. */
-  def bucketIdOfKey(values: Seq[Any]): Int = {
-    val (_, n) = bucketSpec.getOrElse(
+  def bucketIdOfKey(values: Seq[Any]): Int = bucketIds(latest())(values)
+
+  /** Bucket-id function of snapshot `s`'s layout: column types and
+    * count resolved once, so a probe of k keys hashes k literals
+    * against one snapshot. */
+  private def bucketIds(s: Snapshot): Seq[Any] => Int = {
+    import org.apache.spark.sql.catalyst.expressions.{Literal, Murmur3Hash}
+    val (_, n) = s.bucketSpec.getOrElse(
       throw new IllegalStateException(s"table at $root is not bucketed"))
-    val cols = bucketCols
-    require(values.length == cols.length,
-      s"bucket key has ${cols.length} columns, got ${values.length} values")
-    val lits = cols.zip(values).map { case (c, v) =>
-      org.apache.spark.sql.catalyst.expressions.Literal.create(
-        v, schema(c).dataType)
+    val types = s.bucketCols.map(c => s.schema(c).dataType)
+    values => {
+      require(values.length == types.length,
+        s"bucket key has ${types.length} columns, got ${values.length} values")
+      val lits = types.zip(values).map { case (t, v) => Literal.create(v, t) }
+      val h = new Murmur3Hash(lits, 42).eval(null).asInstanceOf[Int].toLong
+      (((h % n) + n) % n).toInt
     }
-    val h = new org.apache.spark.sql.catalyst.expressions.Murmur3Hash(lits, 42)
-      .eval(null).asInstanceOf[Int].toLong
-    (((h % n) + n) % n).toInt
   }
 
   /** The writer-side bucket-assignment expression: literally
@@ -461,10 +482,10 @@ class LakeTable private (
     * expose the layout as a Spark `BucketSpec` without any custom
     * physical operator: a file named for bucket k really does hold
     * exactly the rows Spark's own hash would route to partition k. */
-  private def bucketWriteExpr: org.apache.spark.sql.Column = {
+  private def bucketWriteExpr(s: Snapshot): org.apache.spark.sql.Column = {
     import org.apache.spark.sql.functions.{col, hash, lit, pmod}
-    val (_, n) = bucketSpec.get
-    pmod(hash(bucketCols.map(col): _*), lit(n)).cast("int")
+    val (_, n) = s.bucketSpec.get
+    pmod(hash(s.bucketCols.map(col): _*), lit(n)).cast("int")
   }
 
   /** Point-lookup read: rows whose `keyCol` is one of `values`, using
@@ -474,16 +495,19 @@ class LakeTable private (
     * returned plan never shuffles: it is a pruned scan. */
   def probe(keyCol: String, values: Seq[Any]): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
-    if (values.isEmpty) return read().filter(lit(false))
+    val s = mainSnapshot()
+    if (values.isEmpty) return readAt(s).filter(lit(false))
     val base = col(keyCol).isin(values: _*)
-    val cond = bucketSpec match {
+    val cond = s.bucketSpec match {
       case Some((c, _)) if c == keyCol && !c.contains(",") =>
-        col(BucketCol).isin(values.map(bucketIdOf).distinct: _*) && base
+        val bucketOf = bucketIds(s)
+        col(BucketCol).isin(values.map(v => bucketOf(Seq(v))).distinct: _*) &&
+          base
       case _ => base
     }
     // probes feed broadcast joins: the bucket claim can't remove an
     // exchange there but would cap scan parallelism at numBuckets
-    readWhere(cond, claimBucket = false)
+    readWhereAt(s, cond, claimBucket = false)
   }
 
   /** Bucket-dir-only point read: every row of the bucket dirs the
@@ -495,13 +519,15 @@ class LakeTable private (
     * unbucketed on `keyCol`. */
   def probeBuckets(keyCol: String, values: Seq[Any]): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
-    if (values.isEmpty) return read().filter(lit(false))
-    bucketSpec match {
+    val s = mainSnapshot()
+    if (values.isEmpty) return readAt(s).filter(lit(false))
+    s.bucketSpec match {
       case Some((c, n)) if c == keyCol && !c.contains(",") =>
-        val ids = values.map(bucketIdOf).distinct
-        if (ids.size >= n) read()
-        else readWhere(col(BucketCol).isin(ids: _*), claimBucket = false)
-      case _ => read()
+        val bucketOf = bucketIds(s)
+        val ids = values.map(v => bucketOf(Seq(v))).distinct
+        if (ids.size >= n) readAt(s)
+        else readWhereAt(s, col(BucketCol).isin(ids: _*), claimBucket = false)
+      case _ => readAt(s)
     }
   }
 
@@ -519,34 +545,27 @@ class LakeTable private (
     else if (values.length <= maxProbe) probeBuckets(keyCol, values)
     else read()
 
+  /** Commit wall-clock of one retained snapshot (the `_commit_timestamp`
+    * CDF column's source) — one metadata-node read. */
+  private[graft] def committedAtMs(v: Int): Long = retained(v).committedAtMs
+
   /** Retained snapshots only (expired versions are absent). `rows`
     * is the REFERENCED file-row total; live merge-on-read delete
     * files (deleteEntries) are not subtracted — an exact live count
     * needs a read (concurrent overlapping deletes may record a
     * position twice, so metadata alone cannot be exact). */
-  /** Commit wall-clock of one retained snapshot (the `_commit_timestamp`
-    * CDF column's source) — one metadata-node read. */
-  private[graft] def committedAtMs(v: Int): Long = {
-    requireRetained(v)
-    mapper.readTree(Files.readString(versionPath(metaDir, v)))
-      .get("committedAtMs").asLong()
-  }
-
   def snapshots: Seq[SnapshotInfo] =
-    (0 to currentVersion)
-      .filter(v => Files.exists(versionPath(metaDir, v)))
-      .map { v =>
-        val n = mapper.readTree(Files.readString(versionPath(metaDir, v)))
-        SnapshotInfo(v, n.get("committedAtMs").asLong(),
-          filesOf(n).size, filesOf(n).map(_.rows).sum)
-      }
+    retainedVersions.flatMap(readSnapshot).map { s =>
+      SnapshotInfo(s.version, s.committedAtMs, s.files.size,
+        s.files.map(_.rows).sum)
+    }
 
   // ---- read ----------------------------------------------------------
 
   /** The MAIN-visible table: the latest snapshot, unless a WAP branch
     * is staging — then the version pinned at `createBranch` (staged
     * commits are invisible here until `publishBranch`). */
-  def read(): DataFrame = readVersion(mainVersion)
+  def read(): DataFrame = readAt(mainSnapshot())
 
   /** Time travel by timestamp (Iceberg's `TIMESTAMP AS OF`): read the
     * latest snapshot committed at or before `tsMs`. Fails when the
@@ -563,12 +582,12 @@ class LakeTable private (
     * version while a WAP branch stages (see [[readAsOf]]). */
   def versionAt(tsMs: Long): Int = {
     val cap = mainVersion
-    val eligible = snapshots.filter(s =>
-      s.committedAtMs <= tsMs && s.version <= cap)
+    val snaps = retainedVersions.filter(_ <= cap).flatMap(readSnapshot)
+    val eligible = snaps.filter(_.committedAtMs <= tsMs)
     require(eligible.nonEmpty,
       s"no snapshot at or before $tsMs at $root " +
-        s"(earliest retained: ${snapshots.headOption.map(_.committedAtMs)})")
-    eligible.map(_.version).max
+        s"(earliest retained: ${snaps.headOption.map(_.committedAtMs)})")
+    eligible.last.version
   }
 
   /** Manifest-derived scan statistics — (rows, bytes) of the files a
@@ -581,12 +600,10 @@ class LakeTable private (
     * the scan (a table reported slightly large never mis-broadcasts). */
   def scanStats(condition: Option[org.apache.spark.sql.Column] = None,
                 version: Option[Int] = None): (Long, Long) = {
-    val node = mapper.readTree(
-      Files.readString(versionPath(metaDir, version.getOrElse(mainVersion))))
-    val all = filesOf(node)
+    val s = version.map(snapshotAt).getOrElse(mainSnapshot())
     val entries = condition match {
-      case Some(c) => pruneFilesAmong(all, c)
-      case None    => all
+      case Some(c) => pruneFiles(s, c)
+      case None    => s.files
     }
     (entries.map(_.rows).sum, entries.map(_.sizeBytes).sum)
   }
@@ -598,14 +615,13 @@ class LakeTable private (
     * float->double on both the vectorized and row-based paths; files
     * written before a rename surface their data under the new name via
     * field-ID resolution). */
-  def readVersion(v: Int): DataFrame = {
-    val node = mapper.readTree(Files.readString(versionPath(metaDir, v)))
-    val snapSchema = DataTypeBridge.fromJson(node.get("schemaJson").asText())
-    readEntries(filesOf(node), snapSchema, fieldIdsOf(node),
-      deletes = deletesOf(node))
-  }
+  def readVersion(v: Int): DataFrame = readAt(snapshotAt(v))
 
-  /** Plan a read of `entries` under `snapSchema`, resolving each file's
+  private def readAt(s: Snapshot): DataFrame =
+    readEntries(s.files, s, deletes = s.deletes)
+
+  /** Plan a read of `entries` under snapshot `snap`'s schema and bucket
+    * layout, resolving each file's
     * physical columns to current columns BY FIELD ID (Iceberg
     * semantics). Files whose physical names already equal their current
     * names — the overwhelmingly common case — share one scan, identical
@@ -613,13 +629,14 @@ class LakeTable private (
     * rename (or carrying a retired ID whose name was reused) get a
     * per-epoch scan with an aliasing projection, and the union of those
     * scans stays fully distributed, prunable, and pushdown-friendly. */
-  private def readEntries(entries: Seq[FileEntry], snapSchema: StructType,
-                          ids: Map[String, Int],
+  private def readEntries(entries: Seq[FileEntry], snap: Snapshot,
                           tag: Boolean = false,
                           claimBucket: Boolean = true,
                           tagPos: Boolean = false,
                           deletes: Seq[DeleteEntry] = Nil): DataFrame = {
     import org.apache.spark.sql.functions.{col => fcol}
+    val snapSchema = snap.schema
+    val ids = snap.fieldIds
     val tagged = StructType(snapSchema.fields ++
       (if (tag) Seq(StructField(FileTag, StringType, nullable = false))
        else Nil) ++
@@ -816,7 +833,8 @@ class LakeTable private (
       // claimBucket=false and read at full parallelism (measured 1.5x
       // end-to-end on the incremental-dedup path at 8 buckets vs 32
       // cores).
-      val v1Bucket = if (!claimBucket) None else bucketSpec.collect {
+      val bucketCols = snap.bucketCols
+      val v1Bucket = if (!claimBucket) None else snap.bucketSpec.collect {
         case (_, n) if bucketCols.forall(dataSchema.fieldNames.contains) &&
             es.forall { e =>
               val segs = e.path.split("/")
@@ -881,21 +899,19 @@ class LakeTable private (
     changesBetween(fromVersion, mainVersion) // WAP: staged commits
                                              // are not deltas yet
 
-  /** Fail an incremental read whose checkpoint lags the retention
-    * policy, instead of the raw NoSuchFileException a vacuumed
-    * snapshot would throw mid-plan. The contract: an incremental
+  /** Retained snapshot `v`; fails an incremental read whose checkpoint
+    * lags the retention policy, instead of the raw NoSuchFileException
+    * a vacuumed snapshot would throw mid-plan. The contract: an incremental
     * consumer must advance its offset faster than
     * `snapshots.auto.keepLast` expires history; a consumer that
     * paused past retention has no exact delta left and must resync
     * from a full read. */
-  private def requireRetained(fromVersion: Int): Unit =
-    if (fromVersion >= 0 &&
-        !Files.exists(versionPath(metaDir, fromVersion)))
-      throw new IllegalStateException(
-        s"snapshot $fromVersion of table at $root has been expired by " +
-        "the retention policy (snapshots.auto.keepLast / " +
-        "expireSnapshots); the incremental consumer's checkpoint lags " +
-        "retention — resync from a full read or raise keepLast")
+  private def retained(v: Int): Snapshot = readSnapshot(v).getOrElse(
+    throw new IllegalStateException(
+      s"snapshot $v of table at $root has been expired by " +
+      "the retention policy (snapshots.auto.keepLast / " +
+      "expireSnapshots); the incremental consumer's checkpoint lags " +
+      "retention — resync from a full read or raise keepLast"))
 
   /** Rows in files committed in versions (from, to] — the bounded form
     * of [[changesSince]] for consumers that must not read past an
@@ -911,64 +927,33 @@ class LakeTable private (
     * continuous curation loop quadratic once auto-compaction kicks
     * in). The pre-compaction originals stay readable: retention keeps
     * every file referenced by any retained snapshot, and the version
-    * they were added at is retained by [[requireRetained]]'s guard.
+    * they were added at is retained by [[retained]]'s guard.
     * When a NON-row-preserving rewrite (delete/upsert) sits in the
     * range — or an intermediate snapshot is missing — per-version
     * attribution is ambiguous, and the walk falls back to the plain
     * set-difference superset (re-emission of rewritten survivors; an
     * idempotent/fp-frontier consumer absorbs it). */
   def changesBetween(fromVersion: Int, toVersion: Int): DataFrame = {
-    requireRetained(fromVersion)
-    val toNode = mapper.readTree(
-      Files.readString(versionPath(metaDir, toVersion)))
-    val toSchema = DataTypeBridge.fromJson(toNode.get("schemaJson").asText())
-    val toFids = fieldIdsOf(toNode)
-    def setDiff(): DataFrame = {
-      val from =
-        if (fromVersion < 0) Set.empty[String]
-        else {
-          val node = mapper.readTree(
-            Files.readString(versionPath(metaDir, fromVersion)))
-          filesOf(node).map(_.path).toSet
-        }
-      readEntries(filesOf(toNode).filterNot(f => from.contains(f.path)),
-        toSchema, toFids)
-    }
-    val versions = (math.max(0, fromVersion + 1)) to toVersion
-    if (versions.exists(v => !Files.exists(versionPath(metaDir, v))) ||
-        (fromVersion >= 0 &&
-         !Files.exists(versionPath(metaDir, fromVersion))))
-      return setDiff()
-    var prevPaths: Set[String] =
-      if (fromVersion < 0) Set.empty
-      else filesOf(mapper.readTree(
-        Files.readString(versionPath(metaDir, fromVersion))))
-        .map(_.path).toSet
+    val fromPaths =
+      if (fromVersion < 0) Set.empty[String]
+      else retained(fromVersion).files.map(_.path).toSet
+    val to = snapshotAt(toVersion)
+    def setDiff(): DataFrame =
+      readEntries(to.files.filterNot(f => fromPaths.contains(f.path)), to)
+    val steps = (math.max(0, fromVersion + 1) to toVersion).map(v =>
+      if (v == toVersion) Some(to) else readSnapshot(v))
+    if (steps.exists(_.isEmpty)) return setDiff()
+    var prevPaths = fromPaths
     val newEntries = Seq.newBuilder[FileEntry]
-    for (v <- versions) {
-      val node = mapper.readTree(Files.readString(versionPath(metaDir, v)))
-      val files = filesOf(node)
-      val paths = files.map(_.path).toSet
-      val isCompaction = Option(node.get("appMeta"))
-        .flatMap(m => Option(m.get("compaction")))
-        .exists(_.asText() == "true")
+    for (s <- steps.flatten) {
+      val paths = s.files.map(_.path).toSet
       val removed = prevPaths.diff(paths)
-      if (!isCompaction && removed.nonEmpty) return setDiff()
-      if (!isCompaction)
-        newEntries ++= files.filterNot(f => prevPaths.contains(f.path))
+      if (!s.isCompaction && removed.nonEmpty) return setDiff()
+      if (!s.isCompaction)
+        newEntries ++= s.files.filterNot(f => prevPaths.contains(f.path))
       prevPaths = paths
     }
-    readEntries(newEntries.result(), toSchema, toFids)
-  }
-
-  /** Snapshot file entries and live delete-entry count at `v` —
-    * metadata only, the initial-batch currency of the streaming read
-    * (which serves whole snapshots / per-version file adds through the
-    * DSv2 parquet reader and therefore cannot apply MOR deletes). */
-  private[graft] def snapshotEntries(v: Int): (Seq[FileEntry], Int) = {
-    requireRetained(v)
-    val node = mapper.readTree(Files.readString(versionPath(metaDir, v)))
-    (filesOf(node), deletesOf(node).size)
+    readEntries(newEntries.result(), to)
   }
 
   /** Snapshot `v`'s data files WITH its live merge-on-read delete
@@ -976,9 +961,8 @@ class LakeTable private (
     * initial batch ([[graft.sources.GraftLakeMicroBatchStream]]). */
   private[graft] def snapshotWithDeletes(v: Int)
       : (Seq[FileEntry], Seq[LakeTable.DeleteEntry]) = {
-    requireRetained(v)
-    val node = mapper.readTree(Files.readString(versionPath(metaDir, v)))
-    (filesOf(node), deletesOf(node))
+    val s = retained(v)
+    (s.files, s.deletes)
   }
 
   /** Metadata-only walk of versions (from, to]: per version, the data
@@ -992,28 +976,19 @@ class LakeTable private (
     * rather than silently skip history. */
   def addedEntriesBetween(from: Int, to: Int)
       : Seq[(Int, Seq[FileEntry], Boolean)] = {
-    if (from >= 0) requireRetained(from)
+    val base = if (from < 0) None else Some(retained(from))
     var prevPaths: Set[String] =
-      if (from < 0) Set.empty
-      else filesOf(mapper.readTree(
-        Files.readString(versionPath(metaDir, from)))).map(_.path).toSet
+      base.map(_.files.map(_.path).toSet).getOrElse(Set.empty)
     var prevDels: Set[String] =
-      if (from < 0) Set.empty
-      else deletesOf(mapper.readTree(
-        Files.readString(versionPath(metaDir, from)))).map(_.path).toSet
+      base.map(_.deletes.map(_.path).toSet).getOrElse(Set.empty)
     (math.max(0, from + 1) to to).map { v =>
-      requireRetained(v)
-      val node = mapper.readTree(Files.readString(versionPath(metaDir, v)))
-      val files = filesOf(node)
-      val paths = files.map(_.path).toSet
-      val dels = deletesOf(node).map(_.path).toSet
-      val isCompaction = Option(node.get("appMeta"))
-        .flatMap(m => Option(m.get("compaction")))
-        .exists(_.asText() == "true")
+      val s = retained(v)
+      val paths = s.files.map(_.path).toSet
+      val dels = s.deletes.map(_.path).toSet
       val added =
-        if (isCompaction) Nil
-        else files.filterNot(f => prevPaths.contains(f.path))
-      val removes = !isCompaction &&
+        if (s.isCompaction) Nil
+        else s.files.filterNot(f => prevPaths.contains(f.path))
+      val removes = !s.isCompaction &&
         (dels.exists(!prevDels.contains(_)) ||
           prevPaths.exists(!paths.contains(_)))
       prevPaths = paths
@@ -1030,28 +1005,18 @@ class LakeTable private (
     * files REMOVED by the commit serve their live rows as deletes,
     * files ADDED serve theirs as inserts, and files whose
     * merge-on-read delete SCOPE grew serve exactly the newly-deleted
-    * rows. One snapshot node read per version, no data file opened.
+    * rows. One snapshot read per version, no data file opened.
     * Fails on an expired version — a checkpoint that fell behind the
     * retention window must restart rather than silently skip. */
   private[graft] def changeStepsBetween(from: Int, to: Int)
       : Seq[LakeTable.ChangeStep] = {
-    requireRetained(from)
-    var (prevFiles, prevDels) = snapshotWithDeletes(from)
+    var prev = retained(from)
     (from + 1 to to).map { v =>
-      requireRetained(v)
-      val node = mapper.readTree(Files.readString(versionPath(metaDir, v)))
-      val files = filesOf(node)
-      val dels = deletesOf(node)
-      val isCompaction = Option(node.get("appMeta"))
-        .flatMap(m => Option(m.get("compaction")))
-        .exists(_.asText() == "true")
-      val isUpdate = Option(node.get("appMeta"))
-        .flatMap(m => Option(m.get("cdf.op")))
-        .exists(_.asText() == "update")
-      val step = LakeTable.ChangeStep(v, prevFiles, files, prevDels, dels,
-        isCompaction, isUpdate, node.get("committedAtMs").asLong())
-      prevFiles = files
-      prevDels = dels
+      val s = retained(v)
+      val step = LakeTable.ChangeStep(v, prev.files, s.files, prev.deletes,
+        s.deletes, s.isCompaction, s.appMeta.get("cdf.op").contains("update"),
+        s.committedAtMs)
+      prev = s
       step
     }
   }
@@ -1064,13 +1029,12 @@ class LakeTable private (
     * answers true and the changelog then proves the zero. */
   def versionRemovesRows(v: Int): Boolean = {
     if (v <= 0) return false
-    requireRetained(v); requireRetained(v - 1)
-    val n = mapper.readTree(Files.readString(versionPath(metaDir, v)))
-    val p = mapper.readTree(Files.readString(versionPath(metaDir, v - 1)))
-    val prevD = deletesOf(p).map(_.path).toSet
-    val paths = filesOf(n).map(_.path).toSet
-    deletesOf(n).exists(e => !prevD.contains(e.path)) ||
-      filesOf(p).exists(f => !paths.contains(f.path))
+    val n = retained(v)
+    val p = retained(v - 1)
+    val prevD = p.deletes.map(_.path).toSet
+    val paths = n.files.map(_.path).toSet
+    n.deletes.exists(e => !prevD.contains(e.path)) ||
+      p.files.exists(f => !paths.contains(f.path))
   }
 
   // ---- ROW-LEVEL CHANGELOG (Iceberg changelog scan / Delta CDF) ------
@@ -1110,28 +1074,17 @@ class LakeTable private (
     import org.apache.spark.sql.functions.lit
     require(fromVersion <= toVersion,
       s"changelog range is [from <= to], got ($fromVersion, $toVersion)")
-    requireRetained(fromVersion); requireRetained(toVersion)
-    val nF = mapper.readTree(
-      Files.readString(versionPath(metaDir, fromVersion)))
-    val nT = mapper.readTree(
-      Files.readString(versionPath(metaDir, toVersion)))
+    val nF = retained(fromVersion)
+    val nT = retained(toVersion)
     // all-compaction range: row-preserving by the strict-replace
     // commit contract, so the changelog is empty by metadata alone
     val steps = (fromVersion + 1) to toVersion
-    if (steps.nonEmpty &&
-        steps.forall(v => Files.exists(versionPath(metaDir, v))) &&
-        steps.forall { v =>
-          Option(mapper.readTree(Files.readString(versionPath(metaDir, v)))
-            .get("appMeta"))
-            .flatMap(m => Option(m.get("compaction")))
-            .exists(_.asText() == "true")
-        }) {
-      val sT0 = DataTypeBridge.fromJson(nT.get("schemaJson").asText())
-      return readEntries(Nil, sT0, fieldIdsOf(nT))
-        .withColumn("_change_type", lit("insert"))
-    }
-    val filesF = filesOf(nF); val filesT = filesOf(nT)
-    val delF = deletesOf(nF); val delT = deletesOf(nT)
+    if (steps.nonEmpty && steps.forall(v =>
+        (if (v == toVersion) Some(nT) else readSnapshot(v))
+          .exists(_.isCompaction)))
+      return readEntries(Nil, nT).withColumn("_change_type", lit("insert"))
+    val filesF = nF.files; val filesT = nT.files
+    val delF = nF.deletes; val delT = nT.deletes
     // Effective delete scope of one data file under one snapshot's
     // delete set — the METADATA identity that decides whether the
     // file's visible rows can differ between the snapshots. Equality
@@ -1162,10 +1115,7 @@ class LakeTable private (
     // cancel regardless.
     val delTByPath = delT.map(e => e.path -> e).toMap
     val pathsT = filesT.map(_.path).toSet
-    val sT = DataTypeBridge.fromJson(nT.get("schemaJson").asText())
-    val idsT = fieldIdsOf(nT)
-    val sF = DataTypeBridge.fromJson(nF.get("schemaJson").asText())
-    val idsF = fieldIdsOf(nF)
+    val sF = nF.schema
     val grewByEq: Map[Seq[String], Seq[FileEntry]] = filesF
       .filter(f => pathsT.contains(f.path) && !unchanged.contains(f.path))
       .flatMap { f =>
@@ -1205,12 +1155,11 @@ class LakeTable private (
         // like the streaming face's growth prune. One tiny
         // distributed agg over the key files buys the bounds.
         val base = readEntries(pruneByKeyBounds(fs, keys, keyCols),
-          sF, idsF, deletes = delF)
+          nF, deletes = delF)
         // null-safe equality on the key tuple — Iceberg eq-delete
         // semantics, identical to the read path's anti-join
         val cond = keyCols.map(c => base(c) <=> keys(c)).reduce(_ && _)
-        alignByFieldId(base.join(keys, cond, "left_semi"),
-          sF, idsF, sT, idsT)
+        alignByFieldId(base.join(keys, cond, "left_semi"), nF, nT)
       }.reduce(_ unionByName _))
     def withFast(df: DataFrame): DataFrame = fastDeletes match {
       case Some(fd) => df.unionByName(fd.withColumn(ct, lit("delete")))
@@ -1218,12 +1167,9 @@ class LakeTable private (
     }
     // deletes visible on changed from-files still apply (covers /
     // seq-scoped inside readEntries, restricted to the subset read)
-    def side(entries: Seq[FileEntry], n: JsonNode,
-             dels: Seq[DeleteEntry]): DataFrame = {
-      val s = DataTypeBridge.fromJson(n.get("schemaJson").asText())
-      val df = readEntries(entries, s, fieldIdsOf(n), deletes = dels)
-      alignByFieldId(df, s, fieldIdsOf(n), sT, idsT)
-    }
+    def side(entries: Seq[FileEntry], n: Snapshot,
+             dels: Seq[DeleteEntry]): DataFrame =
+      alignByFieldId(readEntries(entries, n, deletes = dels), n, nT)
     if (chF.isEmpty && chT.isEmpty)
       return withFast(side(Nil, nT, Nil).withColumn(ct, lit("insert")))
     if (chF.isEmpty) // pure append(s): no diff shuffle, scan new files
@@ -1293,18 +1239,18 @@ class LakeTable private (
     })
   }
 
-  /** Project `df` (read under `(fromSchema, fromIds)`) onto the `to`
+  /** Project `df` (read under snapshot `from`) onto snapshot `to`'s
     * column set, matching columns BY FIELD ID — the changelog's two
     * sides must diff under one schema even when a rename/add/widen
     * landed inside the range. Columns added after `from` surface as
     * null; columns dropped before `to` drop out of the diff (their
     * retired values are unobservable under the `to` schema, which is
     * the changelog's contract). */
-  private def alignByFieldId(df: DataFrame, fromSchema: StructType,
-                             fromIds: Map[String, Int],
-                             toSchema: StructType,
-                             toIds: Map[String, Int]): DataFrame = {
+  private def alignByFieldId(df: DataFrame, from: Snapshot,
+                             to: Snapshot): DataFrame = {
     import org.apache.spark.sql.functions.{col => fcol, lit}
+    val (fromSchema, fromIds) = (from.schema, from.fieldIds)
+    val (toSchema, toIds) = (to.schema, to.fieldIds)
     if (fromSchema == toSchema && fromIds == toIds) return df
     val nameById = fromIds.map(_.swap)
     df.select(toSchema.fields.toIndexedSeq.map { f =>
@@ -1334,21 +1280,18 @@ class LakeTable private (
     * via exact per-file null counts (Iceberg manifest shape), and any
     * value comparison additionally excludes all-null files. */
   def readWhere(condition: org.apache.spark.sql.Column,
-                claimBucket: Boolean = true): DataFrame = {
+                claimBucket: Boolean = true): DataFrame =
     // ONE snapshot read: schema, field ids, file list, and the
     // position-delete set must come from the same snapshot — separate
     // latest() calls could interleave with a commit and e.g. plan a
     // just-added file against a delete set that predates it. Resolves
     // the MAIN-visible snapshot (WAP pin while a branch stages).
-    val node = mapper.readTree(
-      Files.readString(versionPath(metaDir, mainVersion)))
-    readEntries(
-      pruneFilesAmong(filesOf(node), condition),
-      DataTypeBridge.fromJson(node.get("schemaJson").asText()),
-      fieldIdsOf(node),
-      claimBucket = claimBucket, deletes = deletesOf(node))
-      .filter(condition)
-  }
+    readWhereAt(mainSnapshot(), condition, claimBucket)
+
+  private def readWhereAt(s: Snapshot, condition: org.apache.spark.sql.Column,
+                          claimBucket: Boolean): DataFrame =
+    readEntries(pruneFiles(s, condition), s, claimBucket = claimBucket,
+      deletes = s.deletes).filter(condition)
 
   /** Snapshot read exposing each row's merge-on-read COORDINATES — the
     * manifest-relative data file ([[LakeTable.RowFileCol]] `_file`) and
@@ -1367,28 +1310,23 @@ class LakeTable private (
   def readWithRowCoords(
       condition: Option[org.apache.spark.sql.Column] = None): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, col, substring_index}
-    require(!schema.fieldNames.contains(RowFileCol) &&
-      !schema.fieldNames.contains(RowPosCol),
+    val s = mainSnapshot()
+    require(!s.schema.fieldNames.contains(RowFileCol) &&
+      !s.schema.fieldNames.contains(RowPosCol),
       s"table at $root has a data column named $RowFileCol/$RowPosCol " +
         "— the row-coordinate names are reserved (Spark shadows the " +
         "metadata columns, so row-level SQL DML cannot address rows " +
         "of this table; rename the column)")
-    val node = mapper.readTree(
-      Files.readString(versionPath(metaDir, mainVersion)))
-    val dels = deletesOf(node)
-    val snapSchema = DataTypeBridge.fromJson(
-      node.get("schemaJson").asText())
-    val ids = fieldIdsOf(node)
     val entries = condition match {
-      case Some(c) => pruneFilesAmong(filesOf(node), c)
-      case None    => filesOf(node)
+      case Some(c) => pruneFiles(s, c)
+      case None    => s.files
     }
     val sp = spark
     import sp.implicits._
     val nameRel = entries.map(e => (e.path.split("/").last, e.path))
       .toDF("__fn", RowFileCol)
-    val out = readEntries(entries, snapSchema, ids, tag = true,
-        tagPos = true, deletes = dels)
+    val out = readEntries(entries, s, tag = true,
+        tagPos = true, deletes = s.deletes)
       .withColumn("__fn", substring_index(col(FileTag), "/", -1))
       .join(broadcast(nameRel), Seq("__fn"))
       .withColumnRenamed(PosTag, RowPosCol)
@@ -1399,12 +1337,10 @@ class LakeTable private (
   /** The files a range analysis of `condition` cannot exclude, from
     * the CURRENT snapshot. */
   private[lake] def pruneFiles(condition: org.apache.spark.sql.Column)
-      : Seq[FileEntry] = pruneFilesAmong(dataFiles, condition)
+      : Seq[FileEntry] = pruneFiles(latest(), condition)
 
-  /** [[pruneFiles]] over an explicit (snapshot-consistent) entry
-    * list. */
-  private[lake] def pruneFilesAmong(entries: Seq[FileEntry],
-                                    condition: org.apache.spark.sql.Column)
+  /** [[pruneFiles]] over snapshot `s`'s files, with `s`'s transforms. */
+  private def pruneFiles(s: Snapshot, condition: org.apache.spark.sql.Column)
       : Seq[FileEntry] = {
     import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction}
     import org.apache.spark.sql.catalyst.expressions._
@@ -1542,7 +1478,7 @@ class LakeTable private (
     // (src < v => T(src) <= T(v)) — never a wrong prune. Spec
     // evolution: ALL epochs' transforms run; each check binds only on
     // files carrying its derived column's stats (its own epoch).
-    val transforms = pruningTransforms
+    val transforms = s.pruningTransforms
     val tchecks: Seq[FileEntry => Boolean] =
       if (transforms.isEmpty) Nil
       else {
@@ -1590,7 +1526,7 @@ class LakeTable private (
           }
         }
       }
-    entries.filter(f => (checks ++ tchecks).forall(_(f)))
+    s.files.filter(f => (checks ++ tchecks).forall(_(f)))
   }
 
   // ---- write ---------------------------------------------------------
@@ -1610,9 +1546,9 @@ class LakeTable private (
     * move EXISTING rows, and a constraint added after legacy rows
     * landed must not brick the table's maintenance; upsert enforces
     * on the incoming source rows only, for the same reason. */
-  private def enforced(df: DataFrame): DataFrame = {
+  private def enforced(df: DataFrame, s: Snapshot): DataFrame = {
     import org.apache.spark.sql.functions._
-    val checks = properties.toSeq.collect {
+    val checks = s.properties.toSeq.collect {
       case (k, v) if k.startsWith("constraint.") =>
         (k.stripPrefix("constraint."), v)
     }.sortBy(_._1)
@@ -1625,9 +1561,11 @@ class LakeTable private (
     }.reduce(_ && _))
   }
 
-  def append(df: DataFrame, appMeta: Map[String, String] = Map.empty): Int =
-    commit(writeData(enforced(df)), replacedFiles = Set.empty, appMeta,
+  def append(df: DataFrame, appMeta: Map[String, String] = Map.empty): Int = {
+    val s = latest()
+    commit(writeData(enforced(df, s), s), replacedFiles = Set.empty, appMeta,
       guard = None)
+  }
 
   /** INSERT OVERWRITE semantics: ONE transactional commit that replaces
     * the current snapshot's entire data-file set with `df`'s rows (all
@@ -1637,11 +1575,11 @@ class LakeTable private (
     * (same non-strict replace contract as compaction). */
   def overwriteAll(df: DataFrame,
                    appMeta: Map[String, String] = Map.empty): Int = {
-    val node = latest()._2
-    commitWith(Some(writeData(enforced(df))),
-      replacedFiles = filesOf(node).map(_.path).toSet,
+    val s = latest()
+    commitWith(Some(writeData(enforced(df, s), s)),
+      replacedFiles = s.files.map(_.path).toSet,
       appMeta + ("operation" -> "overwrite"), guard = None, alter = None,
-      appliedDeletes = deletesOf(node).map(_.path).toSet)
+      appliedDeletes = s.deletes.map(_.path).toSet)
   }
 
   /** Filter-scoped overwrite (`INSERT OVERWRITE ... PARTITION (...)`,
@@ -1661,9 +1599,8 @@ class LakeTable private (
   def overwriteWhere(condition: org.apache.spark.sql.Column,
                      df: DataFrame,
                      appMeta: Map[String, String] = Map.empty): Int = {
-    val (v0, node) = latest()
-    val entries = filesOf(node)
-    val mightMatch = pruneFilesAmong(entries, condition)
+    val s = latest()
+    val mightMatch = pruneFiles(s, condition)
     val proven = fullyMatchingFiles(mightMatch, condition)
     val provenPaths = proven.map(_.path).toSet
     val uncertain = mightMatch.filterNot(e => provenPaths(e.path))
@@ -1676,8 +1613,8 @@ class LakeTable private (
         "(spark.sql.sources.partitionOverwriteMode=dynamic), a " +
         "partition-aligned predicate, or MERGE INTO for row-level " +
         "replacement")
-    val pending = writeData(enforced(df))
-    if (provenPaths.isEmpty && pending.files.isEmpty) return v0
+    val pending = writeData(enforced(df, s), s)
+    if (provenPaths.isEmpty && pending.files.isEmpty) return s.version
     commitWith(Some(pending), provenPaths,
       appMeta + ("operation" -> "overwrite",
         "overwrite.predicate" -> condition.toString),
@@ -1711,13 +1648,13 @@ class LakeTable private (
   def overwritePartitionsDynamic(df: DataFrame,
                                  appMeta: Map[String, String] = Map.empty)
       : Int = {
-    val (v0, node) = latest()
-    val parts = partitionByOf(node)
+    val s = latest()
+    val parts = s.partitionBy
     require(parts.nonEmpty,
       s"dynamic partition overwrite at $root needs a partitioned " +
         "table; an unpartitioned INSERT OVERWRITE replaces the full " +
         "table (overwriteAll)")
-    val entries = filesOf(node)
+    val entries = s.files
     // ORDERED key sequence, not a set: a spec REORDER of the same
     // columns (reachable via CALL system.set_partition_spec) changes
     // the directory string layout — old files' dirs would never match
@@ -1734,8 +1671,8 @@ class LakeTable private (
         stale.take(3).map(_.path).mkString(", ") + ") and cannot be " +
         "matched against the current spec's partition tuples — run " +
         "compact() to rewrite them into the current layout first")
-    val pending = writeData(enforced(df))
-    if (pending.files.isEmpty) return v0 // no rows -> no partitions
+    val pending = writeData(enforced(df, s), s)
+    if (pending.files.isEmpty) return s.version // no rows -> no partitions
     val touched = pending.files
       .map(e => dirOf(e.path.stripPrefix("data/"))).toSet
     require(!touched.contains(""),
@@ -1751,7 +1688,7 @@ class LakeTable private (
   }
 
   /** Files whose EVERY row provably satisfies `condition` — the
-    * must-match mirror of [[pruneFilesAmong]]'s may-match test, used
+    * must-match mirror of [[pruneFiles]]'s may-match test, used
     * by [[overwriteWhere]] to turn a predicate into an exact
     * whole-file replace set. Supports the same canonical shapes
     * (`col OP literal`, IN, IS [NOT] NULL, AND — plus OR where either
@@ -1894,16 +1831,15 @@ class LakeTable private (
     * changes serializes it against racing appends. */
   def addColumn(name: String,
                 dataType: org.apache.spark.sql.types.DataType): Int =
-    commitWith(None, Set.empty, Map("alter" -> s"add $name"),
-      guard = None, alter = None,
-      alterWithLast = Some { (s, ids, lastId) =>
-        require(!s.fieldNames.contains(name),
-          s"column $name already exists at $root")
-        val id = math.max(lastId, ids.values.foldLeft(0)(math.max)) + 1
-        (StructType(s.fields :+
-          StructField(name, dataType, nullable = true)),
-          ids + (name -> id))
-      })
+    commitAlter(Map("alter" -> s"add $name")) { s =>
+      require(!s.schema.fieldNames.contains(name),
+        s"column $name already exists at $root")
+      val id = math.max(s.lastFieldId,
+        s.fieldIds.values.foldLeft(0)(math.max)) + 1
+      (StructType(s.schema.fields :+
+        StructField(name, dataType, nullable = true)),
+        s.fieldIds + (name -> id))
+    }
 
   /** Idempotent append keyed by (writerId, batchId): commits at most
     * once per writer per batch id (exactly-once sink contract for
@@ -1919,8 +1855,9 @@ class LakeTable private (
     val key = writerKey(writerId)
     // cheap pre-check saves the data write on obvious replays; the
     // authoritative check is the guard inside the commit loop
-    if (highWater(key).exists(_ >= batchId)) currentVersion
-    else commit(writeData(enforced(df)), Set.empty,
+    val s = latest()
+    if (s.highWater.get(key).exists(_ >= batchId)) s.version
+    else commit(writeData(enforced(df, s), s), Set.empty,
       Map(BatchIdKey -> batchId.toString, WriterIdKey -> writerId),
       Some(MonotoneGuard(key, batchId)))
   }
@@ -1938,16 +1875,15 @@ class LakeTable private (
   def overwriteAllExactlyOnce(df: DataFrame, writerId: String,
                               batchId: Long): Int = {
     val key = writerKey(writerId)
-    if (highWater(key).exists(_ >= batchId)) currentVersion
-    else {
-      val node = latest()._2
-      commitWith(Some(writeData(enforced(df))),
-        replacedFiles = filesOf(node).map(_.path).toSet,
+    val s = latest()
+    if (s.highWater.get(key).exists(_ >= batchId)) s.version
+    else
+      commitWith(Some(writeData(enforced(df, s), s)),
+        replacedFiles = s.files.map(_.path).toSet,
         Map("operation" -> "overwrite", BatchIdKey -> batchId.toString,
           WriterIdKey -> writerId),
         guard = Some(MonotoneGuard(key, batchId)), alter = None,
-        appliedDeletes = deletesOf(node).map(_.path).toSet)
-    }
+        appliedDeletes = s.deletes.map(_.path).toSet)
   }
 
   /** Highest streaming batch id committed by `writerId` (-1 if none). */
@@ -1964,9 +1900,11 @@ class LakeTable private (
     * reclaimed by `vacuum()`. */
   private[lake] def appendCas(df: DataFrame, key: String, expected: Long,
                               value: Long,
-                              appMeta: Map[String, String]): Int =
-    commit(writeData(enforced(df)), Set.empty, appMeta,
+                              appMeta: Map[String, String]): Int = {
+    val s = latest()
+    commit(writeData(enforced(df, s), s), Set.empty, appMeta,
       Some(CasGuard(key, expected, value)))
+  }
 
   /** Compaction: rewrite snapshot `currentVersion`'s file set into
     * `numFiles` files and commit a snapshot where those files are
@@ -1974,7 +1912,7 @@ class LakeTable private (
     * compaction read) are rebased on top, so compaction never loses a
     * racing append (see `compactFrom`). Partitioned tables stay
     * partitioned. */
-  def compact(numFiles: Int): Int = compactFrom(currentVersion, numFiles)
+  def compact(numFiles: Int): Int = compactSorted(numFiles, Seq.empty)
 
   /** Compact the file set of a specific snapshot; files added by commits
     * after `baseVersion` survive untouched (append-vs-compact races are
@@ -1991,16 +1929,26 @@ class LakeTable private (
     * touching every file and touching the few that overlap the
     * predicate — the layout half of data skipping, delivered with zero
     * custom reader code. */
-  def compactSorted(numFiles: Int, sortBy: Seq[String]): Int =
-    compactFrom(currentVersion, numFiles, sortBy)
+  def compactSorted(numFiles: Int, sortBy: Seq[String]): Int = {
+    val s = latest()
+    compactAt(s, s, numFiles, sortBy)
+  }
 
   def compactFrom(baseVersion: Int, numFiles: Int,
-                  sortBy: Seq[String]): Int = {
-    sortBy.foreach(c => require(schema.fieldNames.contains(c),
+                  sortBy: Seq[String]): Int =
+    compactAt(snapshotAt(baseVersion), latest(), numFiles, sortBy)
+
+  /** Rewrite `base`'s files into the layout of `cur` (the latest
+    * snapshot: a rewrite re-derives partition columns under the
+    * CURRENT spec). */
+  private def compactAt(base: Snapshot, cur: Snapshot, numFiles: Int,
+                        sortBy: Seq[String]): Int = {
+    sortBy.foreach(c => require(cur.schema.fieldNames.contains(c),
       s"sort column $c not in schema"))
-    rewriteFiles(baseVersion,
-      base =>
-        if (sortBy.nonEmpty && bucketSpec.isDefined)
+    val partitionBy = cur.partitionBy
+    rewriteFiles(base, cur,
+      df =>
+        if (sortBy.nonEmpty && cur.bucketSpec.isDefined)
           // bucketed + sorted: cluster by bucket (ONE file per bucket
           // dir) with rows sorted by the key inside each file, so
           // row-group stats still prune within the dir. A plain
@@ -2008,7 +1956,7 @@ class LakeTable private (
           // files — ABOVE the auto-compaction threshold — turning the
           // auto policy into a perpetual every-batch full rewrite
           // (measured: r07 SteadyState, ~19 s/batch sustained).
-          base.repartition(numFiles,
+          df.repartition(numFiles,
             org.apache.spark.sql.functions.col(BucketCol))
             .sortWithinPartitions(
               (BucketCol +: sortBy)
@@ -2021,18 +1969,18 @@ class LakeTable private (
           // tasks x partitions files (for the auto policy that means
           // the count never falls below its threshold and every batch
           // pays a full rewrite — the bucketed+sorted bug's twin)
-          val clustered = base.repartition(
+          val clustered = df.repartition(
             partitionBy.map(org.apache.spark.sql.functions.col): _*)
           if (sortBy.nonEmpty) clustered.sortWithinPartitions(
             (partitionBy ++ sortBy)
               .map(org.apache.spark.sql.functions.col): _*)
           else clustered
         }
-        else if (sortBy.nonEmpty) base
+        else if (sortBy.nonEmpty) df
           .repartitionByRange(numFiles,
             sortBy.map(org.apache.spark.sql.functions.col): _*)
           .sortWithinPartitions(sortBy.head, sortBy.tail: _*)
-        else base.repartition(numFiles),
+        else df.repartition(numFiles),
       if (sortBy.isEmpty) Map.empty
       else Map("compaction.sortBy" -> sortBy.mkString(",")))
   }
@@ -2070,10 +2018,13 @@ class LakeTable private (
     * metadata so EVERY writer enforces the same layout contract; the
     * gate is O(1) against the snapshot. Returns the commit's version
     * if one ran. */
-  def autoCompactIfNeeded(): Option[Int] =
+  def autoCompactIfNeeded(): Option[Int] = {
+    val s = latest()
+    val properties = s.properties
+    val partitionBy = s.partitionBy
     properties.get("compaction.auto.maxFiles").map(_.toInt).flatMap {
       maxF =>
-        val files = dataFiles
+        val files = s.files
         if (files.size <= maxF) None
         else {
           val sortBy = properties.get("compaction.auto.sortBy")
@@ -2127,7 +2078,7 @@ class LakeTable private (
                   else Nil
                 }.toSeq
               if (ready.isEmpty) None
-              else Some(compactSubset(ready, sortBy))
+              else Some(compactSubset(s, ready, sortBy))
             }
             // a full rewrite of a partitioned/bucketed table clusters
             // to ~one file per live dir — when the dir count is
@@ -2137,7 +2088,7 @@ class LakeTable private (
             // pathology tiering exists to prevent); only rewrite when
             // it actually shrinks the layout, else keep tier-merging
             val dirFloor =
-              if (partitionBy.isEmpty && bucketSpec.isEmpty) 1
+              if (partitionBy.isEmpty && s.bucketSpec.isEmpty) 1
               else files.iterator.map(f => dirOf(f.path)).toSet.size
             val committed = tiered().orElse {
               // last-resort valve, tried only when NO ladder merge
@@ -2148,7 +2099,7 @@ class LakeTable private (
               if (files.size > 2 * maxF && files.size > 2 * dirFloor) {
                 val target = properties.get("compaction.auto.target")
                   .map(_.toInt).getOrElse(math.max(1, maxF / 8))
-                Some(compactFrom(currentVersion, target, sortBy))
+                Some(compactAt(s, s, target, sortBy))
               } else None
             }
             // optional companion policy: bound DISK too, not just the
@@ -2171,35 +2122,32 @@ class LakeTable private (
           }
         }
     }
+  }
 
   private def dirOf(path: String): String = {
     val i = path.lastIndexOf('/')
     if (i < 0) "" else path.substring(0, i)
   }
 
-  /** MINOR compaction: rewrite ONLY `subset` (live files of the
-    * current snapshot), leaving every other file byte-untouched — the
+  /** MINOR compaction: rewrite ONLY `subset` (live files of snapshot
+    * `s`), leaving every other file byte-untouched — the
     * unit of tiered merging. Bucketed rows re-cluster one-file-per-
     * bucket-dir (rows carry their routing hash, so output lands back
     * in the source dirs); unpartitioned subsets collapse to one file.
     * Carries the `compaction` app-meta so incremental consumers
     * (changesBetween) skip the rewrite exactly like a full one, and
     * commits strict-replace so racing writers can never lose rows. */
-  private def compactSubset(subset: Seq[FileEntry],
+  private def compactSubset(s: Snapshot, subset: Seq[FileEntry],
                             sortBy: Seq[String]): Int = {
     import org.apache.spark.sql.functions.col
-    // one snapshot for schema/ids/deletes (subset entries come from
-    // the caller's read of the same frontier; commit guards police)
-    val node = latest()._2
-    val dels = deletesOf(node)
+    val dels = s.deletes
+    val partitionBy = s.partitionBy
     // no join downstream — the bucket claim would only cap the
     // rewrite's read parallelism at numBuckets
-    val base = readEntries(subset,
-      DataTypeBridge.fromJson(node.get("schemaJson").asText()),
-      fieldIdsOf(node), claimBucket = false, deletes = dels)
+    val base = readEntries(subset, s, claimBucket = false, deletes = dels)
     val shaped =
-      if (bucketSpec.isDefined) {
-        val n = bucketSpec.get._2
+      if (s.bucketSpec.isDefined) {
+        val n = s.bucketSpec.get._2
         val clustered = base.repartition(n, col(BucketCol))
         if (sortBy.nonEmpty)
           clustered.sortWithinPartitions(
@@ -2214,7 +2162,7 @@ class LakeTable private (
       } else if (sortBy.nonEmpty)
         base.repartition(1).sortWithinPartitions(sortBy.map(col): _*)
       else base.repartition(1)
-    commitWith(Some(writeData(shaped)),
+    commitWith(Some(writeData(shaped, s)),
       replacedFiles = subset.map(_.path).toSet,
       Map("compaction" -> "true") ++
         (if (sortBy.isEmpty) Map.empty[String, String]
@@ -2234,11 +2182,12 @@ class LakeTable private (
     * is computed on the fly and never stored. */
   def compactZOrder(numFiles: Int, cols: Seq[String]): Int = {
     import org.apache.spark.sql.functions._
-    cols.foreach(c => require(schema.fieldNames.contains(c),
+    val s = latest()
+    cols.foreach(c => require(s.schema.fieldNames.contains(c),
       s"z-order column $c not in schema"))
     val bitsPer = 64 / cols.size
     val top = (1L << bitsPer) - 1
-    val base = readVersion(currentVersion)
+    val base = readAt(s)
     val aggs = cols.flatMap(c =>
       Seq(min(col(c)).cast("long"), max(col(c)).cast("long")))
     val stats = base.agg(aggs.head, aggs.tail: _*).head()
@@ -2250,7 +2199,7 @@ class LakeTable private (
         * top.toDouble).cast("long")
     }
     val zkey = graft.functions.ZOrderKey.zorder_key(normalized: _*)
-    rewriteFiles(currentVersion,
+    rewriteFiles(s, s,
       b => b.repartitionByRange(numFiles, zkey).sortWithinPartitions(zkey),
       Map("compaction.zorderBy" -> cols.mkString(",")))
   }
@@ -2275,27 +2224,23 @@ class LakeTable private (
     // one snapshot: entries, schema, ids, and delete set must agree
     // (the predicate runs against the snapshot read at entry; the
     // strict-replace commit guards detect anything that moved since)
-    val (v0, node) = latest()
-    val entries = filesOf(node)
-    val dels = deletesOf(node)
-    val snapSchema = DataTypeBridge.fromJson(
-      node.get("schemaJson").asText())
-    val ids = fieldIdsOf(node)
+    val s = latest()
+    val entries = s.files
+    val dels = s.deletes
     // stats narrow the provenance scan before any file opens: only
     // files whose ranges might match are even read to find matches
-    val candidates = pruneFilesAmong(entries, condition)
+    val candidates = pruneFiles(s, condition)
     val affected = affectedFiles(
-      readEntries(candidates, snapSchema, ids, tag = true,
-        deletes = dels).filter(condition),
+      readEntries(candidates, s, tag = true, deletes = dels)
+        .filter(condition),
       entries)
-    if (affected.isEmpty) return v0
+    if (affected.isEmpty) return s.version
     // survivors computed WITH existing position deletes applied — a
     // copy-on-write rewrite must not resurrect MOR-deleted rows
     val survivors =
-      readEntries(entries.filter(e => affected(e.path)), snapSchema, ids,
-        deletes = dels)
+      readEntries(entries.filter(e => affected(e.path)), s, deletes = dels)
         .filter(not(coalesce(condition, lit(false))))
-    commitWith(Some(writeData(survivors)), affected,
+    commitWith(Some(writeData(survivors, s)), affected,
       Map("delete.predicate" -> condition.toString),
       guard = None, alter = None, strictReplace = true,
       appliedDeletes = dels.map(_.path).toSet)
@@ -2329,13 +2274,9 @@ class LakeTable private (
     import org.apache.spark.sql.functions.col
     // one snapshot: positions must be resolved against the same file
     // list the applied delete set belongs to
-    val (v0, node) = latest()
-    val dels = deletesOf(node)
-    val snapSchema = DataTypeBridge.fromJson(
-      node.get("schemaJson").asText())
-    val ids = fieldIdsOf(node)
-    val candidates = pruneFilesAmong(filesOf(node), condition)
-    if (candidates.isEmpty) return v0
+    val s = latest()
+    val candidates = pruneFiles(s, condition)
+    if (candidates.isEmpty) return s.version
     // positions of matching rows, already-deleted rows excluded. The
     // recorded `_del_file` is the snapshot's own relative path,
     // recovered by joining the scan's UUID file NAME against the
@@ -2354,8 +2295,8 @@ class LakeTable private (
         .toDF("__fn", DeleteFileCol)
     }
     val positions =
-      readEntries(candidates, snapSchema, ids, tag = true,
-        tagPos = true, deletes = dels)
+      readEntries(candidates, s, tag = true, tagPos = true,
+        deletes = s.deletes)
         .filter(condition)
         .withColumn("__fn", org.apache.spark.sql.functions
           .substring_index(col(FileTag), "/", -1))
@@ -2366,11 +2307,11 @@ class LakeTable private (
           col(DeletePosCol))
         .sortWithinPartitions(DeleteFileCol, DeletePosCol)
     val entries = writeDeleteFiles(positions)
-    if (entries.isEmpty) return currentVersion
+    if (entries.isEmpty) return s.version
     commitWith(None, Set.empty,
       Map("delete.positional" -> condition.toString,
         "delete.rows" -> entries.map(_.rows).sum.toString),
-      guard = None, alter = Some((s, ids) => (s, ids)),
+      guard = None, alter = Some(sameSchema),
       newDeletes = entries,
       requireLive = entries.flatMap(_.covers).toSet)
   }
@@ -2444,7 +2385,8 @@ class LakeTable private (
     * stale. Returns the committed version (unchanged for empty
     * keys). */
   def deleteWhereEqual(keys: DataFrame, keyCols: Seq[String]): Int =
-    deleteWhereEqualWith(keys, keyCols, guard = None, extraMeta = Map.empty)
+    deleteWhereEqualWith(latest(), keys, keyCols, guard = None,
+      extraMeta = Map.empty)
 
   /** [[deleteWhereEqual]] with the (writerId, batchId) exactly-once
     * guard of [[appendExactlyOnce]] — what a CDC consumer mirroring
@@ -2455,18 +2397,20 @@ class LakeTable private (
   def deleteWhereEqualExactlyOnce(keys: DataFrame, keyCols: Seq[String],
                                   writerId: String, batchId: Long): Int = {
     val key = writerKey(writerId)
-    if (highWater(key).exists(_ >= batchId)) currentVersion
-    else deleteWhereEqualWith(keys, keyCols,
+    val s = latest()
+    if (s.highWater.get(key).exists(_ >= batchId)) s.version
+    else deleteWhereEqualWith(s, keys, keyCols,
       Some(MonotoneGuard(key, batchId)),
       Map(BatchIdKey -> batchId.toString, WriterIdKey -> writerId))
   }
 
-  private def deleteWhereEqualWith(keys: DataFrame, keyCols: Seq[String],
+  private def deleteWhereEqualWith(snap: Snapshot, keys: DataFrame,
+                                   keyCols: Seq[String],
                                    guard: Option[CommitGuard],
                                    extraMeta: Map[String, String]): Int = {
     import org.apache.spark.sql.functions.col
     require(keyCols.nonEmpty, "equality delete requires key columns")
-    val s = schema
+    val s = snap.schema
     keyCols.foreach(c => require(s.fieldNames.contains(c),
       s"equality-delete key $c not in schema at $root"))
     val aligned = keys
@@ -2487,7 +2431,7 @@ class LakeTable private (
     if (rowsByRel.values.sum == 0L) {
       rels.foreach(r => Files.deleteIfExists(
         Paths.get(root, "deletes", "data", r)))
-      return currentVersion
+      return snap.version
     }
     val live = rels.filter(rowsByRel(_) > 0)
     rels.filterNot(live.contains).foreach(r =>
@@ -2497,7 +2441,7 @@ class LakeTable private (
     commitWith(None, Set.empty,
       Map("delete.equality" -> keyCols.mkString(","),
         "delete.rows" -> rowsByRel.values.sum.toString) ++ extraMeta,
-      guard = guard, alter = Some((sc, ids) => (sc, ids)),
+      guard = guard, alter = Some(sameSchema),
       newDeletes = entries)
   }
 
@@ -2512,9 +2456,11 @@ class LakeTable private (
     * keys, and the commit REPLACES exactly the affected files. Strict
     * replace + append rebase as in [[deleteWhere]]. A source with no
     * matching keys degrades to a plain append (no rewrite at all). */
-  def upsert(source: DataFrame, keyCols: Seq[String]): Int =
-    upsertWith(enforced(source), keyCols, guard = None,
+  def upsert(source: DataFrame, keyCols: Seq[String]): Int = {
+    val s = latest()
+    upsertWith(s, enforced(source, s), keyCols, guard = None,
       extraMeta = Map.empty)
+  }
 
   /** [[upsert]] with the (writerId, batchId) exactly-once guard of
     * [[appendExactlyOnce]]. Deterministic update-mode aggregates are
@@ -2527,54 +2473,43 @@ class LakeTable private (
   def upsertExactlyOnce(source: DataFrame, keyCols: Seq[String],
                         writerId: String, batchId: Long): Int = {
     val key = writerKey(writerId)
-    if (highWater(key).exists(_ >= batchId)) currentVersion
-    else upsertWith(enforced(source), keyCols,
+    val s = latest()
+    if (s.highWater.get(key).exists(_ >= batchId)) s.version
+    else upsertWith(s, enforced(source, s), keyCols,
       guard = Some(MonotoneGuard(key, batchId)),
       extraMeta = Map(BatchIdKey -> batchId.toString,
         WriterIdKey -> writerId))
   }
 
-  private def upsertWith(source: DataFrame, keyCols: Seq[String],
+  private def upsertWith(s: Snapshot, source: DataFrame,
+                         keyCols: Seq[String],
                          guard: Option[CommitGuard],
                          extraMeta: Map[String, String]): Int = {
     import org.apache.spark.sql.functions.col
     require(keyCols.nonEmpty, "upsert requires at least one key column")
     // one snapshot for schema + files + deletes (same rationale as
     // deleteWhere; the strict-replace guards police the commit)
-    val node = latest()._2
-    val s = DataTypeBridge.fromJson(node.get("schemaJson").asText())
-    val ids = fieldIdsOf(node)
-    keyCols.foreach(c => require(s.fieldNames.contains(c),
+    keyCols.foreach(c => require(s.schema.fieldNames.contains(c),
       s"upsert key $c not in schema at $root"))
-    // align source to the table's columns/types loudly (a missing
-    // column is an analysis error, not a silent null); derived
-    // columns — bucket and transform partitions — are the writer's
-    // job, never the caller's. Node-scoped lookups keep this the
-    // SAME snapshot the schema came from.
-    val transformPhys = transformsOf(node, s).map(_.phys).toSet
-    val userFields = s.fields.filterNot(f =>
-      (bucketSpecOf(node).isDefined && f.name == BucketCol) ||
-        transformPhys.contains(f.name))
-    val aligned = source.select(
-      userFields.map(f => col(f.name).cast(f.dataType)).toSeq: _*)
-    val src = withTransformCols(bucketSpec match {
-      case Some(_) => aligned.withColumn(BucketCol, bucketWriteExpr)
+    val aligned = alignToUserColumns(source, s)
+    val src = withTransformCols(s.bucketSpec match {
+      case Some(_) => aligned.withColumn(BucketCol, bucketWriteExpr(s))
       case None    => aligned
-    })
+    }, s)
     val srcKeys = src.select(keyCols.map(col): _*).distinct()
-    val entries = filesOf(node)
-    val dels = deletesOf(node)
+    val entries = s.files
+    val dels = s.deletes
     val affected = affectedFiles(
-      readEntries(entries, s, ids, tag = true, deletes = dels)
+      readEntries(entries, s, tag = true, deletes = dels)
         .join(srcKeys, keyCols, "left_semi"),
       entries)
     val rewritten =
       if (affected.isEmpty) src
-      else readEntries(entries.filter(e => affected(e.path)), s, ids,
+      else readEntries(entries.filter(e => affected(e.path)), s,
           deletes = dels)
         .join(srcKeys, keyCols, "left_anti")
         .unionByName(src)
-    commitWith(Some(writeData(rewritten)), affected,
+    commitWith(Some(writeData(rewritten, s)), affected,
       Map("merge.keys" -> keyCols.mkString(",")) ++ extraMeta,
       guard = guard, alter = None, strictReplace = true,
       appliedDeletes = dels.map(_.path).toSet)
@@ -2596,9 +2531,11 @@ class LakeTable private (
     * MorScale); size the compaction cadence to the merge rate. Same
     * contract as [[upsert]]: at most one source row per key — dedupe
     * upstream. */
-  def upsertMor(source: DataFrame, keyCols: Seq[String]): Int =
-    upsertMorWith(enforced(source), keyCols, guard = None,
+  def upsertMor(source: DataFrame, keyCols: Seq[String]): Int = {
+    val s = latest()
+    upsertMorWith(s, enforced(source, s), keyCols, guard = None,
       extraMeta = Map.empty)
+  }
 
   /** [[upsertMor]] with the (writerId, batchId) exactly-once guard of
     * [[appendExactlyOnce]] — the MOR twin of [[upsertExactlyOnce]],
@@ -2606,37 +2543,32 @@ class LakeTable private (
   def upsertMorExactlyOnce(source: DataFrame, keyCols: Seq[String],
                            writerId: String, batchId: Long): Int = {
     val key = writerKey(writerId)
-    if (highWater(key).exists(_ >= batchId)) currentVersion
-    else upsertMorWith(enforced(source), keyCols,
+    val s = latest()
+    if (s.highWater.get(key).exists(_ >= batchId)) s.version
+    else upsertMorWith(s, enforced(source, s), keyCols,
       guard = Some(MonotoneGuard(key, batchId)),
       extraMeta = Map(BatchIdKey -> batchId.toString,
         WriterIdKey -> writerId))
   }
 
-  private def upsertMorWith(source: DataFrame, keyCols: Seq[String],
+  private def upsertMorWith(snap: Snapshot, source: DataFrame,
+                            keyCols: Seq[String],
                             guard: Option[CommitGuard],
                             extraMeta: Map[String, String]): Int = {
-    import org.apache.spark.sql.functions.col
     require(keyCols.nonEmpty, "upsert requires at least one key column")
-    // ONE latest() read for schema + transforms + bucket layout: a
+    // ONE snapshot for schema + transforms + bucket layout: a
     // concurrent schema commit between separate reads could misalign
     // the eq-delete keySchema with the written data files (same
     // snapshot-consistency rationale as upsertWith / deleteWhere)
-    val node = latest()._2
-    val s = DataTypeBridge.fromJson(node.get("schemaJson").asText())
+    val s = snap.schema
     keyCols.foreach(c => require(s.fieldNames.contains(c),
       s"upsert key $c not in schema at $root"))
-    val transformPhys = transformsOf(node, s).map(_.phys).toSet
-    val userFields = s.fields.filterNot(f =>
-      (bucketSpecOf(node).isDefined && f.name == BucketCol) ||
-        transformPhys.contains(f.name))
-    val aligned = source.select(
-      userFields.map(f => col(f.name).cast(f.dataType)).toSeq: _*)
+    val aligned = alignToUserColumns(source, snap)
     // data files first (invisible until commit). The delete keys are
     // then read back from the WRITTEN files, not recomputed from the
     // source plan — under a non-deterministic source the two sides of
     // the commit could otherwise disagree on which keys were merged.
-    val pending = writeData(aligned)
+    val pending = writeData(aligned, snap)
     val dataRows = pending.files.map(_.rows).sum
     if (dataRows == 0L) {
       // empty merge: a no-op, not an empty commit (but the guard's
@@ -2647,8 +2579,8 @@ class LakeTable private (
       return guard match {
         case Some(_) =>
           commitWith(None, Set.empty, extraMeta, guard,
-            alter = Some((sc, ids) => (sc, ids)))
-        case None => currentVersion
+            alter = Some(sameSchema))
+        case None => snap.version
       }
     }
     val keySchema = StructType(keyCols.map(c => s(c)))
@@ -2719,10 +2651,8 @@ class LakeTable private (
         s"row-level delta on $root while WAP branch '$br' is staging " +
           "— publish or abandon the branch first")
     }
-    val (v0, node) = latest()
-    val dels = deletesOf(node)
-    val s = DataTypeBridge.fromJson(node.get("schemaJson").asText())
-    val ids = fieldIdsOf(node)
+    val s = latest()
+    val dels = s.deletes
     // the delta is consumed more than once (delete write + covers /
     // survivor anti-join) — pin one row set even under a
     // non-deterministic source
@@ -2735,24 +2665,18 @@ class LakeTable private (
     // analysis error, not a silent null); derived bucket/transform
     // columns are the writer's job (writeData injects them); CHECK
     // constraints enforced like every other write path
-    val transformPhys = transformsOf(node, s).map(_.phys).toSet
-    val userFields = s.fields.filterNot(f =>
-      (bucketSpecOf(node).isDefined && f.name == BucketCol) ||
-        transformPhys.contains(f.name))
-    val aligned = enforced(inserts.select(
-      userFields.map(f => col(f.name).cast(f.dataType)).toSeq: _*))
-    val pending = writeData(aligned)
+    val pending = writeData(enforced(alignToUserColumns(inserts, s), s), s)
     val insRows = pending.files.map(_.rows).sum
     def reclaim(): Unit = pending.files.foreach(f =>
       Files.deleteIfExists(Paths.get(root, f.path)))
-    if (nDel == 0L && insRows == 0L) { reclaim(); return v0 }
+    if (nDel == 0L && insRows == 0L) { reclaim(); return s.version }
     val meta = Map("delta.inserted" -> insRows.toString,
       "delta.deleted" -> nDel.toString) ++ extraMeta
     if (copyOnWrite) {
       // rewrite exactly the files that lost a row
       val affected = delPinned.select(DeleteFileCol).distinct()
         .collect().map(_.getString(0)).toSet // bounded by touched files
-      val affectedEntries = filesOf(node).filter(e => affected(e.path))
+      val affectedEntries = s.files.filter(e => affected(e.path))
       if (affectedEntries.size != affected.size) {
         reclaim()
         throw new java.util.ConcurrentModificationException(
@@ -2766,13 +2690,13 @@ class LakeTable private (
         .map(e => (e.path.split("/").last, e.path)).toDF("__fn", "__rel")
       val delKeys = delPinned.select(col(DeleteFileCol).as("__rel"),
         col(DeletePosCol).as(PosTag))
-      val survivors = readEntries(affectedEntries, s, ids, tag = true,
+      val survivors = readEntries(affectedEntries, s, tag = true,
           tagPos = true, deletes = dels)
         .withColumn("__fn", substring_index(col(FileTag), "/", -1))
         .join(broadcast(nameRel), Seq("__fn"))
         .join(delKeys, Seq("__rel", PosTag), "left_anti")
         .drop("__fn", "__rel", FileTag, PosTag)
-      val survivorsPending = writeData(survivors)
+      val survivorsPending = writeData(survivors, s)
       commitWith(
         Some(PendingWrite(pending.files ++ survivorsPending.files,
           pending.schema)),
@@ -2795,7 +2719,7 @@ class LakeTable private (
         if (insRows > 0) Some(pending) else { reclaim(); None },
         Set.empty, meta,
         guard = None,
-        alter = if (insRows > 0) None else Some((sc, i) => (sc, i)),
+        alter = if (insRows > 0) None else Some(sameSchema),
         newDeletes = delEntries,
         requireLive = delEntries.flatMap(_.covers).toSet)
     }
@@ -2817,21 +2741,17 @@ class LakeTable private (
     * of re-adding rows the racer rewrote (duplication) or deleted
     * (resurrection). Concurrent plain APPENDS are unaffected — their
     * files are not in the replaced set and are carried forward. */
-  private def rewriteFiles(baseVersion: Int,
+  private def rewriteFiles(base: Snapshot, cur: Snapshot,
                            shape: DataFrame => DataFrame,
-                           extraMeta: Map[String, String]): Int = {
-    val baseNode = mapper.readTree(
-      Files.readString(versionPath(metaDir, baseVersion)))
-    val replaced = filesOf(baseNode).map(_.path).toSet
-    // readVersion applies the base's position deletes, so the rewrite
+                           extraMeta: Map[String, String]): Int =
+    // readAt applies the base's position deletes, so the rewrite
     // ABSORBS them: the commit drops every delete file whose covered
     // data files all got replaced (here: all of them)
-    commitWith(Some(writeData(shape(readVersion(baseVersion)))),
-      replacedFiles = replaced,
+    commitWith(Some(writeData(shape(readAt(base)), cur)),
+      replacedFiles = base.files.map(_.path).toSet,
       Map("compaction" -> "true") ++ extraMeta, guard = None,
       alter = None, strictReplace = true,
-      appliedDeletes = deletesOf(baseNode).map(_.path).toSet)
-  }
+      appliedDeletes = base.deletes.map(_.path).toSet)
 
   private lazy val hadoopConf = spark.sessionState.newHadoopConf()
 
@@ -2898,13 +2818,28 @@ class LakeTable private (
   /** Derive any missing hidden-partitioning columns — the writer owns
     * them exactly like the bucket column; reads/rewrites already carry
     * them, so injection is idempotent. */
-  private def withTransformCols(df: DataFrame): DataFrame =
-    partitionTransforms.foldLeft(df)((d, t) =>
+  private def withTransformCols(df: DataFrame, s: Snapshot): DataFrame =
+    s.transforms.foldLeft(df)((d, t) =>
       if (d.columns.contains(t.phys)) d
       else d.withColumn(t.phys, t.writeExpr))
 
-  private def writeData(df1: DataFrame): PendingWrite = {
-    val df0 = withTransformCols(df1)
+  /** `df` aligned loudly to snapshot `s`'s USER columns and types (a
+    * missing column is an analysis error, not a silent null); derived
+    * columns — bucket and transform partitions — are the writer's
+    * job, never the caller's. */
+  private def alignToUserColumns(df: DataFrame, s: Snapshot): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    val transformPhys = s.transforms.map(_.phys).toSet
+    val userFields = s.schema.fields.filterNot(f =>
+      (s.bucketSpec.isDefined && f.name == BucketCol) ||
+        transformPhys.contains(f.name))
+    df.select(userFields.map(f => col(f.name).cast(f.dataType)).toSeq: _*)
+  }
+
+  /** Write `df` under snapshot `s`'s layout (transforms, bucket,
+    * partition columns). */
+  private def writeData(df1: DataFrame, s: Snapshot): PendingWrite = {
+    val df0 = withTransformCols(df1, s)
     // bucketed layout: the writer owns the bucket column — callers
     // append user rows and the hash lands them in their bucket dir.
     // Reads/rewrites already carry _bucket, so injection is idempotent.
@@ -2912,10 +2847,10 @@ class LakeTable private (
     // non-empty bucket dir instead of tasks x buckets shards (the
     // shuffle is batch-sized; the layout payoff is probe reads over
     // file counts proportional to buckets, not write history)
-    val df = bucketSpec match {
+    val df = s.bucketSpec match {
       case Some((_, n)) if !df0.columns.contains(BucketCol) =>
         import org.apache.spark.sql.functions.col
-        df0.withColumn(BucketCol, bucketWriteExpr)
+        df0.withColumn(BucketCol, bucketWriteExpr(s))
           .repartition(n, col(BucketCol))
       case _ => df0
     }
@@ -2924,7 +2859,7 @@ class LakeTable private (
     // manifest builds with zero fresh-file reads on the driver and no
     // extra job at any commit size
     val relsMetas = org.apache.spark.sql.graft.DirectWrite
-      .parquetWithMetas(df, root, partitionBy)
+      .parquetWithMetas(df, root, s.partitionBy)
     val entries = relsMetas.map {
       case (rel, (rows, st, nc, size, mtime)) =>
         val partRel = dirOf(rel)
@@ -2956,19 +2891,28 @@ class LakeTable private (
 
   /** Metadata-only schema change committed through the same optimistic
     * loop as data (so it serializes correctly against racing appends —
-    * the transform is re-applied to the freshly-read schema on every
+    * the transform is re-applied to the freshly-read snapshot on every
     * retry). */
-  private def commitAlter(
-      meta: Map[String, String])(
-      alter: (StructType, Map[String, Int]) => (StructType, Map[String, Int]))
-      : Int =
+  private def commitAlter(meta: Map[String, String])(
+      alter: Snapshot => (StructType, Map[String, Int])): Int =
     commitWith(None, Set.empty, meta, guard = None, alter = Some(alter))
+
+  /** The alter of a metadata-only commit that keeps the schema. */
+  private val sameSchema: Snapshot => (StructType, Map[String, Int]) =
+    s => (s.schema, s.fieldIds)
 
   private def commitWith(pending: Option[PendingWrite],
                          replacedFiles: Set[String],
                          meta: Map[String, String],
                          guard: Option[CommitGuard],
-                         alter: Option[(StructType, Map[String, Int]) =>
+                         // schema change against the freshly-read
+                         // snapshot; it sees lastFieldId, which any
+                         // alter that ADDS fields needs: minting IDs
+                         // from max(live ids) would reuse a retired ID
+                         // after a drop, and field-ID read resolution
+                         // would then serve the dropped column's old
+                         // data under the new field's name
+                         alter: Option[Snapshot =>
                            (StructType, Map[String, Int])],
                          strictReplace: Boolean = false,
                          // false for WHOLE-FILE overwrites: they never
@@ -2986,15 +2930,6 @@ class LakeTable private (
                          newDeletes: Seq[DeleteEntry] = Nil,
                          requireLive: Set[String] = Set.empty,
                          appliedDeletes: Set[String] = Set.empty,
-                         // alter variant that also sees the snapshot's
-                         // lastFieldId — required by any alter that ADDS
-                         // fields (spec evolution): minting IDs from
-                         // max(live ids) would reuse a retired ID after
-                         // a drop, and field-ID read resolution would
-                         // then serve the dropped column's old data
-                         // under the new field's name
-                         alterWithLast: Option[(StructType, Map[String, Int],
-                           Int) => (StructType, Map[String, Int])] = None,
                          // partition-spec evolution: replace the
                          // snapshot's partitionBy (new files' layout);
                          // existing files keep their recorded values
@@ -3005,7 +2940,8 @@ class LakeTable private (
     var stalls = 0
     val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
     while (true) {
-      val (v, cur) = latest()
+      val cur = latest()
+      val v = cur.version
       // losing a slot whose winner is not yet READABLE (the visibility
       // lag CommitStore explicitly permits) re-reads the same version:
       // spinning would burn the whole retry budget inside the lag
@@ -3022,7 +2958,7 @@ class LakeTable private (
         // row-level rewrites must not resurrect rows a concurrent
         // rewrite already superseded: every file we're replacing must
         // still be live in the snapshot we commit against
-        val missing = replacedFiles -- filesOf(cur).map(_.path).toSet
+        val missing = replacedFiles -- cur.files.map(_.path).toSet
         if (missing.nonEmpty)
           throw new java.util.ConcurrentModificationException(
             s"rewrite conflict at $root: ${missing.size} base file(s) " +
@@ -3035,7 +2971,7 @@ class LakeTable private (
         // rewrite already applied, else the rewritten survivors
         // contain rows the concurrent delete committed away
         if (replaceReadsRows) {
-          val unapplied = deletesOf(cur).filter(e =>
+          val unapplied = cur.deletes.filter(e =>
             !appliedDeletes.contains(e.path) &&
               (e.kind == "eq" || e.covers.exists(replacedFiles.contains)))
           if (unapplied.nonEmpty)
@@ -3050,13 +2986,13 @@ class LakeTable private (
         // snapshot's files: if a concurrent rewrite superseded any
         // covered file, the positions no longer denote the same rows
         // and committing them would silently drop the delete
-        val gone = requireLive -- filesOf(cur).map(_.path).toSet
+        val gone = requireLive -- cur.files.map(_.path).toSet
         if (gone.nonEmpty)
           throw new java.util.ConcurrentModificationException(
             s"positional delete conflict at $root: ${gone.size} " +
               "covered data file(s) rewritten by a concurrent commit")
       }
-      val hw = highWaterOf(cur)
+      val hw = cur.highWater
       guard match {
         case Some(MonotoneGuard(k, value)) if hw.getOrElse(k, -1L) >= value =>
           // a racer already committed this (or a later) offset: the
@@ -3074,15 +3010,10 @@ class LakeTable private (
           hw + (g.key -> math.max(hw.getOrElse(g.key, -1L), g.value))
         case None => hw
       }
-      val curSchema = DataTypeBridge.fromJson(cur.get("schemaJson").asText())
-      val curIds = fieldIdsOf(cur)
-      val curLast = lastFieldIdOf(cur)
-      val (newSchema, newIds) = alterWithLast match {
-        case Some(t) => t(curSchema, curIds, curLast)
-        case None => alter match {
-          case Some(t) => t(curSchema, curIds)
-          case None => evolve(curSchema, curIds, curLast, pending.get.schema)
-        }
+      val (newSchema, newIds) = alter match {
+        case Some(t) => t(cur)
+        case None =>
+          evolve(cur.schema, cur.fieldIds, cur.lastFieldId, pending.get.schema)
       }
       // new files record physicalName -> fieldId as of THIS commit (the
       // identity that later renames/drops resolve against) and the
@@ -3099,7 +3030,7 @@ class LakeTable private (
       // rewritten — the snapshot write is O(this batch). Only
       // manifests actually holding a replaced file are rewritten
       // (minus those files); their survivors ride with the new batch.
-      val curRefs = manifestRefsOf(cur)
+      val curRefs = cur.manifests
       val (keptRefs, rewriteFiles) =
         if (replacedFiles.isEmpty) (curRefs, Nil)
         else {
@@ -3119,7 +3050,7 @@ class LakeTable private (
       // row — compaction thereby absorbs deletes lazily), rewriting
       // only the manifests that actually held a dropped entry.
       val deleteRefs: Seq[ManifestRef] = {
-        val cur0 = deleteRefsOf(cur)
+        val cur0 = cur.deleteManifests
         val withNew =
           if (stampedDeletes.isEmpty) cur0
           else mergeDeleteManifests(
@@ -3154,16 +3085,7 @@ class LakeTable private (
       }
       // properties-only alteration re-applies to the freshly-read map
       // on every retry, so it serializes against racing commits
-      val propsNode: JsonNode = alterProps match {
-        case None => cur.get("properties")
-        case Some(f) =>
-          val curProps = cur.get("properties").properties().asScala
-            .map(e => e.getKey -> e.getValue.asText()).toMap
-          val obj = mapper.createObjectNode()
-          f(curProps).toSeq.sortBy(_._1)
-            .foreach { case (k, pv) => obj.put(k, pv) }
-          obj
-      }
+      val props = alterProps.map(_(cur.properties)).getOrElse(cur.properties)
       // Stamp the snapshot's OPERATION at commit time — the writer
       // knows it exactly from the commit's own structure, so
       // meta("snapshots") reads one field instead of re-reading every
@@ -3174,7 +3096,7 @@ class LakeTable private (
           else if (stampedDeletes.nonEmpty)
             { if (stamped.nonEmpty) "overwrite" else "delete" }
           else if (replacedFiles.nonEmpty) {
-            val replacedRows = filesOf(cur)
+            val replacedRows = cur.files
               .filter(f => replacedFiles.contains(f.path)).map(_.rows).sum
             if (stamped.isEmpty || stamped.map(_.rows).sum < replacedRows)
               "delete"
@@ -3184,11 +3106,11 @@ class LakeTable private (
           else "alter")
       val node = snapshotJson(
         version = v + 1, parent = v, schema = newSchema, ids = newIds,
-        props = propsNode,
+        props = props,
         manifests = refs, meta = meta + ("operation" -> operation),
-        partitionBy = alterPartitionBy.getOrElse(partitionByOf(cur)),
+        partitionBy = alterPartitionBy.getOrElse(cur.partitionBy),
         highWater = newHw,
-        lastFieldId = curLast,
+        lastFieldId = cur.lastFieldId,
         deleteManifests = deleteRefs)
       if (tryCommit(commitStore, metaDir, v + 1, node)) return v + 1
       attempt += 1
@@ -3212,7 +3134,7 @@ class LakeTable private (
   def updateProperties(updates: Map[String, String],
                        removals: Set[String] = Set.empty): Int =
     commitWith(None, Set.empty, Map("alter" -> "properties"),
-      guard = None, alter = Some((sch, ids) => (sch, ids)),
+      guard = None, alter = Some(sameSchema),
       alterProps = Some(p => (p -- removals) ++ updates))
 
   /** Rename a column, KEEPING its field ID: files written under the old
@@ -3220,18 +3142,19 @@ class LakeTable private (
     * read time) — a rename is never a drop+add. Partition columns can't
     * be renamed (their name is the directory layout). */
   def renameColumn(from: String, to: String): Int =
-    commitAlter(Map("alter" -> s"rename $from -> $to")) { (s, ids) =>
+    commitAlter(Map("alter" -> s"rename $from -> $to")) { snap =>
+      val (s, ids) = (snap.schema, snap.fieldIds)
       require(s.fieldNames.contains(from), s"no column $from at $root")
       require(!s.fieldNames.contains(to), s"column $to already exists at $root")
-      require(!partitionBy.contains(from),
+      require(!snap.partitionBy.contains(from),
         s"cannot rename partition column $from")
-      require(!bucketCols.contains(from),
+      require(!snap.bucketCols.contains(from),
         s"cannot rename bucket column $from: every file's _bucket was " +
           "derived from it")
-      require(!pruningTransforms.exists(_.src == from),
+      require(!snap.pruningTransforms.exists(_.src == from),
         s"cannot rename $from: a partition transform (current or " +
           "superseded-but-still-pruning) derives from it")
-      require(!deleteEntries.exists(e =>
+      require(!snap.deletes.exists(e =>
         e.kind == "eq" && e.keyCols.contains(from)),
         s"cannot rename $from: a live equality delete keys on it " +
           "(compact to absorb the delete first)")
@@ -3245,21 +3168,22 @@ class LakeTable private (
     * data the dropped column left behind in old files can never
     * resurface under the re-added column. */
   def dropColumn(name: String): Int =
-    commitAlter(Map("alter" -> s"drop $name")) { (s, ids) =>
+    commitAlter(Map("alter" -> s"drop $name")) { snap =>
+      val s = snap.schema
       require(s.fieldNames.contains(name), s"no column $name at $root")
       require(s.fields.length > 1, s"cannot drop the last column at $root")
-      require(!partitionBy.contains(name),
+      require(!snap.partitionBy.contains(name),
         s"cannot drop partition column $name")
-      require(!bucketCols.contains(name),
+      require(!snap.bucketCols.contains(name),
         s"cannot drop bucket column $name: the layout derives from it")
-      require(!pruningTransforms.exists(_.src == name),
+      require(!snap.pruningTransforms.exists(_.src == name),
         s"cannot drop $name: a partition transform (current or " +
           "superseded-but-still-pruning) derives from it")
-      require(!deleteEntries.exists(e =>
+      require(!snap.deletes.exists(e =>
         e.kind == "eq" && e.keyCols.contains(name)),
         s"cannot drop $name: a live equality delete keys on it " +
           "(compact to absorb the delete first)")
-      (StructType(s.fields.filterNot(_.name == name)), ids - name)
+      (StructType(s.fields.filterNot(_.name == name)), snap.fieldIds - name)
     }
 
   /** PARTITION-SPEC EVOLUTION (Iceberg's headline maintenance feature):
@@ -3294,19 +3218,20 @@ class LakeTable private (
     // early errors; the alter closure re-validates per retry against
     // the freshly-read schema, so a racing schema commit cannot be
     // outrun
-    val curSchema0 = schema
-    val parsed0 = specs.map(p => parseTransformSpec(p, curSchema0).toRight(p))
+    val s0 = latest()
+    val parsed0 = specs.map(p => parseTransformSpec(p, s0.schema).toRight(p))
     val newPartBy = parsed0.map {
       case Left(c) => c
       case Right(t) => t.phys
-    } ++ bucketSpec.map(_ => BucketCol)
+    } ++ s0.bucketSpec.map(_ => BucketCol)
     require(newPartBy.distinct.size == newPartBy.size,
       s"duplicate partition columns in $specs")
     val transformSpecs = parsed0.collect { case Right(t) => t.spec }
     commitWith(None, Set.empty,
       Map("alter" -> s"partition-spec ${specs.mkString(",")}"),
-      guard = None, alter = None,
-      alterWithLast = Some { (s, ids, last) =>
+      guard = None,
+      alter = Some { snap =>
+        val (s, ids, last) = (snap.schema, snap.fieldIds, snap.lastFieldId)
         val parsed = specs.map(p => parseTransformSpec(p, s).toRight(p))
         parsed.collect { case Left(c) => c }.foreach(c =>
           require(s.fieldNames.contains(c),
@@ -3343,23 +3268,6 @@ class LakeTable private (
       alterPartitionBy = Some(newPartBy))
   }
 
-  /** Every transform that ever governed a write — current spec plus
-    * history — for pruning and alter guards. History specs that no
-    * longer parse (their source column was since dropped) are skipped:
-    * their files can then only be pruned by raw-column stats. */
-  private def pruningTransforms: Seq[PTransform] = {
-    val node = latest()._2
-    val s = DataTypeBridge.fromJson(node.get("schemaJson").asText())
-    val props = propertiesOf(node)
-    val cur = transformsOf(node, s)
-    val hist = props.get(TransformsHistoryProp)
-      .map(_.split(";").toSeq.map(_.trim).filter(_.nonEmpty))
-      .getOrElse(Nil)
-      .flatMap(spec => scala.util.Try(
-        parseTransformSpec(spec, s)).toOption.flatten)
-    (cur ++ hist).distinctBy(_.phys)
-  }
-
   /** Iceberg-style rollback: commit a NEW snapshot whose file set,
     * schema, and field IDs are those of retained `version` — history
     * is preserved (time travel still reads the undone snapshots until
@@ -3379,15 +3287,14 @@ class LakeTable private (
     * retained (its rows recoverable by rolling forward to it) until
     * expiry; nothing is silently deleted from disk. */
   def rollbackTo(version: Int): Int = {
-    requireRetained(version)
-    val target = mapper.readTree(
-      Files.readString(versionPath(metaDir, version)))
+    val target = retained(version)
     var attempt = 0
     var lastSeen = Int.MinValue
     var stalls = 0
     val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
     while (true) {
-      val (v, cur) = latest()
+      val cur = latest()
+      val v = cur.version
       if (v == version) return v
       // same stall-aware backoff as commitWith: sleep only when the
       // lost slot's winner is not yet readable (v did not advance)
@@ -3401,16 +3308,16 @@ class LakeTable private (
       // no matter how many files the restored snapshot holds
       val node = snapshotJson(
         version = v + 1, parent = v,
-        schema = DataTypeBridge.fromJson(target.get("schemaJson").asText()),
-        ids = fieldIdsOf(target),
-        props = cur.get("properties"),
-        manifests = manifestRefsOf(target),
+        schema = target.schema,
+        ids = target.fieldIds,
+        props = cur.properties,
+        manifests = target.manifests,
         meta = Map("rollback.to" -> version.toString,
           "operation" -> "rollback"),
-        partitionBy = partitionBy,
-        highWater = highWaterOf(cur),
-        lastFieldId = lastFieldIdOf(cur),
-        deleteManifests = deleteRefsOf(target))
+        partitionBy = cur.partitionBy,
+        highWater = cur.highWater,
+        lastFieldId = cur.lastFieldId,
+        deleteManifests = target.deleteManifests)
       if (tryCommit(commitStore, metaDir, v + 1, node)) return v + 1
       attempt += 1
       require(System.nanoTime() < deadline,
@@ -3443,20 +3350,18 @@ class LakeTable private (
     // tagged versions are PINNED: retention never expires a snapshot
     // a tag names, and the vacuum below keeps every file it
     // references — that is the tag's whole contract
-    val doomed = (0 until cutoff).filter(v =>
-      !pinned.contains(v) && Files.exists(versionPath(metaDir, v)))
+    val listed = retainedVersions
+    val doomed = listed.filter(v => v < cutoff && !pinned.contains(v))
     // re-read tags immediately before deleting: a tag published since
     // the first read pins its version from here on (createTag runs the
     // mirror-image re-check after its write — see its comment)
     val pinned2 = pinned ++ tags.values ++ activeBranch.map(_._2)
     val expired = doomed.filterNot(pinned2.contains)
-    // deleteIfExists: two policy enforcers racing to expire the same
-    // version must both succeed (the file being gone IS the goal)
-    expired.foreach(v => Files.deleteIfExists(versionPath(metaDir, v)))
-    val removedFiles = vacuumAgainst(
-      ((math.max(0, cutoff) to cur) ++ pinned2.toSeq).distinct.sorted
-        .filter(v => Files.exists(versionPath(metaDir, v))),
-      minAgeMs)
+    // a missing object is not an error: two policy enforcers racing to
+    // expire the same version must both succeed (gone IS the goal)
+    expired.foreach(v => commitStore.delete(versionPath(metaDir, v)))
+    val removedFiles =
+      vacuumAgainst(listed.filterNot(expired.contains), minAgeMs)
     (expired.size, removedFiles)
   }
 
@@ -3554,7 +3459,7 @@ class LakeTable private (
     * since `createBranch` — what audits run against. */
   def readBranch(name: String): DataFrame = {
     requireActive(name)
-    readVersion(currentVersion)
+    readAt(latest())
   }
 
   /** Atomically fast-forward main to the staged head: one conditional
@@ -3593,7 +3498,7 @@ class LakeTable private (
     * immutable — drop and recreate to move one) or the version is not
     * retained. */
   def createTag(name: String, version: Int): Unit = {
-    requireRetained(version)
+    retained(version)
     require(version >= 0 && version <= currentVersion,
       s"no version $version at $root")
     val body = s"""{"version":$version,"createdAtMs":${
@@ -3609,7 +3514,7 @@ class LakeTable private (
     // entirely needs a transactional ref log, which tags deliberately
     // avoid — policy expiry racing a same-table publish is an
     // operational error this turns into a loud one.)
-    if (!Files.exists(versionPath(metaDir, version))) {
+    if (readSnapshot(version).isEmpty) {
       commitStore.delete(tagPath(name))
       throw new IllegalStateException(
         s"tag $name lost the race with expireSnapshots: version " +
@@ -3675,9 +3580,8 @@ class LakeTable private (
     * replace / alter / rollback; `create` for v0) is STAMPED into the
     * snapshot's appMeta at commit time — the writer knows it exactly,
     * and reading it back costs one field per snapshot instead of an
-    * O(retained × live-files) predecessor diff. Snapshots written
-    * before the stamp existed fall back to the diff classifier
-    * (`unknown` when their predecessor is expired). The no-version default
+    * O(retained × live-files) predecessor diff; a snapshot without
+    * the stamp is rejected. The no-version default
     * answers for the MAIN-VISIBLE snapshot — under an active WAP
     * branch that is the pinned version (`meta("files")` in an audit
     * dashboard must describe what `read()` serves; inspect the staged
@@ -3688,9 +3592,7 @@ class LakeTable private (
     * over metadata — `meta("files", taggedVersion)` answers "what did
     * the corpus physically look like at the v3 training run"). */
   def meta(kind: String, version: Int): DataFrame = {
-    requireRetained(version)
-    val node = mapper.readTree(
-      Files.readString(versionPath(metaDir, version)))
+    val s = retained(version)
     val sp = spark
     import sp.implicits._
     // partition identity of one file: its hive-style `k=v` path
@@ -3700,24 +3602,24 @@ class LakeTable private (
       path.split('/').dropRight(1).filter(_.contains('=')).mkString("/")
     kind match {
       case "files" =>
-        filesOf(node)
+        s.files
           .map(f => (f.path, partOf(f.path), f.rows, f.sizeBytes, f.seq))
           .toDF("path", "partition", "rows", "size_bytes", "seq")
       case "delete_files" =>
-        deletesOf(node)
+        s.deletes
           .map(e => (e.path, e.kind, e.rows, e.seq, e.covers.size,
             e.keyCols.mkString(",")))
           .toDF("path", "kind", "rows", "seq", "covers", "key_cols")
       case "partitions" =>
-        filesOf(node).groupBy(f => partOf(f.path)).toSeq
+        s.files.groupBy(f => partOf(f.path)).toSeq
           .map { case (part, fs) =>
             (part, fs.size.toLong, fs.map(_.rows).sum,
               fs.map(_.sizeBytes).sum)
           }
           .toDF("partition", "file_count", "row_count", "size_bytes")
       case "manifests" =>
-        (manifestRefsOf(node).map(r => (r.path, "data", r.entries)) ++
-          deleteRefsOf(node).map(r => (r.path, "delete", r.entries)))
+        (s.manifests.map(r => (r.path, "data", r.entries)) ++
+          s.deleteManifests.map(r => (r.path, "delete", r.entries)))
           .toDF("path", "kind", "entries")
       case "refs" =>
         (Seq(("main", "branch", version)) ++
@@ -3725,19 +3627,15 @@ class LakeTable private (
           tags.toSeq.map { case (n, v) => (n, "tag", v) })
           .toDF("name", "type", "version")
       case "snapshots" =>
-        val retained = (0 to currentVersion)
-          .filter(v => Files.exists(versionPath(metaDir, v)))
-        val rows = retained.map { v =>
-          val n = mapper.readTree(Files.readString(versionPath(metaDir, v)))
-          val fs = filesOf(n)
-          val ds = deletesOf(n)
+        val rows = retainedVersions.flatMap(readSnapshot).map { n =>
+          val fs = n.files
           // every commit after create stamps its operation
           val op =
-            if (v == 0) "create"
-            else Option(required(n, "appMeta").get("operation"))
-              .getOrElse(throw malformed(n, "operation stamp")).asText()
-          (v, n.get("committedAtMs").asLong(), op, fs.size,
-            ds.size, fs.map(_.rows).sum, fs.map(_.sizeBytes).sum)
+            if (n.version == 0) "create"
+            else n.appMeta.getOrElse("operation",
+              throw n.malformed("operation stamp"))
+          (n.version, n.committedAtMs, op, fs.size,
+            n.deletes.size, fs.map(_.rows).sum, fs.map(_.sizeBytes).sum)
         }
         rows.toDF("version", "committed_at_ms", "operation", "num_files",
           "num_delete_files", "rows", "size_bytes")
@@ -3749,8 +3647,8 @@ class LakeTable private (
 
   /** Garbage-collect files no snapshot references: leftovers from
     * crashed writers (written but never committed — the failure mode the
-    * reference silently leaks on every write/commit error), losers of
-    * compare-and-set commits, and staging dirs. Never touches referenced
+    * reference silently leaks on every write/commit error) and losers of
+    * compare-and-set commits. Never touches referenced
     * files, so it is safe concurrent with readers of any committed
     * snapshot. `minAgeMs` makes it safe concurrent with in-flight
     * WRITERS too (their pre-commit files look orphaned until their
@@ -3760,19 +3658,16 @@ class LakeTable private (
     * Returns deleted file count. */
   def vacuum(): Int = vacuum(0L)
 
-  def vacuum(minAgeMs: Long): Int =
-    vacuumAgainst((0 to currentVersion).filter(v =>
-      Files.exists(versionPath(metaDir, v))), minAgeMs)
+  def vacuum(minAgeMs: Long): Int = vacuumAgainst(retainedVersions, minAgeMs)
 
   private def vacuumAgainst(versions: Seq[Int],
                             minAgeMs: Long = 0L): Int = {
-    val nodes = versions.map(v =>
-      mapper.readTree(Files.readString(versionPath(metaDir, v))))
+    val nodes = versions.flatMap(readSnapshot)
     val referenced: Set[Path] =
       nodes.flatMap(n =>
-        filesOf(n).map(f => Paths.get(root, f.path).normalize())).toSet ++
+        n.files.map(f => Paths.get(root, f.path).normalize())).toSet ++
       nodes.flatMap(n =>
-        deletesOf(n).map(e => Paths.get(root, e.path).normalize())).toSet
+        n.deletes.map(e => Paths.get(root, e.path).normalize())).toSet
     var deleted = 0
     val cutoff = System.currentTimeMillis() - minAgeMs
     def oldEnough(p: Path): Boolean =
@@ -3803,7 +3698,7 @@ class LakeTable private (
     // manifest before winning its snapshot slot). Delete manifests
     // (dm-*.json) get the identical treatment.
     val refedManifests: Set[Path] = nodes.flatMap { n =>
-      (manifestRefsOf(n) ++ deleteRefsOf(n))
+      (n.manifests ++ n.deleteManifests)
         .map(r => metaDir.resolve(r.path).toAbsolutePath.normalize())
     }.toSet
     listDir(metaDir)
@@ -3814,16 +3709,6 @@ class LakeTable private (
       .filterNot(p => refedManifests.contains(p.toAbsolutePath.normalize()))
       .filter(oldEnough)
       .foreach(p => Files.deleteIfExists(p))
-    // stale staging dirs from crashed partitioned writes
-    listDir(Paths.get(root))
-      .filter(p => p.getFileName.toString.startsWith(".staging-"))
-      .filter(oldEnough)
-      .foreach { st =>
-        walkDir(st).reverse.foreach { p =>
-          if (Files.isRegularFile(p)) deleted += 1
-          Files.deleteIfExists(p)
-        }
-      }
     deleted
   }
 
@@ -4023,7 +3908,7 @@ object LakeTable {
     * (relative to the table's metadata dir). `entries` rides in the
     * reference so the merge ladder sizes classes without opening the
     * manifest. */
-  private[lake] case class ManifestRef(path: String, entries: Int)
+  private[graft] case class ManifestRef(path: String, entries: Int)
 
   // ---- hidden partitioning transforms (Iceberg partition specs) ------
   //
@@ -4431,8 +4316,7 @@ object LakeTable {
     Files.createDirectories(metaDir)
     val ids = fullSchema.fields.zipWithIndex
       .map { case (f, i) => f.name -> (i + 1) }.toMap
-    val propsNode = mapper.createObjectNode()
-    (Map("write.format.default" -> "parquet",
+    val props = Map("write.format.default" -> "parquet",
       // incarnation identity (Iceberg's table-uuid): DROP + CREATE at
       // the same root mints dense versions from 0 again, so any cache
       // keyed (root, version) would serve the dead incarnation's state
@@ -4446,9 +4330,8 @@ object LakeTable {
       (if (transforms.isEmpty) Map.empty[String, String]
        else Map(TransformsProp -> transforms.map(_.spec).mkString(";"))) ++
       bucketBy.map(b => Map("bucket.column" -> b._1,
-        "bucket.count" -> b._2.toString)).getOrElse(Map.empty))
-      .foreach { case (k, v) => propsNode.put(k, v) }
-    val node = snapshotJson(0, -1, fullSchema, ids, propsNode,
+        "bucket.count" -> b._2.toString)).getOrElse(Map.empty)
+    val node = snapshotJson(0, -1, fullSchema, ids, props,
       manifests = Nil, Map.empty, fullParts)
     require(tryCommit(store, metaDir, 0, node),
       s"table already exists at $root")
@@ -4471,7 +4354,7 @@ object LakeTable {
     * therefore O(new manifests), not O(live files). */
   private[lake] def snapshotJson(
       version: Int, parent: Int, schema: StructType,
-      ids: Map[String, Int], props: JsonNode,
+      ids: Map[String, Int], props: Map[String, String],
       manifests: Seq[ManifestRef], meta: Map[String, String],
       partitionBy: Seq[String] = Seq.empty,
       highWater: Map[String, Long] = Map.empty,
@@ -4492,7 +4375,8 @@ object LakeTable {
     // field ID can never be reused by a later add
     n.put("lastFieldId",
       math.max(lastFieldId, ids.values.foldLeft(0)(math.max)))
-    n.set[JsonNode]("properties", props)
+    val propsNode = n.putObject("properties")
+    props.toSeq.sortBy(_._1).foreach { case (k, v) => propsNode.put(k, v) }
     val mArr = n.putArray("manifests")
     manifests.foreach { m =>
       val mn = mArr.addObject()

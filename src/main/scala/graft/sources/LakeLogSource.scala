@@ -55,18 +55,19 @@ object LakeLogSource {
   /** Rows for versions in (from, to], as plain serializable tuples.
     * Metadata-only: no SparkSession is touched. */
   def logRows(path: String, from: Int, to: Int)
-      : Seq[(Int, Long, Int, Long, String)] = {
-    val t = LakeTable.load(null, path)
-    val byVersion = t.snapshots.map(s => s.version -> s).toMap
-    // expired versions are skipped (consumers starting before the
-    // retention window only see retained snapshots)
-    ((from + 1) to to).flatMap { v =>
-      byVersion.get(v).map { s =>
-        val batchId = t.appMetaAt(v, LakeTable.BatchIdKey).orNull
-        (v, s.committedAtMs, s.numFiles, s.rows, batchId)
-      }
+      : Seq[(Int, Long, Int, Long, String)] =
+    logRows(LakeTable.load(null, path), from, to)
+
+  /** [[logRows]] of a loaded table: one snapshot read per version in
+    * the range, so a micro-batch costs O(new versions). Expired
+    * versions are skipped (consumers starting before the retention
+    * window only see retained snapshots). */
+  def logRows(t: LakeTable, from: Int, to: Int)
+      : Seq[(Int, Long, Int, Long, String)] =
+    t.snapshotsBetween(from, to).map { s =>
+      (s.version, s.committedAtMs, s.files.size, s.files.map(_.rows).sum,
+        s.appMeta.get(LakeTable.BatchIdKey).orNull)
     }
-  }
 }
 
 class LakeLogTable(path: String) extends Table with SupportsRead {

@@ -186,44 +186,33 @@ object LongHaul {
     // second-half mean would exceed the first-half mean by roughly
     // the table-growth factor; under the split both halves must sit
     // at the same batch-scale figure.
-    locally {
-      val om = new com.fasterxml.jackson.databind.ObjectMapper()
-      import scala.jdk.CollectionConverters._
-      for ((name, t) <- Seq("index" -> index, "postings" -> postings,
-          "out" -> out)) {
-        val metaDir = java.nio.file.Paths.get(t.root, "metadata")
-        def vpath(v: Int) = metaDir.resolve(f"v$v%08d.json")
-        def refsOf(v: Int): Set[String] = {
-          val n = om.readTree(java.nio.file.Files.readString(vpath(v)))
-          n.get("manifests").elements().asScala
-            .map(_.get("path").asText()).toSet
-        }
-        val vs = (0 to t.currentVersion)
-          .filter(v => java.nio.file.Files.exists(vpath(v)))
-        val perCommit = vs.map { v =>
-          val parentRefs =
-            if (v > 0 && java.nio.file.Files.exists(vpath(v - 1)))
-              refsOf(v - 1)
-            else Set.empty[String]
-          val fresh = refsOf(v) -- parentRefs
-          java.nio.file.Files.size(vpath(v)) +
-            fresh.toSeq.map { m =>
-              val p = metaDir.resolve(m)
-              if (java.nio.file.Files.exists(p))
-                java.nio.file.Files.size(p) else 0L
-            }.sum
-        }
-        val (a, b) = perCommit.splitAt(perCommit.length / 2)
-        def mean(xs: Seq[Long]) =
-          if (xs.isEmpty) 0.0 else xs.sum.toDouble / xs.length
-        val snapMax = vs.map(v => java.nio.file.Files.size(vpath(v))).max
-        println(f"[longhaul] meta $name%-8s perCommitKB " +
-          f"firstHalf ${mean(a) / 1e3}%6.1f  secondHalf " +
-          f"${mean(b) / 1e3}%6.1f  ratio ${mean(b) / math.max(1.0, mean(a))}%4.2f  " +
-          f"maxSnapshotKB ${snapMax / 1e3}%6.1f  " +
-          f"manifests ${refsOf(t.currentVersion).size}%d  " +
-          f"liveFiles ${t.dataFiles.size}%d")
+    for ((name, t) <- Seq("index" -> index, "postings" -> postings,
+        "out" -> out)) {
+      val metaDir = java.nio.file.Paths.get(t.root, "metadata")
+      def vpath(v: Int) = metaDir.resolve(f"v$v%08d.json")
+      val snaps = t.snapshotsBetween(-1, t.currentVersion)
+      val refs = snaps.map(s => s.version -> s.manifests.map(_.path).toSet)
+        .toMap
+      val vs = snaps.map(_.version)
+      val perCommit = vs.map { v =>
+        val fresh = refs(v) -- refs.getOrElse(v - 1, Set.empty[String])
+        java.nio.file.Files.size(vpath(v)) +
+          fresh.toSeq.map { m =>
+            val p = metaDir.resolve(m)
+            if (java.nio.file.Files.exists(p))
+              java.nio.file.Files.size(p) else 0L
+          }.sum
       }
+      val (a, b) = perCommit.splitAt(perCommit.length / 2)
+      def mean(xs: Seq[Long]) =
+        if (xs.isEmpty) 0.0 else xs.sum.toDouble / xs.length
+      val snapMax = vs.map(v => java.nio.file.Files.size(vpath(v))).max
+      println(f"[longhaul] meta $name%-8s perCommitKB " +
+        f"firstHalf ${mean(a) / 1e3}%6.1f  secondHalf " +
+        f"${mean(b) / 1e3}%6.1f  ratio ${mean(b) / math.max(1.0, mean(a))}%4.2f  " +
+        f"maxSnapshotKB ${snapMax / 1e3}%6.1f  " +
+        f"manifests ${refs(vs.last).size}%d  " +
+        f"liveFiles ${t.dataFiles.size}%d")
     }
     spark.stop()
   }

@@ -13,11 +13,12 @@ import graft.SparkSuite
 /** Drives the commit protocol's concurrency suite through a
   * deliberately-racy NON-POSIX [[CommitStore]]: slots arbitrated by an
   * in-memory CAS (the object-store conditional-put model), winner
-  * content visible only after a random delay, published by atomic MOVE
-  * — never link(2). If the protocol silently depended on any POSIX
-  * incidental beyond [[CommitStore.putIfAbsent]]'s documented contract
-  * (conditional create, all-or-nothing visibility), these scenarios —
-  * the same ones LakeTableSpec/RowLevelOpsSpec run against
+  * content visible only after a random delay, and every published
+  * object held in the store's memory — never on local disk. If the
+  * protocol silently depended on any POSIX incidental beyond the
+  * store's documented contract (conditional create, all-or-nothing
+  * visibility, reads/lists/deletes through the same store), these
+  * scenarios — the same ones LakeTableSpec/RowLevelOpsSpec run against
   * [[PosixCommitStore]] — would lose commits, duplicate rows, or read
   * torn snapshots here. */
 class CommitStoreContractSpec extends SparkSuite {
@@ -43,7 +44,7 @@ class CommitStoreContractSpec extends SparkSuite {
       Future(store.putIfAbsent(path, payload(w))))), 60.seconds)
     pool.shutdown()
     assert(wins.count(identity) == 1, s"expected one winner, got $wins")
-    val content = java.nio.file.Files.readString(path)
+    val content = store.read(path).get
     assert((1 to 8).exists(w => content == payload(w)),
       "published content must be exactly one writer's full payload")
   }
@@ -172,6 +173,42 @@ class CommitStoreContractSpec extends SparkSuite {
     pool.shutdown()
     assert(t.read().count() == 8)
     assert(t.read().agg(sum("a")).as[Long].head() == 321L)
+  }
+
+  test("a table lifecycle runs entirely through the store's seam: " +
+    "reads, time travel, changes, retention and the version hint " +
+    "touch no local metadata file") {
+    val t = racyTable("seam", abSchema)
+    val metaDir = java.nio.file.Paths.get(t.root, "metadata")
+    val hint = metaDir.resolve(LakeTable.LatestHint)
+    (1 to 3).foreach(i => t.append(Seq((i.toLong, s"v$i")).toDF("a", "b")))
+    assert(t.currentVersion == 3)
+    assert(t.appendExactlyOnce(Seq((10L, "eo")).toDF("a", "b"), "w", 0L) == 4)
+    // a replay of the same (writer, batch) is a no-op
+    assert(t.appendExactlyOnce(Seq((10L, "eo")).toDF("a", "b"), "w", 0L) == 4)
+    assert(t.currentVersion == 4 && t.lastBatchId("w") == 0L)
+    assert(t.read().agg(sum("a")).as[Long].head() == 16L)
+    assert(t.readVersion(2).select("a").as[Long].collect().sorted.toSeq ==
+      Seq(1L, 2L))
+    assert(t.changesBetween(2, 4).select("a").as[Long].collect().sorted
+      .toSeq == Seq(3L, 10L))
+    // missing hint: the listing fallback finds the frontier
+    assert(t.store.delete(hint))
+    assert(t.currentVersion == 4)
+    // stale hint: the forward probe recovers the frontier
+    t.store.putHint(hint, "1")
+    assert(t.currentVersion == 4)
+    assert(t.meta("snapshots").count() == 5)
+    val (expired, _) = t.expireSnapshots(keepLast = 2)
+    assert(expired == 3)
+    assert(t.snapshots.map(_.version) == Seq(3, 4))
+    assert(t.meta("snapshots").select("version").as[Int].collect().toSeq ==
+      Seq(3, 4))
+    intercept[IllegalStateException](t.changesBetween(1, 4))
+    t.append(Seq((5L, "v5")).toDF("a", "b"))
+    assert(t.currentVersion == 5 && t.read().count() == 5)
+    assert(LakeTable.listDir(metaDir).isEmpty,
+      s"local metadata files: ${LakeTable.listDir(metaDir)}")
   }
 
   test("a catalog on a racy store threads the seam to every table it " +
