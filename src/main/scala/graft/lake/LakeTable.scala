@@ -505,9 +505,22 @@ class LakeTable private (
           base
       case _ => base
     }
+    // long and string keys filter rows through a hash set (see
+    // ColumnBridge.inSet): a small `In` list would compile a new class
+    // for every new key set
+    val keySet: Option[Set[Any]] =
+      s.schema.fields.find(_.name == keyCol).map(_.dataType).collect {
+        case LongType if values.forall(_.isInstanceOf[Long]) => values.toSet
+        case StringType if values.forall(_.isInstanceOf[String]) =>
+          values.map(v => org.apache.spark.unsafe.types.UTF8String
+            .fromString(v.asInstanceOf[String])).toSet
+      }
+    val rowFilter = keySet.fold(base)(
+      org.apache.spark.sql.graft.ColumnBridge.inSet(col(keyCol), _))
     // probes feed broadcast joins: the bucket claim can't remove an
     // exchange there but would cap scan parallelism at numBuckets
-    readWhereAt(s, cond, claimBucket = false)
+    readEntries(pruneFiles(s, cond), s, claimBucket = false,
+      deletes = s.deletes).filter(rowFilter)
   }
 
   /** Bucket-dir-only point read: every row of the bucket dirs the
@@ -3760,31 +3773,15 @@ object LakeTable {
     * overlap the footer parses of wide fan-out writes (the
     * [[org.apache.spark.sql.graft.GraftDirectCommitProtocol]]
     * task-commit read-back) and by the rare driver-side fallback.
-    * Sized to the executor's ALLOTTED cores (floor 8): a footer parse
-    * is part latency-bound I/O (status + ranged read — the floor hides
-    * those round trips) and part real CPU (thrift decode + stats
-    * fold), and a dynamic-partition write can hand ONE task hundreds
-    * of files — on an executor the pool then uses exactly that
-    * executor's share, which is where the parallelism of the former
-    * separate footer JOB came from. `spark.executor.cores` is
-    * preferred over `availableProcessors` because a JVM on a shared
-    * host sees the MACHINE's cores: with several executors per node,
-    * machine-cores threads each would oversubscribe the node during
-    * simultaneous wide task commits (r16 ADVICE). Local mode and the
-    * driver fall back to the JVM's processors — there the process IS
-    * the machine's tenant. */
+    * Sized by [[footerPoolSize]] for this JVM's role. */
   lazy val footerPool: java.util.concurrent.ExecutorService = {
-    val allotted =
-      try Option(org.apache.spark.SparkEnv.get)
-        .flatMap(e => e.conf.getOption("spark.executor.cores"))
-        .map(_.toInt)
-        .getOrElse(Runtime.getRuntime.availableProcessors())
-      catch {
-        case scala.util.control.NonFatal(_) =>
-          Runtime.getRuntime.availableProcessors()
-      }
-    java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(8, allotted),
+    val env = Option(org.apache.spark.SparkEnv.get)
+    val size = footerPoolSize(Runtime.getRuntime.availableProcessors(),
+      env.flatMap(_.conf.getOption("spark.master")).getOrElse("local"),
+      env.forall(_.executorId == "driver"), // SparkContext.DRIVER_IDENTIFIER
+      env.flatMap(_.conf.getOption("spark.executor.cores"))
+        .flatMap(_.toIntOption))
+    java.util.concurrent.Executors.newFixedThreadPool(size,
       new java.util.concurrent.ThreadFactory {
         private val n = new java.util.concurrent.atomic.AtomicInteger
         override def newThread(r: Runnable): Thread = {
@@ -3794,6 +3791,28 @@ object LakeTable {
         }
       })
   }
+
+  /** Footer-pool threads for a JVM that sees `processors` cores, by its
+    * role. A footer parse is part latency-bound I/O (status + ranged
+    * read) and part real CPU (thrift decode + stats fold), and a
+    * dynamic-partition write can hand ONE task hundreds of files.
+    *  - Local mode (`local`, `local[n]`): max(8, processors). The
+    *    process is the machine's tenant; the floor hides the I/O round
+    *    trips.
+    *  - A driver-only JVM: its own processors — it parses only on the
+    *    rare fallback, and the executors' cores are not its own.
+    *  - An executor: its allotted `spark.executor.cores` when set,
+    *    capped at `processors` — a JVM on a shared host sees the
+    *    MACHINE's cores, so with several executors per node, machine-
+    *    cores threads each would oversubscribe it during simultaneous
+    *    wide task commits — else `processors`. */
+  private[lake] def footerPoolSize(processors: Int, master: String,
+                                   isDriver: Boolean,
+                                   executorCores: Option[Int]): Int =
+    if (master == "local" || master.startsWith("local[")) math.max(8, processors)
+    else if (isDriver) processors
+    else executorCores.fold(processors)(math.min(processors, _))
+
   val BatchIdKey = "streaming.batchId"
   val WriterIdKey = "streaming.writerId"
   val DefaultWriter = "default"

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 import graft.functions.TextFunctions
 
 /** Deduplication operators for LLM training-data pipelines: exact,
@@ -227,16 +228,7 @@ object DedupOps {
       newRows.select(col("doc_id").as("d_new"), col("sig")), "d_new")
     val idxBk = postings match {
       case Some(p) =>
-        // a postings table built under a different band geometry would
-        // silently generate zero candidates — fail loud instead, and
-        // refuse tables that carry no geometry stamp at all
-        val kind = requirePostingsProp(p, "postings.kind")
-        require(kind == "minhash",
-          s"postings table at ${p.root} is '$kind', not minhash")
-        val pBands = requirePostingsProp(p, "postings.bands").toInt
-        require(pBands == bands,
-          s"postings at ${p.root} were built with $pBands bands, " +
-            s"probe uses $bands")
+        requireMinHashPostings(p, bands)
         // the batch's own posting keys, enumerated driver-side (batch
         // docs x bands values — the incremental case by definition);
         // oversized batches degrade to one full postings scan, which
@@ -259,7 +251,13 @@ object DedupOps {
     // per-batch job floor is the MV loops' dominant cost at sf0.1 and
     // a pure driver/commit overhead at any scale. A degenerate pair
     // explosion (> maxProbe) falls back to the checkpointed
-    // distributed shape unchanged.
+    // distributed shape unchanged. The cap counts distinct PAIRS, not
+    // distinct indexed ids, by design: one bounded collect serves the
+    // verify join and the fetch ids, so the common batch pays one job.
+    // A batch with more than maxProbe pairs over few indexed docs
+    // (heavy multi-band collisions) re-runs the banded join from the
+    // checkpoint and discards the collected rows — a slower batch,
+    // never a wrong one.
     val candQ = idxBk.join(broadcast(newBk), "bk")
       .select(col("d_new"), col("d_idx"))
       .distinct() // a pair colliding in several bands verifies once
@@ -289,6 +287,188 @@ object DedupOps {
         col("inter") / (col("n1") + col("n2") - col("inter")))
       .filter(col("jaccard") >= minJaccard)
       .select(col("d_new"), col("d_idx"), col("inter"), col("jaccard"))
+  }
+
+  /** A postings table built under a different band geometry would
+    * silently generate zero candidates — fail loud instead, and refuse
+    * tables that carry no geometry stamp at all. */
+  private def requireMinHashPostings(p: graft.lake.LakeTable,
+                                     bands: Int): Unit = {
+    val kind = requirePostingsProp(p, "postings.kind")
+    require(kind == "minhash",
+      s"postings table at ${p.root} is '$kind', not minhash")
+    val pBands = requirePostingsProp(p, "postings.bands").toInt
+    require(pBands == bands,
+      s"postings at ${p.root} were built with $pBands bands, " +
+        s"probe uses $bands")
+  }
+
+  /** The most within-batch pairs a curation step collapses on the
+    * driver; a batch with more takes its distributed path. */
+  private[graft] val MaxWithinBatchPairs = 100000
+
+  /** The batch side of a near-dup curation step, as one projection:
+    * per document its id, fingerprint, shingle-hash set, MinHash
+    * signature ([[signatureIndexRows]]' defaults), the signature's band
+    * hashes and their posting keys (`pbhs`, as [[bandPostingsRows]]
+    * computes them); `shs`, `sig`, `bks` and `pbhs` are null for a
+    * document too short to shingle. No shuffle: the batch keeps its
+    * scan partitioning. */
+  private def curationBatch(docs: DataFrame, bands: Int, textCol: String,
+                            idCol: String): DataFrame = {
+    val shs = graft.functions.ShingleHashes.shingle_hashes(col(textCol), 3)
+    docs.select(col(idCol).cast("long").as("doc_id"),
+        TextFunctions.fingerprint(col(textCol)).as("fp"),
+        when(size(shs) >= 1, shs).as("shs"))
+      .withColumn("sig", graft.functions.HashSig.minhash_sig(col("shs"), 64))
+      .withColumn("bks",
+        graft.functions.HashSig.band_hashes(col("sig"), bands))
+      .withColumn("pbhs",
+        transform(col("bks"), (bh, band) => xxhash64(band, bh)))
+  }
+
+  /** Every row of `df` in ONE Spark job when it holds at most `max`
+    * rows; None when it holds more. Each task ships at most its share
+    * of the bound (`max + 1` split evenly over the tasks, rounded up),
+    * so the driver never holds much more than `max` rows; a task
+    * whose partition holds more than its share reports overflow, so a
+    * skewed input can overflow below `max` — the caller's fallback
+    * then runs, which costs time, never correctness. `limit(n)
+    * .collect()` would scan partitions in growing waves, one job per
+    * wave. */
+  private def collectAtMost(df: DataFrame, max: Int)
+      : Option[Seq[Row]] = {
+    val rdd = df.rdd
+    val share = (max + rdd.getNumPartitions) / math.max(1, rdd.getNumPartitions)
+    val parts = rdd.mapPartitions { it =>
+      val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
+      while (buf.length < share && it.hasNext) buf += it.next()
+      Iterator.single((buf.toArray, it.hasNext))
+    }.collect()
+    val rows = parts.toSeq.flatMap(_._1)
+    if (parts.exists(_._2) || rows.length > max) None else Some(rows)
+  }
+
+  /** What one near-dup curation step commits: the accepted document
+    * ids and their index rows
+    * ([[graft.streaming.MVManager.curationIndexSchema]]). */
+  private[graft] final case class NearDupBatch(accepted: Set[Long],
+                                               indexRows: Seq[Row])
+
+  /** One document of a curation batch on the driver (see
+    * [[curationBatch]]). */
+  private final case class BatchDoc(id: Long, fp: String, shs: Array[Long],
+                                    sig: Array[Long], bks: Array[Long],
+                                    pbhs: Array[Long])
+
+  /** The exact Jaccard of two distinct shingle-hash sets, with the
+    * arithmetic of [[trueJaccardFromSigRows]] and
+    * [[nearDupSigsAgainstIndex]]: `inter / (n1 + n2 - inter)` in
+    * doubles. */
+  private def jaccard(a: Array[Long], b: Array[Long]): Double = {
+    val inA = a.toSet
+    val inter = b.count(inA)
+    inter.toDouble / (a.length + b.length - inter)
+  }
+
+  /** The near-dup curation decision for a batch small enough to hold
+    * on the driver — [[freshAgainstIndex]], the within-batch collapse of
+    * [[trueJaccardFromSigRows]] + [[nearDupDropIds]] and
+    * [[nearDupSigsAgainstIndex]] with the same results, in at most three
+    * Spark jobs and a fixed set of plan shapes:
+    *  1. the [[curationBatch]] projection, collected once (at most
+    *     `maxProbe` documents);
+    *  2. one scan for the index's fingerprint hits and the postings
+    *     rows under the batch's band keys (at most `maxProbe` keys and
+    *     rows; without `postings`, one band scan of the index);
+    *  3. the shingle sets of the index candidates (at most `maxProbe`),
+    *     skipped when there is no candidate.
+    * Within-batch fingerprint copies keep their min doc_id; the fresh
+    * documents' band collisions are verified with exact Jaccard and
+    * collapse to each cluster's min doc_id (at most
+    * [[MaxWithinBatchPairs]] candidate pairs); a survivor drops when an
+    * indexed document sharing one of its band keys reaches
+    * `minJaccard`. None when any bound is exceeded: the caller runs the
+    * distributed step instead, before anything was committed. */
+  private[graft] def nearDupBatch(docs: DataFrame,
+                                  index: graft.lake.LakeTable,
+                                  postings: Option[graft.lake.LakeTable],
+                                  minJaccard: Double, bands: Int,
+                                  textCol: String, idCol: String,
+                                  maxProbe: Int)
+      : Option[NearDupBatch] = {
+    import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
+    def longs(r: Row, i: Int): Array[Long] =
+      if (r.isNullAt(i)) null else r.getSeq[Long](i).toArray
+    val batch = collectAtMost(curationBatch(docs, bands, textCol, idCol),
+        maxProbe).getOrElse(return None)
+      .map(r => BatchDoc(r.getLong(0), r.getString(1), longs(r, 2),
+        longs(r, 3), longs(r, 4), longs(r, 5)))
+    val keys = batch.filter(_.pbhs != null).flatMap(_.pbhs).distinct
+    // fingerprint hits and band-key postings, fused into one scan
+    val fpHits = index.probe("fp", batch.flatMap(d => Option(d.fp)).distinct)
+      .select(col("fp"), lit(null).cast(LongType).as("d_idx"),
+        lit(null).cast(IntegerType).as("band"),
+        lit(null).cast(LongType).as("bh"))
+    val postingHits = (postings match {
+      case Some(p) =>
+        requireMinHashPostings(p, bands)
+        // more keys than maxProbe: the probe would read the whole
+        // table, and planning a hash-set filter on its claimed bucket
+        // column costs one generated projection per key
+        if (keys.length > maxProbe) return None
+        p.probeTiered("pbh", keys, maxProbe)
+      case None => bandPostingsRows(index.read(), bands)
+    }).filter(ColumnBridge.inSet(col("pbh"), keys.toSet[Any]))
+      .select(lit(null).cast(StringType).as("fp"), col("doc_id").as("d_idx"),
+        col("band"), col("bh"))
+    val probed = collectAtMost(fpHits.unionByName(postingHits), maxProbe)
+      .getOrElse(return None)
+    val (fpRows, postingRows) = probed.partition(r => !r.isNullAt(0))
+    val indexed = fpRows.map(_.getString(0)).toSet
+    val fresh = batch.groupBy(d => Option(d.fp)).values.map(_.minBy(_.id))
+      .filterNot(d => d.fp != null && indexed(d.fp)).toSeq.sortBy(_.id)
+    // within-batch collapse: band collisions among the fresh docs,
+    // verified exactly, one survivor (min id) per connected cluster
+    val freshSigs = fresh.filter(_.sig != null)
+    val wbCands = (0 until bands).flatMap { b =>
+      freshSigs.groupBy(_.bks(b)).values.filter(_.size > 1)
+    }
+    if (wbCands.map(g => g.size.toLong * (g.size - 1) / 2).sum >
+        MaxWithinBatchPairs)
+      return None
+    val wbPairs = wbCands.flatMap(g => g.combinations(2).map {
+      case Seq(a, c) => (a, c)
+    }).distinctBy { case (a, c) => (a.id, c.id) }
+      .filter { case (a, c) => jaccard(a.shs, c.shs) >= minJaccard }
+      .map { case (a, c) => (a.id, c.id) }
+    val wbDrop = nearDupDropIds(wbPairs).toSet
+    val survivors = fresh.filterNot(d => wbDrop(d.id))
+    // index candidates: survivors sharing an exact (band, bh) key with
+    // a posting; verified against the candidates' stored shingle sets
+    val byKey = survivors.filter(_.sig != null)
+      .flatMap(d => d.bks.indices.map(b => (b, d.bks(b)) -> d))
+      .groupMap(_._1)(_._2)
+    val cands = postingRows.flatMap { r =>
+      byKey.getOrElse((r.getInt(2), r.getLong(3)), Nil)
+        .map(d => (d, r.getLong(1)))
+    }.distinctBy { case (d, idx) => (d.id, idx) }
+    val candIds = cands.map(_._2).distinct
+    val idxShs =
+      if (candIds.isEmpty) Map.empty[Long, Seq[Array[Long]]]
+      else collectAtMost(index.probe("doc_id", candIds)
+          .select(col("doc_id"), col("shs")), maxProbe)
+        .getOrElse(return None)
+        .filter(!_.isNullAt(1)).groupMap(_.getLong(0))(longs(_, 1))
+    val nearIds = cands.collect {
+      case (d, idx) if idxShs.getOrElse(idx, Nil)
+          .exists(jaccard(d.shs, _) >= minJaccard) => d.id
+    }.toSet
+    val accepted = survivors.filterNot(d => nearIds(d.id))
+    def seq(a: Array[Long]) =
+      if (a == null) null else scala.collection.immutable.ArraySeq.unsafeWrapArray(a)
+    Some(NearDupBatch(accepted.map(_.id).toSet,
+      accepted.map(d => Row(d.fp, d.id, seq(d.shs), seq(d.sig)))))
   }
 
   /** Distinct word n-gram shingles per document as one array column —
@@ -811,7 +991,10 @@ object DedupOps {
     // same one-bounded-collect candidate fusion as
     // nearDupSigsAgainstIndex: the collected pairs feed the verify
     // join as a local relation AND yield the probe ids, replacing a
-    // checkpoint job + a collect job per probe
+    // checkpoint job + a collect job per probe. As there, the cap
+    // counts pairs, not distinct indexed ids — the intended tradeoff:
+    // an overflow with few distinct ids re-runs the banded join from
+    // the checkpoint, a slower batch, never a wrong one
     val candQ = idxBk.join(broadcast(newBk), "bk")
       .select(col("d_new"), col("d_idx"))
       .distinct() // a pair colliding in several bands verifies once

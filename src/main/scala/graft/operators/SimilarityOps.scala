@@ -863,7 +863,10 @@ object SimilarityOps {
     // same one-bounded-collect candidate fusion as the MinHash twin
     // (DedupOps.nearDupSigsAgainstIndex): the collected pairs feed the
     // verify join as a local relation AND yield the probe ids,
-    // replacing a checkpoint job + a collect job per probe
+    // replacing a checkpoint job + a collect job per probe. The cap
+    // counts pairs, not distinct indexed ids — the intended tradeoff:
+    // an overflow with few distinct ids re-runs the banded join from
+    // the checkpoint, a slower batch, never a wrong one
     val candQ = idxBk
       .join(broadcast(newBk), "bk")
       .select(col("v_new"), col("v_idx"))

@@ -797,8 +797,30 @@ object MVManager {
                         textCol: String = "text",
                         idCol: String = "doc_id",
                         postings: Option[LakeTable] = None,
-                        wap: Option[WapAudit] = None): Unit = {
-    import org.apache.spark.sql.functions.{broadcast, col}
+                        wap: Option[WapAudit] = None): Unit =
+    curateStepNearDup(docs, index, out, writerId, batchId, minJaccard,
+      textCol, idCol, postings, wap, maxProbe = 10000)
+
+  /** [[curateStepNearDup]] with the driver-side bound: a batch whose
+    * decision fits `maxProbe` (documents, probe rows, candidates) is
+    * decided on the driver by [[graft.operators.DedupOps.nearDupBatch]]
+    * — a handful of Spark jobs over plan shapes that repeat every
+    * batch, so steady-state batches recompile no generated class — and
+    * its index rows are committed from the driver, its postings rows
+    * derived from them by [[graft.operators.DedupOps.bandPostingsRows]]
+    * as in the distributed step; a larger one runs the distributed
+    * step. Both decide the same rows, and the switch point is not
+    * tuned: it reuses the probe bound. */
+  private[graft] def curateStepNearDup(docs: org.apache.spark.sql.DataFrame,
+                                       index: LakeTable, out: LakeTable,
+                                       writerId: String, batchId: Long,
+                                       minJaccard: Double, textCol: String,
+                                       idCol: String,
+                                       postings: Option[LakeTable],
+                                       wap: Option[WapAudit],
+                                       maxProbe: Int): Unit = {
+    import org.apache.spark.sql.functions.col
+    import scala.jdk.CollectionConverters._
     import graft.operators.DedupOps
     // ADOPT the postings table's stamped band count (the SRP twin's
     // contract): geometry is a property of the TABLE, not of whichever
@@ -807,6 +829,49 @@ object MVManager {
     // every batch against the driver's default
     val bands = postings.map(p =>
       DedupOps.requirePostingsProp(p, "postings.bands").toInt).getOrElse(16)
+    DedupOps.nearDupBatch(docs, index, postings, minJaccard, bands, textCol,
+        idCol, maxProbe) match {
+      case Some(b) =>
+        val idxRows = docs.sparkSession.createDataFrame(b.indexRows.asJava,
+          curationIndexSchema)
+        // the accepted rows re-read from the batch's files: a scan and a
+        // hash-set filter, deterministic for the WAP audit's second pass
+        commitNearDup(docs.filter(org.apache.spark.sql.graft.ColumnBridge
+            .inSet(col(idCol).cast("long"), b.accepted.toSet[Any])),
+          idxRows, DedupOps.bandPostingsRows(idxRows, bands),
+          index, out, postings, writerId, batchId, wap)
+      case None => curateNearDupDistributed(docs, index, out, writerId,
+        batchId, minJaccard, bands, idCol, textCol, postings, wap)
+    }
+  }
+
+  /** The commits of a near-dup curation step, in the crash-safe order
+    * out -> postings -> index (see [[curateStepNearDup]]). */
+  private def commitNearDup(accepted: org.apache.spark.sql.DataFrame,
+                            idxRows: org.apache.spark.sql.DataFrame,
+                            postingsRows: org.apache.spark.sql.DataFrame,
+                            index: LakeTable, out: LakeTable,
+                            postings: Option[LakeTable], writerId: String,
+                            batchId: Long, wap: Option[WapAudit]): Unit = {
+    wapAppend(out, accepted, writerId, batchId, wap)
+    postings.foreach(_.appendExactlyOnce(postingsRows, writerId, batchId))
+    index.appendExactlyOnce(idxRows, writerId, batchId)
+    out.autoCompactIfNeeded()
+    postings.foreach(_.autoCompactIfNeeded())
+    index.autoCompactIfNeeded()
+  }
+
+  /** The distributed near-dup curation step, for batches over the
+    * driver-side bound of [[curateStepNearDup]]. */
+  private def curateNearDupDistributed(docs: org.apache.spark.sql.DataFrame,
+                                       index: LakeTable, out: LakeTable,
+                                       writerId: String, batchId: Long,
+                                       minJaccard: Double, bands: Int,
+                                       idCol: String, textCol: String,
+                                       postings: Option[LakeTable],
+                                       wap: Option[WapAudit]): Unit = {
+    import org.apache.spark.sql.functions.{broadcast, col}
+    import graft.operators.DedupOps
     val fresh = DedupOps.freshAgainstIndex(docs, index, textCol, idCol)
       .localCheckpoint(eager = false)
     val freshDocs = docs.join(
@@ -823,7 +888,7 @@ object MVManager {
     // driver — one job instead of the star contraction's per-round
     // shuffle + sync loop; a pathological pair explosion falls back to
     // the distributed O(log d) contraction unchanged
-    val maxWbPairs = 100000
+    val maxWbPairs = DedupOps.MaxWithinBatchPairs
     val wbPairs = DedupOps.trueJaccardFromSigRows(sigRows,
       minJaccard = minJaccard)
     val somePairs = wbPairs.select(col("d1"), col("d2"))
@@ -859,13 +924,8 @@ object MVManager {
       .join(sigRows, Seq("doc_id"), "left")
       .select(col("fp"), col("doc_id"), col("shs"), col("sig"))
       .localCheckpoint(eager = false) // two consumers: postings rows + index commit
-    wapAppend(out, accepted, writerId, batchId, wap)
-    postings.foreach(_.appendExactlyOnce(
-      DedupOps.bandPostingsRows(idxRows, bands), writerId, batchId))
-    index.appendExactlyOnce(idxRows, writerId, batchId)
-    out.autoCompactIfNeeded()
-    postings.foreach(_.autoCompactIfNeeded())
-    index.autoCompactIfNeeded()
+    commitNearDup(accepted, idxRows, DedupOps.bandPostingsRows(idxRows, bands),
+      index, out, postings, writerId, batchId, wap)
   }
 
   /** The PERCEPTUAL curation step — the binary-axis twin of
@@ -908,7 +968,7 @@ object MVManager {
       .localCheckpoint(eager = false) // feeds collapse, probe, and the index commit
     // within-batch collapse: bounded driver union-find over the banded
     // pairs (sparse by LSH design), distributed contraction fallback
-    val maxWbPairs = 100000
+    val maxWbPairs = DedupOps.MaxWithinBatchPairs
     val wbPairs = DedupOps.sketchPairs(sk, maxHamming)
     val somePairs = wbPairs.select(col("d1"), col("d2"))
       .limit(maxWbPairs + 1).collect()
@@ -1010,7 +1070,7 @@ object MVManager {
     val batchVecs = batch.select(col(idCol), col(embCol))
     // within-batch collapse: min-id survivor per cosine cluster
     // (bounded driver union-find, distributed contraction fallback)
-    val maxWbPairs = 100000
+    val maxWbPairs = DedupOps.MaxWithinBatchPairs
     val wbPairs = SimilarityOps.embeddingNearDupLsh(batchVecs, threshold,
       bandBits, bands, idCol, embCol)
     val somePairs = wbPairs.select(col("v1"), col("v2"))

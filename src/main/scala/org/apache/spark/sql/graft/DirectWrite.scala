@@ -57,6 +57,14 @@ object DirectWrite {
     new java.util.concurrent.atomic.AtomicLong()
   def metaFallbackCount: Long = metaFallbacks.get()
 
+  /** Count of pipelined footer parses that missed (the file was still
+    * open when its parse ran) and were parsed again at task commit —
+    * counted in the writing JVM (the driver's only in local mode);
+    * exposed so tests can pin that the retry path ran. */
+  private[graft] val pipelinedMisses =
+    new java.util.concurrent.atomic.AtomicLong()
+  def pipelinedMissCount: Long = pipelinedMisses.get()
+
   /** Writer clones per parent session, reused across writes: cloning
     * copies the whole session state (conf, catalog, registry), a
     * driver-side cost that an MV loop would otherwise pay three times
@@ -284,15 +292,23 @@ class GraftDirectCommitProtocol(jobId: String, destPath: String,
           java.util.concurrent.Future[
             Option[graft.lake.LakeTable.FooterMeta]]]()
       if (!pipelined.containsKey(rel))
-        pipelined.put(rel, graft.lake.LakeTable.footerPool.submit(
-          new java.util.concurrent.Callable[
-              Option[graft.lake.LakeTable.FooterMeta]] {
-            override def call() =
-              try Some(graft.lake.LakeTable.footerMetaAt(
-                new Path(dataRoot, rel), s, conf))
-              catch { case scala.util.control.NonFatal(_) => None }
-          }))
+        pipelined.put(rel, parseOnPool(conf, s, rel))
     }
+
+  /** `rel`'s footer meta, parsed on the shared footer pool; None when
+    * the parse fails. */
+  private def parseOnPool(conf: org.apache.hadoop.conf.Configuration,
+                          schema: org.apache.spark.sql.types.StructType,
+                          rel: String)
+      : java.util.concurrent.Future[Option[graft.lake.LakeTable.FooterMeta]] =
+    graft.lake.LakeTable.footerPool.submit(
+      new java.util.concurrent.Callable[
+          Option[graft.lake.LakeTable.FooterMeta]] {
+        override def call() =
+          try Some(graft.lake.LakeTable.footerMetaAt(
+            new Path(dataRoot, rel), schema, conf))
+          catch { case scala.util.control.NonFatal(_) => None }
+      })
 
   override def newTaskTempFile(taskContext: TaskAttemptContext,
                                dir: Option[String],
@@ -345,8 +361,14 @@ class GraftDirectCommitProtocol(jobId: String, destPath: String,
     // footer metas for the files THIS task wrote: all but the final
     // file were already submitted to the shared pool DURING the write
     // (pipelineParse — the parse of file N overlapped the write of
-    // file N+1, page-cache-warm), so this drain plus one inline parse
-    // of the final file leaves no parse tail after the last close.
+    // file N+1, page-cache-warm), so this drain plus one parse of the
+    // final file leaves no parse tail after the last close. A
+    // pipelined parse MISSES when its file was still open at submit
+    // time (a writer mode that keeps several files open, e.g.
+    // spark.sql.maxConcurrentOutputFileWriters > 0): the misses and
+    // the final file are submitted to the pool together, where every
+    // file is certainly closed, then drained — a wide task's misses
+    // parse in parallel, not one after another on the task thread.
     // The driver's manifest build needs no fresh-file reads (on an
     // object store: two HTTP round trips per file saved) and no extra
     // Spark job at any commit size. Failures degrade to None — the
@@ -361,21 +383,21 @@ class GraftDirectCommitProtocol(jobId: String, destPath: String,
         Option[graft.lake.LakeTable.FooterMeta])] = schemaFor(conf) match {
       case None => taskFiles.toList.map(_ -> None)
       case Some(s) =>
-        def parse(rel: String) =
-          try Some(graft.lake.LakeTable.footerMetaAt(
-            new Path(dataRoot, rel), s, conf))
-          catch { case scala.util.control.NonFatal(_) => None }
-        taskFiles.toList.map { r =>
-          val piped = if (pipelined == null) null else pipelined.get(r)
-          val m =
-            if (piped == null) parse(r) // the final (or only) file
-            else (try piped.get()
-                  catch { case scala.util.control.NonFatal(_) => None })
-              // a pipelined miss (unexpected writer mode keeping the
-              // file open at submit time) retries synchronously here,
-              // where the file is certainly closed
-              .orElse(parse(r))
-          r -> m
+        def await(f: java.util.concurrent.Future[
+            Option[graft.lake.LakeTable.FooterMeta]]) =
+          try f.get() catch { case scala.util.control.NonFatal(_) => None }
+        val rels = taskFiles.toList
+        // None: the final file, never pipelined; Some(None): a miss
+        val piped = rels.map(r =>
+          Option(if (pipelined == null) null else pipelined.get(r))
+            .map(await))
+        piped.foreach(p => if (p.contains(None))
+          DirectWrite.pipelinedMisses.incrementAndGet())
+        val retried = rels.zip(piped).map { case (r, p) =>
+          if (p.flatten.isDefined) None else Some(parseOnPool(conf, s, r))
+        }
+        rels.zip(piped).zip(retried).map { case ((r, p), f) =>
+          r -> p.flatten.orElse(f.flatMap(await))
         }
     }
     new TaskCommitMessage(metas)

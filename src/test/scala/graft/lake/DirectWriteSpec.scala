@@ -160,6 +160,62 @@ class DirectWriteSpec extends SparkSuite {
     }
   }
 
+  test("concurrent output writers: pipelined footer-parse misses are " +
+    "parsed again on the pool, and the metas equal the default mode's") {
+    import org.apache.spark.sql.graft.DirectWrite
+    // concurrent writers keep several files open per task, so the
+    // parse pipelined at the next file's creation finds its file still
+    // open (planned writes would sort first and use one writer)
+    val concurrent = spark.newSession()
+    concurrent.conf.set("spark.sql.maxConcurrentOutputFileWriters", "8")
+    concurrent.conf.set("spark.sql.optimizer.plannedWrite.enabled", "false")
+    def write(session: org.apache.spark.sql.SparkSession, tag: String) = {
+      val df = session.range(3000).select(col("id"),
+        when(col("id") % 7 === 0, lit(null)).otherwise(col("id") % 97)
+          .cast("double").as("v"),
+        (col("id") % 5).as("grp")).repartition(4)
+      val root = tmpDir(tag)
+      val relsMetas = DirectWrite.parquetWithMetas(df, root, Seq("grp"))
+      val conf = spark.sessionState.newHadoopConf()
+      relsMetas.foreach { case (rel, taskMeta) =>
+        assert(taskMeta == LakeTable.footerMeta(
+          Paths.get(root, "data", rel).toUri.toString, df.schema, conf),
+          s"task-commit meta for $rel diverges from a driver read")
+      }
+      relsMetas.map { case (rel, (rows, st, nc, _, _)) =>
+        (rel.split("/").init.mkString("/"), rows, st, nc)
+      }.sortBy(m => (m._1, m._2, m._3.toString))
+    }
+    val (fb0, miss0) = (DirectWrite.metaFallbackCount,
+      DirectWrite.pipelinedMissCount)
+    val default = write(spark, "dw-default")
+    assert(DirectWrite.pipelinedMissCount == miss0)
+    val withMisses = write(concurrent, "dw-concurrent")
+    assert(DirectWrite.pipelinedMissCount > miss0,
+      "concurrent writers must leave pipelined parses missing")
+    assert(DirectWrite.metaFallbackCount == fb0,
+      "metas must come from the task-commit messages, not the driver " +
+        "fallback")
+    assert(withMisses == default)
+  }
+
+  test("footer-pool sizing by JVM role: local mode, driver-only JVM, " +
+    "executor with and without spark.executor.cores") {
+    import LakeTable.footerPoolSize
+    // local mode: max(8, processors), whatever executor.cores says
+    assert(footerPoolSize(4, "local[4]", isDriver = true, None) == 8)
+    assert(footerPoolSize(32, "local[*]", isDriver = true, Some(4)) == 32)
+    assert(footerPoolSize(2, "local", isDriver = true, None) == 8)
+    // a driver-only JVM: its own processors, not the executors' cores
+    assert(footerPoolSize(16, "spark://m:7077", isDriver = true, Some(4)) == 16)
+    assert(footerPoolSize(2, "yarn", isDriver = true, Some(8)) == 2)
+    // an executor: min(processors, executor.cores) when set
+    assert(footerPoolSize(64, "spark://m:7077", isDriver = false, Some(4)) == 4)
+    assert(footerPoolSize(8, "yarn", isDriver = false, Some(16)) == 8)
+    assert(footerPoolSize(12, "local-cluster[2,1,1024]", isDriver = false,
+      None) == 12)
+  }
+
   test("cached writer session: a temp view registered AFTER the first " +
     "write still resolves, and toggled shuffle partitions get their " +
     "own clone") {

@@ -23,6 +23,37 @@ class CurationMVSpec extends SparkSuite {
     (src, index, out)
   }
 
+  /** The benchmark's curation documents: 30-59 words from a
+    * 5,000-word vocabulary; after the first batch, 10% are exact copies
+    * and 10% near copies (two substituted words) of earlier originals. */
+  private final class CurationDocs(seed: Int) {
+    private val rnd = new scala.util.Random(seed)
+    private val vocab = Vector.fill(5000)(
+      Seq.fill(3 + rnd.nextInt(6))(('a' + rnd.nextInt(26)).toChar).mkString)
+    private def word() = vocab(rnd.nextInt(vocab.size))
+    private val originals = scala.collection.mutable.ArrayBuffer.empty[String]
+    private var nextId = 0L
+    def batch(n: Int): Seq[(Long, String)] = {
+      val earlier = originals.length
+      Seq.fill(n) {
+        val r = rnd.nextDouble()
+        val text =
+          if (earlier > 0 && r < 0.1) originals(rnd.nextInt(earlier))
+          else if (earlier > 0 && r < 0.2) {
+            val w = originals(rnd.nextInt(earlier)).split(" ")
+            (0 until 2).foreach(_ => w(rnd.nextInt(w.length)) = word())
+            w.mkString(" ")
+          } else {
+            val t = Seq.fill(30 + rnd.nextInt(30))(word()).mkString(" ")
+            originals += t
+            t
+          }
+        nextId += 1
+        (nextId, text)
+      }
+    }
+  }
+
   test("curation MV killed and restarted from its checkpoint: batch-2 " +
     "copies of batch-1 docs are not re-admitted, new docs are") {
     val (src, index, out) = mkTables("restart")
@@ -200,6 +231,144 @@ class CurationMVSpec extends SparkSuite {
       postings = Some(postings))
     assert(out.read().select("doc_id").as[Long].collect().toSet ==
       Set(1L, 11L))
+  }
+
+  test("near-dup curation MV with band postings in steady state: at " +
+    "most 12 Spark jobs and zero class compiles per micro-batch, and " +
+    "the accepted set equals an exact Jaccard check") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.streaming.Trigger
+    import graft.operators.DedupOps
+    val docsSchema = StructType(Seq(
+      StructField("doc_id", LongType), StructField("text", StringType)))
+    val src = LakeTable.create(spark, tmpDir("ss-src"), docsSchema)
+    val index = LakeTable.create(spark, tmpDir("ss-idx"),
+      MVManager.curationIndexSchema, bucketBy = Some(("fp", 8)))
+    val postings = LakeTable.create(spark, tmpDir("ss-post"),
+      DedupOps.bandPostingsSchema, properties = DedupOps.bandPostingsProps(),
+      bucketBy = Some(("pbh", 8)))
+    val out = LakeTable.create(spark, tmpDir("ss-out"), docsSchema)
+    val mv = new MVManager(spark, tmpDir("ss-ckpt"))
+
+    val gen = new CurationDocs(1)
+    val marker = "curation-steady-marker"
+    val jobs = new java.util.concurrent.ConcurrentHashMap[String,
+      java.util.concurrent.atomic.AtomicInteger]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).foreach { p =>
+          Seq(p.getProperty("sql.streaming.queryId"),
+            p.getProperty(marker)).filter(_ != null).foreach(k =>
+            jobs.computeIfAbsent(k,
+              _ => new java.util.concurrent.atomic.AtomicInteger)
+              .incrementAndGet())
+        }
+    }
+    def count(k: String) = Option(jobs.get(k)).map(_.get).getOrElse(0)
+    // the listener bus delivers in order: once a marker job's start is
+    // seen, every job the micro-batch started has been counted
+    def flushListener(): Unit = {
+      val seen = count(marker)
+      spark.sparkContext.setLocalProperty(marker, marker)
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setLocalProperty(marker, null)
+      val deadline = System.nanoTime() + 30000000000L
+      while (count(marker) == seen && System.nanoTime() < deadline)
+        Thread.sleep(5)
+    }
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+    spark.sparkContext.addSparkListener(listener)
+    val q = mv.startCurationFromLake("steady", src, index, out,
+      nearDupMinJaccard = Some(0.5), trigger = Trigger.ProcessingTime(0L),
+      postings = Some(postings))
+    val all = scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
+    val perBatch = try (1 to 8).map { _ =>
+      val (j0, c0) = (count(q.id.toString), compiles)
+      val b = gen.batch(100)
+      all ++= b
+      src.append(b.toDF("doc_id", "text"))
+      q.processAllAvailable()
+      flushListener()
+      (count(q.id.toString) - j0, compiles - c0)
+    } finally {
+      q.stop()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    val steady = perBatch.takeRight(3)
+    assert(steady.forall(_._1 <= 12),
+      s"jobs per micro-batch (jobs, compiles): $perBatch")
+    assert(steady.map(_._2).sum == 0,
+      s"class compiles in steady-state batches (jobs, compiles): $perBatch")
+
+    // the exact model: per batch, fingerprint-fresh docs (min id per
+    // text), within-batch near-dup clusters collapsed to their min id,
+    // then no indexed doc at exact shingle Jaccard >= 0.5
+    def shingles(t: String) =
+      t.split(" ").sliding(3).filter(_.length == 3).map(_.mkString(" ")).toSet
+    def jaccard(a: Set[String], b: Set[String]) =
+      a.intersect(b).size.toDouble / a.union(b).size
+    val indexed = scala.collection.mutable.ArrayBuffer.empty[Set[String]]
+    val seenText = scala.collection.mutable.HashSet.empty[String]
+    val expected = all.grouped(100).flatMap { b =>
+      val fresh = b.groupBy(_._2).values.map(_.minBy(_._1)).toSeq
+        .filterNot(d => seenText(d._2)).sortBy(_._1)
+      val sh = fresh.map(d => d._1 -> shingles(d._2)).toMap
+      val pairs = for (a <- fresh; c <- fresh if a._1 < c._1 &&
+        jaccard(sh(a._1), sh(c._1)) >= 0.5) yield (a._1, c._1)
+      val dropped = DedupOps.nearDupDropIds(pairs).toSet
+      val accepted = fresh.filterNot(d => dropped(d._1))
+        .filterNot(d => indexed.exists(jaccard(sh(d._1), _) >= 0.5))
+      accepted.foreach { d => indexed += sh(d._1); seenText += d._2 }
+      accepted.map(_._1)
+    }.toSet
+    assert(out.read().select("doc_id").as[Long].collect().toSet == expected)
+    assert(index.read().count() == expected.size)
+  }
+
+  test("a near-dup curation batch over the driver-side bound runs the " +
+    "distributed step, which commits the same out, index and postings " +
+    "rows") {
+    import graft.operators.DedupOps
+    val docsSchema = StructType(Seq(
+      StructField("doc_id", LongType), StructField("text", StringType)))
+    def run(maxProbe: Int) = {
+      val tag = s"bound$maxProbe"
+      val index = LakeTable.create(spark, tmpDir(s"$tag-idx"),
+        MVManager.curationIndexSchema, bucketBy = Some(("fp", 8)))
+      val postings = LakeTable.create(spark, tmpDir(s"$tag-post"),
+        DedupOps.bandPostingsSchema,
+        properties = DedupOps.bandPostingsProps(),
+        bucketBy = Some(("pbh", 8)))
+      val out = LakeTable.create(spark, tmpDir(s"$tag-out"), docsSchema)
+      val gen = new CurationDocs(2)
+      // besides copies of earlier batches: a within-batch near-dup
+      // chain, and a document too short to shingle plus its later copy
+      val base = "alpha beta gamma delta epsilon zeta eta theta iota " +
+        "kappa lambda mu nu xi omicron pi rho sigma tau upsilon"
+      val extra = Seq(
+        Seq((9001L, base), (9002L, base.replace("upsilon", "omega")),
+          (9003L, base.replace("upsilon", "omega").replace("alpha", "psi")),
+          (9004L, "tiny")),
+        Seq((9011L, "tiny"), (9012L, base.replace("beta", "chi"))),
+        Nil)
+      extra.zipWithIndex.foreach { case (more, b) =>
+        MVManager.curateStepNearDup((gen.batch(60) ++ more)
+            .toDF("doc_id", "text"), index, out, "w", b.toLong, 0.5,
+          "text", "doc_id", Some(postings), None, maxProbe)
+      }
+      def rows(t: LakeTable, cols: String*) =
+        t.read().select(cols.map(col): _*).collect().map(_.toSeq).toSet
+      (rows(out, "doc_id", "text"), rows(index, "fp", "doc_id", "shs", "sig"),
+        rows(postings, "pbh", "band", "bh", "doc_id"))
+    }
+    val (out, index, postings) = run(10000)
+    val (outD, indexD, postingsD) = run(5)
+    assert(out == outD && index == indexD && postings == postingsD)
+    assert(out.exists(_.head == 9001L) && !out.exists(_.head == 9002L) &&
+      !out.exists(_.head == 9003L) && !out.exists(_.head == 9011L) &&
+      !out.exists(_.head == 9012L))
   }
 
   test("embedding curation MV across a restart: cosine near-dups of " +
