@@ -3,7 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Per-round benchmark: runs every SparkEntry query on
-  * SPARK_GRAFT_SF_DIR and prints one JSON line (driver contract). */
+  * SPARK_GRAFT_SF_DIR and prints one JSON line with every query's
+  * time, then a compact summary line (total, parallelism, controls,
+  * failed count) as the last stdout line. */
 object Bench {
   def main(args: Array[String]): Unit = {
     val startedMs = System.currentTimeMillis()
@@ -73,6 +75,11 @@ object Bench {
     val line =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failed,"sf":"$sfDir","parallelism":${spark.sparkContext.defaultParallelism},"controls":$controls,"started_ms":$startedMs}"""
     println(line)
+    // The last stdout line is a compact summary of the line above, for
+    // readers that keep only a line's first 500 chars: "failed" is the
+    // failed-query count here (their names are in the full line), so
+    // the summary stays ~150 chars whatever fails.
+    println(s"""{"metric":"total","value":$total,"parallelism":${spark.sparkContext.defaultParallelism},"controls":$controls,"failed":${results.count(_._2.isEmpty)}}""")
     try {
       val out = java.nio.file.Paths.get("bench_out.json")
       java.nio.file.Files.write(out,

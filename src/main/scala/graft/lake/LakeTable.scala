@@ -554,9 +554,9 @@ class LakeTable private (
     * never change results — only how much gets read. */
   def probeTiered(keyCol: String, values: Seq[Any], maxProbe: Int,
                   inListCap: Int = 2048): DataFrame =
-    if (values.length <= inListCap) probe(keyCol, values)
-    else if (values.length <= maxProbe) probeBuckets(keyCol, values)
-    else read()
+    if (values.length > maxProbe) read()
+    else if (values.length <= inListCap) probe(keyCol, values)
+    else probeBuckets(keyCol, values)
 
   /** Commit wall-clock of one retained snapshot (the `_commit_timestamp`
     * CDF column's source) — one metadata-node read. */

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
 import graft.functions.TextFunctions
@@ -110,23 +110,9 @@ object DedupOps {
     * cross-set exact comparison — the same bucket-then-verify contract
     * as [[minHashLshTrueJaccard]], which makes the cross-engine oracle
     * an LSH recall proof across the index boundary. Returns
-    * (d_new, d_idx, inter, jaccard) with jaccard >= minJaccard. */
-  /** 100 TB shape: the index is shuffled never and — given a
-    * `postings` table — scanned O(batch) per batch. Candidate
-    * generation probes the band-postings table on the batch's own
-    * posting keys (bucket-dir + manifest-IN pruned; the fp-probe
-    * shape applied to the LSH side), so per-batch cost tracks batch
-    * size while history grows unboundedly; without postings it falls
-    * back to ONE column-pruned (doc_id, sig) scan of the index
-    * streamed through a broadcast hash join against the batch's band
-    * buckets. The candidate pairs (small by LSH design) are
-    * localCheckpointed once, then the verify fetch reads ONLY the
-    * candidate documents' shingle sets via
-    * [[graft.lake.LakeTable.probe]] on doc_id — manifest range
-    * pruning over the append-ordered index skips every file holding
-    * no candidate, and the exact-Jaccard verify joins run with both
-    * small sides broadcast. Degenerate candidate explosions
-    * (> maxProbe) fall back to a full-but-broadcast-joined fetch. */
+    * (d_new, d_idx, inter, jaccard) with jaccard >= minJaccard. The
+    * probe is [[bandedAgainstIndex]]: the index never shuffles, and
+    * with a `postings` table it is read O(batch) per batch. */
   def nearDupAgainstIndex(batch: DataFrame, index: graft.lake.LakeTable,
                           minJaccard: Double = 0.5, k: Int = 64,
                           bands: Int = 16, shingleN: Int = 3,
@@ -174,11 +160,29 @@ object DedupOps {
     * silently — the exact failure the stamp exists to surface. */
   private[graft] def requirePostingsProp(p: graft.lake.LakeTable,
                                          key: String): String =
-    p.properties.getOrElse(key, throw new IllegalStateException(
+    postingsProp(p, p.properties, key)
+
+  private def postingsProp(p: graft.lake.LakeTable,
+                           props: Map[String, String], key: String): String =
+    props.getOrElse(key, throw new IllegalStateException(
       s"postings table at ${p.root} lacks the '$key' property — it was " +
         "created without geometry stamping (use bandPostingsProps/" +
         "simHashPostingsProps/srpPostingsProps at createTable), so probe " +
         "compatibility cannot be verified"))
+
+  /** The one postings-geometry check: every key of `expected` (a
+    * modality's `*PostingsProps`) must be stamped on `p` with the same
+    * value — a missing key is an [[IllegalStateException]], a
+    * different value an [[IllegalArgumentException]]. */
+  private[graft] def requirePostings(p: graft.lake.LakeTable,
+                                     expected: Map[String, String]): Unit = {
+    val props = p.properties
+    expected.foreach { case (key, want) =>
+      val got = postingsProp(p, props, key)
+      require(got == want, s"postings table at ${p.root} has $key = " +
+        s"'$got', the probe expects '$want'")
+    }
+  }
 
   /** Posting rows (pbh, band, bh, doc_id) for signature-index rows —
     * what a curation writer commits alongside each index commit.
@@ -193,6 +197,16 @@ object DedupOps {
         posexplode(graft.functions.HashSig.band_hashes(col("sig"), bands)))
       .select(xxhash64(col("pos"), col("col")).as("pbh"),
         col("pos").as("band"), col("col").as("bh"), col("doc_id"))
+
+  /** `df`'s `keep` columns, one row per band of its MinHash `sig`, with
+    * the band key `bk` = (band, bh) — the band keys of the index probe
+    * and the within-batch pairs. */
+  private def minHashBandKeys(df: DataFrame, bands: Int,
+                              keep: Column*): DataFrame =
+    df.select(keep :+
+        posexplode(graft.functions.HashSig.band_hashes(col("sig"), bands)): _*)
+      .withColumn("bk", struct(col("pos").as("band"), col("col").as("bh")))
+      .drop("pos", "col")
 
   /** [[nearDupAgainstIndex]] over PRE-COMPUTED batch signature rows
     * (doc_id, shs, sig) — for callers that already hold them (the
@@ -218,89 +232,101 @@ object DedupOps {
                               minJaccard: Double = 0.5, bands: Int = 16,
                               maxProbe: Int = 10000,
                               postings: Option[graft.lake.LakeTable] = None)
-      : DataFrame = {
-    def buckets(df: DataFrame, side: String): DataFrame =
-      df.select(col(side),
-          posexplode(graft.functions.HashSig.band_hashes(col("sig"), bands)))
-        .select(col(side),
-          struct(col("pos").as("band"), col("col").as("bh")).as("bk"))
-    val newBk = buckets(
-      newRows.select(col("doc_id").as("d_new"), col("sig")), "d_new")
+      : DataFrame =
+    bandedAgainstIndex(newRows, index, postings, bandPostingsProps(bands),
+      (df, side) => minHashBandKeys(df, bands, col("doc_id").as(side)), "bh", "doc_id", "doc_id", "shs", ("d_new", "d_idx"), maxProbe)(
+      (a, b) => exactJaccard(a, b, size(a), size(b)),
+      col("jaccard") >= minJaccard)
+
+  /** The banded index probe of every sketch modality — one streaming
+    * similarity join in which only the band keys and the verify depend
+    * on the similarity function. Candidates are the (batch, indexed)
+    * id pairs sharing an exact band key `bk`, a struct of `band` and
+    * `valueField`:
+    *  - with `postings` (bucketed by `pbh = xxhash64(band, value)`,
+    *    stamped with `geometry`, see [[requirePostings]]), the postings
+    *    rows under the batch's own posting keys, read through
+    *    [[graft.lake.LakeTable.probeTiered]] — per-batch cost tracks
+    *    the batch while history grows;
+    *  - without, the band keys of one column-pruned index scan,
+    *    streamed through a broadcast join against the batch's keys.
+    * The index never shuffles. The distinct candidate pairs come back
+    * in ONE bounded collect that serves both the verify join (as a
+    * local relation) and the ids of the verify fetch, which reads only
+    * those rows' payloads through [[graft.lake.LakeTable.probe]] on
+    * `idCol`; both verify joins broadcast their small side. Past
+    * `maxProbe` posting keys or candidate ids the read is a full scan,
+    * and past `maxProbe` pairs the banded join is checkpointed and its
+    * ids re-collected. The cap counts pairs, not distinct indexed ids,
+    * so one collect serves the common batch; an overflow is a slower
+    * batch, never a wrong one.
+    *
+    * Postings are advisory: every candidate is verified against the
+    * authoritative index, so a posting without its index row verifies
+    * against nothing, and a stale or over-complete postings table can
+    * never change results — only completeness matters (writers commit
+    * postings BEFORE the index rows they describe, see
+    * [[graft.streaming.MVManager.curateStepNearDup]]).
+    *
+    * `bandKeys(df, side)` projects (side, bk) rows from the batch or
+    * the index; `idCol` and `payloadCol` name the id and the verified
+    * payload in both, `postingsIdCol` the id in the postings. Returns
+    * (new side, index side, `verify(batch payload, index payload)`...)
+    * rows passing `keep`. */
+  private[operators] def bandedAgainstIndex(batch: DataFrame,
+      index: graft.lake.LakeTable, postings: Option[graft.lake.LakeTable],
+      geometry: Map[String, String],
+      bandKeys: (DataFrame, String) => DataFrame, valueField: String,
+      idCol: String, postingsIdCol: String, payloadCol: String,
+      sides: (String, String), maxProbe: Int)(
+      verify: (Column, Column) => Seq[Column], keep: Column): DataFrame = {
+    val (newSide, idxSide) = sides
+    val newBk = bandKeys(batch, newSide)
     val idxBk = postings match {
       case Some(p) =>
-        requireMinHashPostings(p, bands)
-        // the batch's own posting keys, enumerated driver-side (batch
-        // docs x bands values — the incremental case by definition);
-        // oversized batches degrade to one full postings scan, which
-        // is still far narrower than re-deriving bands from the sigs
+        requirePostings(p, geometry)
         val pbhs = newBk
-          .select(xxhash64(col("bk.band"), col("bk.bh")).as("pbh"))
+          .select(xxhash64(col("bk.band"), col(s"bk.$valueField")).as("pbh"))
           .distinct().limit(maxProbe + 1).collect().map(_.get(0))
-        val rows = p.probeTiered("pbh", pbhs.toSeq, maxProbe)
-        rows.select(col("doc_id").as("d_idx"),
-          struct(col("band"), col("bh")).as("bk"))
-      case None => buckets(
-        index.read().select(col("doc_id").as("d_idx"), col("sig")), "d_idx")
+        p.probeTiered("pbh", pbhs.toSeq, maxProbe)
+          .select(col(postingsIdCol).as(idxSide),
+            struct(col("band"), col(valueField)).as("bk"))
+      case None => bandKeys(index.read(), idxSide)
     }
-    // index side streams; only the tiny candidate set hits an exchange
-    // (the distinct). Candidate pairs are small by LSH design: ONE
-    // bounded collect serves both consumers (the verify join gets them
-    // back as a broadcast-able local relation, the probe reads the ids
-    // off the collected rows) — fusing what used to be a
-    // localCheckpoint job plus a separate candIds collect job; the
-    // per-batch job floor is the MV loops' dominant cost at sf0.1 and
-    // a pure driver/commit overhead at any scale. A degenerate pair
-    // explosion (> maxProbe) falls back to the checkpointed
-    // distributed shape unchanged. The cap counts distinct PAIRS, not
-    // distinct indexed ids, by design: one bounded collect serves the
-    // verify join and the fetch ids, so the common batch pays one job.
-    // A batch with more than maxProbe pairs over few indexed docs
-    // (heavy multi-band collisions) re-runs the banded join from the
-    // checkpoint and discards the collected rows — a slower batch,
-    // never a wrong one.
     val candQ = idxBk.join(broadcast(newBk), "bk")
-      .select(col("d_new"), col("d_idx"))
+      .select(col(newSide), col(idxSide))
       .distinct() // a pair colliding in several bands verifies once
     val candRows = candQ.limit(maxProbe + 1).collect()
     val (cand, candIds) =
       if (candRows.length <= maxProbe)
-        (newRows.sparkSession.createDataFrame(
+        (batch.sparkSession.createDataFrame(
           java.util.Arrays.asList(candRows: _*), candQ.schema),
           candRows.map(_.get(1)).distinct.toSeq)
       else {
         val ck = candQ.localCheckpoint()
-        (ck, ck.select(col("d_idx")).distinct()
+        (ck, ck.select(col(idxSide)).distinct()
           .limit(maxProbe + 1).collect().map(_.get(0)).toSeq)
       }
     val idxDocs =
-      if (candIds.length <= maxProbe) index.probe("doc_id", candIds)
+      if (candIds.length <= maxProbe) index.probe(idCol, candIds)
       else index.read()
-    val s2 = idxDocs.select(col("doc_id").as("d_idx"), col("shs").as("shs_idx"))
-      .join(broadcast(cand), Seq("d_idx"))
-    val s1 = newRows.select(col("doc_id").as("d_new"), col("shs").as("shs_new"))
-    s1.join(broadcast(s2), Seq("d_new"))
-      .select(col("d_new"), col("d_idx"),
-        size(array_intersect(col("shs_new"), col("shs_idx")))
-          .cast("long").as("inter"),
-        size(col("shs_new")).as("n1"), size(col("shs_idx")).as("n2"))
-      .withColumn("jaccard",
-        col("inter") / (col("n1") + col("n2") - col("inter")))
-      .filter(col("jaccard") >= minJaccard)
-      .select(col("d_new"), col("d_idx"), col("inter"), col("jaccard"))
+    val p2 = idxDocs.select(col(idCol).as(idxSide), col(payloadCol).as("_p2"))
+      .join(broadcast(cand), Seq(idxSide))
+    batch.select(col(idCol).as(newSide), col(payloadCol).as("_p1"))
+      .join(broadcast(p2), Seq(newSide))
+      .select(Seq(col(newSide), col(idxSide)) ++
+        verify(col("_p1"), col("_p2")): _*)
+      .filter(keep)
   }
 
-  /** A postings table built under a different band geometry would
-    * silently generate zero candidates — fail loud instead, and refuse
-    * tables that carry no geometry stamp at all. */
-  private def requireMinHashPostings(p: graft.lake.LakeTable,
-                                     bands: Int): Unit = {
-    val kind = requirePostingsProp(p, "postings.kind")
-    require(kind == "minhash",
-      s"postings table at ${p.root} is '$kind', not minhash")
-    val pBands = requirePostingsProp(p, "postings.bands").toInt
-    require(pBands == bands,
-      s"postings at ${p.root} were built with $pBands bands, " +
-        s"probe uses $bands")
+  /** The exact Jaccard of two distinct-hash sets `a` and `b` of sizes
+    * `n1` and `n2`, as (inter, jaccard) columns: `inter / (n1 + n2 -
+    * inter)` in doubles — the one definition of the within-batch pairs
+    * ([[trueJaccardFromSigRows]]) and the index probe's verify. */
+  private def exactJaccard(a: Column, b: Column, n1: Column, n2: Column)
+      : Seq[Column] = {
+    val inter = size(array_intersect(a, b)).cast("long")
+    Seq(inter.as("inter"), (inter / (n1 + n2 - inter)).as("jaccard"))
   }
 
   /** The most within-batch pairs a curation step collapses on the
@@ -361,10 +387,9 @@ object DedupOps {
                                     sig: Array[Long], bks: Array[Long],
                                     pbhs: Array[Long])
 
-  /** The exact Jaccard of two distinct shingle-hash sets, with the
-    * arithmetic of [[trueJaccardFromSigRows]] and
-    * [[nearDupSigsAgainstIndex]]: `inter / (n1 + n2 - inter)` in
-    * doubles. */
+  /** The exact Jaccard of two distinct shingle-hash sets on the
+    * driver, with the arithmetic of [[exactJaccard]]:
+    * `inter / (n1 + n2 - inter)` in doubles. */
   private def jaccard(a: Array[Long], b: Array[Long]): Double = {
     val inA = a.toSet
     val inter = b.count(inA)
@@ -412,7 +437,7 @@ object DedupOps {
         lit(null).cast(LongType).as("bh"))
     val postingHits = (postings match {
       case Some(p) =>
-        requireMinHashPostings(p, bands)
+        requirePostings(p, bandPostingsProps(bands))
         // more keys than maxProbe: the probe would read the whole
         // table, and planning a hash-set filter on its claimed bucket
         // column costs one generated projection per key
@@ -471,15 +496,15 @@ object DedupOps {
       accepted.map(d => Row(d.fp, d.id, seq(d.shs), seq(d.sig)))))
   }
 
-  /** Distinct word n-gram shingles per document as one array column —
-    * dedup happens row-locally (array_distinct), so shingling costs ZERO
-    * shuffles regardless of corpus size. */
   /** `concat(w[i], ' ', w[i+1], ...)` — direct indexed concat, no
     * per-shingle slice allocation (measurably faster than
     * concat_ws(slice(...)) on long documents). */
   private def shingleConcat(n: Int): String =
     (0 until n).map(j => s"w[i+$j]").mkString("concat(", ", ' ', ", ")")
 
+  /** Distinct word n-gram shingles per document as one array column —
+    * dedup happens row-locally (array_distinct), so shingling costs ZERO
+    * shuffles regardless of corpus size. */
   def shingleArrays(docs: DataFrame, textCol: String = "text",
                     idCol: String = "doc_id", n: Int = 3): DataFrame =
     graft.Tables.widen(docs)
@@ -619,9 +644,7 @@ object DedupOps {
                              minJaccard: Double = 0.5,
                              maxProbe: Int = 10000,
                              maxDf: Option[Int] = None): DataFrame = {
-    val kind = requirePostingsProp(postings, "postings.kind")
-    require(kind == "elements",
-      s"postings table at ${postings.root} is '$kind', not elements")
+    requirePostings(postings, elementPostingsProps)
     val batch = newRows
       .select(col("doc_id").as("d_new"), size(col("shs")).as("n1"),
         explode(col("shs")).as("eh"))
@@ -656,14 +679,6 @@ object DedupOps {
       .filter(col("jaccard") >= minJaccard)
   }
 
-  /** MinHash signatures via the native MinHashAgg imperative aggregate:
-    * one shuffle, map-side combine, constant k-long state per doc. */
-  def minHashSignatures(sh: DataFrame, k: Int = 64): DataFrame = {
-    import graft.functions.MinHashAgg.minhash_agg
-    sh.groupBy(col("doc_id"))
-      .agg(minhash_agg(xxhash64(col("shingle")), k).as("sig"))
-  }
-
   /** MinHash + LSH banding near-dup candidates with estimated Jaccard
     * (fraction of matching signature positions). bands*rowsPerBand = k.
     * Candidate generation is an equi-join on (band, bandHash) — fully
@@ -679,10 +694,7 @@ object DedupOps {
       .select(col("doc_id"),
         graft.functions.HashSig.minhash_sig(col("shs"), k).as("sig"))
     // one native band-hash loop + posexplode (band index, band hash)
-    val buckets = sig.select(col("doc_id"), col("sig"),
-        posexplode(graft.functions.HashSig.band_hashes(col("sig"), bands)))
-      .select(col("doc_id"), col("sig"),
-        struct(col("pos").as("band"), col("col").as("bh")).as("bk"))
+    val buckets = minHashBandKeys(sig, bands, col("doc_id"), col("sig"))
     // signatures ride along into the buckets; candidate pairs are
     // generated in-place per bucket (group-by-bucket + combos), then
     // deduped per pair — two shuffles, no self-join of the bucket table
@@ -727,14 +739,8 @@ object DedupOps {
   def trueJaccardFromSigRows(sigRows: DataFrame, bands: Int = 16,
                              minJaccard: Double = 0.5): DataFrame = {
     val sh = sigRows.select(col("doc_id"), col("shs"))
-    val buckets = sigRows
-      .select(col("sig"), struct(col("doc_id"),
-        size(col("shs")).as("n")).as("dn"))
-      .select(
-        posexplode(graft.functions.HashSig.band_hashes(col("sig"), bands)),
-        col("dn"))
-      .select(struct(col("pos").as("band"), col("col").as("bh")).as("bk"),
-        col("dn"))
+    val buckets = minHashBandKeys(sigRows, bands,
+      struct(col("doc_id"), size(col("shs")).as("n")).as("dn"))
     val cands = buckets.groupBy(col("bk"))
       .agg(collect_list(col("dn")).as("ds"))
       .filter(size(col("ds")) > 1)
@@ -743,13 +749,9 @@ object DedupOps {
     val s1 = sh.select(col("doc_id").as("d1"), col("shs").as("shs1"))
     val s2 = sh.select(col("doc_id").as("d2"), col("shs").as("shs2"))
     cands.join(s1, "d1").join(s2, "d2")
-      .select(col("d1"), col("d2"),
-        size(array_intersect(col("shs1"), col("shs2"))).cast("long").as("inter"),
-        col("n1"), col("n2"))
-      .withColumn("jaccard",
-        col("inter") / (col("n1") + col("n2") - col("inter")))
+      .select(Seq(col("d1"), col("d2")) ++ exactJaccard(col("shs1"),
+        col("shs2"), col("n1"), col("n2")): _*)
       .filter(col("jaccard") >= minJaccard)
-      .select(col("d1"), col("d2"), col("inter"), col("jaccard"))
   }
 
   /** Driver-side union-find for SMALL pair sets (a micro-batch's
@@ -872,8 +874,9 @@ object DedupOps {
     * read or audit — a DuckDB/Trino/pandas consumer can recompute the
     * exact sketch from the text, which also makes the q34/q95 oracles
     * checkable. ~2x the hash cost of xxhash64, paid once per distinct
-    * token; the sketch pipeline stays codegen'd end to end. */
-  /** Applied as a nested transform — md5 once per token in the inner
+    * token; the sketch pipeline stays codegen'd end to end.
+    *
+    * Applied as a nested transform — md5 once per token in the inner
     * lambda, the two 32-bit halves folded in the outer — because
     * writing both `substring(md5(t), ...)` halves in ONE lambda body
     * evaluates md5 twice per token: Catalyst's common-subexpression
@@ -909,19 +912,22 @@ object DedupOps {
                        idCol: String = "doc_id"): DataFrame =
     simHash(docs, textCol, idCol)
 
+  /** The band keys of a `simhash` column: a generator of its 4 16-bit
+    * bands as (band, bv) structs — the one band-key expression of the
+    * postings rows, the index probe and the within-batch pairs. */
+  private def simHashBandKeys: Column =
+    explode(array((0 until 4).map { j =>
+      struct(lit(j).as("band"),
+        shiftright(col("simhash"), j * 16).bitwiseAND(0xFFFFL).as("bv"))
+    }: _*))
+
   /** Posting rows (pbh, band, bv, doc_id) for a SimHash index — the
     * fourth member of the postings family. 4 x 16-bit bands; same
     * advisory-candidates contract as the MinHash/SRP twins. */
-  def simHashPostingsRows(sigRows: DataFrame): DataFrame = {
-    val bandStructs = (0 until 4).map { j =>
-      struct(lit(j).as("band"),
-        shiftright(col("simhash"), j * 16).bitwiseAND(0xFFFFL).as("bv"))
-    }
-    sigRows.select(col("doc_id"),
-        explode(array(bandStructs: _*)).as("bk"))
+  def simHashPostingsRows(sigRows: DataFrame): DataFrame =
+    sigRows.select(col("doc_id"), simHashBandKeys.as("bk"))
       .select(xxhash64(col("bk.band"), col("bk.bv")).as("pbh"),
         col("bk.band").as("band"), col("bk.bv").as("bv"), col("doc_id"))
-  }
 
   /** Schema of a SimHash band-postings table (pbh, band, bv, doc_id). */
   def simHashPostingsSchema: org.apache.spark.sql.types.StructType = {
@@ -966,60 +972,12 @@ object DedupOps {
     require(maxHamming <= 3,
       s"banded candidate generation is recall-exact only for " +
         s"maxHamming <= 3 (4 bands), got $maxHamming")
-    val newSh = batchSketches.localCheckpoint(eager = false)
-    val bandStructs = (0 until 4).map { j =>
-      struct(lit(j).as("band"),
-        shiftright(col("simhash"), j * 16).bitwiseAND(0xFFFFL).as("bv"))
-    }
-    def bandsOf(df: DataFrame, side: String): DataFrame =
-      df.select(col("doc_id").as(side),
-        explode(array(bandStructs: _*)).as("bk"))
-    val newBk = bandsOf(newSh, "d_new")
-    val idxBk = postings match {
-      case Some(p) =>
-        val kind = requirePostingsProp(p, "postings.kind")
-        require(kind == "simhash",
-          s"postings table at ${p.root} is '$kind', not simhash")
-        val pbhs = newBk
-          .select(xxhash64(col("bk.band"), col("bk.bv")).as("pbh"))
-          .distinct().limit(maxProbe + 1).collect().map(_.get(0))
-        val rows = p.probeTiered("pbh", pbhs.toSeq, maxProbe)
-        rows.select(col("doc_id").as("d_idx"),
-          struct(col("band"), col("bv")).as("bk"))
-      case None => bandsOf(index.read(), "d_idx")
-    }
-    // same one-bounded-collect candidate fusion as
-    // nearDupSigsAgainstIndex: the collected pairs feed the verify
-    // join as a local relation AND yield the probe ids, replacing a
-    // checkpoint job + a collect job per probe. As there, the cap
-    // counts pairs, not distinct indexed ids — the intended tradeoff:
-    // an overflow with few distinct ids re-runs the banded join from
-    // the checkpoint, a slower batch, never a wrong one
-    val candQ = idxBk.join(broadcast(newBk), "bk")
-      .select(col("d_new"), col("d_idx"))
-      .distinct() // a pair colliding in several bands verifies once
-    val candRows = candQ.limit(maxProbe + 1).collect()
-    val (cand, candIds) =
-      if (candRows.length <= maxProbe)
-        (batchSketches.sparkSession.createDataFrame(
-          java.util.Arrays.asList(candRows: _*), candQ.schema),
-          candRows.map(_.get(1)).distinct.toSeq)
-      else {
-        val ck = candQ.localCheckpoint()
-        (ck, ck.select(col("d_idx")).distinct()
-          .limit(maxProbe + 1).collect().map(_.get(0)).toSeq)
-      }
-    val idxDocs =
-      if (candIds.length <= maxProbe) index.probe("doc_id", candIds)
-      else index.read()
-    val h2 = idxDocs.select(col("doc_id").as("d_idx"),
-        col("simhash").as("_h2"))
-      .join(broadcast(cand), Seq("d_idx"))
-    newSh.select(col("doc_id").as("d_new"), col("simhash").as("_h1"))
-      .join(broadcast(h2), Seq("d_new"))
-      .select(col("d_new"), col("d_idx"),
-        bit_count(col("_h1").bitwiseXOR(col("_h2"))).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
+    bandedAgainstIndex(batchSketches.localCheckpoint(eager = false), index,
+      postings, simHashPostingsProps,
+      (df, side) => df.select(col("doc_id").as(side), simHashBandKeys.as("bk")),
+      "bv", "doc_id", "doc_id", "simhash", ("d_new", "d_idx"), maxProbe)(
+      (h1, h2) => Seq(bit_count(h1.bitwiseXOR(h2)).as("hamming")),
+      col("hamming") <= maxHamming)
   }
 
   /** SimHash near-dup pairs with hamming distance <= maxHamming, blocked
@@ -1036,12 +994,8 @@ object DedupOps {
     require(maxHamming <= 3,
       s"banded candidate generation is recall-exact only for " +
         s"maxHamming <= 3 (4 bands), got $maxHamming")
-    val bandStructs = (0 until 4).map { j =>
-      struct(lit(j).as("band"),
-        shiftright(col("simhash"), j * 16).bitwiseAND(0xFFFFL).as("bv"))
-    }
     val buckets = sh.select(col("doc_id"), col("simhash"),
-      explode(array(bandStructs: _*)).as("bk"))
+      simHashBandKeys.as("bk"))
     buckets.groupBy(col("bk"))
       .agg(collect_list(struct(col("doc_id"), col("simhash"))).as("ds"))
       .filter(size(col("ds")) > 1)

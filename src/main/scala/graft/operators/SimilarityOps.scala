@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions.cosine_sim
 
@@ -712,6 +712,93 @@ object SimilarityOps {
 
   import graft.functions.PairExplode.pair_explode
 
+  /** Schema of an SRP BAND-POSTINGS table (the embedding twin of
+    * [[graft.operators.DedupOps.bandPostingsSchema]]): one row per
+    * (band, band-value, vector), `pbh = xxhash64(band, bv)` as the
+    * bucketable posting key. */
+  def srpPostingsSchema: org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(StructField("pbh", LongType),
+      StructField("band", IntegerType), StructField("bv", LongType),
+      StructField("vec_id", LongType)))
+  }
+
+  /** The geometry properties every SRP postings table MUST be created
+    * with — probes refuse unstamped tables (a geometry mismatch
+    * silently yields zero candidates). Defaults match the 4 x 16-bit
+    * index-modality geometry below. */
+  def srpPostingsProps(bandBits: Int = DefaultIndexBandBits,
+                       bands: Int = DefaultIndexBands): Map[String, String] =
+    Map("postings.kind" -> "srp", "postings.bands" -> bands.toString,
+      "postings.bandBits" -> bandBits.toString)
+
+  /** The band keys of `embCol`'s axis-sign SRP signature: a generator
+    * of its `bands` bands of `bandBits` bits as (band, bv) structs —
+    * the one band-key expression of the postings rows, the index probe
+    * and the within-batch pairs. */
+  private def srpBandKeys(embCol: String, bandBits: Int, bands: Int): Column = {
+    require(bandBits >= 1 && bands >= 1 && bandBits * bands <= 64,
+      s"bandBits*bands must fit the 64-bit signature, got $bandBits x $bands")
+    val mask = if (bandBits == 64) -1L else (1L << bandBits) - 1
+    val sig = graft.functions.SignRandomProjection.sign_bits(col(embCol))
+    explode(array((0 until bands).map { k =>
+      struct(lit(k).as("band"),
+        shiftright(sig, k * bandBits).bitwiseAND(mask).as("bv"))
+    }: _*))
+  }
+
+  /** Posting rows (pbh, band, bv, vec_id) for a vector index — commit
+    * alongside (BEFORE) each index commit, same advisory-candidates
+    * contract as the text twin: extra/stale postings only create
+    * candidates the exact-cosine verify discards. */
+  def srpPostingsRows(vectors: DataFrame,
+                      bandBits: Int = DefaultIndexBandBits,
+                      bands: Int = DefaultIndexBands,
+                      idCol: String = "vec_id",
+                      embCol: String = "embedding"): DataFrame =
+    vectors.select(col(idCol).as("vec_id"),
+        srpBandKeys(embCol, bandBits, bands).as("bk"))
+      .select(xxhash64(col("bk.band"), col("bk.bv")).as("pbh"),
+        col("bk.band").as("band"), col("bk.bv").as("bv"), col("vec_id"))
+
+  /** Incremental embedding near-dup of a new batch against a PERSISTED
+    * vector index — the third member of the incremental-dedup family
+    * ([[graft.operators.DedupOps.freshAgainstIndex]] = exact
+    * fingerprints, [[graft.operators.DedupOps.nearDupAgainstIndex]] =
+    * MinHash text signatures, this = embeddings). History lives in a
+    * lake table of (vec_id, embedding); each new batch generates
+    * candidates through the seed-free axis-sign SRP band join of
+    * [[embeddingNearDupLsh]] and verifies them with the exact cosine —
+    * so the cross-engine oracle (SparkEntry q88) checks candidate
+    * generation AND verification literally, across the index boundary.
+    *
+    * 100 TB shape mirrors the text twin: the index is shuffled never
+    * and — given a `postings` table ([[srpPostingsSchema]], bucketed
+    * by pbh) — scanned O(batch) per batch: candidate generation
+    * probes the postings on the batch's own band keys instead of
+    * recomputing bands over all of history. Without postings, ONE
+    * column-pruned (vec_id, embedding) scan streams through a
+    * broadcast join against the batch's buckets; the probe is
+    * [[graft.operators.DedupOps.bandedAgainstIndex]]. Returns
+    * (v_new, v_idx, cos) with cos >= threshold. */
+  def embeddingNearDupAgainstIndex(batch: DataFrame,
+                                   index: graft.lake.LakeTable,
+                                   threshold: Double,
+                                   bandBits: Int = DefaultIndexBandBits,
+                                   bands: Int = DefaultIndexBands,
+                                   idCol: String = "vec_id",
+                                   embCol: String = "embedding",
+                                   maxProbe: Int = 10000,
+                                   postings: Option[graft.lake.LakeTable] =
+                                     None): DataFrame = {
+    val bk = srpBandKeys(embCol, bandBits, bands)
+    graft.operators.DedupOps.bandedAgainstIndex(batch, index, postings,
+      srpPostingsProps(bandBits, bands),
+      (df, side) => df.select(col(idCol).as(side), bk.as("bk")), "bv",
+      idCol, "vec_id", embCol, ("v_new", "v_idx"), maxProbe)(
+      (e1, e2) => Seq(cosine_sim(e1, e2).as("cos")), col("cos") >= threshold)
+  }
+
   /** LSH-blocked embedding near-dup pairs: banded sign-bit candidates +
     * exact cosine verification — the bucket-then-verify shape of
     * [[graft.operators.DedupOps.minHashLshTrueJaccard]] applied to
@@ -745,169 +832,12 @@ object SimilarityOps {
     * explosion), one group-by-bucket shuffle, pair_explode inside each
     * bucket, a distinct, and two equi-joins of the SMALL candidate set
     * back to the corpus for verification (AQE broadcasts it). */
-  /** Incremental embedding near-dup of a new batch against a PERSISTED
-    * vector index — the third member of the incremental-dedup family
-    * ([[graft.operators.DedupOps.freshAgainstIndex]] = exact
-    * fingerprints, [[graft.operators.DedupOps.nearDupAgainstIndex]] =
-    * MinHash text signatures, this = embeddings). History lives in a
-    * lake table of (vec_id, embedding); each new batch generates
-    * candidates through the seed-free axis-sign SRP band join of
-    * [[embeddingNearDupLsh]] and verifies them with the exact cosine —
-    * so the cross-engine oracle (SparkEntry q88) checks candidate
-    * generation AND verification literally, across the index boundary.
-    *
-    * 100 TB shape mirrors the text twin: the index is shuffled never
-    * and — given a `postings` table ([[srpPostingsSchema]], bucketed
-    * by pbh) — scanned O(batch) per batch: candidate generation
-    * probes the postings on the batch's own band keys instead of
-    * recomputing bands over all of history. Without postings, ONE
-    * column-pruned (vec_id, embedding) scan streams through a
-    * broadcast join against the batch's buckets. Candidate pairs
-    * localCheckpoint once; the verify fetch reads ONLY the candidate
-    * vectors via [[graft.lake.LakeTable.probe]] (bucket-dir +
-    * manifest-range pruned), and both verify joins broadcast the
-    * small side. Returns (v_new, v_idx, cos) with cos >= threshold. */
-  /** Schema of an SRP BAND-POSTINGS table (the embedding twin of
-    * [[graft.operators.DedupOps.bandPostingsSchema]]): one row per
-    * (band, band-value, vector), `pbh = xxhash64(band, bv)` as the
-    * bucketable posting key. */
-  def srpPostingsSchema: org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(StructField("pbh", LongType),
-      StructField("band", IntegerType), StructField("bv", LongType),
-      StructField("vec_id", LongType)))
-  }
-
-  /** The geometry properties every SRP postings table MUST be created
-    * with — probes refuse unstamped tables (a geometry mismatch
-    * silently yields zero candidates). Defaults match the 4 x 16-bit
-    * index-modality geometry below. */
-  def srpPostingsProps(bandBits: Int = DefaultIndexBandBits,
-                       bands: Int = DefaultIndexBands): Map[String, String] =
-    Map("postings.kind" -> "srp", "postings.bands" -> bands.toString,
-      "postings.bandBits" -> bandBits.toString)
-
-  /** Posting rows (pbh, band, bv, vec_id) for a vector index — commit
-    * alongside (BEFORE) each index commit, same advisory-candidates
-    * contract as the text twin: extra/stale postings only create
-    * candidates the exact-cosine verify discards. */
-  def srpPostingsRows(vectors: DataFrame,
-                      bandBits: Int = DefaultIndexBandBits,
-                      bands: Int = DefaultIndexBands,
-                      idCol: String = "vec_id",
-                      embCol: String = "embedding"): DataFrame = {
-    require(bandBits >= 1 && bands >= 1 && bandBits * bands <= 64,
-      s"bandBits*bands must fit the 64-bit signature, got $bandBits x $bands")
-    val mask = if (bandBits == 64) -1L else (1L << bandBits) - 1
-    val sig = graft.functions.SignRandomProjection.sign_bits(col(embCol))
-    val bandStructs = (0 until bands).map { k =>
-      struct(lit(k).as("band"),
-        shiftright(sig, k * bandBits).bitwiseAND(mask).as("bv"))
-    }
-    vectors.select(col(idCol).as("vec_id"),
-        explode(array(bandStructs: _*)).as("bk"))
-      .select(xxhash64(col("bk.band"), col("bk.bv")).as("pbh"),
-        col("bk.band").as("band"), col("bk.bv").as("bv"), col("vec_id"))
-  }
-
-  def embeddingNearDupAgainstIndex(batch: DataFrame,
-                                   index: graft.lake.LakeTable,
-                                   threshold: Double,
-                                   bandBits: Int = DefaultIndexBandBits,
-                                   bands: Int = DefaultIndexBands,
-                                   idCol: String = "vec_id",
-                                   embCol: String = "embedding",
-                                   maxProbe: Int = 10000,
-                                   postings: Option[graft.lake.LakeTable] =
-                                     None): DataFrame = {
-    require(bandBits >= 1 && bands >= 1 && bandBits * bands <= 64,
-      s"bandBits*bands must fit the 64-bit signature, got $bandBits x $bands")
-    val mask = if (bandBits == 64) -1L else (1L << bandBits) - 1
-    def bandsOf(df: DataFrame, side: String): DataFrame = {
-      val sig = graft.functions.SignRandomProjection.sign_bits(col(embCol))
-      val bandStructs = (0 until bands).map { k =>
-        struct(lit(k).as("band"),
-          shiftright(sig, k * bandBits).bitwiseAND(mask).as("bv"))
-      }
-      df.select(col(idCol).as(side),
-        explode(array(bandStructs: _*)).as("bk"))
-    }
-    val newBk = bandsOf(batch, "v_new")
-    val idxBk = postings match {
-      case Some(p) =>
-        val kind = graft.operators.DedupOps.requirePostingsProp(
-          p, "postings.kind")
-        require(kind == "srp",
-          s"postings table at ${p.root} is '$kind', not srp")
-        val pBands = graft.operators.DedupOps.requirePostingsProp(
-          p, "postings.bands").toInt
-        require(pBands == bands,
-          s"postings at ${p.root} were built with $pBands bands, " +
-            s"probe uses $bands")
-        val pBits = graft.operators.DedupOps.requirePostingsProp(
-          p, "postings.bandBits").toInt
-        require(pBits == bandBits,
-          s"postings at ${p.root} use $pBits band bits, " +
-            s"probe uses $bandBits")
-        // probe the postings on the batch's own posting keys — the
-        // O(batch) candidate generation; oversized batches degrade to
-        // one full (narrow) postings scan
-        val pbhs = newBk
-          .select(xxhash64(col("bk.band"), col("bk.bv")).as("pbh"))
-          .distinct().limit(maxProbe + 1).collect().map(_.get(0))
-        val rows = p.probeTiered("pbh", pbhs.toSeq, maxProbe)
-        rows.select(col("vec_id").as("v_idx"),
-          struct(col("band"), col("bv")).as("bk"))
-      case None => bandsOf(index.read(), "v_idx")
-    }
-    // same one-bounded-collect candidate fusion as the MinHash twin
-    // (DedupOps.nearDupSigsAgainstIndex): the collected pairs feed the
-    // verify join as a local relation AND yield the probe ids,
-    // replacing a checkpoint job + a collect job per probe. The cap
-    // counts pairs, not distinct indexed ids — the intended tradeoff:
-    // an overflow with few distinct ids re-runs the banded join from
-    // the checkpoint, a slower batch, never a wrong one
-    val candQ = idxBk
-      .join(broadcast(newBk), "bk")
-      .select(col("v_new"), col("v_idx"))
-      .distinct() // a pair colliding in several bands verifies once
-    val candRows = candQ.limit(maxProbe + 1).collect()
-    val (cand, candIds) =
-      if (candRows.length <= maxProbe)
-        (batch.sparkSession.createDataFrame(
-          java.util.Arrays.asList(candRows: _*), candQ.schema),
-          candRows.map(_.get(1)).distinct.toSeq)
-      else {
-        val ck = candQ.localCheckpoint()
-        (ck, ck.select(col("v_idx")).distinct()
-          .limit(maxProbe + 1).collect().map(_.get(0)).toSeq)
-      }
-    val idxDocs =
-      if (candIds.length <= maxProbe) index.probe(idCol, candIds)
-      else index.read()
-    val e2 = idxDocs.select(col(idCol).as("v_idx"), col(embCol).as("_e2"))
-      .join(broadcast(cand), Seq("v_idx"))
-    val e1 = batch.select(col(idCol).as("v_new"), col(embCol).as("_e1"))
-    e1.join(broadcast(e2), Seq("v_new"))
-      .select(col("v_new"), col("v_idx"),
-        cosine_sim(col("_e1"), col("_e2")).as("cos"))
-      .filter(col("cos") >= threshold)
-  }
-
   def embeddingNearDupLsh(vectors: DataFrame, threshold: Double,
                           bandBits: Int = 8, bands: Int = 8,
                           idCol: String = "vec_id",
                           embCol: String = "embedding"): DataFrame = {
-    require(bandBits >= 1 && bands >= 1 && bandBits * bands <= 64,
-      s"bandBits*bands must fit the 64-bit signature, got $bandBits x $bands")
-    val mask = if (bandBits == 64) -1L else (1L << bandBits) - 1
-    val sig = graft.functions.SignRandomProjection.sign_bits(col(embCol))
-    val bandStructs = (0 until bands).map { k =>
-      struct(lit(k).as("band"),
-        shiftright(sig, k * bandBits).bitwiseAND(mask).as("bv"))
-    }
-    val buckets = vectors
-      .select(col(idCol).as("_vid"), explode(array(bandStructs: _*)).as("bk"))
+    val buckets = vectors.select(col(idCol).as("_vid"),
+      srpBandKeys(embCol, bandBits, bands).as("bk"))
     val cands = buckets.groupBy(col("bk"))
       .agg(collect_list(struct(col("_vid"), lit(0).as("_z"))).as("ds"))
       .filter(size(col("ds")) > 1)

@@ -187,13 +187,9 @@ class MVManager(spark: SparkSession, checkpointRoot: String,
       // drop the source's derived bucket-layout column: it is the
       // SOURCE's routing state, not document data, and must not leak
       // into the curated table (whose own layout derives its own)
-      val docs = source.changesBetween(lo, hi).drop(LakeTable.BucketCol)
-      nearDupMinJaccard match {
-        case Some(j) => MVManager.curateStepNearDup(docs, index, out,
-          wid, id, j, textCol, idCol, postings, wap)
-        case None => MVManager.curateStep(docs, index, out,
-          wid, id, textCol, idCol, wap)
-      }
+      MVManager.curateText(source.changesBetween(lo, hi)
+          .drop(LakeTable.BucketCol), index, out, wid, id, nearDupMinJaccard,
+        textCol, idCol, postings, wap)
     }
 
   /** DELETE-AWARE variant of [[startCurationFromLake]] — the
@@ -236,26 +232,41 @@ class MVManager(spark: SparkSession, checkpointRoot: String,
                        trigger: Trigger = Trigger.AvailableNow(),
                        postings: Option[LakeTable] = None,
                        wap: Option[MVManager.WapAudit] = None)
-      : StreamingQuery = {
+      : StreamingQuery =
+    startVersionWalk(name, source, trigger, idCol, "doc_id", index, out,
+        postings) { (wid, docs, v) =>
+      MVManager.curateText(docs, index, out, wid, v, nearDupMinJaccard,
+        textCol, idCol, postings, wap)
+    }
+
+  /** The delete-aware curation loops' sink: the batch's source
+    * versions are walked one commit at a time. A pure append (decided
+    * by [[graft.lake.LakeTable.versionRemovesRows]] — one metadata
+    * read, no job) hands its rows to `step`; a commit that removed rows
+    * first propagates the removed ids (`idCol` in the source,
+    * `indexIdCol` in the index and postings) to out, index and
+    * postings ([[MVManager.propagateForget]]), then hands `step` its
+    * inserted rows, so an upsert converges (removal precedes
+    * insertion). `step` gets (writer id, rows, source version). */
+  private def startVersionWalk(name: String, source: LakeTable,
+                               trigger: Trigger, idCol: String,
+                               indexIdCol: String, index: LakeTable,
+                               out: LakeTable, postings: Option[LakeTable])
+      (step: (String, DataFrame, Long) => Unit): StreamingQuery = {
     import org.apache.spark.sql.functions.col
     startCommitLogSink(name, source, trigger) { (wid, _, lo, hi) =>
       for (v <- lo + 1 to hi) {
-        val docs: DataFrame =
+        val rows =
           if (source.versionRemovesRows(v)) {
             val ch = source.readChangelog(v - 1, v)
             MVManager.propagateForget(
               ch.filter(col("_change_type") === "delete")
                 .select(col(idCol)).distinct(),
-              idCol, "doc_id", out, index, postings, wid, v)
+              idCol, indexIdCol, out, index, postings, wid, v)
             ch.filter(col("_change_type") === "insert")
               .drop("_change_type").drop(LakeTable.BucketCol)
           } else source.changesBetween(v - 1, v).drop(LakeTable.BucketCol)
-        nearDupMinJaccard match {
-          case Some(j) => MVManager.curateStepNearDup(docs, index, out,
-            wid, v, j, textCol, idCol, postings, wap)
-          case None => MVManager.curateStep(docs, index, out,
-            wid, v, textCol, idCol, wap)
-        }
+        step(wid, rows, v)
       }
     }
   }
@@ -278,25 +289,12 @@ class MVManager(spark: SparkSession, checkpointRoot: String,
                                 trigger: Trigger = Trigger.AvailableNow(),
                                 postings: Option[LakeTable] = None,
                                 wap: Option[MVManager.WapAudit] = None)
-      : StreamingQuery = {
-    import org.apache.spark.sql.functions.col
-    startCommitLogSink(name, source, trigger) { (wid, _, lo, hi) =>
-      for (v <- lo + 1 to hi) {
-        val vecs: DataFrame =
-          if (source.versionRemovesRows(v)) {
-            val ch = source.readChangelog(v - 1, v)
-            MVManager.propagateForget(
-              ch.filter(col("_change_type") === "delete")
-                .select(col(idCol)).distinct(),
-              idCol, "vec_id", out, index, postings, wid, v)
-            ch.filter(col("_change_type") === "insert")
-              .drop("_change_type").drop(LakeTable.BucketCol)
-          } else source.changesBetween(v - 1, v).drop(LakeTable.BucketCol)
-        MVManager.curateStepEmbedding(vecs, index, out, wid, v,
-          threshold, bandBits, bands, idCol, embCol, postings, wap)
-      }
+      : StreamingQuery =
+    startVersionWalk(name, source, trigger, idCol, "vec_id", index, out,
+        postings) { (wid, vecs, v) =>
+      MVManager.curateStepEmbedding(vecs, index, out, wid, v,
+        threshold, bandBits, bands, idCol, embCol, postings, wap)
     }
-  }
 
   /** Continuous PERCEPTUAL curation MV — the binary-axis member of the
     * curation-loop family (exact fp, MinHash text, SRP embedding, and
@@ -332,25 +330,12 @@ class MVManager(spark: SparkSession, checkpointRoot: String,
                                       postings: Option[LakeTable] = None,
                                       wap: Option[MVManager.WapAudit] =
                                         None)
-      : StreamingQuery = {
-    import org.apache.spark.sql.functions.col
-    startCommitLogSink(name, source, trigger) { (wid, _, lo, hi) =>
-      for (v <- lo + 1 to hi) {
-        val media: DataFrame =
-          if (source.versionRemovesRows(v)) {
-            val ch = source.readChangelog(v - 1, v)
-            MVManager.propagateForget(
-              ch.filter(col("_change_type") === "delete")
-                .select(col(idCol)).distinct(),
-              idCol, "doc_id", out, index, postings, wid, v)
-            ch.filter(col("_change_type") === "insert")
-              .drop("_change_type").drop(LakeTable.BucketCol)
-          } else source.changesBetween(v - 1, v).drop(LakeTable.BucketCol)
-        MVManager.curateStepPerceptual(media, index, out, wid, v,
-          maxHamming, idCol, payloadCol, postings, wap)
-      }
+      : StreamingQuery =
+    startVersionWalk(name, source, trigger, idCol, "doc_id", index, out,
+        postings) { (wid, media, v) =>
+      MVManager.curateStepPerceptual(media, index, out, wid, v,
+        maxHamming, idCol, payloadCol, postings, wap)
     }
-  }
 
   /** Continuous LEXICAL-INDEX maintenance MV — the commit-log loop of
     * [[startCurationFromLake]] applied to the persisted BM25 index
@@ -694,6 +679,21 @@ object MVManager {
       Seq(indexIdCol), s"$writerId#del", v))
   }
 
+  /** The text curation step a loop runs: near-dup at `nearDupMinJaccard`
+    * when given ([[curateStepNearDup]]), exact otherwise ([[curateStep]]). */
+  private def curateText(docs: org.apache.spark.sql.DataFrame,
+                         index: LakeTable, out: LakeTable, writerId: String,
+                         batchId: Long, nearDupMinJaccard: Option[Double],
+                         textCol: String, idCol: String,
+                         postings: Option[LakeTable],
+                         wap: Option[WapAudit]): Unit =
+    nearDupMinJaccard match {
+      case Some(j) => curateStepNearDup(docs, index, out, writerId, batchId,
+        j, textCol, idCol, postings, wap)
+      case None => curateStep(docs, index, out, writerId, batchId, textCol,
+        idCol, wap)
+    }
+
   /** One exactly-once curation step: dedupe `docs` against `index`,
     * append the accepted rows to `out`, then advance the frontier in
     * `index` — both under the same (writerId, batchId) idempotence key.
@@ -845,8 +845,9 @@ object MVManager {
     }
   }
 
-  /** The commits of a near-dup curation step, in the crash-safe order
-    * out -> postings -> index (see [[curateStepNearDup]]). */
+  /** The commits of a near-dup, perceptual or embedding curation step,
+    * in the crash-safe order out -> postings -> index (see
+    * [[curateStepNearDup]]), then each table's auto-compaction. */
   private def commitNearDup(accepted: org.apache.spark.sql.DataFrame,
                             idxRows: org.apache.spark.sql.DataFrame,
                             postingsRows: org.apache.spark.sql.DataFrame,
@@ -859,6 +860,28 @@ object MVManager {
     out.autoCompactIfNeeded()
     postings.foreach(_.autoCompactIfNeeded())
     index.autoCompactIfNeeded()
+  }
+
+  /** The ids a batch's within-batch near-dup pairs (d1, d2) drop, as
+    * one `idCol` column: every member of a connected cluster but its
+    * min id. Pairs are sparse relative to the batch, so the common case
+    * collects them (at most [[graft.operators.DedupOps.MaxWithinBatchPairs]])
+    * and union-finds on the driver in one job; more take the
+    * distributed O(log d) contraction. */
+  private def withinBatchDrops(pairs: org.apache.spark.sql.DataFrame,
+                               idCol: String): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions.col
+    import graft.operators.DedupOps
+    val max = DedupOps.MaxWithinBatchPairs
+    val some = pairs.select(col("d1"), col("d2")).limit(max + 1).collect()
+    if (some.length <= max) {
+      val ss = pairs.sparkSession
+      import ss.implicits._
+      DedupOps.nearDupDropIds(
+        some.toSeq.map(r => (r.getLong(0), r.getLong(1)))).toDF(idCol)
+    } else DedupOps.nearDupClusters(pairs)
+      .filter(col("doc_id") =!= col("cluster_id"))
+      .select(col("doc_id").as(idCol))
   }
 
   /** The distributed near-dup curation step, for batches over the
@@ -883,26 +906,10 @@ object MVManager {
     val sigRows = DedupOps.signatureIndexRows(freshDocs)
       .localCheckpoint(eager = false)
     // within-batch collapse: connected near-dup clusters keep their
-    // min doc_id. Near-dup pairs are SPARSE relative to the batch, so
-    // the common case collects them (bounded) and union-finds on the
-    // driver — one job instead of the star contraction's per-round
-    // shuffle + sync loop; a pathological pair explosion falls back to
-    // the distributed O(log d) contraction unchanged
-    val maxWbPairs = DedupOps.MaxWithinBatchPairs
-    val wbPairs = DedupOps.trueJaccardFromSigRows(sigRows,
-      minJaccard = minJaccard)
-    val somePairs = wbPairs.select(col("d1"), col("d2"))
-      .limit(maxWbPairs + 1).collect()
-    val wbDrop =
-      if (somePairs.length <= maxWbPairs) {
-        val dropIds = DedupOps.nearDupDropIds(
-          somePairs.toSeq.map(r => (r.getLong(0), r.getLong(1))))
-        val ss = docs.sparkSession
-        import ss.implicits._
-        dropIds.toDF(idCol)
-      } else DedupOps.nearDupClusters(wbPairs)
-        .filter(col("doc_id") =!= col("cluster_id"))
-        .select(col("doc_id").as(idCol))
+    // min doc_id
+    val wbDrop = withinBatchDrops(
+      DedupOps.trueJaccardFromSigRows(sigRows, minJaccard = minJaccard),
+      idCol)
     val survivorSigs = sigRows
       .join(broadcast(wbDrop.select(col(idCol).as("doc_id"))),
         Seq("doc_id"), "left_anti")
@@ -952,11 +959,6 @@ object MVManager {
                            wap: Option[WapAudit] = None): Unit = {
     import org.apache.spark.sql.functions.{broadcast, col, length}
     import graft.operators.{DedupOps, MultimodalOps}
-    postings.foreach { p =>
-      val kind = DedupOps.requirePostingsProp(p, "postings.kind")
-      require(kind == "simhash",
-        s"postings table at ${p.root} is '$kind', not simhash")
-    }
     val sketchless = media.filter(
       col(payloadCol).isNull || length(col(payloadCol)) === 0).count()
     if (sketchless > 0)
@@ -966,22 +968,7 @@ object MVManager {
     val sk = MultimodalOps.perceptualSketch(media,
         idCol = idCol, payloadCol = payloadCol)
       .localCheckpoint(eager = false) // feeds collapse, probe, and the index commit
-    // within-batch collapse: bounded driver union-find over the banded
-    // pairs (sparse by LSH design), distributed contraction fallback
-    val maxWbPairs = DedupOps.MaxWithinBatchPairs
-    val wbPairs = DedupOps.sketchPairs(sk, maxHamming)
-    val somePairs = wbPairs.select(col("d1"), col("d2"))
-      .limit(maxWbPairs + 1).collect()
-    val wbDrop =
-      if (somePairs.length <= maxWbPairs) {
-        val dropIds = DedupOps.nearDupDropIds(
-          somePairs.toSeq.map(r => (r.getLong(0), r.getLong(1))))
-        val ss = media.sparkSession
-        import ss.implicits._
-        dropIds.toDF(idCol)
-      } else DedupOps.nearDupClusters(wbPairs)
-        .filter(col("doc_id") =!= col("cluster_id"))
-        .select(col("doc_id").as(idCol))
+    val wbDrop = withinBatchDrops(DedupOps.sketchPairs(sk, maxHamming), idCol)
     val survivorSk = sk
       .join(broadcast(wbDrop.select(col(idCol).as("doc_id"))),
         Seq("doc_id"), "left_anti")
@@ -999,13 +986,8 @@ object MVManager {
     // a WAP audit evaluates the frame twice (stage + predicate)
     val accepted =
       if (wap.isDefined) accepted0.localCheckpoint(eager = false) else accepted0
-    wapAppend(out, accepted, writerId, batchId, wap)
-    postings.foreach(_.appendExactlyOnce(
-      DedupOps.simHashPostingsRows(acceptedSk), writerId, batchId))
-    index.appendExactlyOnce(acceptedSk, writerId, batchId)
-    out.autoCompactIfNeeded()
-    postings.foreach(_.autoCompactIfNeeded())
-    index.autoCompactIfNeeded()
+    commitNearDup(accepted, acceptedSk, DedupOps.simHashPostingsRows(acceptedSk),
+      index, out, postings, writerId, batchId, wap)
   }
 
   /** The EMBEDDING curation step — the vector twin of
@@ -1036,7 +1018,7 @@ object MVManager {
                           postings: Option[LakeTable] = None,
                           wap: Option[WapAudit] = None): Unit = {
     import org.apache.spark.sql.functions.{broadcast, col}
-    import graft.operators.{DedupOps, SimilarityOps}
+    import graft.operators.SimilarityOps
     import graft.functions.VectorFunctions.cosine_sim
     // FULL rows ride to the curated output (metadata columns must not
     // silently drop); the LSH machinery sees only (id, embedding).
@@ -1069,23 +1051,9 @@ object MVManager {
     val batch = flagged.filter(col("_ok")).drop("_ok")
     val batchVecs = batch.select(col(idCol), col(embCol))
     // within-batch collapse: min-id survivor per cosine cluster
-    // (bounded driver union-find, distributed contraction fallback)
-    val maxWbPairs = DedupOps.MaxWithinBatchPairs
-    val wbPairs = SimilarityOps.embeddingNearDupLsh(batchVecs, threshold,
-      bandBits, bands, idCol, embCol)
-    val somePairs = wbPairs.select(col("v1"), col("v2"))
-      .limit(maxWbPairs + 1).collect()
-    val wbDrop =
-      if (somePairs.length <= maxWbPairs) {
-        val dropIds = DedupOps.nearDupDropIds(
-          somePairs.toSeq.map(r => (r.getLong(0), r.getLong(1))))
-        val ss = vecs.sparkSession
-        import ss.implicits._
-        dropIds.toDF(idCol)
-      } else DedupOps.nearDupClusters(
-          wbPairs.select(col("v1").as("d1"), col("v2").as("d2")))
-        .filter(col("doc_id") =!= col("cluster_id"))
-        .select(col("doc_id").as(idCol))
+    val wbDrop = withinBatchDrops(SimilarityOps.embeddingNearDupLsh(
+        batchVecs, threshold, bandBits, bands, idCol, embCol)
+      .select(col("v1").as("d1"), col("v2").as("d2")), idCol)
     val survivors = batch
       .join(broadcast(wbDrop), Seq(idCol), "left_anti")
       .localCheckpoint(eager = false)
@@ -1097,14 +1065,9 @@ object MVManager {
       .join(broadcast(nearIds), Seq(idCol), "left_anti")
       .localCheckpoint(eager = false)
     val acceptedVecs = accepted.select(col(idCol), col(embCol))
-    wapAppend(out, accepted, writerId, batchId, wap)
-    postings.foreach(_.appendExactlyOnce(
-      SimilarityOps.srpPostingsRows(acceptedVecs, bandBits, bands,
-        idCol, embCol), writerId, batchId))
-    index.appendExactlyOnce(acceptedVecs, writerId, batchId)
-    out.autoCompactIfNeeded()
-    postings.foreach(_.autoCompactIfNeeded())
-    index.autoCompactIfNeeded()
+    commitNearDup(accepted, acceptedVecs, SimilarityOps.srpPostingsRows(
+        acceptedVecs, bandBits, bands, idCol, embCol),
+      index, out, postings, writerId, batchId, wap)
   }
 
   /** Atomically publish a fully-written staging dir as `target`. If a

@@ -354,6 +354,112 @@ class DedupSimilaritySpec extends SparkSuite {
       DedupOps.nearDupSigsAgainstIndex(rows, index, minJaccard = 0.5,
         postings = Some(wrong)).count()
     }
+
+    // SimHash: unstamped, and stamped with a different band width only
+    val sketches = DedupOps.simHashIndexRows(sample).localCheckpoint()
+    val shIndex = LakeTable.create(spark, tmpDir("gs-sh-idx"),
+      sketches.schema, bucketBy = Some(("doc_id", 8)))
+    shIndex.append(sketches)
+    def shPostings(tag: String, props: Map[String, String]) = {
+      val p = LakeTable.create(spark, tmpDir(tag),
+        DedupOps.simHashPostingsSchema, properties = props,
+        bucketBy = Some(("pbh", 8)))
+      p.append(DedupOps.simHashPostingsRows(sketches))
+      p
+    }
+    val shBare = shPostings("gs-sh-bare", Map.empty)
+    val shEx = intercept[IllegalStateException] {
+      DedupOps.sketchesAgainstIndex(sketches, shIndex,
+        postings = Some(shBare)).count()
+    }
+    assert(shEx.getMessage.contains("geometry stamping"))
+    val shWrong = shPostings("gs-sh-wrong",
+      DedupOps.simHashPostingsProps.updated("postings.bandBits", "8"))
+    intercept[IllegalArgumentException] {
+      DedupOps.sketchesAgainstIndex(sketches, shIndex,
+        postings = Some(shWrong)).count()
+    }
+
+    // SRP: unstamped, and stamped with a different band geometry
+    val vecs = emb.select($"vec_id", $"embedding").limit(30).localCheckpoint()
+    val vIndex = LakeTable.create(spark, tmpDir("gs-srp-idx"), vecs.schema,
+      bucketBy = Some(("vec_id", 8)))
+    vIndex.append(vecs)
+    def srpPostings(tag: String, props: Map[String, String]) = {
+      val p = LakeTable.create(spark, tmpDir(tag),
+        SimilarityOps.srpPostingsSchema, properties = props,
+        bucketBy = Some(("pbh", 8)))
+      p.append(SimilarityOps.srpPostingsRows(vecs))
+      p
+    }
+    val srpBare = srpPostings("gs-srp-bare", Map.empty)
+    val srpEx = intercept[IllegalStateException] {
+      SimilarityOps.embeddingNearDupAgainstIndex(vecs, vIndex, 0.9,
+        postings = Some(srpBare)).count()
+    }
+    assert(srpEx.getMessage.contains("geometry stamping"))
+    val srpWrong = srpPostings("gs-srp-wrong",
+      SimilarityOps.srpPostingsProps(bandBits = 8, bands = 4))
+    intercept[IllegalArgumentException] {
+      SimilarityOps.embeddingNearDupAgainstIndex(vecs, vIndex, 0.9,
+        postings = Some(srpWrong)).count()
+    }
+  }
+
+  test("index probes past maxProbe candidates (the checkpointed, " +
+    "full-index fetch) return the same pairs as the bounded probe, " +
+    "for MinHash, SimHash and SRP postings") {
+    import graft.lake.LakeTable
+    // the index holds every third row, the batch every second: the
+    // overlap (every sixth) guarantees candidates in every modality
+    def pairs(df: org.apache.spark.sql.DataFrame, a: String, b: String) =
+      df.select(col(a), col(b)).as[(Long, Long)].collect().toSet
+    def tables(tag: String, rows: org.apache.spark.sql.DataFrame,
+                  idCol: String, postingsSchema:
+                    org.apache.spark.sql.types.StructType,
+                  props: Map[String, String],
+                  postingsRows: org.apache.spark.sql.DataFrame) = {
+      val index = LakeTable.create(spark, tmpDir(s"$tag-idx"), rows.schema,
+        bucketBy = Some((idCol, 8)))
+      index.append(rows)
+      val p = LakeTable.create(spark, tmpDir(s"$tag-post"), postingsSchema,
+        properties = props, bucketBy = Some(("pbh", 8)))
+      p.append(postingsRows)
+      (index, Some(p))
+    }
+
+    val sigs = DedupOps.signatureIndexRows(docs.limit(120)).localCheckpoint()
+    val sigHist = sigs.filter($"doc_id" % 3 === 0)
+    val (mhIdx, mhPost) = tables("ov-mh", sigHist, "doc_id",
+      DedupOps.bandPostingsSchema, DedupOps.bandPostingsProps(),
+      DedupOps.bandPostingsRows(sigHist))
+    val sigBatch = sigs.filter($"doc_id" % 2 === 0)
+    def mh(maxProbe: Int) = pairs(DedupOps.nearDupSigsAgainstIndex(sigBatch,
+      mhIdx, minJaccard = 0.5, maxProbe = maxProbe, postings = mhPost),
+      "d_new", "d_idx")
+    assert(mh(10000).nonEmpty && mh(1) == mh(10000))
+
+    val sk = DedupOps.simHashIndexRows(docs.limit(120)).localCheckpoint()
+    val skHist = sk.filter($"doc_id" % 3 === 0)
+    val (shIdx, shPost) = tables("ov-sh", skHist, "doc_id",
+      DedupOps.simHashPostingsSchema, DedupOps.simHashPostingsProps,
+      DedupOps.simHashPostingsRows(skHist))
+    val skBatch = sk.filter($"doc_id" % 2 === 0)
+    def sh(maxProbe: Int) = pairs(DedupOps.sketchesAgainstIndex(skBatch,
+      shIdx, maxProbe = maxProbe, postings = shPost), "d_new", "d_idx")
+    assert(sh(10000).nonEmpty && sh(1) == sh(10000))
+
+    val vecs = emb.select($"vec_id", $"embedding").limit(120)
+      .localCheckpoint()
+    val vHist = vecs.filter($"vec_id" % 3 === 0)
+    val (vIdx, vPost) = tables("ov-srp", vHist, "vec_id",
+      SimilarityOps.srpPostingsSchema, SimilarityOps.srpPostingsProps(),
+      SimilarityOps.srpPostingsRows(vHist))
+    val vBatch = vecs.filter($"vec_id" % 2 === 0)
+    def srp(maxProbe: Int) = pairs(SimilarityOps.embeddingNearDupAgainstIndex(
+      vBatch, vIdx, 0.35, maxProbe = maxProbe, postings = vPost),
+      "v_new", "v_idx")
+    assert(srp(10000).nonEmpty && srp(1) == srp(10000))
   }
 
   test("simHashAgainstIndex equals the brute-force cross-slice " +

@@ -54,6 +54,55 @@ class CurationMVSpec extends SparkSuite {
     }
   }
 
+  /** Spark jobs and generated-class compiles of each of `batches`
+    * micro-batches of the MV `start` starts (trigger ProcessingTime(0)):
+    * `feed(i)` commits source batch i, then the query drains it. A
+    * batch's count includes every job it started: the listener bus
+    * delivers in order, so once a marker job's start is seen the
+    * batch's own jobs have been counted. */
+  private def countPerBatch(batches: Int)(
+      start: => org.apache.spark.sql.streaming.StreamingQuery)(
+      feed: Int => Unit): Seq[(Int, Long)] = {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val marker = "curation-steady-marker"
+    val jobs = new java.util.concurrent.ConcurrentHashMap[String,
+      java.util.concurrent.atomic.AtomicInteger]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).foreach { p =>
+          Seq(p.getProperty("sql.streaming.queryId"),
+            p.getProperty(marker)).filter(_ != null).foreach(k =>
+            jobs.computeIfAbsent(k,
+              _ => new java.util.concurrent.atomic.AtomicInteger)
+              .incrementAndGet())
+        }
+    }
+    def count(k: String) = Option(jobs.get(k)).map(_.get).getOrElse(0)
+    def flushListener(): Unit = {
+      val seen = count(marker)
+      spark.sparkContext.setLocalProperty(marker, marker)
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setLocalProperty(marker, null)
+      val deadline = System.nanoTime() + 30000000000L
+      while (count(marker) == seen && System.nanoTime() < deadline)
+        Thread.sleep(5)
+    }
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    spark.sparkContext.addSparkListener(listener)
+    val q = start
+    try (1 to batches).map { i =>
+      val (j0, c0) = (count(q.id.toString), compiles)
+      feed(i)
+      q.processAllAvailable()
+      flushListener()
+      (count(q.id.toString) - j0, compiles - c0)
+    } finally {
+      q.stop()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+  }
+
   test("curation MV killed and restarted from its checkpoint: batch-2 " +
     "copies of batch-1 docs are not re-admitted, new docs are") {
     val (src, index, out) = mkTables("restart")
@@ -236,8 +285,6 @@ class CurationMVSpec extends SparkSuite {
   test("near-dup curation MV with band postings in steady state: at " +
     "most 12 Spark jobs and zero class compiles per micro-batch, and " +
     "the accepted set equals an exact Jaccard check") {
-    import org.apache.spark.metrics.source.CodegenMetrics
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import org.apache.spark.sql.streaming.Trigger
     import graft.operators.DedupOps
     val docsSchema = StructType(Seq(
@@ -252,50 +299,15 @@ class CurationMVSpec extends SparkSuite {
     val mv = new MVManager(spark, tmpDir("ss-ckpt"))
 
     val gen = new CurationDocs(1)
-    val marker = "curation-steady-marker"
-    val jobs = new java.util.concurrent.ConcurrentHashMap[String,
-      java.util.concurrent.atomic.AtomicInteger]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).foreach { p =>
-          Seq(p.getProperty("sql.streaming.queryId"),
-            p.getProperty(marker)).filter(_ != null).foreach(k =>
-            jobs.computeIfAbsent(k,
-              _ => new java.util.concurrent.atomic.AtomicInteger)
-              .incrementAndGet())
-        }
-    }
-    def count(k: String) = Option(jobs.get(k)).map(_.get).getOrElse(0)
-    // the listener bus delivers in order: once a marker job's start is
-    // seen, every job the micro-batch started has been counted
-    def flushListener(): Unit = {
-      val seen = count(marker)
-      spark.sparkContext.setLocalProperty(marker, marker)
-      try spark.sparkContext.parallelize(Seq(1), 1).count()
-      finally spark.sparkContext.setLocalProperty(marker, null)
-      val deadline = System.nanoTime() + 30000000000L
-      while (count(marker) == seen && System.nanoTime() < deadline)
-        Thread.sleep(5)
-    }
-    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-
-    spark.sparkContext.addSparkListener(listener)
-    val q = mv.startCurationFromLake("steady", src, index, out,
-      nearDupMinJaccard = Some(0.5), trigger = Trigger.ProcessingTime(0L),
-      postings = Some(postings))
     val all = scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
-    val perBatch = try (1 to 8).map { _ =>
-      val (j0, c0) = (count(q.id.toString), compiles)
+    val perBatch = countPerBatch(8)(mv.startCurationFromLake("steady", src,
+      index, out, nearDupMinJaccard = Some(0.5),
+      trigger = Trigger.ProcessingTime(0L), postings = Some(postings))) { _ =>
       val b = gen.batch(100)
       all ++= b
       src.append(b.toDF("doc_id", "text"))
-      q.processAllAvailable()
-      flushListener()
-      (count(q.id.toString) - j0, compiles - c0)
-    } finally {
-      q.stop()
-      spark.sparkContext.removeSparkListener(listener)
     }
+    info(s"(jobs, compiles) per micro-batch: $perBatch")
     val steady = perBatch.takeRight(3)
     assert(steady.forall(_._1 <= 12),
       s"jobs per micro-batch (jobs, compiles): $perBatch")
@@ -325,6 +337,113 @@ class CurationMVSpec extends SparkSuite {
     }.toSet
     assert(out.read().select("doc_id").as[Long].collect().toSet == expected)
     assert(index.read().count() == expected.size)
+  }
+
+  test("embedding curation MV with SRP postings in steady state: at " +
+    "most 24 Spark jobs per micro-batch") {
+    import org.apache.spark.sql.streaming.Trigger
+    import graft.operators.SimilarityOps
+    val embSchema = StructType(Seq(
+      StructField("vec_id", LongType),
+      StructField("embedding", ArrayType(FloatType, containsNull = true))))
+    val src = LakeTable.create(spark, tmpDir("ess-src"), embSchema)
+    val index = LakeTable.create(spark, tmpDir("ess-idx"), embSchema,
+      bucketBy = Some(("vec_id", 8)))
+    val postings = LakeTable.create(spark, tmpDir("ess-post"),
+      SimilarityOps.srpPostingsSchema,
+      properties = SimilarityOps.srpPostingsProps(),
+      bucketBy = Some(("pbh", 8)))
+    val out = LakeTable.create(spark, tmpDir("ess-out"), embSchema)
+    val mv = new MVManager(spark, tmpDir("ess-ckpt"))
+    // 64-dim gaussian vectors; after the first batch 10% are exact
+    // copies and 10% near copies (small noise) of earlier originals
+    val rnd = new scala.util.Random(1)
+    val originals = scala.collection.mutable.ArrayBuffer.empty[Seq[Float]]
+    var nextId = 0L
+    val perBatch = countPerBatch(8)(mv.startEmbeddingCurationFromLake(
+      "emb-steady", src, index, out, threshold = 0.9,
+      trigger = Trigger.ProcessingTime(0L), postings = Some(postings))) { _ =>
+      val earlier = originals.length
+      val b = Seq.fill(100) {
+        val r = rnd.nextDouble()
+        val v =
+          if (earlier > 0 && r < 0.1) originals(rnd.nextInt(earlier))
+          else if (earlier > 0 && r < 0.2)
+            originals(rnd.nextInt(earlier))
+              .map(x => x + (rnd.nextGaussian() * 0.02).toFloat)
+          else {
+            val o = Seq.fill(64)(rnd.nextGaussian().toFloat)
+            originals += o
+            o
+          }
+        nextId += 1
+        (nextId, v)
+      }
+      src.append(b.toDF("vec_id", "embedding"))
+    }
+    info(s"(jobs, compiles) per micro-batch: $perBatch")
+    // one batch or another takes 2 jobs more from run to run; 24 is
+    // the most any batch took before the probe and the step tail were
+    // shared across modalities
+    assert(perBatch.takeRight(3).forall(_._1 <= 24),
+      s"jobs per micro-batch (jobs, compiles): $perBatch")
+    val accepted = out.read().select("vec_id").as[Long].collect().toSet
+    assert(accepted.nonEmpty && accepted.size < nextId &&
+      index.read().select("vec_id").as[Long].collect().toSet == accepted)
+  }
+
+  test("perceptual curation MV with SimHash postings in steady state: " +
+    "at most 22 Spark jobs per micro-batch") {
+    import org.apache.spark.sql.streaming.Trigger
+    import graft.operators.{DedupOps, MultimodalOps}
+    def media(rows: Seq[(Long, String)]) =
+      MultimodalOps.withBinaryPayload(rows.toDF("doc_id", "text"))
+    val mediaSchema = media(Seq((0L, "x"))).schema
+    val src = LakeTable.create(spark, tmpDir("pss-src"), mediaSchema)
+    val index = LakeTable.create(spark, tmpDir("pss-idx"),
+      MultimodalOps.perceptualSketch(media(Seq((0L, "x")))).schema,
+      bucketBy = Some(("doc_id", 8)))
+    val postings = LakeTable.create(spark, tmpDir("pss-post"),
+      DedupOps.simHashPostingsSchema,
+      properties = DedupOps.simHashPostingsProps,
+      bucketBy = Some(("pbh", 8)))
+    val out = LakeTable.create(spark, tmpDir("pss-out"), mediaSchema)
+    val mv = new MVManager(spark, tmpDir("pss-ckpt"))
+    // media of 20 64-byte frames; after the first batch 10% are exact
+    // copies and 10% frame-reordered copies (the same frame set, so
+    // hamming 0) of earlier originals
+    val rnd = new scala.util.Random(1)
+    def frame() = Seq.fill(64)(('a' + rnd.nextInt(26)).toChar).mkString
+    val originals = scala.collection.mutable.ArrayBuffer.empty[Seq[String]]
+    var nextId = 0L
+    val perBatch = countPerBatch(8)(mv.startPerceptualCurationFromLake(
+      "pcur-steady", src, index, out, trigger = Trigger.ProcessingTime(0L),
+      postings = Some(postings))) { _ =>
+      val earlier = originals.length
+      val b = Seq.fill(100) {
+        val r = rnd.nextDouble()
+        val frames =
+          if (earlier > 0 && r < 0.1) originals(rnd.nextInt(earlier))
+          else if (earlier > 0 && r < 0.2)
+            rnd.shuffle(originals(rnd.nextInt(earlier)))
+          else {
+            val o = Seq.fill(20)(frame())
+            originals += o
+            o
+          }
+        nextId += 1
+        (nextId, frames.mkString)
+      }
+      src.append(media(b))
+    }
+    info(s"(jobs, compiles) per micro-batch: $perBatch")
+    // 22: the most any batch took before the probe and the step tail
+    // were shared across modalities
+    assert(perBatch.takeRight(3).forall(_._1 <= 22),
+      s"jobs per micro-batch (jobs, compiles): $perBatch")
+    val accepted = out.read().select("doc_id").as[Long].collect().toSet
+    assert(accepted.size == originals.length &&
+      index.read().select("doc_id").as[Long].collect().toSet == accepted)
   }
 
   test("a near-dup curation batch over the driver-side bound runs the " +
