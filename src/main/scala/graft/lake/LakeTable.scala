@@ -50,8 +50,9 @@ import org.apache.spark.sql.types._
   */
 class LakeTable private (
     val spark: SparkSession, val root: String,
-    private[lake] val commitStore: CommitStore) {
+    private[lake] val commitStore: CommitStore) extends Commit {
 
+  import Commit._
   import LakeTable._
 
   /** The table's commit seam, exposed so sidecar persistence (frozen
@@ -59,11 +60,11 @@ class LakeTable private (
     * same storage abstraction as the table's own commits. */
   def store: CommitStore = commitStore
 
-  private def metaDir = Paths.get(root, "metadata")
+  private[lake] def metaDir = Paths.get(root, "metadata")
 
   // ---- snapshot state ------------------------------------------------
 
-  /** One parsed snapshot of the log: every field [[LakeTable.snapshotJson]]
+  /** One parsed snapshot of the log: every field [[Commit.snapshotJson]]
     * writes, read once. Operations take ONE of these and derive all
     * they need from it, so a commit landing mid-operation can never
     * hand them two versions' worth of state. The manifest-list format
@@ -71,7 +72,7 @@ class LakeTable private (
     * every writer stamps is rejected, naming the table and the
     * version. `files`/`deletes` read the (immutable, cached) manifests
     * on first use. */
-  private[graft] final class Snapshot private[LakeTable] (
+  private[graft] final class Snapshot private[lake] (
       val version: Int, raw: String) {
     private val node = mapper.readTree(raw)
     private def required(key: String): JsonNode =
@@ -173,7 +174,7 @@ class LakeTable private (
     * scale hazard (every read paying an O(versions) LIST); hint +
     * probe is O(1 + lag). The probe keeps the content it read, so the
     * frontier snapshot is read once. */
-  private def latestRaw(): Option[(Int, String)] = {
+  private[lake] def latestRaw(): Option[(Int, String)] = {
     def at(v: Int) = commitStore.read(versionPath(metaDir, v)).map(v -> _)
     commitStore.read(metaDir.resolve(LatestHint))
       .flatMap(_.trim.toIntOption).filter(_ >= 0).flatMap(at)
@@ -186,7 +187,7 @@ class LakeTable private (
       }
   }
 
-  private def latest(): Snapshot = {
+  private[lake] def latest(): Snapshot = {
     val found = latestRaw()
     require(found.isDefined, s"no snapshots at $root")
     new Snapshot(found.get._1, found.get._2)
@@ -220,7 +221,7 @@ class LakeTable private (
     * manifests are immutable and UUID-named, so a parsed value can
     * never go stale — repeated snapshot reads (every query plans from
     * the manifest set) parse each manifest once per process. */
-  private def readManifest(ref: ManifestRef): Seq[FileEntry] = {
+  private[lake] def readManifest(ref: ManifestRef): Seq[FileEntry] = {
     val p = metaDir.resolve(ref.path).toAbsolutePath.normalize()
     val key = p.toString
     val cached = manifestCache.get(key)
@@ -237,58 +238,6 @@ class LakeTable private (
     }
   }
 
-  /** Write an immutable manifest file holding `files` and return its
-    * reference. UUID-named, so putIfAbsent can never lose a slot —
-    * manifests written by commit attempts that later lose their
-    * optimistic race become unreferenced orphans the vacuum reclaims,
-    * exactly like data files of a crashed writer. */
-  private def writeManifest(files: Seq[FileEntry]): ManifestRef = {
-    val name = s"m-${java.util.UUID.randomUUID()}.json"
-    val n = mapper.createObjectNode()
-    putFileArray(n, files)
-    val p = metaDir.resolve(name)
-    require(commitStore.putIfAbsent(p,
-      mapper.writerWithDefaultPrettyPrinter().writeValueAsString(n)),
-      s"uuid manifest name collision at $p")
-    manifestCache.put(p.toAbsolutePath.normalize().toString, files)
-    ManifestRef(name, files.size)
-  }
-
-  /** Manifest-list compaction, the metadata twin of the data-file
-    * size ladder: when >= ManifestMergeFanout manifests share a
-    * power-of-two entry-count class, merge them into one (which lands
-    * in a higher class). Every file entry is rewritten at most once
-    * per class on its way up, so amortized metadata rewrite per
-    * committed entry is O(log(liveFiles)/log(fanout)) and the
-    * manifest count stays O(fanout * log(liveFiles)) — commits never
-    * degenerate to rewriting the whole live-file list. ONE ladder
-    * serves both manifest kinds (data files and position deletes):
-    * the invariant lives in a single place by construction. */
-  private def mergeLadder[T](refs0: Seq[ManifestRef],
-                             read: ManifestRef => Seq[T],
-                             write: Seq[T] => ManifestRef)
-      : Seq[ManifestRef] = {
-    def sizeClass(r: ManifestRef): Int =
-      63 - java.lang.Long.numberOfLeadingZeros(math.max(1L, r.entries))
-    var refs = refs0
-    var changed = true
-    while (changed) {
-      changed = false
-      refs.groupBy(sizeClass).toSeq.sortBy(_._1)
-        .find(_._2.size >= ManifestMergeFanout) match {
-        case Some((_, group)) =>
-          val merged = write(group.flatMap(read))
-          refs = refs.filterNot(group.contains) :+ merged
-          changed = true
-        case None => ()
-      }
-    }
-    refs
-  }
-
-  private def mergeManifests(refs: Seq[ManifestRef]): Seq[ManifestRef] =
-    mergeLadder(refs, readManifest, writeManifest)
-
   // ---- position-delete manifests (merge-on-read DELETE) --------------
   //
   // The delete half of the metadata mirrors the data half exactly:
@@ -297,7 +246,7 @@ class LakeTable private (
   // unchanged refs untouched, so a positional delete commits O(its
   // own positions) metadata and a plain append commits none.
 
-  private def readDeleteManifest(ref: ManifestRef): Seq[DeleteEntry] = {
+  private[lake] def readDeleteManifest(ref: ManifestRef): Seq[DeleteEntry] = {
     val p = metaDir.resolve(ref.path).toAbsolutePath.normalize()
     val key = p.toString
     val cached = deleteManifestCache.get(key)
@@ -321,35 +270,6 @@ class LakeTable private (
       es
     }
   }
-
-  private def writeDeleteManifest(entries: Seq[DeleteEntry]): ManifestRef = {
-    val name = s"dm-${java.util.UUID.randomUUID()}.json"
-    val n = mapper.createObjectNode()
-    val arr = n.putArray("deletes")
-    entries.foreach { e =>
-      val en = arr.addObject()
-      en.put("path", e.path); en.put("rows", e.rows)
-      val cv = en.putArray("covers"); e.covers.foreach(cv.add)
-      if (e.kind != "pos") en.put("kind", e.kind)
-      if (e.seq > 0) en.put("seq", e.seq)
-      if (e.keyCols.nonEmpty) {
-        val kc = en.putArray("keyCols"); e.keyCols.foreach(kc.add)
-      }
-    }
-    val p = metaDir.resolve(name)
-    require(commitStore.putIfAbsent(p,
-      mapper.writerWithDefaultPrettyPrinter().writeValueAsString(n)),
-      s"uuid delete-manifest name collision at $p")
-    deleteManifestCache.put(p.toAbsolutePath.normalize().toString, entries)
-    ManifestRef(name, entries.size)
-  }
-
-  /** The [[mergeLadder]] instantiated for delete manifests — a long
-    * run of small positional deletes stays O(fanout *
-    * log(deleteFiles)) refs per snapshot. */
-  private def mergeDeleteManifests(refs: Seq[ManifestRef])
-      : Seq[ManifestRef] =
-    mergeLadder(refs, readDeleteManifest, writeDeleteManifest)
 
   /** Live position-delete files of the current snapshot (empty unless
     * [[deleteWherePositional]] has committed and compaction has not
@@ -1034,22 +954,6 @@ class LakeTable private (
     }
   }
 
-  /** True iff snapshot `v` may have REMOVED rows relative to its
-    * predecessor (new merge-on-read delete entries, or data files
-    * dropped/rewritten) — the cheap metadata gate a CDC consumer uses
-    * to skip the delete half of a changelog step on pure appends
-    * (the overwhelmingly common commit). Conservative: a compaction
-    * answers true and the changelog then proves the zero. */
-  def versionRemovesRows(v: Int): Boolean = {
-    if (v <= 0) return false
-    val n = retained(v)
-    val p = retained(v - 1)
-    val prevD = p.deletes.map(_.path).toSet
-    val paths = n.files.map(_.path).toSet
-    n.deletes.exists(e => !prevD.contains(e.path)) ||
-      p.files.exists(f => !paths.contains(f.path))
-  }
-
   // ---- ROW-LEVEL CHANGELOG (Iceberg changelog scan / Delta CDF) ------
   //
   // [[changesBetween]] is the INSERT-ONLY incremental feed (what a
@@ -1576,8 +1480,7 @@ class LakeTable private (
 
   def append(df: DataFrame, appMeta: Map[String, String] = Map.empty): Int = {
     val s = latest()
-    commit(writeData(enforced(df, s), s), replacedFiles = Set.empty, appMeta,
-      guard = None)
+    commit(Change.data(writeData(enforced(df, s), s), appMeta))
   }
 
   /** INSERT OVERWRITE semantics: ONE transactional commit that replaces
@@ -1587,13 +1490,15 @@ class LakeTable private (
     * append racing the overwrite is rebased on top rather than lost
     * (same non-strict replace contract as compaction). */
   def overwriteAll(df: DataFrame,
-                   appMeta: Map[String, String] = Map.empty): Int = {
-    val s = latest()
-    commitWith(Some(writeData(enforced(df, s), s)),
-      replacedFiles = s.files.map(_.path).toSet,
-      appMeta + ("operation" -> "overwrite"), guard = None, alter = None,
-      appliedDeletes = s.deletes.map(_.path).toSet)
-  }
+                   appMeta: Map[String, String] = Map.empty): Int =
+    overwriteAllWith(latest(), df, appMeta, once = None)
+
+  private def overwriteAllWith(s: Snapshot, df: DataFrame,
+                               appMeta: Map[String, String],
+                               once: Option[Once]): Int =
+    commit(Change.data(writeData(enforced(df, s), s),
+        appMeta + ("operation" -> "overwrite"))
+      .copy(replace = Rebase(s.files.map(_.path).toSet)).once(once))
 
   /** Filter-scoped overwrite (`INSERT OVERWRITE ... PARTITION (...)`,
     * `DataFrameWriterV2.overwrite(cond)` — Spark's
@@ -1628,15 +1533,9 @@ class LakeTable private (
         "replacement")
     val pending = writeData(enforced(df, s), s)
     if (provenPaths.isEmpty && pending.files.isEmpty) return s.version
-    commitWith(Some(pending), provenPaths,
-      appMeta + ("operation" -> "overwrite",
-        "overwrite.predicate" -> condition.toString),
-      guard = None, alter = None, strictReplace = true,
-      // whole files leave wholesale and df's rows are independent of
-      // them — live MOR deletes (a prior SQL DELETE/MERGE) are not a
-      // conflict: rows they killed in replaced files die with the
-      // files, rows in untouched files keep their delete entries
-      replaceReadsRows = false)
+    commit(Change.data(pending, appMeta + ("operation" -> "overwrite",
+        "overwrite.predicate" -> condition.toString))
+      .copy(replace = WholeFiles(provenPaths)))
   }
 
   /** DYNAMIC partition overwrite (`INSERT OVERWRITE` under
@@ -1693,11 +1592,9 @@ class LakeTable private (
     val replaced = entries
       .filter(e => touched(dirOf(e.path.stripPrefix("data/"))))
       .map(_.path).toSet
-    commitWith(Some(pending), replaced,
-      appMeta + ("operation" -> "overwrite",
-        "overwrite.dynamicPartitions" -> touched.size.toString),
-      guard = None, alter = None, strictReplace = true,
-      replaceReadsRows = false) // whole partitions, rows never read
+    commit(Change.data(pending, appMeta + ("operation" -> "overwrite",
+        "overwrite.dynamicPartitions" -> touched.size.toString))
+      .copy(replace = WholeFiles(replaced)))
   }
 
   /** Files whose EVERY row provably satisfies `condition` — the
@@ -1844,15 +1741,15 @@ class LakeTable private (
     * changes serializes it against racing appends. */
   def addColumn(name: String,
                 dataType: org.apache.spark.sql.types.DataType): Int =
-    commitAlter(Map("alter" -> s"add $name")) { s =>
+    commit(Change.metadata(Map("alter" -> s"add $name")) { s =>
       require(!s.schema.fieldNames.contains(name),
         s"column $name already exists at $root")
       val id = math.max(s.lastFieldId,
         s.fieldIds.values.foldLeft(0)(math.max)) + 1
-      (StructType(s.schema.fields :+
+      sameMeta(s).copy(schema = StructType(s.schema.fields :+
         StructField(name, dataType, nullable = true)),
-        s.fieldIds + (name -> id))
-    }
+        ids = s.fieldIds + (name -> id))
+    })
 
   /** Idempotent append keyed by (writerId, batchId): commits at most
     * once per writer per batch id (exactly-once sink contract for
@@ -1864,19 +1761,27 @@ class LakeTable private (
     * per-writer high-water mark rides in EVERY snapshot and is
     * re-checked inside the commit loop — atomic with the commit. */
   def appendExactlyOnce(df: DataFrame, writerId: String,
-                        batchId: Long): Int = {
-    val key = writerKey(writerId)
-    // cheap pre-check saves the data write on obvious replays; the
-    // authoritative check is the guard inside the commit loop
-    val s = latest()
-    if (s.highWater.get(key).exists(_ >= batchId)) s.version
-    else commit(writeData(enforced(df, s), s), Set.empty,
-      Map(BatchIdKey -> batchId.toString, WriterIdKey -> writerId),
-      Some(MonotoneGuard(key, batchId)))
-  }
+                        batchId: Long): Int =
+    exactlyOnce(writerId, batchId) { (s, once) =>
+      commit(Change.data(writeData(enforced(df, s), s), Map.empty)
+        .once(once))
+    }
 
   def appendExactlyOnce(df: DataFrame, batchId: Long): Int =
     appendExactlyOnce(df, DefaultWriter, batchId)
+
+  /** The one exactly-once entry of every `*ExactlyOnce` protocol: runs
+    * `write` on the latest snapshot with the (writerId, batchId) guard
+    * and stamp, unless that snapshot shows the batch committed. The
+    * pre-check saves the data write on obvious replays; the guard
+    * inside the commit loop is the authoritative check. */
+  private def exactlyOnce(writerId: String, batchId: Long)(
+      write: (Snapshot, Option[Once]) => Int): Int = {
+    val once = Once(writerId, batchId)
+    val s = latest()
+    if (s.highWater.get(once.guard.key).exists(_ >= batchId)) s.version
+    else write(s, Some(once))
+  }
 
   /** Idempotent FULL overwrite keyed by (writerId, batchId) — the
     * exactly-once form of [[overwriteAll]], what a COMPLETE-mode
@@ -1886,18 +1791,8 @@ class LakeTable private (
     * high-water guard as [[appendExactlyOnce]] — atomic with the
     * commit, so the table never holds a duplicated epoch. */
   def overwriteAllExactlyOnce(df: DataFrame, writerId: String,
-                              batchId: Long): Int = {
-    val key = writerKey(writerId)
-    val s = latest()
-    if (s.highWater.get(key).exists(_ >= batchId)) s.version
-    else
-      commitWith(Some(writeData(enforced(df, s), s)),
-        replacedFiles = s.files.map(_.path).toSet,
-        Map("operation" -> "overwrite", BatchIdKey -> batchId.toString,
-          WriterIdKey -> writerId),
-        guard = Some(MonotoneGuard(key, batchId)), alter = None,
-        appliedDeletes = s.deletes.map(_.path).toSet)
-  }
+                              batchId: Long): Int =
+    exactlyOnce(writerId, batchId)(overwriteAllWith(_, df, Map.empty, _))
 
   /** Highest streaming batch id committed by `writerId` (-1 if none). */
   def lastBatchId(writerId: String): Long =
@@ -1915,8 +1810,8 @@ class LakeTable private (
                               value: Long,
                               appMeta: Map[String, String]): Int = {
     val s = latest()
-    commit(writeData(enforced(df, s), s), Set.empty, appMeta,
-      Some(CasGuard(key, expected, value)))
+    commit(Change.data(writeData(enforced(df, s), s), appMeta)
+      .copy(guard = Some(CasGuard(key, expected, value))))
   }
 
   /** Compaction: rewrite snapshot `currentVersion`'s file set into
@@ -2175,13 +2070,11 @@ class LakeTable private (
       } else if (sortBy.nonEmpty)
         base.repartition(1).sortWithinPartitions(sortBy.map(col): _*)
       else base.repartition(1)
-    commitWith(Some(writeData(shaped, s)),
-      replacedFiles = subset.map(_.path).toSet,
-      Map("compaction" -> "true") ++
+    commit(Change.data(writeData(shaped, s), Map("compaction" -> "true") ++
         (if (sortBy.isEmpty) Map.empty[String, String]
-         else Map("compaction.sortBy" -> sortBy.mkString(","))),
-      guard = None, alter = None, strictReplace = true,
-      appliedDeletes = dels.map(_.path).toSet)
+         else Map("compaction.sortBy" -> sortBy.mkString(","))))
+      .copy(replace = RowRewrite(subset.map(_.path).toSet,
+        dels.map(_.path).toSet)))
   }
 
   /** Z-order compaction: files are clustered on the Morton interleave
@@ -2253,10 +2146,9 @@ class LakeTable private (
     val survivors =
       readEntries(entries.filter(e => affected(e.path)), s, deletes = dels)
         .filter(not(coalesce(condition, lit(false))))
-    commitWith(Some(writeData(survivors, s)), affected,
-      Map("delete.predicate" -> condition.toString),
-      guard = None, alter = None, strictReplace = true,
-      appliedDeletes = dels.map(_.path).toSet)
+    commit(Change.data(writeData(survivors, s),
+        Map("delete.predicate" -> condition.toString))
+      .copy(replace = RowRewrite(affected, dels.map(_.path).toSet)))
   }
 
   /** MERGE-ON-READ DELETE (Iceberg-v2-style position deletes): mark
@@ -2319,55 +2211,57 @@ class LakeTable private (
         .repartitionByRange(numParts, col(DeleteFileCol),
           col(DeletePosCol))
         .sortWithinPartitions(DeleteFileCol, DeletePosCol)
-    val entries = writeDeleteFiles(positions)
+    val entries = writeDeleteFiles(positions, keyCols = Nil)
     if (entries.isEmpty) return s.version
-    commitWith(None, Set.empty,
-      Map("delete.positional" -> condition.toString,
-        "delete.rows" -> entries.map(_.rows).sum.toString),
-      guard = None, alter = Some(sameSchema),
-      newDeletes = entries,
-      requireLive = entries.flatMap(_.covers).toSet)
+    commit(Change.metadata(Map("delete.positional" -> condition.toString,
+        "delete.rows" -> entries.map(_.rows).sum.toString))(sameMeta)
+      .copy(deletes = entries))
   }
 
-  /** Write `positions` — (DeleteFileCol = manifest-relative data file,
-    * DeletePosCol = row position) — as position-delete parquet under
-    * `deletes/` through the same rename-free task-committed protocol
-    * as data files, returning the [[DeleteEntry]]s with EXACT covers
-    * (read back from the written files, never recomputed from the
-    * plan). Empty shards are reclaimed immediately; returns Nil (and
-    * leaves nothing on disk) when no position survived. The CALLER
-    * commits — pairing the entries with data files in one atomic
-    * commit is what SQL UPDATE/MERGE (applyRowDelta) needs. */
-  private def writeDeleteFiles(positions: DataFrame): Seq[DeleteEntry] = {
+  /** Write `rows` as merge-on-read delete parquet under `deletes/`
+    * through the same rename-free task-committed protocol as data
+    * files, returning one [[DeleteEntry]] per non-empty file. With
+    * `keyCols`, the rows are equality-delete key tuples (in table
+    * types); without, they are positions — (DeleteFileCol =
+    * manifest-relative data file, DeletePosCol = row position) — and
+    * each entry carries its EXACT covers, read back from the written
+    * file, never recomputed from the plan. Empty shards are reclaimed
+    * immediately; returns Nil (and leaves nothing on disk) when no row
+    * survived. The CALLER commits — pairing the entries with data files
+    * in one atomic commit is what SQL UPDATE/MERGE (applyRowDelta) and
+    * the merge-on-read upsert need. */
+  private def writeDeleteFiles(rows: DataFrame,
+                               keyCols: Seq[String]): Seq[DeleteEntry] = {
     import org.apache.spark.sql.functions.{col, collect_set}
+    // coalesce(8) caps key frames at the plan's own partition count
+    // without a second physical planning. The 8 is scale-safe, not a
+    // local-mode tuning: key frames are metadata-scale by construction
+    // (the keys one GDPR/CDC commit removes, kilobytes to low MB), and
+    // 8 delete files bound manifest growth per commit — at 100 TB the
+    // DATA side scales, the key frame does not. Positions arrive
+    // range-clustered by the caller.
+    val shaped = if (keyCols.isEmpty) rows else rows.coalesce(8)
     // per-file row counts ride the task-commit messages — no fresh-
     // file reads here, and a no-match delete skips the covers job
-    // entirely
     val relsMetas = org.apache.spark.sql.graft.DirectWrite
-      .parquetWithMetas(positions, s"$root/deletes", Seq.empty)
-    val rels = relsMetas.map(_._1)
+      .parquetWithMetas(shaped, s"$root/deletes", Seq.empty)
     val rowsByRel = relsMetas.map { case (r, m) => r -> m._1 }.toMap
-    def absRel(r: String) = s"$root/deletes/data/$r"
-    if (rowsByRel.values.sum == 0L) {
-      // nothing matched: reclaim the empty write
-      rels.foreach(r => Files.deleteIfExists(
-        Paths.get(root, "deletes", "data", r)))
-      return Nil
-    }
-    val live = rels.filter(rowsByRel(_) > 0)
-    // a rare empty shard (all its rows were range-partitioned away)
-    // would just be an orphan — reclaim it now instead of at vacuum
-    rels.filterNot(live.contains).foreach(r =>
+    val live = relsMetas.map(_._1).filter(rowsByRel(_) > 0)
+    // empty shards (nothing matched, or all of a task's rows were
+    // partitioned away) would just be orphans — reclaim them now
+    rowsByRel.keys.filterNot(live.contains).foreach(r =>
       Files.deleteIfExists(Paths.get(root, "deletes", "data", r)))
+    if (keyCols.nonEmpty)
+      return live.map(r => DeleteEntry(s"deletes/data/$r", rowsByRel(r),
+        covers = Nil, kind = "eq", keyCols = keyCols))
+    if (live.isEmpty) return Nil
     // exact covered data files PER written delete file — the commit
     // conflict check and the compaction drop rule key on this set;
     // driver-bounded by (delete files x covered data files), both
     // metadata-scale
     val coversByFile = spark.read.schema(deleteSchema)
-      .parquet(live.map(absRel): _*)
-      .select(col(DeleteFileCol),
-        org.apache.spark.sql.functions.col("_metadata.file_path")
-          .as("__w"))
+      .parquet(live.map(r => s"$root/deletes/data/$r"): _*)
+      .select(col(DeleteFileCol), col("_metadata.file_path").as("__w"))
       .groupBy("__w")
       .agg(collect_set(DeleteFileCol).as("__cv"))
       .collect()
@@ -2398,8 +2292,7 @@ class LakeTable private (
     * stale. Returns the committed version (unchanged for empty
     * keys). */
   def deleteWhereEqual(keys: DataFrame, keyCols: Seq[String]): Int =
-    deleteWhereEqualWith(latest(), keys, keyCols, guard = None,
-      extraMeta = Map.empty)
+    deleteWhereEqualWith(latest(), keys, keyCols, once = None)
 
   /** [[deleteWhereEqual]] with the (writerId, batchId) exactly-once
     * guard of [[appendExactlyOnce]] — what a CDC consumer mirroring
@@ -2408,19 +2301,12 @@ class LakeTable private (
     * entry would carry a fresh (higher) sequence number and kill
     * rows legitimately re-inserted since the original commit. */
   def deleteWhereEqualExactlyOnce(keys: DataFrame, keyCols: Seq[String],
-                                  writerId: String, batchId: Long): Int = {
-    val key = writerKey(writerId)
-    val s = latest()
-    if (s.highWater.get(key).exists(_ >= batchId)) s.version
-    else deleteWhereEqualWith(s, keys, keyCols,
-      Some(MonotoneGuard(key, batchId)),
-      Map(BatchIdKey -> batchId.toString, WriterIdKey -> writerId))
-  }
+                                  writerId: String, batchId: Long): Int =
+    exactlyOnce(writerId, batchId)(deleteWhereEqualWith(_, keys, keyCols, _))
 
   private def deleteWhereEqualWith(snap: Snapshot, keys: DataFrame,
                                    keyCols: Seq[String],
-                                   guard: Option[CommitGuard],
-                                   extraMeta: Map[String, String]): Int = {
+                                   once: Option[Once]): Int = {
     import org.apache.spark.sql.functions.col
     require(keyCols.nonEmpty, "equality delete requires key columns")
     val s = snap.schema
@@ -2429,33 +2315,11 @@ class LakeTable private (
     val aligned = keys
       .select(keyCols.map(c => col(c).cast(s(c).dataType)): _*)
       .distinct()
-    // coalesce(8) caps at the plan's own partition count, so this is
-    // min(8, partitions) without forcing a second physical planning
-    // (.rdd.getNumPartitions built a full QueryExecution just to read
-    // the number). The 8 is scale-safe, not a local-mode tuning:
-    // forget-key frames are metadata-scale by construction (keys of
-    // the rows one GDPR/CDC commit removes, kilobytes to low MB), and
-    // capping them at 8 delete files bounds manifest growth per
-    // commit — at 100 TB the DATA side scales, the key frame does not.
-    val relsMetas = org.apache.spark.sql.graft.DirectWrite
-      .parquetWithMetas(aligned.coalesce(8), s"$root/deletes", Seq.empty)
-    val rels = relsMetas.map(_._1)
-    val rowsByRel = relsMetas.map { case (r, m) => r -> m._1 }.toMap
-    if (rowsByRel.values.sum == 0L) {
-      rels.foreach(r => Files.deleteIfExists(
-        Paths.get(root, "deletes", "data", r)))
-      return snap.version
-    }
-    val live = rels.filter(rowsByRel(_) > 0)
-    rels.filterNot(live.contains).foreach(r =>
-      Files.deleteIfExists(Paths.get(root, "deletes", "data", r)))
-    val entries = live.map(r => DeleteEntry(s"deletes/data/$r",
-      rowsByRel(r), covers = Nil, kind = "eq", keyCols = keyCols))
-    commitWith(None, Set.empty,
-      Map("delete.equality" -> keyCols.mkString(","),
-        "delete.rows" -> rowsByRel.values.sum.toString) ++ extraMeta,
-      guard = guard, alter = Some(sameSchema),
-      newDeletes = entries)
+    val entries = writeDeleteFiles(aligned, keyCols)
+    if (entries.isEmpty) return snap.version
+    commit(Change.metadata(Map("delete.equality" -> keyCols.mkString(","),
+        "delete.rows" -> entries.map(_.rows).sum.toString))(sameMeta)
+      .copy(deletes = entries).once(once))
   }
 
   /** MERGE / upsert keyed on `keyCols`: every target row whose key
@@ -2471,8 +2335,7 @@ class LakeTable private (
     * matching keys degrades to a plain append (no rewrite at all). */
   def upsert(source: DataFrame, keyCols: Seq[String]): Int = {
     val s = latest()
-    upsertWith(s, enforced(source, s), keyCols, guard = None,
-      extraMeta = Map.empty)
+    upsertWith(s, enforced(source, s), keyCols, once = None)
   }
 
   /** [[upsert]] with the (writerId, batchId) exactly-once guard of
@@ -2484,20 +2347,13 @@ class LakeTable private (
     * instead, so the table state is exactly the no-crash outcome
     * regardless of the aggregate's determinism. */
   def upsertExactlyOnce(source: DataFrame, keyCols: Seq[String],
-                        writerId: String, batchId: Long): Int = {
-    val key = writerKey(writerId)
-    val s = latest()
-    if (s.highWater.get(key).exists(_ >= batchId)) s.version
-    else upsertWith(s, enforced(source, s), keyCols,
-      guard = Some(MonotoneGuard(key, batchId)),
-      extraMeta = Map(BatchIdKey -> batchId.toString,
-        WriterIdKey -> writerId))
-  }
+                        writerId: String, batchId: Long): Int =
+    exactlyOnce(writerId, batchId) { (s, once) =>
+      upsertWith(s, enforced(source, s), keyCols, once)
+    }
 
   private def upsertWith(s: Snapshot, source: DataFrame,
-                         keyCols: Seq[String],
-                         guard: Option[CommitGuard],
-                         extraMeta: Map[String, String]): Int = {
+                         keyCols: Seq[String], once: Option[Once]): Int = {
     import org.apache.spark.sql.functions.col
     require(keyCols.nonEmpty, "upsert requires at least one key column")
     // one snapshot for schema + files + deletes (same rationale as
@@ -2522,10 +2378,10 @@ class LakeTable private (
           deletes = dels)
         .join(srcKeys, keyCols, "left_anti")
         .unionByName(src)
-    commitWith(Some(writeData(rewritten, s)), affected,
-      Map("merge.keys" -> keyCols.mkString(",")) ++ extraMeta,
-      guard = guard, alter = None, strictReplace = true,
-      appliedDeletes = dels.map(_.path).toSet)
+    commit(Change.data(writeData(rewritten, s),
+        Map("merge.keys" -> keyCols.mkString(",")))
+      .copy(replace = RowRewrite(affected, dels.map(_.path).toSet))
+      .once(once))
   }
 
   /** Merge-on-read MERGE / upsert keyed on `keyCols` — [[upsert]]'s
@@ -2546,28 +2402,20 @@ class LakeTable private (
     * upstream. */
   def upsertMor(source: DataFrame, keyCols: Seq[String]): Int = {
     val s = latest()
-    upsertMorWith(s, enforced(source, s), keyCols, guard = None,
-      extraMeta = Map.empty)
+    upsertMorWith(s, enforced(source, s), keyCols, once = None)
   }
 
   /** [[upsertMor]] with the (writerId, batchId) exactly-once guard of
     * [[appendExactlyOnce]] — the MOR twin of [[upsertExactlyOnce]],
     * for streaming merge sinks whose micro-batches must apply once. */
   def upsertMorExactlyOnce(source: DataFrame, keyCols: Seq[String],
-                           writerId: String, batchId: Long): Int = {
-    val key = writerKey(writerId)
-    val s = latest()
-    if (s.highWater.get(key).exists(_ >= batchId)) s.version
-    else upsertMorWith(s, enforced(source, s), keyCols,
-      guard = Some(MonotoneGuard(key, batchId)),
-      extraMeta = Map(BatchIdKey -> batchId.toString,
-        WriterIdKey -> writerId))
-  }
+                           writerId: String, batchId: Long): Int =
+    exactlyOnce(writerId, batchId) { (s, once) =>
+      upsertMorWith(s, enforced(source, s), keyCols, once)
+    }
 
   private def upsertMorWith(snap: Snapshot, source: DataFrame,
-                            keyCols: Seq[String],
-                            guard: Option[CommitGuard],
-                            extraMeta: Map[String, String]): Int = {
+                            keyCols: Seq[String], once: Option[Once]): Int = {
     require(keyCols.nonEmpty, "upsert requires at least one key column")
     // ONE snapshot for schema + transforms + bucket layout: a
     // concurrent schema commit between separate reads could misalign
@@ -2589,36 +2437,17 @@ class LakeTable private (
       // every later batch's predecessor check against a stale mark)
       pending.files.foreach(f =>
         Files.deleteIfExists(Paths.get(root, f.path)))
-      return guard match {
-        case Some(_) =>
-          commitWith(None, Set.empty, extraMeta, guard,
-            alter = Some(sameSchema))
-        case None => snap.version
-      }
+      return if (once.isEmpty) snap.version
+        else commit(Change.metadata(Map.empty)(sameMeta).once(once))
     }
     val keySchema = StructType(keyCols.map(c => s(c)))
     val keys = spark.read.schema(keySchema)
       .parquet(pending.files.map(f => s"$root/${f.path}"): _*)
       .distinct()
-    // same min(8, partitions)-via-coalesce as deleteWhereEqualWith:
-    // no extra planning pass just to read the partition count, and the
-    // same scale rationale — the key frame is metadata-scale (one
-    // commit's removed-row keys), so 8 files bounds manifest growth
-    // without ever throttling a data-sized write
-    val relsMetas = org.apache.spark.sql.graft.DirectWrite
-      .parquetWithMetas(keys.coalesce(8), s"$root/deletes", Seq.empty)
-    val rels = relsMetas.map(_._1)
-    val rowsByRel = relsMetas.map { case (r, m) => r -> m._1 }.toMap
-    val live = rels.filter(rowsByRel(_) > 0)
-    rels.filterNot(live.contains).foreach(r =>
-      Files.deleteIfExists(Paths.get(root, "deletes", "data", r)))
-    val delEntries = live.map(r => DeleteEntry(s"deletes/data/$r",
-      rowsByRel(r), covers = Nil, kind = "eq", keyCols = keyCols))
-    commitWith(Some(pending), Set.empty,
-      Map("merge.keys" -> keyCols.mkString(","),
-        "merge.mor" -> "true",
-        "merge.rows" -> dataRows.toString) ++ extraMeta,
-      guard = guard, alter = None, newDeletes = delEntries)
+    val delEntries = writeDeleteFiles(keys, keyCols)
+    commit(Change.data(pending, Map("merge.keys" -> keyCols.mkString(","),
+        "merge.mor" -> "true", "merge.rows" -> dataRows.toString))
+      .copy(deletes = delEntries).once(once))
   }
 
   /** Apply a ROW-LEVEL DELTA in ONE atomic commit: `deletePositions`
@@ -2710,12 +2539,10 @@ class LakeTable private (
         .join(delKeys, Seq("__rel", PosTag), "left_anti")
         .drop("__fn", "__rel", FileTag, PosTag)
       val survivorsPending = writeData(survivors, s)
-      commitWith(
-        Some(PendingWrite(pending.files ++ survivorsPending.files,
-          pending.schema)),
-        affected, meta + ("delta.mode" -> "copy-on-write"),
-        guard = None, alter = None, strictReplace = true,
-        appliedDeletes = dels.map(_.path).toSet)
+      commit(Change.data(PendingWrite(
+          pending.files ++ survivorsPending.files, pending.schema),
+          meta + ("delta.mode" -> "copy-on-write"))
+        .copy(replace = RowRewrite(affected, dels.map(_.path).toSet)))
     } else {
       // positions range-clustered on (file, pos): tight covers per
       // delete file, partition count bounded so a small delta never
@@ -2727,14 +2554,11 @@ class LakeTable private (
         else writeDeleteFiles(delPinned
           .repartitionByRange(numParts, col(DeleteFileCol),
             col(DeletePosCol))
-          .sortWithinPartitions(DeleteFileCol, DeletePosCol))
-      commitWith(
-        if (insRows > 0) Some(pending) else { reclaim(); None },
-        Set.empty, meta,
-        guard = None,
-        alter = if (insRows > 0) None else Some(sameSchema),
-        newDeletes = delEntries,
-        requireLive = delEntries.flatMap(_.covers).toSet)
+          .sortWithinPartitions(DeleteFileCol, DeletePosCol), keyCols = Nil)
+      val change =
+        if (insRows > 0) Change.data(pending, meta)
+        else { reclaim(); Change.metadata(meta)(sameMeta) }
+      commit(change.copy(deletes = delEntries))
     }
   }
 
@@ -2760,11 +2584,10 @@ class LakeTable private (
     // readAt applies the base's position deletes, so the rewrite
     // ABSORBS them: the commit drops every delete file whose covered
     // data files all got replaced (here: all of them)
-    commitWith(Some(writeData(shape(readAt(base)), cur)),
-      replacedFiles = base.files.map(_.path).toSet,
-      Map("compaction" -> "true") ++ extraMeta, guard = None,
-      alter = None, strictReplace = true,
-      appliedDeletes = base.deletes.map(_.path).toSet)
+    commit(Change.data(writeData(shape(readAt(base)), cur),
+        Map("compaction" -> "true") ++ extraMeta)
+      .copy(replace = RowRewrite(base.files.map(_.path).toSet,
+        base.deletes.map(_.path).toSet)))
 
   private lazy val hadoopConf = spark.sessionState.newHadoopConf()
 
@@ -2891,249 +2714,6 @@ class LakeTable private (
     PendingWrite(entries, df.schema)
   }
 
-  /** Optimistic-concurrency metadata commit. `replacedFiles` names the
-    * exact files this commit supersedes (empty for plain appends): on
-    * every retry the base is re-read, so files added by concurrent
-    * committers are carried forward instead of dropped. The optional
-    * guard is evaluated against the freshly-read snapshot on EVERY
-    * retry, making offset checks atomic with the commit. */
-  private def commit(pending: PendingWrite, replacedFiles: Set[String],
-                     meta: Map[String, String],
-                     guard: Option[CommitGuard]): Int =
-    commitWith(Some(pending), replacedFiles, meta, guard, alter = None)
-
-  /** Metadata-only schema change committed through the same optimistic
-    * loop as data (so it serializes correctly against racing appends —
-    * the transform is re-applied to the freshly-read snapshot on every
-    * retry). */
-  private def commitAlter(meta: Map[String, String])(
-      alter: Snapshot => (StructType, Map[String, Int])): Int =
-    commitWith(None, Set.empty, meta, guard = None, alter = Some(alter))
-
-  /** The alter of a metadata-only commit that keeps the schema. */
-  private val sameSchema: Snapshot => (StructType, Map[String, Int]) =
-    s => (s.schema, s.fieldIds)
-
-  private def commitWith(pending: Option[PendingWrite],
-                         replacedFiles: Set[String],
-                         meta: Map[String, String],
-                         guard: Option[CommitGuard],
-                         // schema change against the freshly-read
-                         // snapshot; it sees lastFieldId, which any
-                         // alter that ADDS fields needs: minting IDs
-                         // from max(live ids) would reuse a retired ID
-                         // after a drop, and field-ID read resolution
-                         // would then serve the dropped column's old
-                         // data under the new field's name
-                         alter: Option[Snapshot =>
-                           (StructType, Map[String, Int])],
-                         strictReplace: Boolean = false,
-                         // false for WHOLE-FILE overwrites: they never
-                         // READ the replaced files' rows (new rows come
-                         // from the caller's DataFrame, stamped above
-                         // every live delete's seq), so a concurrent
-                         // merge-on-read delete cannot be resurrected
-                         // by them and the unapplied-delete conflict
-                         // check below must not fire — only row-level
-                         // rewrites, whose survivors derive from the
-                         // replaced rows, can resurrect
-                         replaceReadsRows: Boolean = true,
-                         alterProps: Option[Map[String, String] =>
-                           Map[String, String]] = None,
-                         newDeletes: Seq[DeleteEntry] = Nil,
-                         requireLive: Set[String] = Set.empty,
-                         appliedDeletes: Set[String] = Set.empty,
-                         // partition-spec evolution: replace the
-                         // snapshot's partitionBy (new files' layout);
-                         // existing files keep their recorded values
-                         alterPartitionBy: Option[Seq[String]] = None)
-      : Int = {
-    var attempt = 0
-    var lastSeen = Int.MinValue
-    var stalls = 0
-    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-    while (true) {
-      val cur = latest()
-      val v = cur.version
-      // losing a slot whose winner is not yet READABLE (the visibility
-      // lag CommitStore explicitly permits) re-reads the same version:
-      // spinning would burn the whole retry budget inside the lag
-      // window, so back off — but only when no progress is observed
-      // (on a read-your-win store every lost race advances v and pays
-      // zero sleep). The budget is TIME-based, not count-based.
-      if (v == lastSeen) {
-        stalls += 1
-        Thread.sleep(java.util.concurrent.ThreadLocalRandom.current()
-          .nextLong(1L << math.min(6, stalls)))
-      } else stalls = 0
-      lastSeen = v
-      if (strictReplace && replacedFiles.nonEmpty) {
-        // row-level rewrites must not resurrect rows a concurrent
-        // rewrite already superseded: every file we're replacing must
-        // still be live in the snapshot we commit against
-        val missing = replacedFiles -- cur.files.map(_.path).toSet
-        if (missing.nonEmpty)
-          throw new java.util.ConcurrentModificationException(
-            s"rewrite conflict at $root: ${missing.size} base file(s) " +
-              "superseded by a concurrent commit")
-        // ...and must not resurrect rows a merge-on-read DELETE marked
-        // since the rewrite's base was read: any live position-delete
-        // file covering a replaced data file — or ANY live equality
-        // delete (its key scope spans every pre-delete file, and the
-        // rewrite re-stamps rows to a seq ABOVE it) — must be one this
-        // rewrite already applied, else the rewritten survivors
-        // contain rows the concurrent delete committed away
-        if (replaceReadsRows) {
-          val unapplied = cur.deletes.filter(e =>
-            !appliedDeletes.contains(e.path) &&
-              (e.kind == "eq" || e.covers.exists(replacedFiles.contains)))
-          if (unapplied.nonEmpty)
-            throw new java.util.ConcurrentModificationException(
-              s"rewrite conflict at $root: ${unapplied.size} position-" +
-                "delete file(s) landed since the rewrite's base; " +
-                "committing would resurrect their deleted rows")
-        }
-      }
-      if (requireLive.nonEmpty) {
-        // a positional delete names (file, pos) pairs of a specific
-        // snapshot's files: if a concurrent rewrite superseded any
-        // covered file, the positions no longer denote the same rows
-        // and committing them would silently drop the delete
-        val gone = requireLive -- cur.files.map(_.path).toSet
-        if (gone.nonEmpty)
-          throw new java.util.ConcurrentModificationException(
-            s"positional delete conflict at $root: ${gone.size} " +
-              "covered data file(s) rewritten by a concurrent commit")
-      }
-      val hw = cur.highWater
-      guard match {
-        case Some(MonotoneGuard(k, value)) if hw.getOrElse(k, -1L) >= value =>
-          // a racer already committed this (or a later) offset: the
-          // write becomes a no-op instead of a duplicate
-          return v
-        case Some(CasGuard(k, expected, _))
-            if hw.getOrElse(k, -1L) != expected =>
-          throw new StaleOffsetException(
-            s"offset $k moved to ${hw.getOrElse(k, -1L)} " +
-              s"(expected $expected) at $root")
-        case _ => ()
-      }
-      val newHw = guard match {
-        case Some(g) =>
-          hw + (g.key -> math.max(hw.getOrElse(g.key, -1L), g.value))
-        case None => hw
-      }
-      val (newSchema, newIds) = alter match {
-        case Some(t) => t(cur)
-        case None =>
-          evolve(cur.schema, cur.fieldIds, cur.lastFieldId, pending.get.schema)
-      }
-      // new files record physicalName -> fieldId as of THIS commit (the
-      // identity that later renames/drops resolve against) and the
-      // commit's DATA SEQUENCE NUMBER (what equality deletes compare
-      // their own seq against)
-      val stamped = pending.map(_.files.map(f =>
-        f.copy(cols = pending.get.schema.fieldNames.toSeq
-          .map(n => n -> newIds(n)), seq = v + 1L))).getOrElse(Nil)
-      // an equality delete's seq IS its committed version — stamped
-      // per attempt so the sequence comparison is exact under retries
-      val stampedDeletes = newDeletes.map(e =>
-        if (e.kind == "eq") e.copy(seq = v + 1L) else e)
-      // Manifest-list commit: unchanged manifests are REFERENCED, not
-      // rewritten — the snapshot write is O(this batch). Only
-      // manifests actually holding a replaced file are rewritten
-      // (minus those files); their survivors ride with the new batch.
-      val curRefs = cur.manifests
-      val (keptRefs, rewriteFiles) =
-        if (replacedFiles.isEmpty) (curRefs, Nil)
-        else {
-          val (touched, untouched) = curRefs.partition(r =>
-            readManifest(r).exists(f => replacedFiles.contains(f.path)))
-          (untouched, touched.flatMap(readManifest)
-            .filterNot(f => replacedFiles.contains(f.path)))
-        }
-      val newEntries = rewriteFiles ++ stamped
-      val refs = mergeManifests(keptRefs ++
-        (if (newEntries.nonEmpty) Seq(writeManifest(newEntries)) else Nil))
-      // Delete-manifest update, the mirror of the data rule: plain
-      // appends reference the refs untouched (O(0) delete metadata);
-      // a positional delete adds one manifest of its own entries; a
-      // rewrite drops delete files whose covered data files ALL left
-      // the live set (their positions can no longer match any scanned
-      // row — compaction thereby absorbs deletes lazily), rewriting
-      // only the manifests that actually held a dropped entry.
-      val deleteRefs: Seq[ManifestRef] = {
-        val cur0 = cur.deleteManifests
-        val withNew =
-          if (stampedDeletes.isEmpty) cur0
-          else mergeDeleteManifests(
-            cur0 :+ writeDeleteManifest(stampedDeletes))
-        if (replacedFiles.isEmpty || withNew.isEmpty) withNew
-        else {
-          // dead rules, evaluated against the post-commit LIVE set
-          // (not merely "replaced by this commit" — covered files may
-          // have died one-by-one across earlier rewrites and the
-          // entry must drop once the LAST one goes):
-          //   pos — no covered data file remains live;
-          //   eq  — every live file's seq >= the entry's seq (no
-          //         pre-delete rows remain for its keys to match).
-          // Manifest reads here hit the process-wide cache and run
-          // only on rewrite commits, never appends.
-          val liveAfter = keptRefs.flatMap(readManifest) ++ newEntries
-          val livePaths = liveAfter.map(_.path).toSet
-          val minLiveSeq =
-            if (liveAfter.isEmpty) Long.MaxValue
-            else liveAfter.map(_.seq).min
-          def dead(e: DeleteEntry): Boolean =
-            if (e.kind == "eq") minLiveSeq >= e.seq
-            else !e.covers.exists(livePaths.contains)
-          val (touched, untouched) = withNew.partition(r =>
-            readDeleteManifest(r).exists(dead))
-          val survivors = touched.flatMap(readDeleteManifest)
-            .filterNot(dead)
-          mergeDeleteManifests(untouched ++
-            (if (survivors.nonEmpty) Seq(writeDeleteManifest(survivors))
-             else Nil))
-        }
-      }
-      // properties-only alteration re-applies to the freshly-read map
-      // on every retry, so it serializes against racing commits
-      val props = alterProps.map(_(cur.properties)).getOrElse(cur.properties)
-      // Stamp the snapshot's OPERATION at commit time — the writer
-      // knows it exactly from the commit's own structure, so
-      // meta("snapshots") reads one field instead of re-reading every
-      // retained snapshot's file list and diffing predecessors.
-      val operation: String =
-        meta.getOrElse("operation",
-          if (meta.get("compaction").contains("true")) "replace"
-          else if (stampedDeletes.nonEmpty)
-            { if (stamped.nonEmpty) "overwrite" else "delete" }
-          else if (replacedFiles.nonEmpty) {
-            val replacedRows = cur.files
-              .filter(f => replacedFiles.contains(f.path)).map(_.rows).sum
-            if (stamped.isEmpty || stamped.map(_.rows).sum < replacedRows)
-              "delete"
-            else "overwrite"
-          }
-          else if (stamped.nonEmpty) "append"
-          else "alter")
-      val node = snapshotJson(
-        version = v + 1, parent = v, schema = newSchema, ids = newIds,
-        props = props,
-        manifests = refs, meta = meta + ("operation" -> operation),
-        partitionBy = alterPartitionBy.getOrElse(cur.partitionBy),
-        highWater = newHw,
-        lastFieldId = cur.lastFieldId,
-        deleteManifests = deleteRefs)
-      if (tryCommit(commitStore, metaDir, v + 1, node)) return v + 1
-      attempt += 1
-      require(System.nanoTime() < deadline,
-        s"commit contention at $root: no progress after $attempt " +
-          "attempts in 60s, giving up")
-    }
-    -1 // unreachable
-  }
-
   // ---- schema evolution (rename/drop, Iceberg field-ID semantics) ----
 
   /** ALTER TABLE SET/UNSET TBLPROPERTIES: a metadata-only commit
@@ -3146,16 +2726,16 @@ class LakeTable private (
     * exempt by design, see [[enforced]]). */
   def updateProperties(updates: Map[String, String],
                        removals: Set[String] = Set.empty): Int =
-    commitWith(None, Set.empty, Map("alter" -> "properties"),
-      guard = None, alter = Some(sameSchema),
-      alterProps = Some(p => (p -- removals) ++ updates))
+    commit(Change.metadata(Map("alter" -> "properties")) { s =>
+      sameMeta(s).copy(props = (s.properties -- removals) ++ updates)
+    })
 
   /** Rename a column, KEEPING its field ID: files written under the old
     * name keep serving their data under the new one (resolved by ID at
     * read time) — a rename is never a drop+add. Partition columns can't
     * be renamed (their name is the directory layout). */
   def renameColumn(from: String, to: String): Int =
-    commitAlter(Map("alter" -> s"rename $from -> $to")) { snap =>
+    commit(Change.metadata(Map("alter" -> s"rename $from -> $to")) { snap =>
       val (s, ids) = (snap.schema, snap.fieldIds)
       require(s.fieldNames.contains(from), s"no column $from at $root")
       require(!s.fieldNames.contains(to), s"column $to already exists at $root")
@@ -3173,15 +2753,15 @@ class LakeTable private (
           "(compact to absorb the delete first)")
       val ns = StructType(s.fields.map(f =>
         if (f.name == from) f.copy(name = to) else f))
-      (ns, ids - from + (to -> ids(from)))
-    }
+      sameMeta(snap).copy(schema = ns, ids = ids - from + (to -> ids(from)))
+    })
 
   /** Drop a column: its field ID is RETIRED, never reused (lastFieldId
     * is monotone). A later add of the same name mints a fresh ID, so
     * data the dropped column left behind in old files can never
     * resurface under the re-added column. */
   def dropColumn(name: String): Int =
-    commitAlter(Map("alter" -> s"drop $name")) { snap =>
+    commit(Change.metadata(Map("alter" -> s"drop $name")) { snap =>
       val s = snap.schema
       require(s.fieldNames.contains(name), s"no column $name at $root")
       require(s.fields.length > 1, s"cannot drop the last column at $root")
@@ -3196,8 +2776,10 @@ class LakeTable private (
         e.kind == "eq" && e.keyCols.contains(name)),
         s"cannot drop $name: a live equality delete keys on it " +
           "(compact to absorb the delete first)")
-      (StructType(s.fields.filterNot(_.name == name)), snap.fieldIds - name)
-    }
+      sameMeta(snap).copy(
+        schema = StructType(s.fields.filterNot(_.name == name)),
+        ids = snap.fieldIds - name)
+    })
 
   /** PARTITION-SPEC EVOLUTION (Iceberg's headline maintenance feature):
     * re-declare the partition spec of a LIVE table — e.g. `days(ts)` ->
@@ -3240,10 +2822,8 @@ class LakeTable private (
     require(newPartBy.distinct.size == newPartBy.size,
       s"duplicate partition columns in $specs")
     val transformSpecs = parsed0.collect { case Right(t) => t.spec }
-    commitWith(None, Set.empty,
-      Map("alter" -> s"partition-spec ${specs.mkString(",")}"),
-      guard = None,
-      alter = Some { snap =>
+    commit(Change.metadata(
+        Map("alter" -> s"partition-spec ${specs.mkString(",")}")) { snap =>
         val (s, ids, last) = (snap.schema, snap.fieldIds, snap.lastFieldId)
         val parsed = specs.map(p => parseTransformSpec(p, s).toRight(p))
         parsed.collect { case Left(c) => c }.foreach(c =>
@@ -3260,11 +2840,7 @@ class LakeTable private (
               s"${s(t.phys).dataType.sql}, expected ${t.physType.sql}"))
         val added = fresh.map(t =>
           StructField(t.phys, t.physType, nullable = true))
-        (StructType(s.fields ++ added),
-          ids ++ fresh.zipWithIndex.map { case (t, i) =>
-            t.phys -> (last + i + 1) })
-      },
-      alterProps = Some { p =>
+        val p = snap.properties
         val oldCur = p.get(TransformsProp)
           .map(_.split(";").toSeq.map(_.trim).filter(_.nonEmpty))
           .getOrElse(Nil)
@@ -3272,13 +2848,16 @@ class LakeTable private (
           .map(_.split(";").toSeq.map(_.trim).filter(_.nonEmpty))
           .getOrElse(Nil) ++ oldCur)
           .distinct.filterNot(transformSpecs.contains)
-        (p - TransformsProp - TransformsHistoryProp) ++
-          (if (transformSpecs.isEmpty) Map.empty[String, String]
-           else Map(TransformsProp -> transformSpecs.mkString(";"))) ++
-          (if (hist.isEmpty) Map.empty[String, String]
-           else Map(TransformsHistoryProp -> hist.mkString(";")))
-      },
-      alterPartitionBy = Some(newPartBy))
+        TableMeta(StructType(s.fields ++ added),
+          ids ++ fresh.zipWithIndex.map { case (t, i) =>
+            t.phys -> (last + i + 1) },
+          (p - TransformsProp - TransformsHistoryProp) ++
+            (if (transformSpecs.isEmpty) Map.empty[String, String]
+             else Map(TransformsProp -> transformSpecs.mkString(";"))) ++
+            (if (hist.isEmpty) Map.empty[String, String]
+             else Map(TransformsHistoryProp -> hist.mkString(";"))),
+          newPartBy)
+      })
   }
 
   /** Iceberg-style rollback: commit a NEW snapshot whose file set,
@@ -3301,43 +2880,10 @@ class LakeTable private (
     * expiry; nothing is silently deleted from disk. */
   def rollbackTo(version: Int): Int = {
     val target = retained(version)
-    var attempt = 0
-    var lastSeen = Int.MinValue
-    var stalls = 0
-    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-    while (true) {
-      val cur = latest()
-      val v = cur.version
-      if (v == version) return v
-      // same stall-aware backoff as commitWith: sleep only when the
-      // lost slot's winner is not yet readable (v did not advance)
-      if (v == lastSeen) {
-        stalls += 1
-        Thread.sleep(java.util.concurrent.ThreadLocalRandom.current()
-          .nextLong(1L << math.min(6, stalls)))
-      } else stalls = 0
-      lastSeen = v
-      // rollback re-REFERENCES the target's manifests — O(1) metadata
-      // no matter how many files the restored snapshot holds
-      val node = snapshotJson(
-        version = v + 1, parent = v,
-        schema = target.schema,
-        ids = target.fieldIds,
-        props = cur.properties,
-        manifests = target.manifests,
-        meta = Map("rollback.to" -> version.toString,
-          "operation" -> "rollback"),
-        partitionBy = cur.partitionBy,
-        highWater = cur.highWater,
-        lastFieldId = cur.lastFieldId,
-        deleteManifests = target.deleteManifests)
-      if (tryCommit(commitStore, metaDir, v + 1, node)) return v + 1
-      attempt += 1
-      require(System.nanoTime() < deadline,
-        s"commit contention at $root: no progress after $attempt " +
-          "attempts in 60s, giving up")
-    }
-    -1 // unreachable
+    commit(Change.metadata(Map("rollback.to" -> version.toString,
+        "operation" -> "rollback")) { s =>
+      sameMeta(s).copy(schema = target.schema, ids = target.fieldIds)
+    }.copy(base = OnSnapshot(target)))
   }
 
   /** Iceberg-style snapshot retention: delete snapshot metadata older
@@ -3724,40 +3270,6 @@ class LakeTable private (
       .foreach(p => Files.deleteIfExists(p))
     deleted
   }
-
-  /** Additive evolution with Iceberg-style type widening: union of table
-    * and incoming columns; where both exist the resolved type is the
-    * wider of the two along the promotion chains byte<short<int<long and
-    * float<double (anything else is rejected); field IDs survive
-    * widening; new columns become nullable and get fresh, never-reused
-    * field IDs. Files written before a widening stay valid — the parquet
-    * reader upcasts their narrower physical type on scan. */
-  private def evolve(cur: StructType, ids: Map[String, Int],
-                     lastFieldId: Int,
-                     incoming: StructType): (StructType, Map[String, Int]) = {
-    val incomingByName = incoming.fields.map(f => f.name -> f).toMap
-    val resolved = cur.fields.map { existing =>
-      incomingByName.get(existing.name) match {
-        case Some(inc) =>
-          val t = widerOf(existing.dataType, inc.dataType).getOrElse(
-            throw new IllegalArgumentException(
-              s"type mismatch for ${existing.name}: table " +
-                s"${existing.dataType} vs append ${inc.dataType} " +
-                "(no promotion path)"))
-          existing.copy(dataType = t)
-        case None => existing
-      }
-    }
-    val curNames = cur.fieldNames.toSet
-    val added = incoming.fields.filterNot(f => curNames.contains(f.name))
-      .map(f => StructField(f.name, f.dataType, nullable = true))
-    // fresh IDs start above lastFieldId, not above max(live ids): a
-    // retired (dropped) column's ID must never be reassigned
-    var maxId = math.max(lastFieldId,
-      ids.values.foldLeft(0)(math.max))
-    val newIds = ids ++ added.map { f => maxId += 1; f.name -> maxId }
-    (StructType(resolved ++ added), newIds)
-  }
 }
 
 /** A compare-and-set-guarded commit lost its race: the guarded offset
@@ -3856,16 +3368,6 @@ object LakeTable {
     Map("compaction.auto.maxFiles" ->
       math.max(64, 2 * fanout).toString) ++
       sortBy.map("compaction.auto.sortBy" -> _)
-
-  /** Guard on a highWater offset, evaluated inside the commit loop. */
-  private[lake] sealed trait CommitGuard { def key: String; def value: Long }
-  /** Idempotent replay: no-op when the offset already reached `value`. */
-  private[lake] case class MonotoneGuard(key: String, value: Long)
-      extends CommitGuard
-  /** Compare-and-set: abort ([[StaleOffsetException]]) unless the offset
-    * still reads `expected`; record `value` on success. */
-  private[lake] case class CasGuard(key: String, expected: Long, value: Long)
-      extends CommitGuard
 
   /** `cols` maps each PHYSICAL parquet column name in the file to the
     * table field ID it was written under (Iceberg-style column identity:
@@ -4154,9 +3656,9 @@ object LakeTable {
   /** Process-wide immutable-manifest parse cache (manifests are
     * UUID-named and never rewritten, so entries cannot go stale;
     * crude clear-on-overflow keeps it bounded). */
-  private val manifestCache =
+  private[lake] val manifestCache =
     new java.util.concurrent.ConcurrentHashMap[String, Seq[FileEntry]]()
-  private val deleteManifestCache =
+  private[lake] val deleteManifestCache =
     new java.util.concurrent.ConcurrentHashMap[String, Seq[DeleteEntry]]()
   private val ManifestCacheMax = 4096
 
@@ -4279,7 +3781,7 @@ object LakeTable {
     }
   }
 
-  private def versionPath(metaDir: Path, v: Int): Path =
+  private[lake] def versionPath(metaDir: Path, v: Int): Path =
     metaDir.resolve(f"v$v%08d.json")
 
   def exists(root: String): Boolean =
@@ -4350,11 +3852,11 @@ object LakeTable {
        else Map(TransformsProp -> transforms.map(_.spec).mkString(";"))) ++
       bucketBy.map(b => Map("bucket.column" -> b._1,
         "bucket.count" -> b._2.toString)).getOrElse(Map.empty)
-    val node = snapshotJson(0, -1, fullSchema, ids, props,
-      manifests = Nil, Map.empty, fullParts)
-    require(tryCommit(store, metaDir, 0, node),
-      s"table already exists at $root")
-    new LakeTable(spark, root, store)
+    val t = new LakeTable(spark, root, store)
+    t.commit(t.Change.metadata(Map("operation" -> "create"))(
+      _ => Commit.TableMeta(fullSchema, ids, props, fullParts))
+      .copy(base = t.OnEmptyLog))
+    t
   }
 
   def load(spark: SparkSession, root: String,
@@ -4366,52 +3868,6 @@ object LakeTable {
   def createOrLoad(spark: SparkSession, root: String,
                    schema: StructType): LakeTable =
     if (exists(root)) load(spark, root) else create(spark, root, schema)
-
-  /** Snapshot JSON in the manifest-list shape: the snapshot itself
-    * holds schema/ids/props/offsets plus REFERENCES to immutable
-    * manifest files — never the file entries. Commit metadata cost is
-    * therefore O(new manifests), not O(live files). */
-  private[lake] def snapshotJson(
-      version: Int, parent: Int, schema: StructType,
-      ids: Map[String, Int], props: Map[String, String],
-      manifests: Seq[ManifestRef], meta: Map[String, String],
-      partitionBy: Seq[String] = Seq.empty,
-      highWater: Map[String, Long] = Map.empty,
-      lastFieldId: Int = 0,
-      deleteManifests: Seq[ManifestRef] = Nil): JsonNode = {
-    val n = mapper.createObjectNode()
-    n.put("version", version)
-    n.put("parent", parent)
-    val hwNode = n.putObject("highWater")
-    highWater.toSeq.sortBy(_._1).foreach { case (k, v) => hwNode.put(k, v) }
-    val pb = n.putArray("partitionBy")
-    partitionBy.foreach(pb.add)
-    n.put("committedAtMs", System.currentTimeMillis())
-    n.put("schemaJson", DataTypeBridge.toJson(schema))
-    val idNode = n.putObject("fieldIds")
-    ids.toSeq.sortBy(_._2).foreach { case (k, v) => idNode.put(k, v) }
-    // Iceberg's last-column-id: monotone, survives drops, so a retired
-    // field ID can never be reused by a later add
-    n.put("lastFieldId",
-      math.max(lastFieldId, ids.values.foldLeft(0)(math.max)))
-    val propsNode = n.putObject("properties")
-    props.toSeq.sortBy(_._1).foreach { case (k, v) => propsNode.put(k, v) }
-    val mArr = n.putArray("manifests")
-    manifests.foreach { m =>
-      val mn = mArr.addObject()
-      mn.put("path", m.path); mn.put("entries", m.entries)
-    }
-    if (deleteManifests.nonEmpty) {
-      val dArr = n.putArray("deleteManifests")
-      deleteManifests.foreach { m =>
-        val mn = dArr.addObject()
-        mn.put("path", m.path); mn.put("entries", m.entries)
-      }
-    }
-    val metaNode = n.putObject("appMeta")
-    meta.foreach { case (k, v) => metaNode.put(k, v) }
-    n
-  }
 
   private def statEligible(t: DataType): Boolean = t match {
     case ByteType | ShortType | IntegerType | LongType | FloatType |
@@ -4540,22 +3996,6 @@ object LakeTable {
     } finally r.close()
   }
 
-  /** Conditional create of a snapshot at its version slot — delegates
-    * the atomicity to [[CommitStore.putIfAbsent]] (POSIX: temp sibling
-    * + hard link; object stores: one conditional-put header). Returns
-    * false when the version was taken by a racer. */
-  private[lake] def tryCommit(store: CommitStore, metaDir: Path,
-                              version: Int, node: JsonNode): Boolean = {
-    val won = store.putIfAbsent(versionPath(metaDir, version),
-      mapper.writerWithDefaultPrettyPrinter().writeValueAsString(node))
-    // winners advertise themselves so currentVersion is one read +
-    // one probe instead of a listing; strictly best-effort (a lost or
-    // regressed hint only re-opens the probe/listing fallback)
-    if (won)
-      try store.putHint(metaDir.resolve(LatestHint), version.toString)
-      catch { case _: Exception => () }
-    won
-  }
 }
 
 /** StructType <-> JSON via Spark's own stable wire format. */

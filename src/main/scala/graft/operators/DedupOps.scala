@@ -81,10 +81,10 @@ object DedupOps {
   private[operators] def indexHits(index: graft.lake.LakeTable,
                                    keys: DataFrame, keyCol: String,
                                    maxProbe: Int): DataFrame = {
-    val sample = keys.distinct().limit(maxProbe + 1).collect().map(_.get(0))
-    val base =
-      if (sample.length <= maxProbe) index.probe(keyCol, sample.toSeq)
-      else index.read()
+    val base = collectAtMost(keys.distinct(), maxProbe) match {
+      case Some(sample) => index.probe(keyCol, sample.map(_.get(0)))
+      case None         => index.read()
+    }
     base.select(col(keyCol))
       .join(broadcast(keys.select(col(keyCol))), Seq(keyCol), "left_semi")
   }
@@ -285,10 +285,11 @@ object DedupOps {
     val idxBk = postings match {
       case Some(p) =>
         requirePostings(p, geometry)
-        val pbhs = newBk
+        val pbhs = collectAtMost(newBk
           .select(xxhash64(col("bk.band"), col(s"bk.$valueField")).as("pbh"))
-          .distinct().limit(maxProbe + 1).collect().map(_.get(0))
-        p.probeTiered("pbh", pbhs.toSeq, maxProbe)
+          .distinct(), maxProbe)
+        pbhs.fold(p.read())(
+          ks => p.probeTiered("pbh", ks.map(_.get(0)), maxProbe))
           .select(col(postingsIdCol).as(idxSide),
             struct(col("band"), col(valueField)).as("bk"))
       case None => bandKeys(index.read(), idxSide)
@@ -296,20 +297,17 @@ object DedupOps {
     val candQ = idxBk.join(broadcast(newBk), "bk")
       .select(col(newSide), col(idxSide))
       .distinct() // a pair colliding in several bands verifies once
-    val candRows = candQ.limit(maxProbe + 1).collect()
-    val (cand, candIds) =
-      if (candRows.length <= maxProbe)
+    val (cand, candIds) = collectAtMost(candQ, maxProbe) match {
+      case Some(candRows) =>
         (batch.sparkSession.createDataFrame(
           java.util.Arrays.asList(candRows: _*), candQ.schema),
-          candRows.map(_.get(1)).distinct.toSeq)
-      else {
+          Some(candRows.map(_.get(1)).distinct))
+      case None =>
         val ck = candQ.localCheckpoint()
-        (ck, ck.select(col(idxSide)).distinct()
-          .limit(maxProbe + 1).collect().map(_.get(0)).toSeq)
-      }
-    val idxDocs =
-      if (candIds.length <= maxProbe) index.probe(idCol, candIds)
-      else index.read()
+        (ck, collectAtMost(ck.select(col(idxSide)).distinct(), maxProbe)
+          .map(_.map(_.get(0))))
+    }
+    val idxDocs = candIds.fold(index.read())(index.probe(idCol, _))
     val p2 = idxDocs.select(col(idCol).as(idxSide), col(payloadCol).as("_p2"))
       .join(broadcast(cand), Seq(idxSide))
     batch.select(col(idCol).as(newSide), col(payloadCol).as("_p1"))
@@ -362,7 +360,7 @@ object DedupOps {
     * then runs, which costs time, never correctness. `limit(n)
     * .collect()` would scan partitions in growing waves, one job per
     * wave. */
-  private def collectAtMost(df: DataFrame, max: Int)
+  private[graft] def collectAtMost(df: DataFrame, max: Int)
       : Option[Seq[Row]] = {
     val rdd = df.rdd
     val share = (max + rdd.getNumPartitions) / math.max(1, rdd.getNumPartitions)
@@ -649,9 +647,9 @@ object DedupOps {
       .select(col("doc_id").as("d_new"), size(col("shs")).as("n1"),
         explode(col("shs")).as("eh"))
       .localCheckpoint(eager = false) // key enumeration + the probe join share it
-    val keys = batch.select(col("eh")).distinct()
-      .limit(maxProbe + 1).collect().map(_.get(0))
-    val probed = postings.probeTiered("eh", keys.toSeq, maxProbe)
+    val keys = collectAtMost(batch.select(col("eh")).distinct(), maxProbe)
+    val probed = keys.fold(postings.read())(
+      ks => postings.probeTiered("eh", ks.map(_.get(0)), maxProbe))
       .select(col("eh"), col("doc_id").as("d_idx"), col("n").as("n2"))
     val joined = probed.join(broadcast(batch), Seq("eh"))
     val scoped = maxDf match {

@@ -204,9 +204,9 @@ class MVManager(spark: SparkSession, checkpointRoot: String,
     *
     * The loop walks the batch's version range one commit at a time.
     * Pure appends (the common step, decided by
-    * [[graft.lake.LakeTable.versionRemovesRows]] — one metadata read,
-    * no job) curate exactly like the insert-only loop. A step that
-    * removed rows consumes the row-level changelog (for an equality
+    * [[graft.lake.LakeTable.addedEntriesBetween]] — one metadata read
+    * per version, no job) curate exactly like the insert-only loop. A
+    * step that removed rows consumes the row-level changelog (for an equality
     * delete: a key semi-join over covered files, zero diff shuffles)
     * and propagates the removed ids as equality deletes — O(keys),
     * zero files rewritten — to the curated OUT table (stops serving),
@@ -233,42 +233,49 @@ class MVManager(spark: SparkSession, checkpointRoot: String,
                        postings: Option[LakeTable] = None,
                        wap: Option[MVManager.WapAudit] = None)
       : StreamingQuery =
-    startVersionWalk(name, source, trigger, idCol, "doc_id", index, out,
-        postings) { (wid, docs, v) =>
-      MVManager.curateText(docs, index, out, wid, v, nearDupMinJaccard,
-        textCol, idCol, postings, wap)
+    startVersionWalk(name, source, trigger)(
+        forgetCurated(idCol, "doc_id", index, out, postings)) {
+      (wid, docs, v) => MVManager.curateText(docs, index, out, wid, v,
+        nearDupMinJaccard, textCol, idCol, postings, wap)
     }
 
-  /** The delete-aware curation loops' sink: the batch's source
-    * versions are walked one commit at a time. A pure append (decided
-    * by [[graft.lake.LakeTable.versionRemovesRows]] — one metadata
-    * read, no job) hands its rows to `step`; a commit that removed rows
-    * first propagates the removed ids (`idCol` in the source,
-    * `indexIdCol` in the index and postings) to out, index and
-    * postings ([[MVManager.propagateForget]]), then hands `step` its
-    * inserted rows, so an upsert converges (removal precedes
-    * insertion). `step` gets (writer id, rows, source version). */
+  /** The delete-aware loops' sink: the batch's source versions are
+    * walked one commit at a time, from one
+    * [[graft.lake.LakeTable.addedEntriesBetween]] pass (one metadata
+    * read per version, no job). A pure append hands its rows to `step`;
+    * a commit that removed rows first hands `forget` its changelog's
+    * removed rows, then hands `step` its inserted rows, so an upsert
+    * converges (removal precedes insertion). A compaction removes no
+    * row and adds none. Both get (writer id, rows, source version). */
   private def startVersionWalk(name: String, source: LakeTable,
-                               trigger: Trigger, idCol: String,
-                               indexIdCol: String, index: LakeTable,
-                               out: LakeTable, postings: Option[LakeTable])
-      (step: (String, DataFrame, Long) => Unit): StreamingQuery = {
+                               trigger: Trigger)(
+      forget: (String, DataFrame, Long) => Unit)(
+      step: (String, DataFrame, Long) => Unit): StreamingQuery = {
     import org.apache.spark.sql.functions.col
     startCommitLogSink(name, source, trigger) { (wid, _, lo, hi) =>
-      for (v <- lo + 1 to hi) {
+      for ((v, _, removes) <- source.addedEntriesBetween(lo, hi)) {
         val rows =
-          if (source.versionRemovesRows(v)) {
+          if (removes) {
             val ch = source.readChangelog(v - 1, v)
-            MVManager.propagateForget(
-              ch.filter(col("_change_type") === "delete")
-                .select(col(idCol)).distinct(),
-              idCol, indexIdCol, out, index, postings, wid, v)
-            ch.filter(col("_change_type") === "insert")
-              .drop("_change_type").drop(LakeTable.BucketCol)
-          } else source.changesBetween(v - 1, v).drop(LakeTable.BucketCol)
-        step(wid, rows, v)
+            forget(wid, ch.filter(col("_change_type") === "delete"), v)
+            ch.filter(col("_change_type") === "insert").drop("_change_type")
+          } else source.changesBetween(v - 1, v)
+        step(wid, rows.drop(LakeTable.BucketCol), v)
       }
     }
+  }
+
+  /** The forget half of the delete-aware curation loops: the removed
+    * ids (`idCol` in the source, `indexIdCol` in the index and
+    * postings) leave out, index and postings
+    * ([[MVManager.propagateForget]]). */
+  private def forgetCurated(idCol: String, indexIdCol: String,
+                            index: LakeTable, out: LakeTable,
+                            postings: Option[LakeTable])
+      : (String, DataFrame, Long) => Unit = { (wid, removed, v) =>
+    import org.apache.spark.sql.functions.col
+    MVManager.propagateForget(removed.select(col(idCol)).distinct(), idCol,
+      indexIdCol, out, index, postings, wid, v)
   }
 
   /** Delete-aware twin of [[startEmbeddingCurationFromLake]] — the
@@ -290,10 +297,10 @@ class MVManager(spark: SparkSession, checkpointRoot: String,
                                 postings: Option[LakeTable] = None,
                                 wap: Option[MVManager.WapAudit] = None)
       : StreamingQuery =
-    startVersionWalk(name, source, trigger, idCol, "vec_id", index, out,
-        postings) { (wid, vecs, v) =>
-      MVManager.curateStepEmbedding(vecs, index, out, wid, v,
-        threshold, bandBits, bands, idCol, embCol, postings, wap)
+    startVersionWalk(name, source, trigger)(
+        forgetCurated(idCol, "vec_id", index, out, postings)) {
+      (wid, vecs, v) => MVManager.curateStepEmbedding(vecs, index, out,
+        wid, v, threshold, bandBits, bands, idCol, embCol, postings, wap)
     }
 
   /** Continuous PERCEPTUAL curation MV — the binary-axis member of the
@@ -331,10 +338,10 @@ class MVManager(spark: SparkSession, checkpointRoot: String,
                                       wap: Option[MVManager.WapAudit] =
                                         None)
       : StreamingQuery =
-    startVersionWalk(name, source, trigger, idCol, "doc_id", index, out,
-        postings) { (wid, media, v) =>
-      MVManager.curateStepPerceptual(media, index, out, wid, v,
-        maxHamming, idCol, payloadCol, postings, wap)
+    startVersionWalk(name, source, trigger)(
+        forgetCurated(idCol, "doc_id", index, out, postings)) {
+      (wid, media, v) => MVManager.curateStepPerceptual(media, index, out,
+        wid, v, maxHamming, idCol, payloadCol, postings, wap)
     }
 
   /** Continuous LEXICAL-INDEX maintenance MV — the commit-log loop of
@@ -373,9 +380,9 @@ class MVManager(spark: SparkSession, checkpointRoot: String,
     * the source would leave the forgotten documents SERVABLE from
     * postings forever. This loop walks the batch's version range
     * one commit at a time: pure appends (the overwhelmingly common
-    * step, gated by [[graft.lake.LakeTable.versionRemovesRows]] —
-    * one metadata read, no job) index exactly like the insert-only
-    * loop; a step that removed rows consumes the row-level changelog
+    * step, decided by [[graft.lake.LakeTable.addedEntriesBetween]] —
+    * one metadata read per version, no job) index exactly like the
+    * insert-only loop; a step that removed rows consumes the row-level changelog
     * (`readChangelog(v-1, v)` — for an equality delete that is a key
     * semi-join over the covered files, no diff shuffle) and
     * propagates the deleted doc ids as equality deletes on BOTH
@@ -396,26 +403,13 @@ class MVManager(spark: SparkSession, checkpointRoot: String,
                            trigger: Trigger = Trigger.AvailableNow())
       : StreamingQuery = {
     import org.apache.spark.sql.functions.col
-    startCommitLogSink(name, source, trigger) { (wid, _, lo, hi) =>
-      for (v <- lo + 1 to hi) {
-        if (source.versionRemovesRows(v)) {
-          val ch = source.readChangelog(v - 1, v)
-          val dels = ch.filter(col("_change_type") === "delete")
-            .select(col(idCol).as("doc_id"))
-          graft.operators.TextOps.removeFromLexicalIndex(postings,
-            docstats, dels, s"$wid#del", v)
-          val ins = ch.filter(col("_change_type") === "insert")
-            .select(col(idCol).as("doc_id"), col(textCol).as("text"))
-          graft.operators.TextOps.appendToLexicalIndex(postings,
-            docstats, ins, wid, v)
-        } else {
-          val docs = source.changesBetween(v - 1, v)
-            .drop(LakeTable.BucketCol)
-            .select(col(idCol).as("doc_id"), col(textCol).as("text"))
-          graft.operators.TextOps.appendToLexicalIndex(postings,
-            docstats, docs, wid, v)
-        }
-      }
+    startVersionWalk(name, source, trigger) { (wid, removed, v) =>
+      graft.operators.TextOps.removeFromLexicalIndex(postings, docstats,
+        removed.select(col(idCol).as("doc_id")), s"$wid#del", v)
+    } { (wid, docs, v) =>
+      graft.operators.TextOps.appendToLexicalIndex(postings, docstats,
+        docs.select(col(idCol).as("doc_id"), col(textCol).as("text")),
+        wid, v)
     }
   }
 
@@ -433,26 +427,12 @@ class MVManager(spark: SparkSession, checkpointRoot: String,
                           trigger: Trigger = Trigger.AvailableNow())
       : StreamingQuery = {
     import org.apache.spark.sql.functions.col
-    startCommitLogSink(name, source, trigger) { (wid, _, lo, hi) =>
-      for (v <- lo + 1 to hi) {
-        if (source.versionRemovesRows(v)) {
-          val ch = source.readChangelog(v - 1, v)
-          graft.operators.IvfIndex.removeFromIndex(index,
-            ch.filter(col("_change_type") === "delete").select(col(idCol)),
-            s"$wid#del", v, idCol)
-          graft.operators.IvfIndex.appendToIndex(index,
-            ch.filter(col("_change_type") === "insert")
-              .select(col(idCol), col(embCol)),
-            model, wid, v, embCol)
-        } else {
-          val vecs = source.changesBetween(v - 1, v)
-            .drop(LakeTable.BucketCol)
-            .select(col(idCol), col(embCol))
-          graft.operators.IvfIndex.appendToIndex(index, vecs, model,
-            wid, v, embCol)
-          ()
-        }
-      }
+    startVersionWalk(name, source, trigger) { (wid, removed, v) =>
+      graft.operators.IvfIndex.removeFromIndex(index,
+        removed.select(col(idCol)), s"$wid#del", v, idCol)
+    } { (wid, vecs, v) =>
+      graft.operators.IvfIndex.appendToIndex(index,
+        vecs.select(col(idCol), col(embCol)), model, wid, v, embCol)
     }
   }
 
@@ -873,15 +853,16 @@ object MVManager {
     import org.apache.spark.sql.functions.col
     import graft.operators.DedupOps
     val max = DedupOps.MaxWithinBatchPairs
-    val some = pairs.select(col("d1"), col("d2")).limit(max + 1).collect()
-    if (some.length <= max) {
-      val ss = pairs.sparkSession
-      import ss.implicits._
-      DedupOps.nearDupDropIds(
-        some.toSeq.map(r => (r.getLong(0), r.getLong(1)))).toDF(idCol)
-    } else DedupOps.nearDupClusters(pairs)
-      .filter(col("doc_id") =!= col("cluster_id"))
-      .select(col("doc_id").as(idCol))
+    DedupOps.collectAtMost(pairs.select(col("d1"), col("d2")), max) match {
+      case Some(some) =>
+        val ss = pairs.sparkSession
+        import ss.implicits._
+        DedupOps.nearDupDropIds(
+          some.map(r => (r.getLong(0), r.getLong(1)))).toDF(idCol)
+      case None => DedupOps.nearDupClusters(pairs)
+        .filter(col("doc_id") =!= col("cluster_id"))
+        .select(col("doc_id").as(idCol))
+    }
   }
 
   /** The distributed near-dup curation step, for batches over the
