@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-round benchmark: runs every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints one JSON line with every query's
   * time, then a compact summary line (total, parallelism, controls,
@@ -10,19 +8,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val startedMs = System.currentTimeMillis()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // CPU-dense ops (edit distance, pair explosion, sketches) carry few
-      // bytes per row; the default 1 MB floor would coalesce them onto a
-      // handful of cores
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSpark.builder(4).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // JVM/codegen/scheduler warm-up outside any query's timing
     spark.range(1000000).selectExpr("sum(id)").collect()

@@ -251,13 +251,9 @@ private[lake] trait Commit { self: LakeTable =>
         //   pos — no covered data file remains live;
         //   eq  — every live file's seq >= the entry's seq (no
         //         pre-delete rows remain for its keys to match).
-        val liveAfter = keptRefs.flatMap(readManifest) ++ newEntries
-        val livePaths = liveAfter.map(_.path).toSet
-        val minLiveSeq =
-          if (liveAfter.isEmpty) Long.MaxValue else liveAfter.map(_.seq).min
-        def dead(e: DeleteEntry): Boolean =
-          if (e.kind == "eq") minLiveSeq >= e.seq
-          else !e.covers.exists(livePaths.contains)
+        val live = appliesToAny(
+          keptRefs.flatMap(readManifest) ++ newEntries)
+        def dead(e: DeleteEntry): Boolean = !live(e)
         val (touched, untouched) = withNew.partition(r =>
           readDeleteManifest(r).exists(dead))
         val survivors = touched.flatMap(readDeleteManifest).filterNot(dead)

@@ -589,18 +589,14 @@ class LakeTable private (
     // unique per table by construction (the same uniqueness
     // writeManifest's putIfAbsent relies on). Name-keying also makes
     // delete files relocation-proof for free.
-    val entryPaths = entries.map(_.path).toSet
-    val posDeletes = deletes.filter(e =>
-      e.kind != "eq" && e.covers.exists(entryPaths.contains))
-    // an equality delete is relevant iff some scanned file PREDATES it
+    //
+    // An equality delete is relevant iff some scanned file PREDATES it
     // (rows appended at or after its seq are out of its scope); its
     // key columns must still exist — rename/drop of a live eq-delete
     // key is blocked at alter time, so absence here is corruption,
     // not a skippable condition (skipping would resurrect rows)
-    val minEntrySeq =
-      if (entries.isEmpty) Long.MaxValue else entries.map(_.seq).min
-    val eqDeletes = deletes.filter(e =>
-      e.kind == "eq" && e.seq > minEntrySeq)
+    val (eqDeletes, posDeletes) =
+      deletes.filter(appliesToAny(entries)).partition(_.kind == "eq")
     eqDeletes.foreach(e => e.keyCols.foreach(c =>
       require(snapSchema.fieldNames.contains(c),
         s"equality-delete key column $c (of ${e.path}) missing from " +
@@ -1010,10 +1006,7 @@ class LakeTable private (
     // stable fingerprint because delete files are immutable and
     // UUID-named (same reasoning as the manifest cache).
     def scope(f: FileEntry, dels: Seq[DeleteEntry]): Set[String] =
-      dels.collect {
-        case e if e.kind == "eq" && e.seq > f.seq => e.path
-        case e if e.kind != "eq" && e.covers.contains(f.path) => e.path
-      }.toSet
+      dels.filter(_.appliesTo(f)).map(_.path).toSet
     val scopeF = filesF.map(f => f.path -> scope(f, delF)).toMap
     val scopeT = filesT.map(f => f.path -> scope(f, delT)).toMap
     val unchanged: Set[String] = filesF.collect {
@@ -1102,11 +1095,7 @@ class LakeTable private (
   /** Files of `fs` whose per-column [lo, hi] footer stats can hold at
     * least one of `keys`' tuples, by PER-COLUMN BOUNDS of the key set
     * (one small agg job over the key files — min, max, any-null per
-    * column). Conservative everywhere a wrong prune could lurk: a
-    * column without file stats or without an orderable bound never
-    * prunes, null keys keep every file not proven null-free, and a
-    * floating bound at zero widens to the {-0.0, +0.0} class (SQL
-    * equality does not order the zeros, `Double.compare` does). */
+    * column), tested by [[Prune.KeyBound]]. */
   private def pruneByKeyBounds(fs: Seq[FileEntry], keys: DataFrame,
                                keyCols: Seq[String]): Seq[FileEntry] = {
     import org.apache.spark.sql.functions.{col => fcol, max => fmax, min => fmin, sum => fsum, when}
@@ -1116,44 +1105,10 @@ class LakeTable private (
       fmax(fcol(s"`$c`")).as(s"hi_$c"),
       fsum(when(fcol(s"`$c`").isNull, 1L).otherwise(0L)).as(s"n_$c")))
     val row = keys.agg(aggs.head, aggs.tail: _*).head
-    def norm(v: Any): Option[Any] = v match {
-      case null => None
-      case x: Byte => Some(x.toLong); case x: Short => Some(x.toLong)
-      case x: Int => Some(x.toLong);  case x: Long => Some(x)
-      case x: Float => Some(x.toDouble); case x: Double => Some(x)
-      case x: Boolean => Some(x); case x: String => Some(x)
-      case _ => None
-    }
-    def widen(v: Any, lowSide: Boolean): Any = v match {
-      case d: Double if d == 0.0d => if (lowSide) -0.0d else 0.0d
-      case o => o
-    }
-    val bounds = keyCols.map { c =>
-      val rawLo = row.getAs[Any](s"lo_$c")
-      val rawHi = row.getAs[Any](s"hi_$c")
-      val lo = norm(rawLo).map(widen(_, lowSide = true))
-      val hi = norm(rawHi).map(widen(_, lowSide = false))
-      // a NON-NULL bound of a type norm can't order (timestamp, date,
-      // decimal, ...) must never prune — "no bound" is only safe to
-      // act on when it means "every key is null"
-      val unorderable =
-        (rawLo != null && lo.isEmpty) || (rawHi != null && hi.isEmpty)
-      val hasNull = Option(row.getAs[Any](s"n_$c"))
-        .exists(_.asInstanceOf[Long] > 0L)
-      (c, lo, hi, hasNull, unorderable)
-    }
-    fs.filter(e => bounds.forall {
-      case (c, lo, hi, hasNull, unorderable) =>
-        unorderable ||
-          (hasNull && !e.nullCounts.get(c).contains(0L)) ||
-          ((lo, hi) match {
-            case (Some(l), Some(h)) => e.stats.get(c).forall(st =>
-              LakeTable.cmpStat(st.lo, h).forall(_ <= 0) &&
-                LakeTable.cmpStat(l, st.hi).forall(_ <= 0))
-            case _ => false // all keys null; null-capable files kept
-                            // by the hasNull clause above
-          })
-    })
+    val bounds = keyCols.map(c => Prune.KeyBound.of(c,
+      row.getAs[Any](s"lo_$c"), row.getAs[Any](s"hi_$c"),
+      Option(row.getAs[Any](s"n_$c")).exists(_.asInstanceOf[Long] > 0L)))
+    fs.filter(f => bounds.forall(_.mayHold(f)))
   }
 
   /** Project `df` (read under snapshot `from`) onto snapshot `to`'s
@@ -1251,200 +1206,15 @@ class LakeTable private (
     condition.map(out.filter).getOrElse(out)
   }
 
-  /** The files a range analysis of `condition` cannot exclude, from
-    * the CURRENT snapshot. */
+  /** The files a range analysis of `condition` ([[Prune.may]]) cannot
+    * exclude, from the CURRENT snapshot. */
   private[lake] def pruneFiles(condition: org.apache.spark.sql.Column)
       : Seq[FileEntry] = pruneFiles(latest(), condition)
 
   /** [[pruneFiles]] over snapshot `s`'s files, with `s`'s transforms. */
   private def pruneFiles(s: Snapshot, condition: org.apache.spark.sql.Column)
-      : Seq[FileEntry] = {
-    import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction}
-    import org.apache.spark.sql.catalyst.expressions._
-    def norm(v: Any): Option[Any] = v match {
-      case null => None
-      case x: Byte => Some(x.toLong)
-      case x: Short => Some(x.toLong)
-      case x: Int => Some(x.toLong)
-      case x: Long => Some(x)
-      case x: Float => if (x.isNaN) None else Some(x.toDouble)
-      case x: Double => if (x.isNaN) None else Some(x)
-      case x: Boolean => Some(x)
-      case x: String => Some(x)
-      case x: org.apache.spark.unsafe.types.UTF8String => Some(x.toString)
-      case _ => None // dates/decimals etc: no pruning, still correct
-    }
-    def attrName(e: Expression): Option[String] = e match {
-      case a: UnresolvedAttribute => Some(a.name)
-      case a: AttributeReference => Some(a.name)
-      case _ => None
-    }
-    def litVal(e: Expression): Option[Any] = e match {
-      case Literal(v, _) => norm(v)
-      case _ => None
-    }
-    // comparisons arrive unresolved (UnresolvedFunction("<", …)) from
-    // the Column AST, or resolved (LessThan) from catalyst-built trees:
-    // normalize both to (op, left, right)
-    def binOp(e: Expression): Option[(String, Expression, Expression)] =
-      e match {
-        case f: UnresolvedFunction if f.arguments.size == 2 &&
-            f.nameParts.size == 1 &&
-            Set("<", "<=", ">", ">=", "=", "==", "<=>")(f.nameParts.head) =>
-          // <=> with a NON-NULL literal behaves as = for range checks
-          // (a null literal never canonicalizes: litVal(null) is None,
-          // so it falls back to no-prune / no-proof — conservative)
-          val op =
-            if (Set("==", "<=>")(f.nameParts.head)) "="
-            else f.nameParts.head
-          Some((op, f.arguments(0), f.arguments(1)))
-        case LessThan(l, r)           => Some(("<", l, r))
-        case LessThanOrEqual(l, r)    => Some(("<=", l, r))
-        case GreaterThan(l, r)        => Some((">", l, r))
-        case GreaterThanOrEqual(l, r) => Some((">=", l, r))
-        case EqualTo(l, r)            => Some(("=", l, r))
-        case EqualNullSafe(l, r)      => Some(("=", l, r))
-        case _ => None
-      }
-    def flip(op: String): String = op match {
-      case "<" => ">"; case "<=" => ">="
-      case ">" => "<"; case ">=" => "<="; case o => o
-    }
-    def inList(e: Expression): Option[(Expression, Seq[Expression])] =
-      e match {
-        case f: UnresolvedFunction
-            if f.nameParts == Seq("in") && f.arguments.nonEmpty =>
-          Some((f.arguments.head, f.arguments.tail))
-        case In(a, vs) => Some((a, vs))
-        case _ => None
-      }
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case And(l, r) => conjuncts(l) ++ conjuncts(r)
-      case f: UnresolvedFunction
-          if f.nameParts == Seq("and") && f.arguments.size == 2 =>
-        conjuncts(f.arguments(0)) ++ conjuncts(f.arguments(1))
-      case other => Seq(other)
-    }
-    // canonical "col OP literal" (literal-first comparisons flip)
-    def cano(e: Expression): Option[(String, String, Any)] =
-      binOp(e).flatMap {
-        case (op, a, l) if attrName(a).isDefined =>
-          litVal(l).map((attrName(a).get, op, _))
-        case (op, l, a) if attrName(a).isDefined =>
-          litVal(l).map((attrName(a).get, flip(op), _))
-        case _ => None
-      }
-    // can a file with range st possibly satisfy "col OP v"? Unknown
-    // comparisons (cross-type) answer true — never a wrong prune.
-    def possible(op: String, v: Any, st: ColStat): Boolean = op match {
-      case "=" => cmpStat(v, st.lo).forall(_ >= 0) &&
-        cmpStat(v, st.hi).forall(_ <= 0)
-      case ">"  => cmpStat(st.hi, v).forall(_ > 0)
-      case ">=" => cmpStat(st.hi, v).forall(_ >= 0)
-      case "<"  => cmpStat(st.lo, v).forall(_ < 0)
-      case "<=" => cmpStat(st.lo, v).forall(_ <= 0)
-    }
-    // IS NULL / IS NOT NULL, in both the unresolved Column-AST form and
-    // the resolved catalyst form; pruned via exact per-file null counts
-    def nullPred(e: Expression): Option[(String, Boolean)] = e match {
-      case IsNull(a)    => attrName(a).map(_ -> true)
-      case IsNotNull(a) => attrName(a).map(_ -> false)
-      case f: UnresolvedFunction if f.arguments.size == 1 &&
-          f.nameParts.size == 1 &&
-          Set("isnull", "isnotnull")(f.nameParts.head.toLowerCase) =>
-        attrName(f.arguments.head)
-          .map(_ -> (f.nameParts.head.toLowerCase == "isnull"))
-      case _ => None
-    }
-    val cond =
-      org.apache.spark.sql.graft.ColumnBridge.catalystExpression(condition)
-    // a value comparison is never true on NULL (three-valued logic):
-    // any `col OP lit` / `col IN (...)` conjunct also excludes files
-    // whose column is entirely null, range stats or not
-    def someNonNull(n: String)(f: FileEntry): Boolean =
-      f.nullCounts.get(n).forall(_ < f.rows)
-    val checks: Seq[FileEntry => Boolean] =
-      conjuncts(cond).flatMap { c =>
-        inList(c) match {
-          case Some((a, vs)) if attrName(a).isDefined =>
-            val lits = vs.flatMap(litVal)
-            if (lits.size != vs.size) None // an unusable literal: skip
-            else {
-              val n = attrName(a).get
-              Some((f: FileEntry) => someNonNull(n)(f) &&
-                f.stats.get(n).forall(st =>
-                  lits.exists(v => possible("=", v, st))))
-            }
-          case _ => nullPred(c) match {
-            case Some((n, wantNull)) =>
-              // IS NULL possible iff some null exists; IS NOT NULL
-              // possible iff some non-null exists; unknown never prunes
-              Some((f: FileEntry) => f.nullCounts.get(n).forall(nn =>
-                if (wantNull) nn > 0 else nn < f.rows))
-            case None => cano(c).map { case (n, op, v) =>
-              (f: FileEntry) => someNonNull(n)(f) &&
-                f.stats.get(n).forall(st => possible(op, v, st))
-            }
-          }
-        }
-      }
-    // hidden partitioning: map each raw-column conjunct onto its
-    // transform's derived partition column, whose [v, v] partition
-    // stats prune whole directories. All transforms are monotone
-    // non-decreasing, so strict bounds relax to inclusive ones
-    // (src < v => T(src) <= T(v)) — never a wrong prune. Spec
-    // evolution: ALL epochs' transforms run; each check binds only on
-    // files carrying its derived column's stats (its own epoch).
-    val transforms = s.pruningTransforms
-    val tchecks: Seq[FileEntry => Boolean] =
-      if (transforms.isEmpty) Nil
-      else {
-        def litTyped(e: Expression): Option[(Any, DataType)] = e match {
-          case Literal(v, t) if v != null => Some((v, t))
-          case _ => None
-        }
-        def canoTyped(e: Expression)
-            : Option[(String, String, (Any, DataType))] =
-          binOp(e).flatMap {
-            case (op, a, l) if attrName(a).isDefined =>
-              litTyped(l).map((attrName(a).get, op, _))
-            case (op, l, a) if attrName(a).isDefined =>
-              litTyped(l).map((attrName(a).get, flip(op), _))
-            case _ => None
-          }
-        def relax(op: String): String = op match {
-          case "<"  => "<="
-          case ">"  => ">="
-          case o    => o
-        }
-        conjuncts(cond).flatMap { c =>
-          inList(c) match {
-            case Some((a, vs)) if attrName(a).isDefined =>
-              val n = attrName(a).get
-              transforms.filter(_.src == n).flatMap { t =>
-                val typed = vs.flatMap(litTyped)
-                val mapped = typed.flatMap { case (v, dt) =>
-                  t.mapValue(v, dt) }
-                // only prune when EVERY listed value mapped
-                if (typed.size != vs.size || mapped.size != typed.size)
-                  None
-                else Some((f: FileEntry) =>
-                  f.stats.get(t.phys).forall(st =>
-                    mapped.exists(v => possible("=", v, st))))
-              }
-            case _ => canoTyped(c).toSeq.flatMap {
-              case (n, op, (v, dt)) =>
-                transforms.filter(t => t.src == n &&
-                    (op == "=" || t.rangeSafe)).flatMap(t =>
-                  t.mapValue(v, dt).map(tv =>
-                    (f: FileEntry) => f.stats.get(t.phys).forall(st =>
-                      possible(relax(op), tv, st))))
-            }
-          }
-        }
-      }
-    s.files.filter(f => (checks ++ tchecks).forall(_(f)))
-  }
+      : Seq[FileEntry] =
+    s.files.filter(Prune.may(Prune.parse(condition), s.pruningTransforms))
 
   // ---- write ---------------------------------------------------------
 
@@ -1600,138 +1370,12 @@ class LakeTable private (
   /** Files whose EVERY row provably satisfies `condition` — the
     * must-match mirror of [[pruneFiles]]'s may-match test, used
     * by [[overwriteWhere]] to turn a predicate into an exact
-    * whole-file replace set. Supports the same canonical shapes
-    * (`col OP literal`, IN, IS [NOT] NULL, AND — plus OR where either
-    * side proves); anything else proves nothing (never a wrong
-    * replace). Proof rules over exact manifest metadata:
-    * a comparison holds for all rows iff the column has ZERO nulls
-    * (a NULL never satisfies a comparison) and the [lo, hi] range
-    * lies entirely inside the predicate's region. */
+    * whole-file replace set ([[Prune.must]]: anything unparsed proves
+    * nothing, so never a wrong replace). */
   private[lake] def fullyMatchingFiles(
       entries: Seq[FileEntry],
-      condition: org.apache.spark.sql.Column): Seq[FileEntry] = {
-    import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction}
-    import org.apache.spark.sql.catalyst.expressions._
-    def norm(v: Any): Option[Any] = v match {
-      case null => None
-      case x: Byte => Some(x.toLong)
-      case x: Short => Some(x.toLong)
-      case x: Int => Some(x.toLong)
-      case x: Long => Some(x)
-      case x: Float => if (x.isNaN) None else Some(x.toDouble)
-      case x: Double => if (x.isNaN) None else Some(x)
-      case x: Boolean => Some(x)
-      case x: String => Some(x)
-      case x: org.apache.spark.unsafe.types.UTF8String => Some(x.toString)
-      case _ => None
-    }
-    def attrName(e: Expression): Option[String] = e match {
-      case a: UnresolvedAttribute => Some(a.name)
-      case a: AttributeReference => Some(a.name)
-      case _ => None
-    }
-    def litVal(e: Expression): Option[Any] = e match {
-      case Literal(v, _) => norm(v)
-      case _ => None
-    }
-    def binOp(e: Expression): Option[(String, Expression, Expression)] =
-      e match {
-        case f: UnresolvedFunction if f.arguments.size == 2 &&
-            f.nameParts.size == 1 &&
-            Set("<", "<=", ">", ">=", "=", "==", "<=>")(f.nameParts.head) =>
-          // <=> with a NON-NULL literal behaves as = for range checks
-          // (a null literal never canonicalizes: litVal(null) is None,
-          // so it falls back to no-prune / no-proof — conservative)
-          val op =
-            if (Set("==", "<=>")(f.nameParts.head)) "="
-            else f.nameParts.head
-          Some((op, f.arguments(0), f.arguments(1)))
-        case LessThan(l, r)           => Some(("<", l, r))
-        case LessThanOrEqual(l, r)    => Some(("<=", l, r))
-        case GreaterThan(l, r)        => Some((">", l, r))
-        case GreaterThanOrEqual(l, r) => Some((">=", l, r))
-        case EqualTo(l, r)            => Some(("=", l, r))
-        case EqualNullSafe(l, r)      => Some(("=", l, r))
-        case _ => None
-      }
-    def flip(op: String): String = op match {
-      case "<" => ">"; case "<=" => ">="
-      case ">" => "<"; case ">=" => "<="; case o => o
-    }
-    def cano(e: Expression): Option[(String, String, Any)] =
-      binOp(e).flatMap {
-        case (op, a, l) if attrName(a).isDefined =>
-          litVal(l).map((attrName(a).get, op, _))
-        case (op, l, a) if attrName(a).isDefined =>
-          litVal(l).map((attrName(a).get, flip(op), _))
-        case _ => None
-      }
-    def inList(e: Expression): Option[(Expression, Seq[Expression])] =
-      e match {
-        case f: UnresolvedFunction
-            if f.nameParts == Seq("in") && f.arguments.nonEmpty =>
-          Some((f.arguments.head, f.arguments.tail))
-        case In(a, vs) => Some((a, vs))
-        case _ => None
-      }
-    def nullPred(e: Expression): Option[(String, Boolean)] = e match {
-      case IsNull(a)    => attrName(a).map(_ -> true)
-      case IsNotNull(a) => attrName(a).map(_ -> false)
-      case f: UnresolvedFunction if f.arguments.size == 1 &&
-          f.nameParts.size == 1 &&
-          Set("isnull", "isnotnull")(f.nameParts.head.toLowerCase) =>
-        attrName(f.arguments.head)
-          .map(_ -> (f.nameParts.head.toLowerCase == "isnull"))
-      case _ => None
-    }
-    // all rows satisfy "col OP v": zero nulls and the whole range
-    // inside the region; unknown comparisons prove nothing
-    def mustCmp(op: String, v: Any, st: ColStat): Boolean = op match {
-      case "=" => cmpStat(st.lo, v).exists(_ == 0) &&
-        cmpStat(st.hi, v).exists(_ == 0)
-      case ">"  => cmpStat(st.lo, v).exists(_ > 0)
-      case ">=" => cmpStat(st.lo, v).exists(_ >= 0)
-      case "<"  => cmpStat(st.hi, v).exists(_ < 0)
-      case "<=" => cmpStat(st.hi, v).exists(_ <= 0)
-    }
-    def noNulls(f: FileEntry, n: String): Boolean =
-      f.nullCounts.get(n).contains(0L)
-    def must(e: Expression, f: FileEntry): Boolean = e match {
-      case And(l, r) => must(l, f) && must(r, f)
-      case fn: UnresolvedFunction
-          if fn.nameParts == Seq("and") && fn.arguments.size == 2 =>
-        must(fn.arguments(0), f) && must(fn.arguments(1), f)
-      case Or(l, r) => must(l, f) || must(r, f)
-      case fn: UnresolvedFunction
-          if fn.nameParts == Seq("or") && fn.arguments.size == 2 =>
-        must(fn.arguments(0), f) || must(fn.arguments(1), f)
-      case _ =>
-        inList(e) match {
-          case Some((a, vs)) if attrName(a).isDefined =>
-            val n = attrName(a).get
-            val lits = vs.flatMap(litVal)
-            // provable when the file is single-valued on the column
-            // and that value is listed
-            lits.size == vs.size && noNulls(f, n) &&
-              f.stats.get(n).exists(st =>
-                cmpStat(st.lo, st.hi).exists(_ == 0) &&
-                  lits.exists(v => cmpStat(st.lo, v).exists(_ == 0)))
-          case _ => nullPred(e) match {
-            case Some((n, wantNull)) =>
-              if (wantNull) f.nullCounts.get(n).contains(f.rows)
-              else noNulls(f, n)
-            case None => cano(e) match {
-              case Some((n, op, v)) => noNulls(f, n) &&
-                f.stats.get(n).exists(st => mustCmp(op, v, st))
-              case None => false
-            }
-          }
-        }
-    }
-    val cond =
-      org.apache.spark.sql.graft.ColumnBridge.catalystExpression(condition)
-    entries.filter(f => f.rows == 0L || must(cond, f))
-  }
+      condition: org.apache.spark.sql.Column): Seq[FileEntry] =
+    entries.filter(Prune.must(Prune.parse(condition)))
 
   /** Add a nullable column (metadata-only, Iceberg `ADD COLUMN`): the
     * new field gets a FRESH field ID minted above lastFieldId — never a
@@ -2623,8 +2267,7 @@ class LakeTable private (
         try f.dataType match {
           case ByteType | ShortType | IntegerType | LongType =>
             Some(v.toLong)
-          case FloatType | DoubleType =>
-            val d = v.toDouble; if (d.isNaN) None else Some(d)
+          case FloatType | DoubleType => Prune.value(v.toDouble)
           case StringType  => Some(v)
           case BooleanType => Some(v.toBoolean)
           case _ => None
@@ -3644,7 +3287,27 @@ object LakeTable {
     * `path` is root-relative (under `deletes/data/`) for both. */
   case class DeleteEntry(path: String, rows: Long, covers: Seq[String],
                          kind: String = "pos", seq: Long = 0L,
-                         keyCols: Seq[String] = Nil)
+                         keyCols: Seq[String] = Nil) {
+    /** The delete-scope rule: whether this delete can remove rows of
+      * data file `f` — an equality delete applies to files with a lower
+      * data sequence number, a position delete to the files it covers. */
+    def appliesTo(f: FileEntry): Boolean =
+      appliesTo(f.seq, covers.contains(f.path))
+    private[LakeTable] def appliesTo(oldestSeq: Long,
+                                     covered: => Boolean): Boolean =
+      if (kind == "eq") seq > oldestSeq else covered
+  }
+
+  /** Whether a delete applies to at least one of `files` (the deletes
+    * relevant to them), with the files' paths and oldest sequence
+    * number built once, on first use. */
+  private[graft] def appliesToAny(files: Seq[FileEntry])
+      : DeleteEntry => Boolean = {
+    lazy val paths = files.map(_.path).toSet
+    lazy val oldest =
+      if (files.isEmpty) Long.MaxValue else files.map(_.seq).min
+    e => e.appliesTo(oldest, e.covers.exists(paths))
+  }
 
   private[lake] val DeleteFileCol = "_del_file"
   private[lake] val DeletePosCol = "_del_pos"
@@ -3876,41 +3539,18 @@ object LakeTable {
     case _ => false
   }
 
-  /** Normalize a parquet footer min/max into the ColStat domain. */
-  private def statValue(v: Any, dt: DataType): Option[Any] = (v, dt) match {
-    case (n: java.lang.Integer, _) => Some(n.longValue())
-    case (n: java.lang.Long, _)    => Some(n.longValue())
-    case (n: java.lang.Float, _)   =>
-      if (n.isNaN) None else Some(n.doubleValue())
-    case (n: java.lang.Double, _)  =>
-      if (n.isNaN) None else Some(n.doubleValue())
-    case (b: java.lang.Boolean, _) => Some(b.booleanValue())
-    case (b: org.apache.parquet.io.api.Binary, StringType) =>
-      Some(b.toStringUsingUTF8)
-    case _ => None
+  /** Normalize a parquet footer min/max into the ColStat domain, the
+    * domain of [[Prune.value]] (which compares them). */
+  private def statValue(v: Any, dt: DataType): Option[Any] = v match {
+    case b: org.apache.parquet.io.api.Binary =>
+      if (dt == StringType) Some(b.toStringUsingUTF8) else None
+    case other => Prune.value(other) // boxed int/long/float/double/boolean
   }
 
-  private[graft] def cmpStat(a: Any, b: Any): Option[Int] = (a, b) match {
-    case (x: Long, y: Long)       => Some(java.lang.Long.compare(x, y))
-    case (x: Long, y: Double)     => Some(java.lang.Double.compare(x.toDouble, y))
-    case (x: Double, y: Long)     => Some(java.lang.Double.compare(x, y.toDouble))
-    case (x: Double, y: Double)   => Some(java.lang.Double.compare(x, y))
-    // UNSIGNED UTF-8 BYTE order, matching how parquet computes binary
-    // min/max (and how Spark orders strings): UTF-16 compareTo would
-    // disagree around supplementary characters — chars >= U+E000 sort
-    // BELOW surrogate-pair code points in UTF-16 units but above them
-    // in UTF-8 bytes — and an equality prune bound-checked with the
-    // wrong order can drop files holding matching rows
-    case (x: String, y: String)   => Some(java.util.Arrays.compareUnsigned(
-      x.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-      y.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-    case (x: Boolean, y: Boolean) => Some(java.lang.Boolean.compare(x, y))
-    case _ => None
-  }
   private def minOf(a: Any, b: Any): Option[Any] =
-    cmpStat(a, b).map(c => if (c <= 0) a else b)
+    Prune.cmpStat(a, b).map(c => if (c <= 0) a else b)
   private def maxOf(a: Any, b: Any): Option[Any] =
-    cmpStat(a, b).map(c => if (c >= 0) a else b)
+    Prune.cmpStat(a, b).map(c => if (c >= 0) a else b)
 
 
   /** The [[footerMeta]] tuple: (rows, per-column [lo, hi] stats,

@@ -183,8 +183,7 @@ class GraftLakeChangesMicroBatchStream(lake: LakeTable,
             "delete-scope shrink cannot be represented as row-level " +
             "changes")
       }
-      val grew = survivors.filter(f => newDels.exists(e =>
-        if (e.kind == "eq") e.seq > f.seq else e.covers.contains(f.path)))
+      val grew = survivors.filter(f => newDels.exists(_.appliesTo(f)))
       StepPlan(st.version, removed, grew, added, st.prevDeletes, newDels,
         st.isUpdate, st.committedAtMs)
     }

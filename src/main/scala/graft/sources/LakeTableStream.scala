@@ -12,7 +12,7 @@ import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetPartitionRea
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.lake.LakeTable
+import graft.lake.{LakeTable, Prune}
 
 /** Offset/limit plumbing shared by the catalog table's two streaming
   * faces — the APPEND stream ([[GraftLakeMicroBatchStream]]) and the
@@ -398,108 +398,29 @@ private[sources] object MorPlanning {
 
   /** Manifest-stats prune test over one batch's EQUALITY-delete keys
     * (already on the driver, bounded): can `entry` hold ANY row one of
-    * `state`'s key tuples matches? Uses the same normalized [lo, hi]
-    * footer stats and unsigned-UTF-8 comparator as the file pruner.
-    * CONSERVATIVE throughout — a missing stat, unorderable type, or
-    * unnormalizable value answers TRUE; a null key component matches
-    * only files not proven null-free; float/double zeros test the
-    * whole {-0.0, +0.0} class (Double.compare orders -0.0 < +0.0, and
-    * SQL equality does not). This is what keeps a GDPR forget's
-    * changelog batch O(files that can hold the keys) instead of
-    * O(files predating the delete) on a clustered table — position
-    * deletes are not consulted, they name files explicitly. */
+    * `state`'s key tuples matches? Each tuple is one point
+    * [[Prune.KeyBound]] per key column; a roster above 1,024 tuples
+    * falls back to one per-column bound over all of them (O(1) per
+    * file). Conservative like every [[Prune]] test. This is what keeps
+    * a GDPR forget's changelog batch O(files that can hold the keys)
+    * instead of O(files predating the delete) on a clustered table —
+    * position deletes are not consulted, they name files explicitly. */
   def eqTouchTest(state: MorState): LakeTable.FileEntry => Boolean = {
-    def statNorm(v: Any): Option[Any] = v match {
-      case x: Byte    => Some(x.toLong)
-      case x: Short   => Some(x.toLong)
-      case x: Int     => Some(x.toLong)
-      case x: Long    => Some(x)
-      case x: Float   => Some(x.toDouble)
-      case x: Double  => Some(x)
-      case x: Boolean => Some(x)
-      case x: String  => Some(x)
-      case x: UTF8String => Some(x.toString)
-      case _ => None
-    }
-    // containment of one normalized key in one file's [lo, hi]
-    def contains(st: LakeTable.ColStat, k: Any): Boolean = {
-      val (loProbe, hiProbe) = k match {
-        case d: Double if d == 0.0d => (0.0d: Any, -0.0d: Any)
-        case other => (other, other)
-      }
-      LakeTable.cmpStat(st.lo, loProbe).forall(_ <= 0) &&
-        LakeTable.cmpStat(hiProbe, st.hi).forall(_ <= 0)
-    }
-    def colMayHold(e: LakeTable.FileEntry, c: String, v: Any): Boolean =
-      v match {
-        case null => !e.nullCounts.get(c).contains(0L)
-        case _ => statNorm(v) match {
-          case None => true
-          case Some(k) => e.stats.get(c) match {
-            case None => true
-            case Some(st) => contains(st, k)
-          }
-        }
-      }
-    // small rosters test exact tuples; large ones fall back to
-    // per-column bounds (one pass over the keys, O(1) per file)
-    val groups: Seq[LakeTable.FileEntry => Boolean] =
+    val groups: Seq[Seq[Seq[Prune.KeyBound]]] =
       state.eqGroups.filter(_.keys.nonEmpty).map { g =>
-        if (g.keys.size <= 1024) { (e: LakeTable.FileEntry) =>
-          g.keys.keysIterator.exists(t =>
-            g.keyCols.indices.forall(i =>
-              colMayHold(e, g.keyCols(i), t(i))))
-        } else {
-          // per-column (min, max, hasNull, unpruneable) over all tuples
-          val bounds = g.keyCols.indices.map { i =>
-            var lo: Any = null; var hi: Any = null
-            var hasNull = false; var unpruneable = false
-            g.keys.keysIterator.foreach { t =>
-              statNorm(t(i)) match {
-                case _ if t(i) == null => hasNull = true
-                case None => unpruneable = true // never prune this col
-                case Some(k0) =>
-                  // a zero key spans the {-0.0, +0.0} class
-                  val (kLo, kHi) = k0 match {
-                    case d: Double if d == 0.0d => (-0.0d: Any, 0.0d: Any)
-                    case o => (o, o)
-                  }
-                  if (lo == null ||
-                      LakeTable.cmpStat(kLo, lo).forall(_ < 0)) lo = kLo
-                  if (hi == null ||
-                      LakeTable.cmpStat(kHi, hi).forall(_ > 0)) hi = kHi
-              }
-            }
-            (lo, hi, hasNull, unpruneable)
-          }
-          (e: LakeTable.FileEntry) =>
-            g.keyCols.indices.forall { i =>
-              val (lo, hi, hasNull, unpruneable) = bounds(i)
-              val c = g.keyCols(i)
-              unpruneable ||
-                (hasNull && !e.nullCounts.get(c).contains(0L)) ||
-                (lo != null && e.stats.get(c).forall(st =>
-                  LakeTable.cmpStat(st.lo, hi).forall(_ <= 0) &&
-                    LakeTable.cmpStat(lo, st.hi).forall(_ <= 0)))
-            }
-        }
+        val points = g.keys.keysIterator.map(t => g.keyCols.indices.map(i =>
+          Prune.KeyBound.point(g.keyCols(i), t(i))))
+        if (g.keys.size <= 1024) points.toSeq
+        else Seq(points.reduce(_.zip(_).map { case (x, y) => x union y }))
       }
-    e => groups.exists(_(e))
+    e => groups.exists(_.exists(_.forall(_.mayHold(e))))
   }
 
   /** Rows of merge-on-read delete state relevant to `files` —
     * metadata-only (manifest row counts), the bound check's input. */
   def morRowCount(files: Seq[LakeTable.FileEntry],
-                  dels: Seq[LakeTable.DeleteEntry]): Long = {
-    if (dels.isEmpty) return 0L
-    val filePaths = files.map(_.path).toSet
-    val minSeq = if (files.isEmpty) Long.MaxValue else files.map(_.seq).min
-    dels.collect {
-      case e if e.kind != "eq" && e.covers.exists(filePaths.contains) =>
-        e.rows
-      case e if e.kind == "eq" && e.seq > minSeq => e.rows
-    }.sum
-  }
+                  dels: Seq[LakeTable.DeleteEntry]): Long =
+    dels.filter(LakeTable.appliesToAny(files)).map(_.rows).sum
 
   /** Load the delete state relevant to `files` onto the driver:
     * position deletes become per-file sorted skip-lists (keyed by
@@ -514,11 +435,8 @@ private[sources] object MorPlanning {
             dels: Seq[LakeTable.DeleteEntry], pruned: StructType,
             snapSchema: StructType, errPrefix: String): MorState = {
     val session = SparkSession.active
-    val filePaths = files.map(_.path).toSet
-    val pos = dels.filter(e =>
-      e.kind != "eq" && e.covers.exists(filePaths.contains))
-    val minSeq = if (files.isEmpty) Long.MaxValue else files.map(_.seq).min
-    val eq = dels.filter(e => e.kind == "eq" && e.seq > minSeq)
+    val (eq, pos) =
+      dels.filter(LakeTable.appliesToAny(files)).partition(_.kind == "eq")
     eq.flatMap(_.keyCols).distinct.foreach { c =>
       require(pruned.fieldNames.contains(c),
         s"$errPrefix: live equality deletes key on column '$c', " +

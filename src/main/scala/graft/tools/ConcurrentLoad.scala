@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.Tables
+import graft.{LocalSpark, Tables}
 import graft.lake.LakeTable
 import graft.streaming.MVManager
 
@@ -37,11 +37,8 @@ object ConcurrentLoad {
   private val Batches = 20
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = LocalSpark.builder(32)
+      .config("spark.scheduler.mode", "FAIR").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1000000).selectExpr("sum(id)").collect()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",

@@ -5,7 +5,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
   SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
-import graft.SparkEntry
+import graft.{LocalSpark, SparkEntry}
 
 /** Dev tool: audit graded queries (`SparkEntry.queries`, matched by name
   * prefix) in one of three modes.
@@ -37,16 +37,7 @@ object JobAudit {
       case None    => ("jobs", args.toSeq)
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSpark.builder(32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val queries = prefixes.map(w => SparkEntry.queries.toSeq.sortBy(_._1)
       .find(_._1.startsWith(w)).getOrElse(sys.error(s"no query matching $w")))

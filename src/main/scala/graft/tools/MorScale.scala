@@ -2,9 +2,9 @@ package graft.tools
 
 import java.nio.file.{Files, Path, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.LocalSpark
 import graft.lake.LakeTable
 
 /** Measures the merge-on-read delete claim: a positional delete's
@@ -33,10 +33,7 @@ object MorScale {
       du(Paths.get(root, "metadata"))
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = LocalSpark.builder(32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val files = 16

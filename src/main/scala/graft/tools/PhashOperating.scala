@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
+import graft.LocalSpark
 import graft.operators.MultimodalOps
 
 /** Operating curve of the perceptual-hash near-dup detector (q165/
@@ -26,9 +25,7 @@ object PhashOperating {
   private val Trials = 200
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = LocalSpark.builder(32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

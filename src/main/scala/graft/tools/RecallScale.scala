@@ -1,9 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{LocalSpark, Tables}
 import graft.operators.{IvfIndex, SimilarityOps}
 
 /** Measures RECALL@10 vs brute force for the whole ANN family — the
@@ -25,10 +24,7 @@ import graft.operators.{IvfIndex, SimilarityOps}
   * Q query vectors in md5-hash order; self always excluded. */
 object RecallScale {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = LocalSpark.builder(32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1000000).selectExpr("sum(id)").collect()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",

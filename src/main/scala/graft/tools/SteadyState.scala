@@ -1,10 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.Tables
+import graft.{LocalSpark, Tables}
 import graft.lake.LakeTable
 import graft.streaming.MVManager
 
@@ -23,10 +23,7 @@ object SteadyState {
   private val Batches = 20
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = LocalSpark.builder(32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1000000).selectExpr("sum(id)").collect()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
