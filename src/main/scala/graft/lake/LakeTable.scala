@@ -50,7 +50,7 @@ import org.apache.spark.sql.types._
   */
 class LakeTable private (
     val spark: SparkSession, val root: String,
-    private[lake] val commitStore: CommitStore) extends Commit {
+    private[lake] val commitStore: CommitStore) extends Commit with Changes {
 
   import Commit._
   import LakeTable._
@@ -145,11 +145,11 @@ class LakeTable private (
 
   /** THE snapshot reader: version `v` through the commit store, None
     * when it was never committed or has been expired. */
-  private def readSnapshot(v: Int): Option[Snapshot] =
+  private[lake] def readSnapshot(v: Int): Option[Snapshot] =
     commitStore.read(versionPath(metaDir, v)).map(new Snapshot(v, _))
 
   /** Snapshot `v` of the log (time travel); fails when it is absent. */
-  private def snapshotAt(v: Int): Snapshot =
+  private[lake] def snapshotAt(v: Int): Snapshot =
     readSnapshot(v).getOrElse(throw new java.nio.file.NoSuchFileException(
       versionPath(metaDir, v).toString))
 
@@ -562,7 +562,7 @@ class LakeTable private (
     * rename (or carrying a retired ID whose name was reused) get a
     * per-epoch scan with an aliasing projection, and the union of those
     * scans stays fully distributed, prunable, and pushdown-friendly. */
-  private def readEntries(entries: Seq[FileEntry], snap: Snapshot,
+  private[lake] def readEntries(entries: Seq[FileEntry], snap: Snapshot,
                           tag: Boolean = false,
                           claimBucket: Boolean = true,
                           tagPos: Boolean = false,
@@ -821,13 +821,6 @@ class LakeTable private (
     (nameScans ++ idScans).reduce(_ unionByName _)
   }
 
-  /** Incremental read: only rows in files committed AFTER `fromVersion`
-    * (CDC-style append diff — the snapshot log makes this a file-list
-    * set difference, no data diffing). */
-  def changesSince(fromVersion: Int): DataFrame =
-    changesBetween(fromVersion, mainVersion) // WAP: staged commits
-                                             // are not deltas yet
-
   /** Retained snapshot `v`; fails an incremental read whose checkpoint
     * lags the retention policy, instead of the raw NoSuchFileException
     * a vacuumed snapshot would throw mid-plan. The contract: an incremental
@@ -835,55 +828,12 @@ class LakeTable private (
     * `snapshots.auto.keepLast` expires history; a consumer that
     * paused past retention has no exact delta left and must resync
     * from a full read. */
-  private def retained(v: Int): Snapshot = readSnapshot(v).getOrElse(
+  private[lake] def retained(v: Int): Snapshot = readSnapshot(v).getOrElse(
     throw new IllegalStateException(
       s"snapshot $v of table at $root has been expired by " +
       "the retention policy (snapshots.auto.keepLast / " +
       "expireSnapshots); the incremental consumer's checkpoint lags " +
       "retention — resync from a full read or raise keepLast"))
-
-  /** Rows in files committed in versions (from, to] — the bounded form
-    * of [[changesSince]] for consumers that must not read past an
-    * already-announced offset (e.g. a streaming curation MV whose
-    * micro-batch covers an exact version range; commits racing in
-    * after `to` belong to the NEXT batch, not this one).
-    *
-    * Compaction commits (appMeta `compaction=true`) are SKIPPED by a
-    * per-version walk: they rewrite existing rows into fewer files and
-    * add nothing, so re-presenting their output as "added" would
-    * reprocess the whole table in one micro-batch (correct under an
-    * idempotent consumer, but O(table) — the failure mode that turns a
-    * continuous curation loop quadratic once auto-compaction kicks
-    * in). The pre-compaction originals stay readable: retention keeps
-    * every file referenced by any retained snapshot, and the version
-    * they were added at is retained by [[retained]]'s guard.
-    * When a NON-row-preserving rewrite (delete/upsert) sits in the
-    * range — or an intermediate snapshot is missing — per-version
-    * attribution is ambiguous, and the walk falls back to the plain
-    * set-difference superset (re-emission of rewritten survivors; an
-    * idempotent/fp-frontier consumer absorbs it). */
-  def changesBetween(fromVersion: Int, toVersion: Int): DataFrame = {
-    val fromPaths =
-      if (fromVersion < 0) Set.empty[String]
-      else retained(fromVersion).files.map(_.path).toSet
-    val to = snapshotAt(toVersion)
-    def setDiff(): DataFrame =
-      readEntries(to.files.filterNot(f => fromPaths.contains(f.path)), to)
-    val steps = (math.max(0, fromVersion + 1) to toVersion).map(v =>
-      if (v == toVersion) Some(to) else readSnapshot(v))
-    if (steps.exists(_.isEmpty)) return setDiff()
-    var prevPaths = fromPaths
-    val newEntries = Seq.newBuilder[FileEntry]
-    for (s <- steps.flatten) {
-      val paths = s.files.map(_.path).toSet
-      val removed = prevPaths.diff(paths)
-      if (!s.isCompaction && removed.nonEmpty) return setDiff()
-      if (!s.isCompaction)
-        newEntries ++= s.files.filterNot(f => prevPaths.contains(f.path))
-      prevPaths = paths
-    }
-    readEntries(newEntries.result(), to)
-  }
 
   /** Snapshot `v`'s data files WITH its live merge-on-read delete
     * entries — the planning input of the streaming read's delete-aware
@@ -892,247 +842,6 @@ class LakeTable private (
       : (Seq[FileEntry], Seq[LakeTable.DeleteEntry]) = {
     val s = retained(v)
     (s.files, s.deletes)
-  }
-
-  /** Metadata-only walk of versions (from, to]: per version, the data
-    * files it ADDED (empty for compactions — rewrites carry no new
-    * rows) and whether it may have REMOVED rows (new delete entries /
-    * dropped files; compactions excepted — their drop is the rewrite).
-    * This is the planning currency of the catalog table's streaming
-    * read ([[GraftSqlTable]] MICRO_BATCH_READ): one entry list per
-    * commit, no file opened. Fails on an expired version — a
-    * checkpoint that fell behind the retention window must restart
-    * rather than silently skip history. */
-  def addedEntriesBetween(from: Int, to: Int)
-      : Seq[(Int, Seq[FileEntry], Boolean)] = {
-    val base = if (from < 0) None else Some(retained(from))
-    var prevPaths: Set[String] =
-      base.map(_.files.map(_.path).toSet).getOrElse(Set.empty)
-    var prevDels: Set[String] =
-      base.map(_.deletes.map(_.path).toSet).getOrElse(Set.empty)
-    (math.max(0, from + 1) to to).map { v =>
-      val s = retained(v)
-      val paths = s.files.map(_.path).toSet
-      val dels = s.deletes.map(_.path).toSet
-      val added =
-        if (s.isCompaction) Nil
-        else s.files.filterNot(f => prevPaths.contains(f.path))
-      val removes = !s.isCompaction &&
-        (dels.exists(!prevDels.contains(_)) ||
-          prevPaths.exists(!paths.contains(_)))
-      prevPaths = paths
-      prevDels = dels
-      (v, added, removes)
-    }
-  }
-
-  /** Metadata-only walk of versions (from, to] carrying the FULL
-    * before/after file and delete-entry sets of every step — the
-    * planning currency of the streaming CHANGELOG read
-    * ([[graft.sources.GraftLakeChangesMicroBatchStream]]), which
-    * decomposes each commit into file-grained (op, row) partitions:
-    * files REMOVED by the commit serve their live rows as deletes,
-    * files ADDED serve theirs as inserts, and files whose
-    * merge-on-read delete SCOPE grew serve exactly the newly-deleted
-    * rows. One snapshot read per version, no data file opened.
-    * Fails on an expired version — a checkpoint that fell behind the
-    * retention window must restart rather than silently skip. */
-  private[graft] def changeStepsBetween(from: Int, to: Int)
-      : Seq[LakeTable.ChangeStep] = {
-    var prev = retained(from)
-    (from + 1 to to).map { v =>
-      val s = retained(v)
-      val step = LakeTable.ChangeStep(v, prev.files, s.files, prev.deletes,
-        s.deletes, s.isCompaction, s.appMeta.get("cdf.op").contains("update"),
-        s.committedAtMs)
-      prev = s
-      step
-    }
-  }
-
-  // ---- ROW-LEVEL CHANGELOG (Iceberg changelog scan / Delta CDF) ------
-  //
-  // [[changesBetween]] is the INSERT-ONLY incremental feed (what a
-  // curation MV consumes; re-emission allowed, deletes invisible).
-  // This is the full-fidelity sibling: NET row-level changes between
-  // two retained snapshots, each row tagged `_change_type` `insert` or
-  // `delete` — what a downstream index, replica, or audit needs to
-  // stay exactly in sync with a table that takes merge-on-read
-  // deletes and upserts (a GDPR forget MUST propagate as deletes; the
-  // insert-only feed structurally cannot carry it).
-  //
-  // Cost is the whole design: the diff runs over CHANGED FILES ONLY.
-  // A data file contributes identically to both snapshots iff it is
-  // present in both with the same effective delete scope (the set of
-  // delete files applying to it — position deletes by `covers`,
-  // equality deletes by seq predicate), so those files cancel out of
-  // the multiset difference BY METADATA and are never read. Pure
-  // appends therefore cost O(new files) with no shuffle at all (fast
-  // path below); a merge-on-read delete costs O(files it covers). A
-  // compaction in range nets to ZERO rows — an all-compaction range
-  // short-circuits to empty by the `compaction=true` marker; a mixed
-  // range pays a diff of the rewritten files to prove the zero
-  // (cost O(rewritten in range), correctness unconditional — rewrites
-  // rename files, so path identity cannot cancel them by metadata).
-  // At 100 TB the changelog for a daily delta touches the delta,
-  // never the table.
-  //
-  // Net semantics: a row inserted then deleted INSIDE the range emits
-  // nothing; an upsert emits the old version as `delete` and the new
-  // as `insert`. Schema changes in range are aligned by FIELD ID onto
-  // the `to` snapshot's column set (renamed columns diff as one
-  // column; columns added in range surface `from`-side rows as null,
-  // exactly how a reader of the new schema sees them).
-  def readChangelog(fromVersion: Int, toVersion: Int): DataFrame = {
-    import org.apache.spark.sql.functions.lit
-    require(fromVersion <= toVersion,
-      s"changelog range is [from <= to], got ($fromVersion, $toVersion)")
-    val nF = retained(fromVersion)
-    val nT = retained(toVersion)
-    // all-compaction range: row-preserving by the strict-replace
-    // commit contract, so the changelog is empty by metadata alone
-    val steps = (fromVersion + 1) to toVersion
-    if (steps.nonEmpty && steps.forall(v =>
-        (if (v == toVersion) Some(nT) else readSnapshot(v))
-          .exists(_.isCompaction)))
-      return readEntries(Nil, nT).withColumn("_change_type", lit("insert"))
-    val filesF = nF.files; val filesT = nT.files
-    val delF = nF.deletes; val delT = nT.deletes
-    // Effective delete scope of one data file under one snapshot's
-    // delete set — the METADATA identity that decides whether the
-    // file's visible rows can differ between the snapshots. Equality
-    // deletes key on the seq predicate (e.seq > f.seq), position
-    // deletes on explicit covers; the sorted delete-file paths are a
-    // stable fingerprint because delete files are immutable and
-    // UUID-named (same reasoning as the manifest cache).
-    def scope(f: FileEntry, dels: Seq[DeleteEntry]): Set[String] =
-      dels.filter(_.appliesTo(f)).map(_.path).toSet
-    val scopeF = filesF.map(f => f.path -> scope(f, delF)).toMap
-    val scopeT = filesT.map(f => f.path -> scope(f, delT)).toMap
-    val unchanged: Set[String] = filesF.collect {
-      case f if scopeT.get(f.path).contains(scopeF(f.path)) => f.path
-    }.toSet
-    // GDPR fast path: a file present in BOTH snapshots whose scope
-    // grew ONLY by equality deletes sharing one key-column set can
-    // only have LOST rows, and exactly those matching the entries'
-    // committed keys — so its deletes come from one key semi-join
-    // (broadcast-sized right side) instead of a two-sided multiset
-    // diff. A "forget these users" commit on a large table thus
-    // produces its changelog with ZERO exceptAll shuffles: one scan
-    // of the covered files, key-filtered map-side. Excluding these
-    // files from the general diff preserves it exactly: they appear
-    // on both sides with identical surviving-row multisets, which
-    // cancel regardless.
-    val delTByPath = delT.map(e => e.path -> e).toMap
-    val pathsT = filesT.map(_.path).toSet
-    val sF = nF.schema
-    val grewByEq: Map[Seq[String], Seq[FileEntry]] = filesF
-      .filter(f => pathsT.contains(f.path) && !unchanged.contains(f.path))
-      .flatMap { f =>
-        val added = (scopeT(f.path) -- scopeF(f.path)).toSeq.sorted
-        val shrank = (scopeF(f.path) -- scopeT(f.path)).nonEmpty
-        val es = added.flatMap(delTByPath.get)
-        // the fast path semi-joins under the FROM schema, so it only
-        // applies when every key column already exists there — an
-        // equality delete keying on a column ADDED inside the range
-        // falls through to the general multiset diff (which reads both
-        // sides and needs no key projection)
-        if (!shrank && es.nonEmpty && es.size == added.size &&
-            es.forall(e => e.kind == "eq" &&
-              e.keyCols == es.head.keyCols) &&
-            es.head.keyCols.forall(sF.fieldNames.contains))
-          Some(added -> f)
-        else None
-      }.groupBy(_._1).map { case (p, fs) => p -> fs.map(_._2) }
-    val fastPaths: Set[String] =
-      grewByEq.values.flatten.map(_.path).toSet
-    val chF = filesF.filterNot(f =>
-      unchanged.contains(f.path) || fastPaths.contains(f.path))
-    val chT = filesT.filterNot(f =>
-      unchanged.contains(f.path) || fastPaths.contains(f.path))
-    val ct = "_change_type"
-    val fastDeletes: Option[DataFrame] =
-      if (grewByEq.isEmpty) None
-      else Some(grewByEq.map { case (entryPaths, fs) =>
-        val keyCols = delTByPath(entryPaths.head).keyCols
-        val keySchema = StructType(keyCols.map(c => sF(c)).toSeq)
-        val keys = spark.read.schema(keySchema)
-          .parquet(entryPaths.map(p => s"$root/$p"): _*)
-        // manifest-stats prune before any file read: a covered file
-        // whose [lo, hi] ranges cannot hold ANY committed key emits
-        // nothing — so the forget's changelog reads O(files that can
-        // hold the keys), not O(files predating the delete), exactly
-        // like the streaming face's growth prune. One tiny
-        // distributed agg over the key files buys the bounds.
-        val base = readEntries(pruneByKeyBounds(fs, keys, keyCols),
-          nF, deletes = delF)
-        // null-safe equality on the key tuple — Iceberg eq-delete
-        // semantics, identical to the read path's anti-join
-        val cond = keyCols.map(c => base(c) <=> keys(c)).reduce(_ && _)
-        alignByFieldId(base.join(keys, cond, "left_semi"), nF, nT)
-      }.reduce(_ unionByName _))
-    def withFast(df: DataFrame): DataFrame = fastDeletes match {
-      case Some(fd) => df.unionByName(fd.withColumn(ct, lit("delete")))
-      case None => df
-    }
-    // deletes visible on changed from-files still apply (covers /
-    // seq-scoped inside readEntries, restricted to the subset read)
-    def side(entries: Seq[FileEntry], n: Snapshot,
-             dels: Seq[DeleteEntry]): DataFrame =
-      alignByFieldId(readEntries(entries, n, deletes = dels), n, nT)
-    if (chF.isEmpty && chT.isEmpty)
-      return withFast(side(Nil, nT, Nil).withColumn(ct, lit("insert")))
-    if (chF.isEmpty) // pure append(s): no diff shuffle, scan new files
-      return withFast(side(chT, nT, delT).withColumn(ct, lit("insert")))
-    val before = side(chF, nF, delF)
-    val after = side(chT, nT, delT)
-    if (chT.isEmpty)
-      return withFast(before.withColumn(ct, lit("delete")))
-    withFast(after.exceptAll(before).withColumn(ct, lit("insert"))
-      .unionByName(before.exceptAll(after).withColumn(ct, lit("delete"))))
-  }
-
-  /** Files of `fs` whose per-column [lo, hi] footer stats can hold at
-    * least one of `keys`' tuples, by PER-COLUMN BOUNDS of the key set
-    * (one small agg job over the key files — min, max, any-null per
-    * column), tested by [[Prune.KeyBound]]. */
-  private def pruneByKeyBounds(fs: Seq[FileEntry], keys: DataFrame,
-                               keyCols: Seq[String]): Seq[FileEntry] = {
-    import org.apache.spark.sql.functions.{col => fcol, max => fmax, min => fmin, sum => fsum, when}
-    if (fs.isEmpty) return fs
-    val aggs = keyCols.flatMap(c => Seq(
-      fmin(fcol(s"`$c`")).as(s"lo_$c"),
-      fmax(fcol(s"`$c`")).as(s"hi_$c"),
-      fsum(when(fcol(s"`$c`").isNull, 1L).otherwise(0L)).as(s"n_$c")))
-    val row = keys.agg(aggs.head, aggs.tail: _*).head
-    val bounds = keyCols.map(c => Prune.KeyBound.of(c,
-      row.getAs[Any](s"lo_$c"), row.getAs[Any](s"hi_$c"),
-      Option(row.getAs[Any](s"n_$c")).exists(_.asInstanceOf[Long] > 0L)))
-    fs.filter(f => bounds.forall(_.mayHold(f)))
-  }
-
-  /** Project `df` (read under snapshot `from`) onto snapshot `to`'s
-    * column set, matching columns BY FIELD ID — the changelog's two
-    * sides must diff under one schema even when a rename/add/widen
-    * landed inside the range. Columns added after `from` surface as
-    * null; columns dropped before `to` drop out of the diff (their
-    * retired values are unobservable under the `to` schema, which is
-    * the changelog's contract). */
-  private def alignByFieldId(df: DataFrame, from: Snapshot,
-                             to: Snapshot): DataFrame = {
-    import org.apache.spark.sql.functions.{col => fcol, lit}
-    val (fromSchema, fromIds) = (from.schema, from.fieldIds)
-    val (toSchema, toIds) = (to.schema, to.fieldIds)
-    if (fromSchema == toSchema && fromIds == toIds) return df
-    val nameById = fromIds.map(_.swap)
-    df.select(toSchema.fields.toIndexedSeq.map { f =>
-      toIds.get(f.name).flatMap(nameById.get)
-        .filter(n => fromSchema.fieldNames.contains(n)) match {
-        case Some(fromName) =>
-          fcol(s"`$fromName`").cast(f.dataType).as(f.name)
-        case None => lit(null).cast(f.dataType).as(f.name)
-      }
-    }: _*)
   }
 
   /** Metadata-pruned read, Iceberg-manifest-style: every data file
@@ -3050,23 +2759,6 @@ object LakeTable {
                           numFiles: Int, rows: Long)
   private[lake] case class PendingWrite(files: Seq[FileEntry],
                                         schema: StructType)
-
-  /** One commit step of [[LakeTable.changeStepsBetween]]: the full
-    * before/after file and delete-entry sets of version `version`
-    * relative to its predecessor — metadata only, what the streaming
-    * changelog planner decomposes into per-file change partitions.
-    * `isUpdate` carries the writer's `cdf.op=update` stamp (a
-    * merge-on-read row-delta whose delta was pure update rows), which
-    * types the commit's change events as
-    * `update_preimage`/`update_postimage`. */
-  private[graft] case class ChangeStep(version: Int,
-                                       prevFiles: Seq[FileEntry],
-                                       files: Seq[FileEntry],
-                                       prevDeletes: Seq[DeleteEntry],
-                                       deletes: Seq[DeleteEntry],
-                                       isCompaction: Boolean,
-                                       isUpdate: Boolean,
-                                       committedAtMs: Long)
 
   /** One snapshot-level reference to an immutable manifest file
     * (relative to the table's metadata dir). `entries` rides in the

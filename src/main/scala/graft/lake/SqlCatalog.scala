@@ -1133,9 +1133,8 @@ class GraftChangesTable(ident: String, lake: LakeTable)
     // typed per-commit frame (update_preimage/update_postimage for
     // writer-stamped pure-update commits), balanced union (O(log n)
     // plan depth on wide version ranges)
-    graft.sources.GraftLakeChangesMicroBatchStream.balancedUnion(
-      (sv to ev).map(v => graft.sources.GraftLakeChangesMicroBatchStream
-        .commitChangeFrame(lake, visibleNames, v)))
+    graft.sources.GraftLakeChangesMicroBatchStream
+      .commitChangeFrames(lake, visibleNames, sv - 1, ev)
   }
 
   override def newScanBuilder(options: CaseInsensitiveStringMap)

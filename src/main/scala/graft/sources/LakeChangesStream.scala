@@ -34,7 +34,8 @@ import graft.lake.LakeTable
   * deltas.
   *
   * EXECUTION — every batch is FILE-GRAINED, fully distributed, cost
-  * O(files the commits touched), never O(table):
+  * O(files the commits touched), never O(table), planned from each
+  * commit's [[graft.lake.Changes.ChangeStep]]:
   *  - files a commit ADDED serve their rows as `insert` (same-commit
   *    equality deletes never apply to them — Iceberg seq semantics);
   *  - files a commit REMOVED (overwrite, copy-on-write rewrite) serve
@@ -48,8 +49,8 @@ import graft.lake.LakeTable
   *    NOT the prior scope) as `delete` — a GDPR equality-delete
   *    commit on a 100 TB table streams O(covered files), zero
   *    shuffles;
-  *  - compactions net to zero by the commit contract and are skipped
-  *    by their marker; a delete-scope SHRINK on a live file (dead
+  *  - compactions net to zero by the commit contract (their step
+  *    changes no row); a delete-scope SHRINK on a live file (dead
   *    delete entries drop only when every covered row left the live
   *    set) is impossible under the contract and REFUSES loudly if
   *    ever observed rather than emitting a wrong changelog.
@@ -116,21 +117,9 @@ class GraftLakeChangesMicroBatchStream(lake: LakeTable,
 
   override protected def emittedRowsBetween(from: Int, targetV: Int)
       : Seq[(Int, Long)] =
-    lake.changeStepsBetween(from, targetV).map { st =>
-      if (st.isCompaction) (st.version, 0L)
-      else {
-        val prevPaths = st.prevFiles.map(_.path).toSet
-        val curPaths = st.files.map(_.path).toSet
-        val removed = st.prevFiles.filterNot(f => curPaths(f.path))
-          .map(_.rows).sum
-        val added = st.files.filterNot(f => prevPaths(f.path))
-          .map(_.rows).sum
-        val prevDelPaths = st.prevDeletes.map(_.path).toSet
-        val newDels = st.deletes.filterNot(e => prevDelPaths(e.path))
-          .map(_.rows).sum
-        (st.version, removed + added + newDels)
-      }
-    }
+    lake.steps(from, targetV).map(st => (st.version,
+      (st.removed ++ st.added).map(_.rows).sum +
+        st.newDeletes.map(_.rows).sum))
 
   override def planInputPartitions(start: Offset, end: Offset)
       : Array[InputPartition] = {
@@ -146,47 +135,9 @@ class GraftLakeChangesMicroBatchStream(lake: LakeTable,
     }
 
     val errPrefix = s"changelog streaming ${lake.root}"
-    val steps = lake.changeStepsBetween(lo, hi)
-      .filterNot(_.isCompaction)
-    // ---- decompose each commit into per-file plans (metadata only) --
-    case class StepPlan(version: Int,
-                        removed: Seq[LakeTable.FileEntry],
-                        grew: Seq[LakeTable.FileEntry],
-                        added: Seq[LakeTable.FileEntry],
-                        prevDeletes: Seq[LakeTable.DeleteEntry],
-                        newDels: Seq[LakeTable.DeleteEntry],
-                        isUpdate: Boolean,
-                        tsMs: Long)
-    val plans = steps.map { st =>
-      val prevPaths = st.prevFiles.map(_.path).toSet
-      val curPaths = st.files.map(_.path).toSet
-      val prevDelPaths = st.prevDeletes.map(_.path).toSet
-      val removed = st.prevFiles.filterNot(f => curPaths(f.path))
-      val added = st.files.filterNot(f => prevPaths(f.path))
-      val newDels = st.deletes.filterNot(e => prevDelPaths(e.path))
-      // delete-scope shrink guard: a dropped delete entry is legal
-      // only when every row it still covered left the live set with
-      // this commit — otherwise rows would RESURRECT, which no
-      // insert/delete event stream can express
-      val survivors = st.files.filter(f => prevPaths(f.path))
-      val minSurvivorSeq =
-        if (survivors.isEmpty) Long.MaxValue
-        else survivors.map(_.seq).min
-      val curDelPaths = st.deletes.map(_.path).toSet
-      st.prevDeletes.filterNot(e => curDelPaths(e.path)).foreach { e =>
-        val shrank =
-          if (e.kind == "eq") minSurvivorSeq < e.seq
-          else e.covers.exists(p => curPaths(p))
-        if (shrank) throw new IllegalStateException(
-          s"$errPrefix: version ${st.version} dropped delete entry " +
-            s"${e.path} while rows it covered remain live — a " +
-            "delete-scope shrink cannot be represented as row-level " +
-            "changes")
-      }
-      val grew = survivors.filter(f => newDels.exists(_.appliesTo(f)))
-      StepPlan(st.version, removed, grew, added, st.prevDeletes, newDels,
-        st.isUpdate, st.committedAtMs)
-    }
+    // metadata only: each commit decomposes into per-file plans
+    val steps = lake.steps(lo, hi)
+    steps.foreach(_.requireNoShrink(errPrefix))
     // ---- bound the batch's driver-broadcast delete state ------------
     // Below the bound, the commits' delete delta broadcasts and every
     // file reads exactly once (the fast path). Above it — a bulk GDPR
@@ -196,73 +147,72 @@ class GraftLakeChangesMicroBatchStream(lake: LakeTable,
     // materialized once into the stream's checkpoint scratch under the
     // batch-0 `_SUCCESS` idempotence pattern, so the stream keeps
     // flowing at any delete volume instead of refusing.
-    val totalMorRows = plans.map(p =>
-      MorPlanning.morRowCount(p.removed ++ p.grew, p.prevDeletes) +
-        MorPlanning.morRowCount(p.grew ++ p.added, p.newDels)).sum
+    val totalMorRows = steps.map(st =>
+      MorPlanning.morRowCount(st.removed ++ st.grew, st.beforeDeletes) +
+        MorPlanning.morRowCount(st.grew ++ st.added, st.newDeletes)).sum
     if (totalMorRows > maxMorRows)
-      return distributedDeltaPartitions(session, lo, hi,
-        plans.map(_.version))
+      return distributedDeltaPartitions(session, lo, hi)
     // ---- build + broadcast the per-version states --------------------
-    val perVersion: Map[Int, ChangeVersionState] = plans.map { p =>
+    val perVersion: Map[Int, ChangeVersionState] = steps.map { st =>
       val oldState =
-        if ((p.removed ++ p.grew).isEmpty || p.prevDeletes.isEmpty)
+        if ((st.removed ++ st.grew).isEmpty || st.beforeDeletes.isEmpty)
           MorState.empty
-        else MorPlanning.build(lake, p.removed ++ p.grew, p.prevDeletes,
-          visible, snapSchema, errPrefix)
+        else MorPlanning.build(lake, st.removed ++ st.grew,
+          st.beforeDeletes, visible, snapSchema, errPrefix)
       val addedState =
-        if (p.newDels.isEmpty) MorState.empty
-        else MorPlanning.build(lake, p.grew ++ p.added, p.newDels,
+        if (st.newDeletes.isEmpty) MorState.empty
+        else MorPlanning.build(lake, st.grew ++ st.added, st.newDeletes,
           visible, snapSchema, errPrefix)
-      p.version -> ChangeVersionState(oldState, addedState)
+      st.version -> ChangeVersionState(oldState, addedState)
     }.toMap
     val bc = session.sparkContext
       .broadcast(ChangeBatchState(perVersion))
-    val allEntries = plans.flatMap(p => p.removed ++ p.grew ++ p.added)
+    val allEntries = steps.flatMap(st => st.removed ++ st.grew ++ st.added)
     LakeStreamPlanning.guardFieldIds(lake, currentIds, allEntries)
     // ---- per-file change partitions ----------------------------------
     var idx = -1
-    plans.flatMap { p =>
+    steps.flatMap { st =>
       def part(f: LakeTable.FileEntry, changeType: String, mode: Int)
           : InputPartition = {
         idx += 1
         GraftChangeInputPartition(
           LakeStreamPlanning.filePartition(lake, f, idx, readPartSchema),
-          f.path.split("/").last, f.seq, p.version, p.tsMs, changeType,
-          mode, bc)
+          f.path.split("/").last, f.seq, st.version, st.committedAtMs,
+          changeType, mode, bc)
       }
-      val st = perVersion(p.version)
+      val state = perVersion(st.version)
       // manifest-stats prune over the commit's own equality keys: a
       // growth file whose [lo, hi] ranges can hold NO deleted key
       // emits nothing and is never read — a GDPR forget's changelog
       // batch reads O(files that can hold the keys), not O(files
       // predating the delete), on any clustered/bucketed layout.
       // Files a NEW position delete names are kept unconditionally.
-      val eqTouch = MorPlanning.eqTouchTest(st.added)
-      val grewEmit = p.grew.filter { f =>
+      val eqTouch = MorPlanning.eqTouchTest(state.added)
+      val grewEmit = st.grew.filter { f =>
         val n = f.path.split("/").last
-        st.added.posByName.contains(n) || eqTouch(f)
+        state.added.posByName.contains(n) || eqTouch(f)
       }
       // a pure-update row-delta commit (writer-stamped cdf.op=update)
       // has an exact CDF typing: its growth deletes ARE the updated
       // rows' pre-images and its added rows their post-images
       val (delType, insType) =
-        if (p.isUpdate) (UpdatePreimage, UpdatePostimage)
+        if (st.isUpdate) (UpdatePreimage, UpdatePostimage)
         else ("delete", "insert")
-      p.removed.map(f => part(f, "delete", ModeLiveOld)) ++
+      st.removed.map(f => part(f, "delete", ModeLiveOld)) ++
         grewEmit.map(f => part(f, delType, ModeGrowth)) ++
-        p.added.map { f =>
+        st.added.map { f =>
           val n = f.path.split("/").last
           // same-commit equality deletes never apply (equal seq);
           // a position delete covering a same-commit file would —
           // guard it, though the engine's own commits never do this
-          val guarded = st.added.posByName.contains(n)
+          val guarded = state.added.posByName.contains(n)
           part(f, insType, if (guarded) ModeInsertGuard else ModeNone)
         }
     }.toArray
   }
 
   /** Over-bound DELTA batch, served DISTRIBUTED: the per-commit batch
-    * changelog ([[GraftLakeChangesMicroBatchStream.commitChangeFrame]]
+    * changelog ([[GraftLakeChangesMicroBatchStream.commitChangeFrames]]
     * — `LakeTable.readChangelog` per version, executor-side
     * anti-joins, typed like the stream) materialized once into the
     * checkpoint's scratch dir (`_SUCCESS` makes a replayed batch reuse
@@ -272,8 +222,7 @@ class GraftLakeChangesMicroBatchStream(lake: LakeTable,
     * swept when the batch's offset commits (and by the
     * next instance's first planning call if the query died first). */
   private def distributedDeltaPartitions(session: SparkSession, lo: Int,
-                                         hi: Int, versions: Seq[Int])
-      : Array[InputPartition] = {
+                                         hi: Int): Array[InputPartition] = {
     require(checkpointLocation.isDefined,
       s"changelog streaming ${lake.root}: the batch for commits " +
         s"($lo, $hi] exceeds the $maxMorRows merge-on-read row bound " +
@@ -284,11 +233,8 @@ class GraftLakeChangesMicroBatchStream(lake: LakeTable,
     val path = new org.apache.hadoop.fs.Path(dir)
     val fs = path.getFileSystem(hconf)
     if (!fs.exists(new org.apache.hadoop.fs.Path(path, "_SUCCESS"))) {
-      val visibleNames = visible.fieldNames.toSeq
-      GraftLakeChangesMicroBatchStream.balancedUnion(versions.map(v =>
-        GraftLakeChangesMicroBatchStream
-          .commitChangeFrame(lake, visibleNames, v)))
-        .write.mode("overwrite").parquet(dir)
+      GraftLakeChangesMicroBatchStream.commitChangeFrames(lake,
+        visible.fieldNames.toSeq, lo, hi).write.mode("overwrite").parquet(dir)
     }
     scratchLive.put(dir, hi)
     LakeStreamPlanning.listScratch(fs, path)
@@ -372,33 +318,34 @@ object GraftLakeChangesMicroBatchStream {
       StructField(CommitVersionCol, LongType, nullable = false),
       StructField(CommitTimestampCol, TimestampType, nullable = false)))
 
-  /** The TYPED per-commit changelog frame of version `v`: the batch
-    * algebra ([[LakeTable.readChangelog]] over (v-1, v] — executor-
-    * side anti-joins, manifest-cancel diff) with the commit's
-    * `cdf.op` stamp applied and `_commit_version` stamped. ONE code
-    * path shared by the batch change-feed face
+  /** The TYPED per-commit changelog frames of versions (from, to],
+    * unioned: the batch algebra ([[LakeTable.readChangelog]] over
+    * (v-1, v] — executor-side anti-joins, manifest-cancel diff) of each
+    * step of one walk, with the commit's `cdf.op` stamp applied and
+    * `_commit_version` and `_commit_timestamp` stamped. ONE code path
+    * shared by the batch change-feed face
     * ([[graft.lake.GraftChangesTable]]) and the stream's distributed
     * over-bound delta batches, so the two faces cannot drift. */
-  def commitChangeFrame(lake: LakeTable, visibleNames: Seq[String],
-                        v: Int)
+  def commitChangeFrames(lake: LakeTable, visibleNames: Seq[String],
+                         from: Int, to: Int)
       : org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.{col, lit, when}
-    val isUpdate = lake.appMetaAt(v, "cdf.op").contains("update")
-    val typed =
-      if (!isUpdate) col(ChangeTypeCol)
-      else when(col(ChangeTypeCol) === "delete", lit(UpdatePreimage))
-        .otherwise(lit(UpdatePostimage))
-    lake.readChangelog(v - 1, v)
-      .select(visibleNames.map(col) :+ typed.as(ChangeTypeCol) :+
-        lit(v.toLong).as(CommitVersionCol) :+
-        lit(new java.sql.Timestamp(lake.committedAtMs(v)))
+    balancedUnion(lake.perCommitChanges(from, to).map { case (st, ch) =>
+      val typed =
+        if (!st.isUpdate) col(ChangeTypeCol)
+        else when(col(ChangeTypeCol) === "delete", lit(UpdatePreimage))
+          .otherwise(lit(UpdatePostimage))
+      ch.select(visibleNames.map(col) :+ typed.as(ChangeTypeCol) :+
+        lit(st.version.toLong).as(CommitVersionCol) :+
+        lit(new java.sql.Timestamp(st.committedAtMs))
           .as(CommitTimestampCol): _*)
+    })
   }
 
   /** Pairwise-halving union: O(log n) plan depth on wide commit
     * ranges where a left fold would build an O(n)-deep tree (slow
     * analysis, driver stack overflow on thousands of commits). */
-  def balancedUnion(frames: Seq[org.apache.spark.sql.DataFrame])
+  private def balancedUnion(frames: Seq[org.apache.spark.sql.DataFrame])
       : org.apache.spark.sql.DataFrame = {
     def go(fs: IndexedSeq[org.apache.spark.sql.DataFrame])
         : org.apache.spark.sql.DataFrame =
@@ -444,7 +391,7 @@ case class GraftScratchChangeInputPartition(inner: FilePartition,
 /** A scratch file of an over-bound distributed DELTA batch: plain
   * parquet already in the full changes schema (visible columns ++
   * `_change_type` ++ `_commit_version`, typed and stamped by
-  * [[GraftLakeChangesMicroBatchStream.commitChangeFrame]]) — served
+  * [[GraftLakeChangesMicroBatchStream.commitChangeFrames]]) — served
   * raw, no filter, no projection. */
 case class GraftScratchDeltaInputPartition(inner: FilePartition)
     extends InputPartition

@@ -198,7 +198,7 @@ private[graft] object GraftVersionedStreamBase {
   * recovered from the manifest's per-file constants, columns
   * re-projected to the table's visible order. Nothing is rebuilt: the
   * planning half is the lake's metadata
-  * ([[LakeTable.addedEntriesBetween]]), the reading half is stock
+  * ([[LakeTable.steps]]), the reading half is stock
   * Spark.
   *
   * SEMANTICS — append-stream, the Delta contract:
@@ -249,9 +249,7 @@ class GraftLakeMicroBatchStream(lake: LakeTable, pruned: StructType,
 
   override protected def emittedRowsBetween(from: Int, target: Int)
       : Seq[(Int, Long)] =
-    lake.addedEntriesBetween(from, target).map {
-      case (v, added, _) => (v, added.map(_.rows).sum)
-    }
+    lake.steps(from, target).map(st => (st.version, st.added.map(_.rows).sum))
 
   /** Driver-side bound on the merge-on-read state the INITIAL batch
     * may broadcast (delete positions + equality keys): beyond it, the
@@ -322,13 +320,13 @@ class GraftLakeMicroBatchStream(lake: LakeTable, pruned: StructType,
           files
         }
       } else {
-        lake.addedEntriesBetween(lo, hi).flatMap {
-          case (_, added, false) => added
-          case (_, _, true) if skipChangeCommits => Nil
-          case (v, _, true) => throw new IllegalStateException(
-            s"streaming ${lake.root}: version $v removed or rewrote " +
-              "rows (row-level DELETE/UPDATE/MERGE or overwrite) — an " +
-              "append stream cannot represent it; set " +
+        lake.steps(lo, hi).flatMap { st =>
+          if (!st.removesRows) st.added
+          else if (skipChangeCommits) Nil
+          else throw new IllegalStateException(
+            s"streaming ${lake.root}: version ${st.version} removed or " +
+              "rewrote rows (row-level DELETE/UPDATE/MERGE or overwrite) " +
+              "— an append stream cannot represent it; set " +
               "skipChangeCommits=true to skip such commits, stream " +
               "the row-level changelog " +
               "(readStream.table(\"<cat>.<ns>.<t>.changes\")), or " +

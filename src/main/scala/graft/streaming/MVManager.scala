@@ -203,9 +203,9 @@ class MVManager(spark: SparkSession, checkpointRoot: String,
     * duplicate of a document that no longer exists.
     *
     * The loop walks the batch's version range one commit at a time.
-    * Pure appends (the common step, decided by
-    * [[graft.lake.LakeTable.addedEntriesBetween]] — one metadata read
-    * per version, no job) curate exactly like the insert-only loop. A
+    * Pure appends (the common step, decided by the version's
+    * [[graft.lake.Changes.ChangeStep]] — one metadata read per version,
+    * no job) curate exactly like the insert-only loop. A
     * step that removed rows consumes the row-level changelog (for an equality
     * delete: a key semi-join over covered files, zero diff shuffles)
     * and propagates the removed ids as equality deletes — O(keys),
@@ -241,26 +241,23 @@ class MVManager(spark: SparkSession, checkpointRoot: String,
 
   /** The delete-aware loops' sink: the batch's source versions are
     * walked one commit at a time, from one
-    * [[graft.lake.LakeTable.addedEntriesBetween]] pass (one metadata
-    * read per version, no job). A pure append hands its rows to `step`;
-    * a commit that removed rows first hands `forget` its changelog's
-    * removed rows, then hands `step` its inserted rows, so an upsert
-    * converges (removal precedes insertion). A compaction removes no
-    * row and adds none. Both get (writer id, rows, source version). */
+    * [[graft.lake.LakeTable.perCommitChanges]] walk (one metadata read
+    * per version). A pure append hands its rows to `step`; a commit that
+    * removed rows first hands `forget` its changelog's removed rows,
+    * then hands `step` its inserted rows, so an upsert converges
+    * (removal precedes insertion). A compaction removes no row and
+    * adds none. Both get (writer id, rows, source version). */
   private def startVersionWalk(name: String, source: LakeTable,
                                trigger: Trigger)(
       forget: (String, DataFrame, Long) => Unit)(
       step: (String, DataFrame, Long) => Unit): StreamingQuery = {
     import org.apache.spark.sql.functions.col
     startCommitLogSink(name, source, trigger) { (wid, _, lo, hi) =>
-      for ((v, _, removes) <- source.addedEntriesBetween(lo, hi)) {
-        val rows =
-          if (removes) {
-            val ch = source.readChangelog(v - 1, v)
-            forget(wid, ch.filter(col("_change_type") === "delete"), v)
-            ch.filter(col("_change_type") === "insert").drop("_change_type")
-          } else source.changesBetween(v - 1, v)
-        step(wid, rows.drop(LakeTable.BucketCol), v)
+      for ((st, ch) <- source.perCommitChanges(lo, hi)) {
+        if (st.removesRows)
+          forget(wid, ch.filter(col("_change_type") === "delete"), st.version)
+        step(wid, ch.filter(col("_change_type") === "insert")
+          .drop("_change_type", LakeTable.BucketCol), st.version)
       }
     }
   }
@@ -380,7 +377,7 @@ class MVManager(spark: SparkSession, checkpointRoot: String,
     * the source would leave the forgotten documents SERVABLE from
     * postings forever. This loop walks the batch's version range
     * one commit at a time: pure appends (the overwhelmingly common
-    * step, decided by [[graft.lake.LakeTable.addedEntriesBetween]] —
+    * step, decided by [[graft.lake.Changes.ChangeStep]] —
     * one metadata read per version, no job) index exactly like the
     * insert-only loop; a step that removed rows consumes the row-level changelog
     * (`readChangelog(v-1, v)` — for an equality delete that is a key

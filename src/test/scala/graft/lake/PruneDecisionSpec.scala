@@ -14,7 +14,7 @@ package graft.sources {
 
 package graft.lake {
 
-  import java.sql.Date
+  import java.sql.{Date, Timestamp}
   import java.time.LocalDateTime
 
   import org.apache.spark.sql.{Column, DataFrame, Row}
@@ -38,7 +38,8 @@ package graft.lake {
     private val mainSchema = StructType(Seq(
       StructField("id", LongType), StructField("s", StringType),
       StructField("x", DoubleType), StructField("n", IntegerType),
-      StructField("d", DateType), StructField("m", DecimalType(10, 2))))
+      StructField("d", DateType), StructField("m", DecimalType(10, 2)),
+      StructField("ts", TimestampType)))
 
     /** Appends one single-file batch per row group; file i is "f<i+1>". */
     private def labelled(t: LakeTable, schema: StructType,
@@ -55,28 +56,30 @@ package graft.lake {
     private lazy val (main, mainLabels) = {
       def day(s: String) = Date.valueOf(s)
       def dec(s: String) = new java.math.BigDecimal(s)
+      def at(s: String) = Timestamp.valueOf(s"$s 12:00:00")
       val t = LakeTable.create(spark, tmpDir("prune-pin"), mainSchema)
       val labels = labelled(t, mainSchema, Seq(
         // f1: ids 0..4, s single-valued, n null-free
         (0 until 5).map(i => Row(i.toLong, "k1", 1.0 + i / 4.0, 1,
-          day("2024-01-01"), dec("1.00"))),
+          day("2024-01-01"), dec("1.00"), at("2024-01-01"))),
         // f2: s and n all null
         (10 until 15).map(i => Row(i.toLong, null, 3.0 + (i - 10) / 4.0,
-          null, day("2024-02-01"), dec("2.00"))),
+          null, day("2024-02-01"), dec("2.00"), at("2024-02-01"))),
         // f3: s and n mixed with nulls
         (20 until 25).map(i => Row(i.toLong,
           if (i % 2 == 0) "k3" else null, 5.0 + (i - 20) / 4.0,
-          if (i % 2 == 0) 2 else null, day("2024-03-01"), dec("3.00"))),
+          if (i % 2 == 0) 2 else null, day("2024-03-01"), dec("3.00"),
+          at("2024-03-01"))),
         // f4: id single-valued, x all -0.0
         (0 until 5).map(_ => Row(30L, "k4", -0.0d, 4,
-          day("2024-04-01"), dec("4.00"))),
+          day("2024-04-01"), dec("4.00"), at("2024-04-01"))),
         // f5: s spans [a, U+E000], x all +0.0
         (40 until 45).map(i => Row(i.toLong, if (i == 40) "a" else Priv,
-          0.0d, 5, day("2024-05-01"), dec("5.00"))),
+          0.0d, 5, day("2024-05-01"), dec("5.00"), at("2024-05-01"))),
         // f6: s single-valued U+1F600, x holds a NaN (no x stats)
         (50 until 55).map(i => Row(i.toLong, Smile,
           if (i == 50) Double.NaN else 9.0, 6, day("2024-06-01"),
-          dec("6.00")))))
+          dec("6.00"), at("2024-06-01")))))
       (t, labels)
     }
 
@@ -213,7 +216,12 @@ package graft.lake {
       ("NaN key", () => keysOf(one("x", DoubleType), Row(Double.NaN)),
         Seq("x"), all, all),
       ("date key", () => keysOf(one("d", DateType),
-        Row(Date.valueOf("2024-02-01"))), Seq("d"), all, set("f2")),
+        Row(Date.valueOf("2024-02-01"))), Seq("d"), set("f2"), set("f2")),
+      // the table writes timestamps as INT96, whose footers carry no
+      // min/max: no face can bound a file by them
+      ("timestamp key", () => keysOf(one("ts", TimestampType),
+        Row(Timestamp.valueOf("2024-02-01 12:00:00"))), Seq("ts"),
+        all, all),
       ("decimal key", () => keysOf(one("m", DecimalType(10, 2)),
         Row(new java.math.BigDecimal("2.00"))), Seq("m"), all, all),
       ("key roster above 1,024 tuples", () => keysOf(one("id", LongType),

@@ -6,7 +6,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.types._
 
 import graft.SparkSuite
-import graft.sources.LakeLogSource
+import graft.sources.{GraftLakeChangesMicroBatchStream, LakeLogSource}
 
 /** A [[PosixCommitStore]] that counts reads of snapshot objects
   * (`vNNNNNNNN.json`), present or not. */
@@ -88,5 +88,25 @@ class SnapshotReadSpec extends SparkSuite {
     assert(n >= 2 && n <= 2 + 2, s"$n snapshot reads for a 2-version batch")
     assert(rows.map(r => (r._1, r._3, r._4, r._5)) ==
       Seq((39, 1, 1L, null), (40, 2, 2L, "7")))
+  }
+
+  test("the per-commit change feed (table_changes) over k commits reads " +
+    "k + 1 snapshots") {
+    val store = new SnapshotCountingStore
+    val t = LakeTable.create(spark, tmpDir("feed-reads"),
+      StructType(Seq(StructField("a", LongType))), store = store)
+    (1 to 4).foreach(i => t.append(Seq(i.toLong).toDF("a")))
+    t.deleteWherePositional(org.apache.spark.sql.functions.col("a") === 2L)
+    t.deleteWhereEqual(Seq(3L).toDF("a"), Seq("a"))
+    val (from, to) = (1, t.currentVersion) // commits 2..6: k = 5
+    var events: Seq[(Long, String, Long)] = Nil
+    val n = store.counting {
+      events = GraftLakeChangesMicroBatchStream.commitChangeFrames(t, Seq("a"),
+        from, to).select("a", "_change_type", "_commit_version")
+        .as[(Long, String, Long)].collect().toSeq
+    }
+    assert(n == to - from + 1, s"$n snapshot reads for ${to - from} commits")
+    assert(events.sorted == Seq((2L, "delete", 5L), (2L, "insert", 2L),
+      (3L, "delete", 6L), (3L, "insert", 3L), (4L, "insert", 4L)))
   }
 }
