@@ -50,7 +50,8 @@ import org.apache.spark.sql.types._
   */
 class LakeTable private (
     val spark: SparkSession, val root: String,
-    private[lake] val commitStore: CommitStore) extends Commit with Changes {
+    private[lake] val commitStore: CommitStore) extends Commit with Changes
+    with RowLevel {
 
   import Commit._
   import LakeTable._
@@ -561,23 +562,27 @@ class LakeTable private (
     * to the pre-rename plan; only files actually written before a
     * rename (or carrying a retired ID whose name was reused) get a
     * per-epoch scan with an aliasing projection, and the union of those
-    * scans stays fully distributed, prunable, and pushdown-friendly. */
+    * scans stays fully distributed, prunable, and pushdown-friendly.
+    *
+    * With `coords`, each row also carries its row coordinates: its
+    * manifest-relative data file ([[DeleteFileCol]]) and its position
+    * ([[DeletePosCol]]). The file is recovered by joining the scan's
+    * UUID file NAME against `entries` — never by string surgery on
+    * `_metadata.file_path`, whose URI encoding differs from manifest
+    * paths on special characters. */
   private[lake] def readEntries(entries: Seq[FileEntry], snap: Snapshot,
-                          tag: Boolean = false,
+                          coords: Boolean = false,
                           claimBucket: Boolean = true,
-                          tagPos: Boolean = false,
                           deletes: Seq[DeleteEntry] = Nil): DataFrame = {
     import org.apache.spark.sql.functions.{col => fcol}
     val snapSchema = snap.schema
     val ids = snap.fieldIds
-    val tagged = StructType(snapSchema.fields ++
-      (if (tag) Seq(StructField(FileTag, StringType, nullable = false))
-       else Nil) ++
-      (if (tagPos) Seq(StructField(PosTag, LongType, nullable = false))
-       else Nil))
     if (entries.isEmpty)
       return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], tagged)
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        // with coords: (pos, file), the order the scan below yields
+        StructType(snapSchema.fields ++
+          (if (coords) deleteSchema.fields.reverse.toSeq else Nil)))
     // merge-on-read position deletes: rows named by any RELEVANT
     // delete file (covers-pruned — a delete file referencing none of
     // the scanned data files cannot match) are anti-joined away on
@@ -609,18 +614,19 @@ class LakeTable private (
           substring_index(fcol(DeleteFileCol), "/", -1).as("__dn"),
           fcol(DeletePosCol).as("__dpp"))
     }
-    // per-row data sequence number, recovered from the (metadata-scale)
-    // fileName -> seq map — UUID names are unique and encoding-stable
-    lazy val seqByName: DataFrame = {
+    // each row's manifest entry — its manifest-relative path and data
+    // sequence number — recovered from the (metadata-scale) fileName ->
+    // entry map: UUID names are unique and encoding-stable
+    lazy val entryByName: DataFrame = {
       val sp2 = spark
       import sp2.implicits._
-      entries.map(e => (e.path.split("/").last, e.seq))
-        .toDF("__fn", "__fseq")
+      entries.map(e => (e.path.split("/").last, e.seq, e.path))
+        .toDF("__fn", "__fseq", DeleteFileCol)
     }
     def finish(df: DataFrame): DataFrame = {
       import org.apache.spark.sql.functions.{broadcast, lit, substring_index}
-      val needFp = tag || posDeletes.nonEmpty || eqDeletes.nonEmpty
-      val needPos = tagPos || posDeletes.nonEmpty
+      val needFp = coords || posDeletes.nonEmpty || eqDeletes.nonEmpty
+      val needPos = coords || posDeletes.nonEmpty
       var d = df
       if (needFp) d = d.withColumn(FileTag, fcol("_metadata.file_path"))
       if (needPos) d = d.withColumn(PosTag, fcol("_metadata.row_index"))
@@ -632,10 +638,11 @@ class LakeTable private (
             d(PosTag) === delKeyed("__dpp"), "left_anti")
           .drop("__fn")
       }
-      if (eqDeletes.nonEmpty) {
+      if (coords || eqDeletes.nonEmpty)
         d = d.withColumn("__fn",
             substring_index(fcol(FileTag), "/", -1))
-          .join(broadcast(seqByName), Seq("__fn"))
+          .join(broadcast(entryByName), Seq("__fn"))
+      if (eqDeletes.nonEmpty) {
         // one anti-join per key-column set: delete keys (null-safe
         // equality, Iceberg semantics) scoped to rows whose file
         // predates the delete — re-inserted keys survive
@@ -651,11 +658,11 @@ class LakeTable private (
             .reduce(_ && _) && d("__fseq") < renamed("__dseq")
           d = d.join(renamed, cond, "left_anti")
         }
-        d = d.drop("__fn").drop("__fseq")
       }
-      if (needFp && !tag) d = d.drop(FileTag)
-      if (needPos && !tagPos) d = d.drop(PosTag)
-      d
+      if (needFp) d = d.drop("__fn", "__fseq", FileTag)
+      if (coords) d.withColumnRenamed(PosTag, DeletePosCol)
+      else if (needFp) d.drop(DeleteFileCol, PosTag)
+      else d
     }
     val idToField: Map[Int, StructField] =
       snapSchema.fields.flatMap(f => ids.get(f.name).map(_ -> f)).toMap
@@ -884,13 +891,10 @@ class LakeTable private (
     * consistent (one metadata read), MOR deletes applied (an already-
     * deleted row is never re-addressed), files pruned by `condition`'s
     * range analysis when given (the residual filter is re-applied
-    * row-level). The file key is recovered by joining the scan's UUID
-    * file NAME against the snapshot's entries — never by string
-    * surgery on `_metadata.file_path`, whose URI encoding differs from
-    * manifest paths (see [[deleteWherePositional]]). */
+    * row-level). The row-level writes locate rows with the same scan
+    * (see [[RowLevel]]). */
   def readWithRowCoords(
       condition: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col, substring_index}
     val s = mainSnapshot()
     require(!s.schema.fieldNames.contains(RowFileCol) &&
       !s.schema.fieldNames.contains(RowPosCol),
@@ -902,16 +906,9 @@ class LakeTable private (
       case Some(c) => pruneFiles(s, c)
       case None    => s.files
     }
-    val sp = spark
-    import sp.implicits._
-    val nameRel = entries.map(e => (e.path.split("/").last, e.path))
-      .toDF("__fn", RowFileCol)
-    val out = readEntries(entries, s, tag = true,
-        tagPos = true, deletes = s.deletes)
-      .withColumn("__fn", substring_index(col(FileTag), "/", -1))
-      .join(broadcast(nameRel), Seq("__fn"))
-      .withColumnRenamed(PosTag, RowPosCol)
-      .drop("__fn", FileTag)
+    val out = readEntries(entries, s, coords = true, deletes = s.deletes)
+      .withColumnRenamed(DeletePosCol, RowPosCol)
+      .withColumnRenamed(DeleteFileCol, RowFileCol)
     condition.map(out.filter).getOrElse(out)
   }
 
@@ -921,17 +918,12 @@ class LakeTable private (
       : Seq[FileEntry] = pruneFiles(latest(), condition)
 
   /** [[pruneFiles]] over snapshot `s`'s files, with `s`'s transforms. */
-  private def pruneFiles(s: Snapshot, condition: org.apache.spark.sql.Column)
+  private[lake] def pruneFiles(s: Snapshot, condition: org.apache.spark.sql.Column)
       : Seq[FileEntry] =
     s.files.filter(Prune.may(Prune.parse(condition), s.pruningTransforms))
 
   // ---- write ---------------------------------------------------------
 
-  /** Transactional append. Returns the committed version. Thread/process
-    * safe via the optimistic hard-link protocol. Schema handling:
-    * existing columns may widen (byte/short/int->long, float->double,
-    * Iceberg's promotion rules); new df columns are added to the table
-    * schema (additive evolution) with fresh field IDs. */
   /** CHECK-constraint enforcement (Delta parity): any table property
     * `constraint.<name> = <sql boolean expression>` is evaluated for
     * every NEW row inside the write plan itself — a violating row
@@ -942,7 +934,7 @@ class LakeTable private (
     * move EXISTING rows, and a constraint added after legacy rows
     * landed must not brick the table's maintenance; upsert enforces
     * on the incoming source rows only, for the same reason. */
-  private def enforced(df: DataFrame, s: Snapshot): DataFrame = {
+  private[lake] def enforced(df: DataFrame, s: Snapshot): DataFrame = {
     import org.apache.spark.sql.functions._
     val checks = s.properties.toSeq.collect {
       case (k, v) if k.startsWith("constraint.") =>
@@ -957,6 +949,11 @@ class LakeTable private (
     }.reduce(_ && _))
   }
 
+  /** Transactional append. Returns the committed version. Thread/process
+    * safe via the optimistic hard-link protocol. Schema handling:
+    * existing columns may widen (byte/short/int->long, float->double,
+    * Iceberg's promotion rules); new df columns are added to the table
+    * schema (additive evolution) with fresh field IDs. */
   def append(df: DataFrame, appMeta: Map[String, String] = Map.empty): Int = {
     val s = latest()
     commit(Change.data(writeData(enforced(df, s), s), appMeta))
@@ -1128,7 +1125,7 @@ class LakeTable private (
     * and stamp, unless that snapshot shows the batch committed. The
     * pre-check saves the data write on obvious replays; the guard
     * inside the commit loop is the authoritative check. */
-  private def exactlyOnce(writerId: String, batchId: Long)(
+  private[lake] def exactlyOnce(writerId: String, batchId: Long)(
       write: (Snapshot, Option[Once]) => Int): Int = {
     val once = Once(writerId, batchId)
     val s = latest()
@@ -1463,468 +1460,6 @@ class LakeTable private (
       Map("compaction.zorderBy" -> cols.mkString(",")))
   }
 
-  // ---- row-level operations (copy-on-write DELETE / MERGE) -----------
-
-  /** Copy-on-write DELETE: remove rows matching `condition` by
-    * rewriting ONLY the files that contain at least one matching row;
-    * every other file survives byte-identical (file-level pruning — the
-    * affected set comes from the matching rows' _metadata.file_path, a
-    * metadata-scale driver collect bounded by file count). Rows where
-    * the predicate evaluates NULL are KEPT (SQL DELETE three-valued
-    * semantics). The REPLACE commit is strict: if a concurrent rewrite
-    * (compaction, another row-level op) superseded any affected file,
-    * this throws ConcurrentModificationException rather than
-    * resurrecting replaced rows; concurrent APPENDS are rebased and
-    * survive, and appended rows are never deleted (snapshot-isolation:
-    * the predicate ran against the snapshot read at entry). Returns the
-    * committed version (unchanged when nothing matches). */
-  def deleteWhere(condition: org.apache.spark.sql.Column): Int = {
-    import org.apache.spark.sql.functions.{coalesce, lit, not}
-    // one snapshot: entries, schema, ids, and delete set must agree
-    // (the predicate runs against the snapshot read at entry; the
-    // strict-replace commit guards detect anything that moved since)
-    val s = latest()
-    val entries = s.files
-    val dels = s.deletes
-    // stats narrow the provenance scan before any file opens: only
-    // files whose ranges might match are even read to find matches
-    val candidates = pruneFiles(s, condition)
-    val affected = affectedFiles(
-      readEntries(candidates, s, tag = true, deletes = dels)
-        .filter(condition),
-      entries)
-    if (affected.isEmpty) return s.version
-    // survivors computed WITH existing position deletes applied — a
-    // copy-on-write rewrite must not resurrect MOR-deleted rows
-    val survivors =
-      readEntries(entries.filter(e => affected(e.path)), s, deletes = dels)
-        .filter(not(coalesce(condition, lit(false))))
-    commit(Change.data(writeData(survivors, s),
-        Map("delete.predicate" -> condition.toString))
-      .copy(replace = RowRewrite(affected, dels.map(_.path).toSet)))
-  }
-
-  /** MERGE-ON-READ DELETE (Iceberg-v2-style position deletes): mark
-    * rows matching `condition` deleted by committing a POSITION-DELETE
-    * file — a parquet of (data file, row position) pairs under
-    * `deletes/data/` — instead of rewriting any data file. Write cost
-    * is O(matched rows), not O(files containing them): a 1-row GDPR
-    * delete in a 1 GB file commits a few hundred bytes where
-    * [[deleteWhere]] rewrites the gigabyte, and scattered deletes
-    * across a 100 TB table commit O(total matched) instead of
-    * rewriting the table. Every read path (read/readVersion/
-    * readWhere/probe, rewrites, CDC through readVersion) applies live
-    * delete files as a (file, pos) anti-join; the size-ladder
-    * compaction absorbs them lazily — a rewrite drops each delete
-    * file once all its covered data files leave the live set, so the
-    * read-side join cost is bounded by the compaction cadence.
-    *
-    * Same three-valued semantics as [[deleteWhere]] (NULL predicate
-    * keeps the row), snapshot-isolated (positions name rows of the
-    * snapshot read at entry; the commit aborts with
-    * ConcurrentModificationException if a concurrent rewrite
-    * superseded any covered file — retry to re-resolve positions),
-    * and symmetric with the rewrite-side guard (a copy-on-write /
-    * compaction commit aborts if an unapplied delete file landed
-    * since its base). Returns the committed version (unchanged when
-    * nothing matches). */
-  def deleteWherePositional(condition: org.apache.spark.sql.Column): Int = {
-    import org.apache.spark.sql.functions.col
-    // one snapshot: positions must be resolved against the same file
-    // list the applied delete set belongs to
-    val s = latest()
-    val candidates = pruneFiles(s, condition)
-    if (candidates.isEmpty) return s.version
-    // positions of matching rows, already-deleted rows excluded. The
-    // recorded `_del_file` is the snapshot's own relative path,
-    // recovered by joining the scan's UUID file NAME against the
-    // candidate entries (a broadcast of metadata-scale rows) — never
-    // by string surgery on _metadata.file_path, whose URI encoding
-    // differs from manifest paths on special characters.
-    // Range-clustered on (file, pos): positions of one data file land
-    // contiguously in few delete files (tight covers, pruned reads);
-    // partition count scales with the candidate file set, bounded so
-    // a small delete never fans out into per-task confetti.
-    val numParts = math.max(1, math.min(candidates.size, 32))
-    val nameRelDf = {
-      val sp = spark
-      import sp.implicits._
-      candidates.map(e => (e.path.split("/").last, e.path))
-        .toDF("__fn", DeleteFileCol)
-    }
-    val positions =
-      readEntries(candidates, s, tag = true, tagPos = true,
-        deletes = s.deletes)
-        .filter(condition)
-        .withColumn("__fn", org.apache.spark.sql.functions
-          .substring_index(col(FileTag), "/", -1))
-        .join(org.apache.spark.sql.functions.broadcast(nameRelDf),
-          Seq("__fn"))
-        .select(col(DeleteFileCol), col(PosTag).as(DeletePosCol))
-        .repartitionByRange(numParts, col(DeleteFileCol),
-          col(DeletePosCol))
-        .sortWithinPartitions(DeleteFileCol, DeletePosCol)
-    val entries = writeDeleteFiles(positions, keyCols = Nil)
-    if (entries.isEmpty) return s.version
-    commit(Change.metadata(Map("delete.positional" -> condition.toString,
-        "delete.rows" -> entries.map(_.rows).sum.toString))(sameMeta)
-      .copy(deletes = entries))
-  }
-
-  /** Write `rows` as merge-on-read delete parquet under `deletes/`
-    * through the same rename-free task-committed protocol as data
-    * files, returning one [[DeleteEntry]] per non-empty file. With
-    * `keyCols`, the rows are equality-delete key tuples (in table
-    * types); without, they are positions — (DeleteFileCol =
-    * manifest-relative data file, DeletePosCol = row position) — and
-    * each entry carries its EXACT covers, read back from the written
-    * file, never recomputed from the plan. Empty shards are reclaimed
-    * immediately; returns Nil (and leaves nothing on disk) when no row
-    * survived. The CALLER commits — pairing the entries with data files
-    * in one atomic commit is what SQL UPDATE/MERGE (applyRowDelta) and
-    * the merge-on-read upsert need. */
-  private def writeDeleteFiles(rows: DataFrame,
-                               keyCols: Seq[String]): Seq[DeleteEntry] = {
-    import org.apache.spark.sql.functions.{col, collect_set}
-    // coalesce(8) caps key frames at the plan's own partition count
-    // without a second physical planning. The 8 is scale-safe, not a
-    // local-mode tuning: key frames are metadata-scale by construction
-    // (the keys one GDPR/CDC commit removes, kilobytes to low MB), and
-    // 8 delete files bound manifest growth per commit — at 100 TB the
-    // DATA side scales, the key frame does not. Positions arrive
-    // range-clustered by the caller.
-    val shaped = if (keyCols.isEmpty) rows else rows.coalesce(8)
-    // per-file row counts ride the task-commit messages — no fresh-
-    // file reads here, and a no-match delete skips the covers job
-    val relsMetas = org.apache.spark.sql.graft.DirectWrite
-      .parquetWithMetas(shaped, s"$root/deletes", Seq.empty)
-    val rowsByRel = relsMetas.map { case (r, m) => r -> m._1 }.toMap
-    val live = relsMetas.map(_._1).filter(rowsByRel(_) > 0)
-    // empty shards (nothing matched, or all of a task's rows were
-    // partitioned away) would just be orphans — reclaim them now
-    rowsByRel.keys.filterNot(live.contains).foreach(r =>
-      Files.deleteIfExists(Paths.get(root, "deletes", "data", r)))
-    if (keyCols.nonEmpty)
-      return live.map(r => DeleteEntry(s"deletes/data/$r", rowsByRel(r),
-        covers = Nil, kind = "eq", keyCols = keyCols))
-    if (live.isEmpty) return Nil
-    // exact covered data files PER written delete file — the commit
-    // conflict check and the compaction drop rule key on this set;
-    // driver-bounded by (delete files x covered data files), both
-    // metadata-scale
-    val coversByFile = spark.read.schema(deleteSchema)
-      .parquet(live.map(r => s"$root/deletes/data/$r"): _*)
-      .select(col(DeleteFileCol), col("_metadata.file_path").as("__w"))
-      .groupBy("__w")
-      .agg(collect_set(DeleteFileCol).as("__cv"))
-      .collect()
-      .map(r => r.getString(0) -> r.getSeq[String](1).sorted).toMap
-    live.map { r =>
-      val covers = coversByFile.collectFirst {
-        case (w, cv) if w.endsWith("/" + r) => cv
-      }.getOrElse(throw new IllegalStateException(
-        s"no read-back provenance for delete file $r at $root"))
-      DeleteEntry(s"deletes/data/$r", rowsByRel(r), covers)
-    }
-  }
-
-  /** MERGE-ON-READ EQUALITY DELETE (the other Iceberg-v2 shape):
-    * delete every row whose `keyCols` tuple appears in `keys`, by
-    * committing the KEY VALUES themselves — O(|keys|) write cost and,
-    * unlike both [[deleteWhere]] and [[deleteWherePositional]], NO
-    * provenance scan of the table at all: "forget user X" on a 100 TB
-    * table costs one KB-scale commit, full stop. Applied at read time
-    * as a null-safe-equality anti-join scoped by SEQUENCE NUMBER:
-    * only rows of data files committed BEFORE this delete match, so
-    * appending the key again later is visible (Iceberg v2 sequence
-    * semantics). Rewrites absorb the entry once every live file's seq
-    * passes it; rename/drop of a live entry's key column is blocked.
-    * Needs no conflict guard: concurrent appends either land before
-    * this commit's version (in scope — the "as of commit time"
-    * semantics) or after (out of scope); there are no positions to go
-    * stale. Returns the committed version (unchanged for empty
-    * keys). */
-  def deleteWhereEqual(keys: DataFrame, keyCols: Seq[String]): Int =
-    deleteWhereEqualWith(latest(), keys, keyCols, once = None)
-
-  /** [[deleteWhereEqual]] with the (writerId, batchId) exactly-once
-    * guard of [[appendExactlyOnce]] — what a CDC consumer mirroring
-    * deletes into a downstream index needs: a replayed micro-batch
-    * must NOT re-commit the equality delete, because the re-issued
-    * entry would carry a fresh (higher) sequence number and kill
-    * rows legitimately re-inserted since the original commit. */
-  def deleteWhereEqualExactlyOnce(keys: DataFrame, keyCols: Seq[String],
-                                  writerId: String, batchId: Long): Int =
-    exactlyOnce(writerId, batchId)(deleteWhereEqualWith(_, keys, keyCols, _))
-
-  private def deleteWhereEqualWith(snap: Snapshot, keys: DataFrame,
-                                   keyCols: Seq[String],
-                                   once: Option[Once]): Int = {
-    import org.apache.spark.sql.functions.col
-    require(keyCols.nonEmpty, "equality delete requires key columns")
-    val s = snap.schema
-    keyCols.foreach(c => require(s.fieldNames.contains(c),
-      s"equality-delete key $c not in schema at $root"))
-    val aligned = keys
-      .select(keyCols.map(c => col(c).cast(s(c).dataType)): _*)
-      .distinct()
-    val entries = writeDeleteFiles(aligned, keyCols)
-    if (entries.isEmpty) return snap.version
-    commit(Change.metadata(Map("delete.equality" -> keyCols.mkString(","),
-        "delete.rows" -> entries.map(_.rows).sum.toString))(sameMeta)
-      .copy(deletes = entries).once(once))
-  }
-
-  /** MERGE / upsert keyed on `keyCols`: every target row whose key
-    * appears in `source` is replaced by the source row; source rows
-    * with unseen keys are inserted — Delta/Iceberg copy-on-write MERGE
-    * semantics (source must carry at most one row per key; dedupe
-    * upstream). Only files containing a matched key are rewritten: the
-    * affected set comes from a semi-join of the tagged scan against the
-    * source's distinct keys (broadcast when small — the planner's
-    * choice), the survivors of those files are anti-joined on the same
-    * keys, and the commit REPLACES exactly the affected files. Strict
-    * replace + append rebase as in [[deleteWhere]]. A source with no
-    * matching keys degrades to a plain append (no rewrite at all). */
-  def upsert(source: DataFrame, keyCols: Seq[String]): Int = {
-    val s = latest()
-    upsertWith(s, enforced(source, s), keyCols, once = None)
-  }
-
-  /** [[upsert]] with the (writerId, batchId) exactly-once guard of
-    * [[appendExactlyOnce]]. Deterministic update-mode aggregates are
-    * idempotent under re-upsert anyway (same deltas re-merge to the
-    * same state), but a NON-deterministic aggregate (first(), a
-    * sampled value) replayed after a crash would merge DIFFERENT rows
-    * the second time — the guard makes the replayed batch a no-op
-    * instead, so the table state is exactly the no-crash outcome
-    * regardless of the aggregate's determinism. */
-  def upsertExactlyOnce(source: DataFrame, keyCols: Seq[String],
-                        writerId: String, batchId: Long): Int =
-    exactlyOnce(writerId, batchId) { (s, once) =>
-      upsertWith(s, enforced(source, s), keyCols, once)
-    }
-
-  private def upsertWith(s: Snapshot, source: DataFrame,
-                         keyCols: Seq[String], once: Option[Once]): Int = {
-    import org.apache.spark.sql.functions.col
-    require(keyCols.nonEmpty, "upsert requires at least one key column")
-    // one snapshot for schema + files + deletes (same rationale as
-    // deleteWhere; the strict-replace guards police the commit)
-    keyCols.foreach(c => require(s.schema.fieldNames.contains(c),
-      s"upsert key $c not in schema at $root"))
-    val aligned = alignToUserColumns(source, s)
-    val src = withTransformCols(s.bucketSpec match {
-      case Some(_) => aligned.withColumn(BucketCol, bucketWriteExpr(s))
-      case None    => aligned
-    }, s)
-    val srcKeys = src.select(keyCols.map(col): _*).distinct()
-    val entries = s.files
-    val dels = s.deletes
-    val affected = affectedFiles(
-      readEntries(entries, s, tag = true, deletes = dels)
-        .join(srcKeys, keyCols, "left_semi"),
-      entries)
-    val rewritten =
-      if (affected.isEmpty) src
-      else readEntries(entries.filter(e => affected(e.path)), s,
-          deletes = dels)
-        .join(srcKeys, keyCols, "left_anti")
-        .unionByName(src)
-    commit(Change.data(writeData(rewritten, s),
-        Map("merge.keys" -> keyCols.mkString(",")))
-      .copy(replace = RowRewrite(affected, dels.map(_.path).toSet))
-      .once(once))
-  }
-
-  /** Merge-on-read MERGE / upsert keyed on `keyCols` — [[upsert]]'s
-    * O(source)-commit twin (the Iceberg-v2 MOR shape). ONE atomic
-    * commit carries BOTH the appended source rows and an
-    * equality-delete entry on the source's keys; both sides are
-    * stamped with the same data sequence number, and the reader's
-    * strict `fileSeq < deleteSeq` comparison masks every PRE-existing
-    * row of a merged key while keeping the just-appended replacement
-    * alive. Nothing is scanned and no data file is rewritten: the
-    * commit cost is the source rows plus a KB-scale key file — the
-    * 100 TB streaming-CDC-apply path, where copy-on-write [[upsert]]
-    * rewrites every file a scattered key set touches. Reads pay one
-    * broadcast anti-join per outstanding entry until compaction
-    * absorbs it (same economics as [[deleteWhereEqual]], measured in
-    * MorScale); size the compaction cadence to the merge rate. Same
-    * contract as [[upsert]]: at most one source row per key — dedupe
-    * upstream. */
-  def upsertMor(source: DataFrame, keyCols: Seq[String]): Int = {
-    val s = latest()
-    upsertMorWith(s, enforced(source, s), keyCols, once = None)
-  }
-
-  /** [[upsertMor]] with the (writerId, batchId) exactly-once guard of
-    * [[appendExactlyOnce]] — the MOR twin of [[upsertExactlyOnce]],
-    * for streaming merge sinks whose micro-batches must apply once. */
-  def upsertMorExactlyOnce(source: DataFrame, keyCols: Seq[String],
-                           writerId: String, batchId: Long): Int =
-    exactlyOnce(writerId, batchId) { (s, once) =>
-      upsertMorWith(s, enforced(source, s), keyCols, once)
-    }
-
-  private def upsertMorWith(snap: Snapshot, source: DataFrame,
-                            keyCols: Seq[String], once: Option[Once]): Int = {
-    require(keyCols.nonEmpty, "upsert requires at least one key column")
-    // ONE snapshot for schema + transforms + bucket layout: a
-    // concurrent schema commit between separate reads could misalign
-    // the eq-delete keySchema with the written data files (same
-    // snapshot-consistency rationale as upsertWith / deleteWhere)
-    val s = snap.schema
-    keyCols.foreach(c => require(s.fieldNames.contains(c),
-      s"upsert key $c not in schema at $root"))
-    val aligned = alignToUserColumns(source, snap)
-    // data files first (invisible until commit). The delete keys are
-    // then read back from the WRITTEN files, not recomputed from the
-    // source plan — under a non-deterministic source the two sides of
-    // the commit could otherwise disagree on which keys were merged.
-    val pending = writeData(aligned, snap)
-    val dataRows = pending.files.map(_.rows).sum
-    if (dataRows == 0L) {
-      // empty merge: a no-op, not an empty commit (but the guard's
-      // high-water must still advance, or a crash-replay would re-run
-      // every later batch's predecessor check against a stale mark)
-      pending.files.foreach(f =>
-        Files.deleteIfExists(Paths.get(root, f.path)))
-      return if (once.isEmpty) snap.version
-        else commit(Change.metadata(Map.empty)(sameMeta).once(once))
-    }
-    val keySchema = StructType(keyCols.map(c => s(c)))
-    val keys = spark.read.schema(keySchema)
-      .parquet(pending.files.map(f => s"$root/${f.path}"): _*)
-      .distinct()
-    val delEntries = writeDeleteFiles(keys, keyCols)
-    commit(Change.data(pending, Map("merge.keys" -> keyCols.mkString(","),
-        "merge.mor" -> "true", "merge.rows" -> dataRows.toString))
-      .copy(deletes = delEntries).once(once))
-  }
-
-  /** Apply a ROW-LEVEL DELTA in ONE atomic commit: `deletePositions`
-    * names existing rows by their [[readWithRowCoords]] coordinates
-    * (`_file`, `_pos`) and `inserts` carries replacement/new rows in
-    * user columns. This is the write half of SQL UPDATE / MERGE INTO —
-    * Spark's delta-based row-level rewrite produces exactly this
-    * currency (delete ops carry rowIds, update ops both sides, insert
-    * ops new rows) and the engine lands it transactionally. Routing
-    * mirrors DELETE's `delete.mode` split:
-    *
-    *  - MERGE-ON-READ (copyOnWrite = false, the default): positions
-    *    land as position-delete files and inserts as data files, both
-    *    stamped by the SAME commit — O(delta) write cost, zero data
-    *    files rewritten: the streaming-CDC-apply / surgical-correction
-    *    shape on a 100 TB table. Readers pay the (file, pos) anti-join
-    *    until compaction absorbs it (same economics as
-    *    [[deleteWherePositional]]).
-    *  - COPY-ON-WRITE: exactly the files that lost a row are rewritten
-    *    — survivors anti-joined on (file, pos) — together with the
-    *    inserts, replacing the affected files. No read-side anti-join
-    *    debt; better for large batch updates.
-    *
-    * Concurrency: positions name rows of the snapshot the caller
-    * SCANNED; the commit aborts with ConcurrentModificationException
-    * if a concurrent rewrite superseded any referenced file (MOR: the
-    * `requireLive` covers check; CoW: strict replace + the unapplied-
-    * delete guard) — retry re-scans and re-resolves. Returns the
-    * committed version (unchanged for an empty delta). */
-  def applyRowDelta(deletePositions: DataFrame, inserts: DataFrame,
-                    copyOnWrite: Boolean = false,
-                    extraMeta: Map[String, String] = Map.empty): Int = {
-    import org.apache.spark.sql.functions.{broadcast, col, substring_index}
-    // WAP interaction: the caller's scan (readWithRowCoords) resolved
-    // against the PINNED main version, but this commit would land
-    // STAGED on the branch — positions named against one state,
-    // changes visible in another, and an abandon would discard the
-    // update while its positions were already resolved. Refuse while
-    // a branch stages; row-level SQL DML and WAP audits don't mix
-    // mid-flight (same stance as redriveQuarantine).
-    activeBranch.foreach { case (br, _) =>
-      throw new IllegalStateException(
-        s"row-level delta on $root while WAP branch '$br' is staging " +
-          "— publish or abandon the branch first")
-    }
-    val s = latest()
-    val dels = s.deletes
-    // the delta is consumed more than once (delete write + covers /
-    // survivor anti-join) — pin one row set even under a
-    // non-deterministic source
-    val delPinned = deletePositions
-      .select(col(RowFileCol).cast("string").as(DeleteFileCol),
-        col(RowPosCol).cast("long").as(DeletePosCol))
-      .localCheckpoint(eager = false)
-    val nDel = delPinned.count()
-    // align inserts loudly to the user columns (a missing column is an
-    // analysis error, not a silent null); derived bucket/transform
-    // columns are the writer's job (writeData injects them); CHECK
-    // constraints enforced like every other write path
-    val pending = writeData(enforced(alignToUserColumns(inserts, s), s), s)
-    val insRows = pending.files.map(_.rows).sum
-    def reclaim(): Unit = pending.files.foreach(f =>
-      Files.deleteIfExists(Paths.get(root, f.path)))
-    if (nDel == 0L && insRows == 0L) { reclaim(); return s.version }
-    val meta = Map("delta.inserted" -> insRows.toString,
-      "delta.deleted" -> nDel.toString) ++ extraMeta
-    if (copyOnWrite) {
-      // rewrite exactly the files that lost a row
-      val affected = delPinned.select(DeleteFileCol).distinct()
-        .collect().map(_.getString(0)).toSet // bounded by touched files
-      val affectedEntries = s.files.filter(e => affected(e.path))
-      if (affectedEntries.size != affected.size) {
-        reclaim()
-        throw new java.util.ConcurrentModificationException(
-          s"row delta at $root names " +
-            s"${affected.size - affectedEntries.size} file(s) no " +
-            "longer live (superseded since the scan) — retry")
-      }
-      val sp = spark
-      import sp.implicits._
-      val nameRel = affectedEntries
-        .map(e => (e.path.split("/").last, e.path)).toDF("__fn", "__rel")
-      val delKeys = delPinned.select(col(DeleteFileCol).as("__rel"),
-        col(DeletePosCol).as(PosTag))
-      val survivors = readEntries(affectedEntries, s, tag = true,
-          tagPos = true, deletes = dels)
-        .withColumn("__fn", substring_index(col(FileTag), "/", -1))
-        .join(broadcast(nameRel), Seq("__fn"))
-        .join(delKeys, Seq("__rel", PosTag), "left_anti")
-        .drop("__fn", "__rel", FileTag, PosTag)
-      val survivorsPending = writeData(survivors, s)
-      commit(Change.data(PendingWrite(
-          pending.files ++ survivorsPending.files, pending.schema),
-          meta + ("delta.mode" -> "copy-on-write"))
-        .copy(replace = RowRewrite(affected, dels.map(_.path).toSet)))
-    } else {
-      // positions range-clustered on (file, pos): tight covers per
-      // delete file, partition count bounded so a small delta never
-      // fans out into per-task confetti
-      val numParts = math.max(1, math.min(32,
-        delPinned.rdd.getNumPartitions))
-      val delEntries =
-        if (nDel == 0L) Nil
-        else writeDeleteFiles(delPinned
-          .repartitionByRange(numParts, col(DeleteFileCol),
-            col(DeletePosCol))
-          .sortWithinPartitions(DeleteFileCol, DeletePosCol), keyCols = Nil)
-      val change =
-        if (insRows > 0) Change.data(pending, meta)
-        else { reclaim(); Change.metadata(meta)(sameMeta) }
-      commit(change.copy(deletes = delEntries))
-    }
-  }
-
-  /** Distinct relative paths of the files the tagged rows live in. */
-  private def affectedFiles(tagged: DataFrame,
-                            entries: Seq[FileEntry]): Set[String] = {
-    val abs = tagged.select(FileTag).distinct().collect()
-      .map(_.getString(0))
-    abs.flatMap { a =>
-      entries.collectFirst { case e if a.endsWith("/" + e.path) => e.path }
-    }.toSet
-  }
-
   /** Compaction rewrites are STRICT replaces: if any base file was
     * already superseded by a racer (another compaction, a row-level
     * op), commit aborts with ConcurrentModificationException instead
@@ -1942,17 +1477,6 @@ class LakeTable private (
       .copy(replace = RowRewrite(base.files.map(_.path).toSet,
         base.deletes.map(_.path).toSet)))
 
-  private lazy val hadoopConf = spark.sessionState.newHadoopConf()
-
-  /** Exact row count + per-column [lo, hi] ranges from the parquet
-    * footer — a driver-side metadata read of a few KB, no data scan
-    * (Iceberg stores the same numbers in its manifests). At
-    * many-files-per-commit scale the same numbers come from executor
-    * write-task metrics; either way the input is computed ONCE. Stats
-    * are aggregated across row groups; a column is dropped (never
-    * prune) when any row group lacks stats, is all-null, or is a
-    * floating column whose range touches NaN (parquet NaN stats are
-    * unreliable by spec). */
   /** Manifest metadata for the hive partition values encoded in a
     * file's relative partition path (`k1=v1/k2=v2`): each value is an
     * exact [v, v] range with null count 0; the null marker records an
@@ -1989,7 +1513,21 @@ class LakeTable private (
     (stats, nulls)
   }
 
-  /** Write df as immutable parquet files; returns entries + df schema.
+  /** `df` aligned loudly to snapshot `s`'s USER columns and types (a
+    * missing column is an analysis error, not a silent null); derived
+    * columns — bucket and transform partitions — are the writer's
+    * job, never the caller's. */
+  private[lake] def alignToUserColumns(df: DataFrame, s: Snapshot): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    val transformPhys = s.transforms.map(_.phys).toSet
+    val userFields = s.schema.fields.filterNot(f =>
+      (s.bucketSpec.isDefined && f.name == BucketCol) ||
+        transformPhys.contains(f.name))
+    df.select(userFields.map(f => col(f.name).cast(f.dataType)).toSeq: _*)
+  }
+
+  /** Write `df` as immutable parquet files under snapshot `s`'s layout
+    * (transforms, bucket, partition columns); returns entries + schema.
     * SINGLE evaluation of the input: per-file row counts come from the
     * written parquet footers, not a separate count() job (which would
     * double every MV micro-batch's and compaction's computation — and
@@ -2003,31 +1541,13 @@ class LakeTable private (
     * per part file. Crashed attempts leave unreferenced UUID orphans
     * that never reach a manifest; the age-guarded vacuum reclaims
     * them. */
-  /** Derive any missing hidden-partitioning columns — the writer owns
-    * them exactly like the bucket column; reads/rewrites already carry
-    * them, so injection is idempotent. */
-  private def withTransformCols(df: DataFrame, s: Snapshot): DataFrame =
-    s.transforms.foldLeft(df)((d, t) =>
+  private[lake] def writeData(df1: DataFrame, s: Snapshot): PendingWrite = {
+    // the writer derives any missing hidden-partitioning column, like
+    // the bucket column; reads/rewrites already carry them, so
+    // injection is idempotent
+    val df0 = s.transforms.foldLeft(df1)((d, t) =>
       if (d.columns.contains(t.phys)) d
       else d.withColumn(t.phys, t.writeExpr))
-
-  /** `df` aligned loudly to snapshot `s`'s USER columns and types (a
-    * missing column is an analysis error, not a silent null); derived
-    * columns — bucket and transform partitions — are the writer's
-    * job, never the caller's. */
-  private def alignToUserColumns(df: DataFrame, s: Snapshot): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val transformPhys = s.transforms.map(_.phys).toSet
-    val userFields = s.schema.fields.filterNot(f =>
-      (s.bucketSpec.isDefined && f.name == BucketCol) ||
-        transformPhys.contains(f.name))
-    df.select(userFields.map(f => col(f.name).cast(f.dataType)).toSeq: _*)
-  }
-
-  /** Write `df` under snapshot `s`'s layout (transforms, bucket,
-    * partition columns). */
-  private def writeData(df1: DataFrame, s: Snapshot): PendingWrite = {
-    val df0 = withTransformCols(df1, s)
     // bucketed layout: the writer owns the bucket column — callers
     // append user rows and the hash lands them in their bucket dir.
     // Reads/rewrites already carry _bucket, so injection is idempotent.

@@ -47,6 +47,13 @@ class CrashPointSpec extends SparkSuite {
     Protocol("upsertMorExactlyOnce", Map.empty, threeAppends,
       _.upsertMorExactlyOnce(Seq((2L, "x"), (9L, "y")).toDF("id", "v"),
         Seq("id"), "w", 1L)),
+    Protocol("upsertExactlyOnce", Map.empty, threeAppends,
+      _.upsertExactlyOnce(Seq((2L, "x"), (9L, "y")).toDF("id", "v"),
+        Seq("id"), "w", 1L)),
+    Protocol("deleteWhere", Map.empty, threeAppends,
+      _.deleteWhere($"id" === 3L)),
+    Protocol("deleteWherePositional", Map.empty, threeAppends,
+      _.deleteWherePositional($"id" === 4L)),
     Protocol("compactSorted", Map.empty, { t =>
       threeAppends(t)
       t.deleteWhereEqual(Seq(3L).toDF("id"), Seq("id"))

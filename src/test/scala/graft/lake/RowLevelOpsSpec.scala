@@ -40,6 +40,11 @@ class RowLevelOpsSpec extends SparkSuite {
       "files with no matching rows must not be rewritten")
     // and the replaced ones are gone from the live set
     assert(after != untouchedBefore)
+    // a delete that empties every file it touches leaves no 0-row file
+    t.deleteWhere($"id" >= 100L)
+    assert(t.read().count() == 50)
+    assert(t.dataFiles.forall(_.rows > 0),
+      s"0-row data file committed: ${t.dataFiles.map(_.rows)}")
   }
 
   test("deleteWhere with no matches is a no-op; NULL predicate keeps rows") {
@@ -77,6 +82,77 @@ class RowLevelOpsSpec extends SparkSuite {
     val live = t.dataFiles.map(_.path).toSet
     t.upsert(Seq((600L, "x", 0.0)).toDF("id", "grp", "v"), Seq("id"))
     assert(live.subsetOf(t.dataFiles.map(_.path).toSet))
+
+    // an empty source is an empty delta: no commit, no 0-row file
+    val v = t.currentVersion
+    assert(t.upsert(Seq.empty[(Long, String, Double)]
+      .toDF("id", "grp", "v"), Seq("id")) == v)
+    assert(t.currentVersion == v)
+    assert(t.dataFiles.forall(_.rows > 0))
+  }
+
+  test("CoW delete and upsert find their files under partition values " +
+    "with URI-special characters ('a b', 'c%d'), API and SQL") {
+    val sch = StructType(Seq(StructField("id", LongType),
+      StructField("p", StringType)))
+    def fresh(prefix: String): LakeTable = {
+      val t = LakeTable.create(spark, tmpDir(prefix), sch,
+        partitionBy = Seq("p"))
+      t.append((0L until 6L).map(i => (i, if (i % 2 == 0) "a b" else "c%d"))
+        .toDF("id", "p"))
+      t
+    }
+    def ids(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+      df.select("id").as[Long].collect().toSeq.sorted
+    val d = fresh("sp-del")
+    assert(d.dataFiles.map(_.path.split("/")(1)).toSet ==
+      Set("p=a b", "p=c%25d"))
+    d.deleteWhere($"id" === 1L)
+    assert(ids(d.read()) == Seq(0L, 2L, 3L, 4L, 5L))
+    val u = fresh("sp-up")
+    u.upsert(Seq((1L, "c%d")).toDF("id", "p"), Seq("id"))
+    assert(ids(u.read()) == (0L until 6L))
+    // SQL DELETE under delete.mode=copy-on-write lands as deleteWhere
+    spark.conf.set("spark.sql.catalog.grl", "graft.lake.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.grl.warehouse", tmpDir("grl-wh"))
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS grl.ns")
+    spark.sql("CREATE TABLE grl.ns.sp (id BIGINT, p STRING) " +
+      "PARTITIONED BY (p) TBLPROPERTIES ('delete.mode'='copy-on-write')")
+    spark.sql("INSERT INTO grl.ns.sp " +
+      "SELECT id, IF(id % 2 = 0, 'a b', 'c%d') FROM range(6)")
+    spark.sql("DELETE FROM grl.ns.sp WHERE id = 1")
+    assert(ids(spark.table("grl.ns.sp")) == Seq(0L, 2L, 3L, 4L, 5L))
+  }
+
+  test("an empty delta commits nothing; under an exactly-once guard it " +
+    "commits one metadata-only stamp that advances the writer's mark") {
+    val t = freshTable("empty-delta")
+    val none = Seq.empty[(Long, String, Double)].toDF("id", "grp", "v")
+    def state = (t.currentVersion, t.dataFiles.map(_.path).toSet,
+      t.deleteEntries.map(_.path).toSet)
+    val before = state
+    t.deleteWhereEqual(none.select("id"), Seq("id"))
+    t.upsert(none, Seq("id"))
+    t.upsertMor(none, Seq("id"))
+    assert(state == before, "an unguarded empty delta committed")
+    Seq[(String, LakeTable => Int)](
+      "deleteWhereEqualExactlyOnce" ->
+        (_.deleteWhereEqualExactlyOnce(none.select("id"), Seq("id"),
+          "deleteWhereEqualExactlyOnce", 5L)),
+      "upsertMorExactlyOnce" ->
+        (_.upsertMorExactlyOnce(none, Seq("id"), "upsertMorExactlyOnce",
+          5L)),
+      "upsertExactlyOnce" ->
+        (_.upsertExactlyOnce(none, Seq("id"), "upsertExactlyOnce", 5L))
+    ).foreach { case (writer, op) =>
+      val (v, files, deletes) = state
+      assert(op(t) == v + 1, s"$writer: no stamp commit")
+      assert(state == ((v + 1, files, deletes)),
+        s"$writer: the stamp changed files")
+      assert(t.lastBatchId(writer) == 5L, writer)
+      assert(op(t) == v + 1, s"$writer: the replay committed")
+    }
+    assert(t.read().count() == 200)
   }
 
   test("upsertExactlyOnce suppresses a replayed batch — even one that " +
