@@ -569,11 +569,14 @@ class LakeTable private (
     * ([[DeletePosCol]]). The file is recovered by joining the scan's
     * UUID file NAME against `entries` — never by string surgery on
     * `_metadata.file_path`, whose URI encoding differs from manifest
-    * paths on special characters. */
+    * paths on special characters. With `tag`, each row carries its
+    * file's scan path in [[FileTag]]: URI-encoded, so match it by UUID
+    * name. */
   private[lake] def readEntries(entries: Seq[FileEntry], snap: Snapshot,
                           coords: Boolean = false,
                           claimBucket: Boolean = true,
-                          deletes: Seq[DeleteEntry] = Nil): DataFrame = {
+                          deletes: Seq[DeleteEntry] = Nil,
+                          tag: Boolean = false): DataFrame = {
     import org.apache.spark.sql.functions.{col => fcol}
     val snapSchema = snap.schema
     val ids = snap.fieldIds
@@ -582,7 +585,8 @@ class LakeTable private (
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         // with coords: (pos, file), the order the scan below yields
         StructType(snapSchema.fields ++
-          (if (coords) deleteSchema.fields.reverse.toSeq else Nil)))
+          (if (coords) deleteSchema.fields.reverse.toSeq else Nil) ++
+          (if (tag) Seq(StructField(FileTag, StringType)) else Nil)))
     // merge-on-read position deletes: rows named by any RELEVANT
     // delete file (covers-pruned — a delete file referencing none of
     // the scanned data files cannot match) are anti-joined away on
@@ -625,7 +629,7 @@ class LakeTable private (
     }
     def finish(df: DataFrame): DataFrame = {
       import org.apache.spark.sql.functions.{broadcast, lit, substring_index}
-      val needFp = coords || posDeletes.nonEmpty || eqDeletes.nonEmpty
+      val needFp = coords || tag || posDeletes.nonEmpty || eqDeletes.nonEmpty
       val needPos = coords || posDeletes.nonEmpty
       var d = df
       if (needFp) d = d.withColumn(FileTag, fcol("_metadata.file_path"))
@@ -659,7 +663,8 @@ class LakeTable private (
           d = d.join(renamed, cond, "left_anti")
         }
       }
-      if (needFp) d = d.drop("__fn", "__fseq", FileTag)
+      if (needFp) d = d.drop("__fn", "__fseq")
+      if (needFp && !tag) d = d.drop(FileTag)
       if (coords) d.withColumnRenamed(PosTag, DeletePosCol)
       else if (needFp) d.drop(DeleteFileCol, PosTag)
       else d

@@ -11,20 +11,18 @@ import LakeTable._
 /** Row-level writes: every delete, upsert and MERGE of [[LakeTable]] is
   * one [[RowLevel.RowDelta]] — the rows that leave, the rows that
   * arrive, copy-on-write (CoW) or merge-on-read (MOR), and an optional
-  * exactly-once guard — and [[apply]] lands it in two steps.
-  *
-  * LOCATE finds the leaving rows in the snapshot read at entry. A
-  * condition, and equality keys under CoW, run through the one
-  * row-coordinate scan (`readEntries(coords = true)`, which
-  * [[LakeTable.readWithRowCoords]] also serves) to (file, pos)
-  * positions; a caller's positions arrive as they are; MOR equality
-  * keys are written as they are, with no scan of the table.
+  * exactly-once guard — and [[apply]] lands it in one commit.
   *
   * LAND writes the inserts once (aligned to the user columns, CHECK
-  * constraints enforced), then writes the leaving rows as MOR delete
-  * files or, under CoW, rewrites exactly the live files that lost a row
-  * and replaces them, and commits one [[Commit.Change]]. A data file
-  * that holds no row is reclaimed, never committed.
+  * constraints enforced); an upsert's keys are read back from them and
+  * a caller's positions are pinned. Under MOR, LOCATE turns the leaving
+  * rows into delete files: a condition through the one row-coordinate
+  * scan (`readEntries(coords = true)`, which
+  * [[LakeTable.readWithRowCoords]] also serves) to (file, pos)
+  * positions, equality keys as they are, with no scan of the table.
+  * Under CoW, LAND rewrites exactly the live files that lost a row and
+  * replaces them. It commits one [[Commit.Change]]; a data file that
+  * holds no row is reclaimed, never committed.
   *
   * What every row-level write promises:
   *  - a row whose condition evaluates NULL stays (SQL DELETE's three-
@@ -133,7 +131,7 @@ private[lake] trait RowLevel { self: LakeTable =>
     apply(RowDelta(Positions(deletePositions), Some(inserts), copyOnWrite,
       None, extraMeta))
 
-  /** Land `d` in one commit: LOCATE, then LAND (see the module doc). */
+  /** Land `d` in one commit (see the module doc). */
   private[lake] def apply(d: RowDelta): Int = {
     if (d.leaving.isInstanceOf[Positions])
       activeBranch.foreach { case (br, _) =>
@@ -146,26 +144,42 @@ private[lake] trait RowLevel { self: LakeTable =>
   }
 
   private def land(s: Snapshot, d: RowDelta): Int = {
+    d.leaving match {
+      case Keys(cols, _) => require(
+        cols.nonEmpty && cols.forall(s.schema.fieldNames.contains),
+        s"row-level keys [${cols.mkString(", ")}] not in schema at $root")
+      case _ =>
+    }
     val inserts = d.inserts.map(i =>
       written(enforced(alignToUserColumns(i, s), s), s))
     val added = inserts.toSeq.flatMap(_.files)
-    val (deletes, affected, survivors) = locate(s, d, added) match {
-      case None => (Nil, Nil, None)
-      case Some((rows, keyCols)) if !d.copyOnWrite =>
-        (writeDeleteFiles(rows, keyCols), Nil, None)
-      case Some((positions, _)) =>
-        val (replaced, rewritten) = rewrite(s, d.leaving, positions, added)
-        (Nil, replaced, rewritten)
+    // keys in table types, an upsert's read back from its written
+    // inserts (both sides of its commit agree even under a
+    // non-deterministic source); a caller's positions pinned, since its
+    // plan may be non-deterministic and they are read more than once
+    val leaving = d.leaving match {
+      case Keys(cols, given) => Keys(cols, given
+        .orElse(if (added.isEmpty) None
+          else Some(readEntries(added, s, claimBucket = false)))
+        .map(_.select(cols.map(c => col(c).cast(s.schema(c).dataType)): _*)
+          .distinct()))
+      case Positions(p) => Positions(p
+        .select(col(RowFileCol).cast("string").as(DeleteFileCol),
+          col(RowPosCol).cast("long").as(DeletePosCol))
+        .localCheckpoint(eager = false))
+      case w => w
     }
+    val (deletes, affected, survivors) =
+      if (d.copyOnWrite) {
+        val (replaced, rewritten) = rewrite(s, leaving, added)
+        (Nil, replaced, rewritten)
+      } else (locate(s, leaving).fold(Seq.empty[DeleteEntry]) {
+        case (rows, keyCols) => writeDeleteFiles(rows, keyCols) }, Nil, None)
     val files = added ++ survivors.toSeq.flatMap(_.files)
     if (files.isEmpty && affected.isEmpty && deletes.isEmpty)
       return if (d.once.isEmpty) s.version
         else commit(Change.metadata(Map.empty)(sameMeta).once(d.once))
-    val counts = inserts.map(_ =>
-        "delta.inserted" -> added.map(_.rows).sum.toString) ++
-      deletes.headOption.map(_ =>
-        "delta.deleted" -> deletes.map(_.rows).sum.toString)
-    commit(Change.metadata(d.meta ++ counts)(sameMeta)
+    commit(Change.metadata(d.meta)(sameMeta)
       .copy(write = (inserts ++ survivors).headOption
           .map(w => PendingWrite(files, w.schema)),
         replace = RowRewrite(affected.map(_.path).toSet,
@@ -174,68 +188,83 @@ private[lake] trait RowLevel { self: LakeTable =>
       .once(d.once))
   }
 
-  /** LOCATE: the rows of `s` that `d` removes, paired with the key
-    * columns they are keyed on — MOR equality keys, or else (file, pos)
-    * positions with no key columns. None when no row can leave. `added`
-    * are the delta's written inserts: an upsert's keys are read back
-    * from them, so both sides of its commit agree even under a
-    * non-deterministic source. */
-  private def locate(s: Snapshot, d: RowDelta, added: Seq[FileEntry])
-      : Option[(DataFrame, Seq[String])] = d.leaving match {
-    case Where(c) =>
-      val candidates = pruneFiles(s, c)
-      if (candidates.isEmpty) None
-      else Some(readEntries(candidates, s, coords = true,
-          deletes = s.deletes).filter(c)
-        .select(DeleteFileCol, DeletePosCol) -> Nil)
-    case Positions(p) =>
-      Some(p.select(col(RowFileCol).cast("string").as(DeleteFileCol),
-        col(RowPosCol).cast("long").as(DeletePosCol)) -> Nil)
-    case Keys(cols, given) =>
-      require(cols.nonEmpty && cols.forall(s.schema.fieldNames.contains),
-        s"row-level keys [${cols.mkString(", ")}] not in schema at $root")
-      val keys = given
-        .orElse(if (added.isEmpty) None
-          else Some(readEntries(added, s, claimBucket = false)))
-        .map(_.select(cols.map(c => col(c).cast(s.schema(c).dataType)): _*)
-          .distinct())
-      if (!d.copyOnWrite) keys.map(_ -> cols)
-      else keys.map(k => readEntries(s.files, s, coords = true,
-          deletes = s.deletes).join(k, cols, "left_semi")
-        .select(DeleteFileCol, DeletePosCol) -> Nil)
+  /** MOR LOCATE: the delete-file rows of what `leaving` removes from
+    * `s`, shaped for [[writeDeleteFiles]] and paired with the key
+    * columns they are keyed on — equality keys, or else (file, pos)
+    * positions with no key columns. None when no row can leave.
+    * Positions are range-clustered on (file, pos), so one data file's
+    * positions land contiguously in few delete files (tight covers,
+    * pruned reads), at most 32 wide so a small delete never fans out
+    * into per-task confetti. */
+  private def locate(s: Snapshot, leaving: Leaving)
+      : Option[(DataFrame, Seq[String])] = {
+    def clustered(positions: DataFrame, width: Int): DataFrame =
+      positions.repartitionByRange(math.max(1, math.min(32, width)),
+          col(DeleteFileCol), col(DeletePosCol))
+        .sortWithinPartitions(DeleteFileCol, DeletePosCol)
+    leaving match {
+      case Where(c) =>
+        val candidates = pruneFiles(s, c)
+        if (candidates.isEmpty) None
+        else Some(clustered(readEntries(candidates, s, coords = true,
+            deletes = s.deletes).filter(c)
+          .select(DeleteFileCol, DeletePosCol), candidates.size) -> Nil)
+      case Positions(p) => Some(clustered(p, p.rdd.getNumPartitions) -> Nil)
+      // coalesce(8) caps key frames at the plan's own partition count
+      // without a second physical planning. The 8 is scale-safe, not a
+      // local-mode tuning: key frames are metadata-scale by construction
+      // (the keys one GDPR/CDC commit removes, kilobytes to low MB), and
+      // 8 delete files bound manifest growth per commit — at 100 TB the
+      // DATA side scales, the key frame does not
+      case Keys(cols, keys) => keys.map(_.coalesce(8) -> cols)
+    }
   }
 
-  /** The CoW half of LAND: the live files `positions` name, and their
-    * surviving rows, rewritten. A condition's survivors are the rows it
-    * does not hold for (one filter, no second look at the positions);
-    * other survivors anti-join the positions, pinned since they are read
-    * twice. A named file that is no longer live fails the delta, after
-    * reclaiming the written `added` files. */
-  private def rewrite(s: Snapshot, leaving: Leaving, positions: DataFrame,
-                      added: Seq[FileEntry])
+  /** CoW LAND: the live files of `s` that lose a row, and their
+    * surviving rows rewritten. A condition's and an upsert's files are
+    * the ones [[holding]] a leaving row, and their survivors the rows
+    * the condition does not hold for, or whose key the upsert does not
+    * carry. A caller's positions name their files and anti-join the
+    * survivors; a named file that is no longer live fails the delta,
+    * after reclaiming the written `added` files. */
+  private def rewrite(s: Snapshot, leaving: Leaving, added: Seq[FileEntry])
       : (Seq[FileEntry], Option[PendingWrite]) = {
-    val (named, survivorsOf) = leaving match {
-      case Where(c) => (positions, (es: Seq[FileEntry]) =>
-        readEntries(es, s, deletes = s.deletes)
-          .filter(not(coalesce(c, lit(false)))))
-      case _ =>
-        val pinned = positions.localCheckpoint(eager = false)
-        (pinned, (es: Seq[FileEntry]) =>
+    def scan(es: Seq[FileEntry]) = readEntries(es, s, deletes = s.deletes)
+    val (affected, survivorsOf) = leaving match {
+      case Where(c) => (holding(s, pruneFiles(s, c), _.filter(c)),
+        (es: Seq[FileEntry]) => scan(es).filter(not(coalesce(c, lit(false)))))
+      case Keys(cols, keys) => keys.fold((Seq.empty[FileEntry], scan _))(k =>
+        (holding(s, s.files, _.join(k, cols, "left_semi")),
+          (es: Seq[FileEntry]) => scan(es).join(k, cols, "left_anti")))
+      case Positions(p) =>
+        val paths = p.select(DeleteFileCol).distinct().collect()
+          .map(_.getString(0)).toSet // bounded by the files touched
+        val live = s.files.filter(e => paths(e.path))
+        if (live.size != paths.size) {
+          reclaim(added)
+          throw new java.util.ConcurrentModificationException(
+            s"row delta at $root names ${paths.size - live.size} " +
+              "file(s) no longer live (superseded since the scan) — retry")
+        }
+        (live, (es: Seq[FileEntry]) =>
           readEntries(es, s, coords = true, deletes = s.deletes)
-          .join(pinned, Seq(DeleteFileCol, DeletePosCol), "left_anti")
-          .drop(DeleteFileCol, DeletePosCol))
-    }
-    val paths = named.select(DeleteFileCol).distinct().collect()
-      .map(_.getString(0)).toSet // bounded by the files touched
-    val affected = s.files.filter(e => paths(e.path))
-    if (affected.size != paths.size) {
-      reclaim(added)
-      throw new java.util.ConcurrentModificationException(
-        s"row delta at $root names ${paths.size - affected.size} " +
-          "file(s) no longer live (superseded since the scan) — retry")
+            .join(p, Seq(DeleteFileCol, DeletePosCol), "left_anti")
+            .drop(DeleteFileCol, DeletePosCol))
     }
     if (affected.isEmpty) (Nil, None)
     else (affected, Some(written(survivorsOf(affected), s)))
+  }
+
+  /** The entries of `es` holding a row that `matching` keeps, matched
+    * on the driver by UUID file name (the scan's paths are URI-encoded;
+    * names are encoding-stable). Unlike the row-coordinate scan, it runs
+    * no broadcast name join, which measured slower on a CoW delete. */
+  private def holding(s: Snapshot, es: Seq[FileEntry],
+                      matching: DataFrame => DataFrame): Seq[FileEntry] = {
+    val names = matching(readEntries(es, s, deletes = s.deletes, tag = true))
+      .select(substring_index(col(FileTag), "/", -1)).distinct()
+      .collect().map(_.getString(0)).toSet // bounded by the files touched
+    es.filter(e => names(e.path.split("/").last))
   }
 
   /** [[writeData]] without its zero-row files: an empty frame still
@@ -259,30 +288,10 @@ private[lake] trait RowLevel { self: LakeTable =>
     * its exact covers, read back from the written file. */
   private def writeDeleteFiles(rows: DataFrame,
                                keyCols: Seq[String]): Seq[DeleteEntry] = {
-    // coalesce(8) caps key frames at the plan's own partition count
-    // without a second physical planning. The 8 is scale-safe, not a
-    // local-mode tuning: key frames are metadata-scale by construction
-    // (the keys one GDPR/CDC commit removes, kilobytes to low MB), and
-    // 8 delete files bound manifest growth per commit — at 100 TB the
-    // DATA side scales, the key frame does not. Positions are pinned
-    // (the range partitioner samples them before the shuffle reads
-    // them) and range-clustered on (file, pos), so one data file's
-    // positions land contiguously in few delete files (tight covers,
-    // pruned reads), at most 32 wide so a small delete never fans out
-    // into per-task confetti.
-    val shaped =
-      if (keyCols.nonEmpty) rows.coalesce(8)
-      else {
-        val pinned = rows.localCheckpoint(eager = false)
-        pinned.repartitionByRange(
-            math.max(1, math.min(32, pinned.rdd.getNumPartitions)),
-            col(DeleteFileCol), col(DeletePosCol))
-          .sortWithinPartitions(DeleteFileCol, DeletePosCol)
-      }
     // per-file row counts ride the task-commit messages — no fresh-
     // file reads here, and a no-match delete skips the covers job
     val (live, empty) = org.apache.spark.sql.graft.DirectWrite
-      .parquetWithMetas(shaped, s"$root/deletes", Seq.empty)
+      .parquetWithMetas(rows, s"$root/deletes", Seq.empty)
       .map { case (r, m) => (r, m._1) }.partition(_._2 > 0)
     empty.foreach(e =>
       Files.deleteIfExists(Paths.get(root, "deletes", "data", e._1)))
@@ -317,7 +326,8 @@ private[lake] object RowLevel {
       extends Leaving
   /** The rows at `positions`' ([[LakeTable.RowFileCol]],
     * [[LakeTable.RowPosCol]]) coordinates, as
-    * [[LakeTable.readWithRowCoords]] serves them. */
+    * [[LakeTable.readWithRowCoords]] serves them (once pinned, in
+    * delete-file columns). */
   final case class Positions(positions: DataFrame) extends Leaving
 
   /** One row-level write: the rows that leave, the rows that arrive

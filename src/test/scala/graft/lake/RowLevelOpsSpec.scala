@@ -1,5 +1,7 @@
 package graft.lake
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -192,6 +194,18 @@ class RowLevelOpsSpec extends SparkSuite {
       .select($"id".cast("int").as("id"), $"grp", $"v".cast("float").as("v")),
       Seq("id"))
     assert(t.read().filter($"id" === 1L).select("grp").as[String].head() == "c")
+    // a key outside the schema fails before any file is written
+    def onDisk: Set[String] = {
+      val w = java.nio.file.Files.walk(java.nio.file.Paths.get(t.root))
+      try w.iterator().asScala.map(_.toString).toSet finally w.close()
+    }
+    val files = onDisk
+    val src = Seq((2L, "k", 1.0)).toDF("id", "grp", "v")
+    Seq[LakeTable => Int](_.upsert(src, Seq("nope")),
+        _.upsertMor(src, Seq("nope"))).foreach { op =>
+      intercept[IllegalArgumentException](op(t))
+      assert(onDisk == files, "a refused upsert left files behind")
+    }
   }
 
   test("row-level ops on a PARTITIONED table rewrite within partitions") {
